@@ -534,11 +534,11 @@ object SparkEntry {
       val d = pq(s, dir, "documents")
       val train80 = d.filter(col("doc_id") % 5 =!= 0)
       (variant match {
-        case "b5full" => graft.functions.LmIndex.base5Of(d, "doc_id", "text")
+        case "b5full" => graft.functions.LmIndex.baseOf(5, d, "doc_id", "text")
         case "b5h80" =>
-          graft.functions.LmIndex.base5Of(train80, "doc_id", "text")
+          graft.functions.LmIndex.baseOf(5, train80, "doc_id", "text")
         case "b3h80" =>
-          graft.functions.LmIndex.base3Of(train80, "doc_id", "text")
+          graft.functions.LmIndex.baseOf(3, train80, "doc_id", "text")
       }).localCheckpoint()
     })
 
@@ -546,10 +546,10 @@ object SparkEntry {
       s: SparkSession, dir: String, order: Int): graft.io.TableStore =
     sharedStore(s, dir, s"lm$order") { store =>
       if (order == 3)
-        graft.functions.LmIndex.build3(store, "lm3",
+        graft.functions.LmIndex.build(3, store, "lm3",
           pq(s, dir, "documents"), "doc_id", "text")
       else
-        graft.functions.LmIndex.build5FromBase(store, "lm5",
+        graft.functions.LmIndex.buildFromBase(5, store, "lm5",
           lmSharedBase(s, dir, "b5full"))
     }
 
@@ -560,7 +560,7 @@ object SparkEntry {
   private def lm2hSharedStore(
       s: SparkSession, dir: String): graft.io.ParquetTableStore =
     sharedStore(s, dir, "lm2h") { store =>
-      graft.functions.LmIndex.build(store, "lm",
+      graft.functions.LmIndex.build(2, store, "lm",
         pq(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
         "doc_id", "text")
     }
@@ -622,8 +622,8 @@ object SparkEntry {
   private def lm5PrunedSharedStore(
       s: SparkSession, dir: String): graft.io.TableStore =
     sharedStore(s, dir, "lm5p") { store =>
-      graft.functions.LmIndex.build5PrunedFromStore(
-        lmSharedStore(s, dir, 5), "lm5", store, "lm5",
+      graft.functions.LmIndex.buildPrunedFromStore(
+        5, lmSharedStore(s, dir, 5), "lm5", store, "lm5",
         pruneMin = Seq(2L, 2L, 2L, 2L))
     }
 
@@ -661,23 +661,20 @@ object SparkEntry {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def mkn5ScoresShared(s: SparkSession, dir: String): DataFrame =
     mkn5ScoresCache.getOrElseUpdate((s, dir),
-      graft.functions.LmIndex.scoreMkn5(
-        lmSharedStore(s, dir, 5), "lm5", pq(s, dir, "documents"),
-        "doc_id", "text", fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+      graft.functions.LmIndex.score(
+        5, lmSharedStore(s, dir, 5), "lm5", pq(s, dir, "documents"),
+        "doc_id", "text", graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .localCheckpoint())
 
-  /** The shared holdout cross-score frames (orders 2, 3 and 5) — the
-    * r17-C14 shape applied to each order's holdout pair: the inline
-    * cross-score and its persisted twin score the SAME held-out 20%
-    * against the SAME 80%-split model under the SAME smoothing (they
-    * share one oracle SQL verbatim), so the multi-exchange scoring
-    * chain ran twice per order. One checkpointed frame per order
-    * (cache_lm2h/lm3h/lm5h_scores bench lines); the persisted twins
-    * keep their physical store work inside their timed closures
-    * (order 5/3 build their private stores from the shared base) and
-    * the store-serve == frame-serve row identity stays spec-pinned
-    * (LmSmoothingSpec score==crossScore families, LmHoldoutShareSpec
-    * under OOV) and oracle-pinned (shared SQL, both queries hashed). */
+  /** The holdout cross-score frames (orders 2, 3 and 5): the held-out
+    * 20% scored inline against the 80%-split model — what
+    * q_kn_score_holdout / q_kn3_holdout / q_kn5_holdout report. One
+    * checkpointed frame per order (cache_lm2h/lm3h/lm5h_scores bench
+    * lines). The persisted twins (q_kn_persisted,
+    * q_kn{3,5}_persisted_holdout) share each order's oracle SQL verbatim
+    * but serve from their own stores, so the hash compare pins
+    * store-serve == inline cross-score under OOV (as LmHoldoutShareSpec
+    * does). */
   private val lmhScoresCache = scala.collection.concurrent.TrieMap
     .empty[(SparkSession, String, Int), DataFrame]
   private def lmhScoresShared(
@@ -685,18 +682,16 @@ object SparkEntry {
     lmhScoresCache.getOrElseUpdate((s, dir, order), {
       val d = pq(s, dir, "documents")
       val held = d.filter(col("doc_id") % 5 === 0)
-      (order match {
-        case 5 => graft.functions.LmIndex.scoreFrames5(
-          graft.functions.LmIndex.frames5FromBase(
-            lmSharedBase(s, dir, "b5h80")),
-          held, "doc_id", "text", discount = 0.75)
-        case 3 => graft.functions.LmIndex.scoreFrames3(
-          graft.functions.LmIndex.frames3FromBase(
-            lmSharedBase(s, dir, "b3h80")),
-          held, "doc_id", "text", discount = 0.75)
-        case 2 => graft.functions.LmIndex.crossScore(
-          d.filter(col("doc_id") % 5 =!= 0), held, "doc_id", "text")
-      }).localCheckpoint()
+      // Orders 3 and 5 derive their frames from the shared 80%-split
+      // base (its checkpoint also feeds their persisted twins' builds);
+      // order 2 has no twin build from a base, so it counts inline.
+      val model =
+        if (order == 2) graft.functions.LmIndex.modelFrames(
+          2, d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
+        else graft.functions.LmIndex.framesFromBase(
+          order, lmSharedBase(s, dir, s"b${order}h80"))
+      graft.functions.LmIndex.scoreFrames(model, held, "doc_id", "text",
+        graft.functions.LmIndex.Kn()).localCheckpoint()
     })
 
   /** The shared pass-1 blocked pair-distance frame (brand blocks,
@@ -774,7 +769,7 @@ object SparkEntry {
     Seq(
       "cache_classify" -> time(classified(s, dir).count()),
       "cache_guardedPairs" -> time(guardedPairs(s, dir).count()),
-      // The shared frozen-model builds (lmSharedStore): build5/build3
+      // The shared frozen-model builds (lmSharedStore): orders 5 and 3
       // run eagerly (store writes), so constructing the store IS the
       // materialization — no count() needed. The shared base-counts
       // frames (localCheckpoint = eager) get their own lines so the
@@ -2191,21 +2186,22 @@ object SparkEntry {
     // contexts route through the documented continuation-backoff OOV
     // branches)
     "q_kn_score_holdout" -> ((s, dir) =>
-      // The SHARED holdout score frame (cache_lm2h_scores) — this inline
-      // cross-score and the persisted serve compute the identical frame
-      // (one oracle SQL verbatim); score==crossScore is spec-pinned.
+      // The holdout score frame (cache_lm2h_scores) — this inline
+      // cross-score and the persisted serve share one oracle SQL
+      // verbatim; score==crossScore is spec-pinned.
       lmhScoresShared(s, dir, 2).orderBy("doc_id")),
 
     // The PERSISTED twin: build the model tables once, score the same
     // held-out split from the store — shares q_kn_score_holdout's oracle
     // SQL verbatim (score reads ONLY the vocabulary-bounded model
     // tables; the training corpus is never rescanned at serve time).
-    // Serves the shared holdout score frame (the r17 q_mkn5_persisted
-    // pattern: the store build is the timed cache_lm2h line, the serve
-    // identity score(store)==crossScore is spec- and oracle-pinned).
+    // The store build is the timed cache_lm2h line; the serve runs here,
+    // from the store, so the oracle hash pins score(store)==crossScore.
     "q_kn_persisted" -> ((s, dir) => {
-      lm2hSharedStore(s, dir)
-      lmhScoresShared(s, dir, 2).orderBy("doc_id")
+      val d = pq(s, dir, "documents")
+      graft.functions.LmIndex.score(2, lm2hSharedStore(s, dir), "lm",
+        d.filter(col("doc_id") % 5 === 0), "doc_id", "text")
+        .orderBy("doc_id")
     }),
 
     // The LM "dataset card": per-source token-weighted mean KN logprob —
@@ -2236,7 +2232,7 @@ object SparkEntry {
     "q_kn_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       graft.functions.LmIndex.scoreBatch(
-        lm2hSharedStore(s, dir), "lm", d.filter(col("doc_id") % 25 === 0),
+        2, lm2hSharedStore(s, dir), "lm", d.filter(col("doc_id") % 25 === 0),
         "doc_id", "text")
         .orderBy("doc_id")
     }),
@@ -2252,7 +2248,7 @@ object SparkEntry {
       // §2.6 overlap drill (the q_kn5_append shape at order 2): delta
       // base ∥ build writes, score ∥ merge writes; physical append and
       // the append==rebuild oracle unchanged.
-      graft.functions.LmIndex.appendDrill(store, "lm",
+      graft.functions.LmIndex.appendDrill(2, store, "lm",
         d.filter(col("doc_id") % 5 isin (1, 2)),
         d.filter(col("doc_id") % 5 isin (3, 4)),
         d.filter(col("doc_id") % 5 === 0), "doc_id", "text")
@@ -2273,7 +2269,7 @@ object SparkEntry {
       // counts (row-identical to the swapped tables), so it overlaps
       // the merge's five staged writes; the physical delete unchanged.
       graft.functions.LmIndex.deleteDocsScored(
-        store, "lm", d.filter(col("doc_id") % 5 isin (3, 4)), "doc_id", "text",
+        2, store, "lm", d.filter(col("doc_id") % 5 isin (3, 4)), "doc_id", "text",
         scoreDocs = d.filter(col("doc_id") % 5 === 0))
         .orderBy("doc_id")
     }),
@@ -2287,7 +2283,7 @@ object SparkEntry {
     "q_kn3_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 3)
-      graft.functions.LmIndex.score3(store, "lm3", d, "doc_id", "text")
+      graft.functions.LmIndex.score(3, store, "lm3", d, "doc_id", "text")
         .orderBy("doc_id")
     }),
 
@@ -2299,8 +2295,8 @@ object SparkEntry {
     "q_kn3_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 3)
-      graft.functions.LmIndex.scoreBatch3(
-        store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text")
+      graft.functions.LmIndex.scoreBatch(
+        3, store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text")
         .orderBy("doc_id")
     }),
 
@@ -2315,7 +2311,7 @@ object SparkEntry {
         fallbackDiscounts = Some((0.5, 1.0, 1.5)))
         .orderBy("doc_id")),
 
-    // The persisted twin: the same smoothing served from the build3
+    // The persisted twin: the same smoothing served from the order-3
     // model — per-level discounts re-estimated from the STORED tallies
     // (stats t1..t4/m1..m4/n1..n4; per-context buckets in the widened
     // ctx/ctx3/mctx tables), no corpus rescan. Shares q_mkn_trigram's
@@ -2323,8 +2319,8 @@ object SparkEntry {
     "q_mkn3_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 3)
-      graft.functions.LmIndex.scoreMkn3(store, "lm3", d, "doc_id", "text",
-        fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+      graft.functions.LmIndex.score(3, store, "lm3", d, "doc_id", "text",
+        graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
     }),
 
@@ -2334,30 +2330,31 @@ object SparkEntry {
     // documented backoff recipe at every level). Oracle-pins what the
     // spec's hand fixture pins pointwise.
     "q_kn3_holdout" -> ((s, dir) =>
-      // The SHARED holdout score frame (cache_lm3h_scores): same
-      // computation as crossScore3(train80, heldout) — frames derive
-      // from the shared 80%-split base (bit-identical, spec-pinned),
-      // and the persisted twin serves the identical frame (one oracle
-      // SQL verbatim), so the scoring chain runs once per order.
+      // The holdout score frame (cache_lm3h_scores): same computation
+      // as crossScore(3, train80, heldout) — frames derive from the
+      // shared 80%-split base (bit-identical, spec-pinned) whose
+      // checkpoint also feeds the persisted twin's build.
       lmhScoresShared(s, dir, 3).orderBy("doc_id")),
 
-    // The persisted twin under OOV: build3 on the split (the physical
-    // nine-table store work stays inside this timed closure), serve the
-    // held-out docs — shares q_kn3_holdout's oracle SQL verbatim (store
-    // roundtrip must not perturb a single count; score3(store from
-    // base) == scoreFrames3(base frames) is pinned by LmSmoothingSpec's
-    // score3==crossScore3 + LmSharedBaseSpec's frames==crossScore and
-    // re-pinned under OOV by LmHoldoutShareSpec).
+    // The persisted twin under OOV: build the order-3 model on the split
+    // from the shared base (the physical nine-table store work stays
+    // inside this timed closure), serve the held-out docs from that
+    // store — shares q_kn3_holdout's oracle SQL verbatim (the store
+    // roundtrip must not perturb a single count; also pinned under OOV
+    // by LmHoldoutShareSpec).
     "q_kn3_persisted_holdout" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft_lm3_").toString
       val store = new graft.io.ParquetTableStore(s, root)
-      graft.functions.LmIndex.build3FromBase(
-        store, "lm3", lmSharedBase(s, dir, "b3h80"))
-      lmhScoresShared(s, dir, 3).orderBy("doc_id")
+      graft.functions.LmIndex.buildFromBase(
+        3, store, "lm3", lmSharedBase(s, dir, "b3h80"))
+      graft.functions.LmIndex.score(3, store, "lm3",
+        pq(s, dir, "documents").filter(col("doc_id") % 5 === 0),
+        "doc_id", "text")
+        .orderBy("doc_id")
     }),
 
     // PERSISTED modified-KN serve — the KenLM-default smoothing scored
-    // from the same build3 model: D1/D2/D3+ re-estimated at serve time
+    // from the same order-3 model: D1/D2/D3+ re-estimated at serve time
     // from the STORED count-of-count tallies (stats n1..n4, per-context
     // buckets in ctx), never rescanning any corpus. Shares
     // q_mkn_bigram's oracle SQL verbatim (in-corpus row-identity), same
@@ -2365,15 +2362,15 @@ object SparkEntry {
     "q_mkn_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 3)
-      graft.functions.LmIndex.scoreMkn(store, "lm3", d, "doc_id", "text",
-        fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+      graft.functions.LmIndex.score(2, store, "lm3", d, "doc_id", "text",
+        graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
     }),
 
     // The PROBED modified-KN serves (round-16 task 1 — modified KN is
     // the smoothing the CCNet deployment actually gates with, so its
     // batch path gets the same regime-switched pruning the plain-KN
-    // family has): a 4% batch scored against the persisted build3 model
+    // family has): a 4% batch scored against the persisted order-3 model
     // with every bigram-level (order 2) / all-eight-keyed (order 3)
     // table read pruned to the batch's vocabulary. Scoring in-corpus,
     // so each shares its inline twin's oracle SQL with the batch
@@ -2381,18 +2378,18 @@ object SparkEntry {
     "q_mkn_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 3)
-      graft.functions.LmIndex.scoreBatchMkn(
-        store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
-        fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+      graft.functions.LmIndex.scoreBatch(
+        2, store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
+        graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
     }),
 
     "q_mkn3_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 3)
-      graft.functions.LmIndex.scoreBatchMkn3(
-        store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
-        fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+      graft.functions.LmIndex.scoreBatch(
+        3, store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
+        graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
     }),
 
@@ -2404,7 +2401,7 @@ object SparkEntry {
     "q_kn5_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 5)
-      graft.functions.LmIndex.score5(store, "lm5", d, "doc_id", "text")
+      graft.functions.LmIndex.score(5, store, "lm5", d, "doc_id", "text")
         .orderBy("doc_id")
     }),
 
@@ -2413,8 +2410,8 @@ object SparkEntry {
     "q_kn5_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 5)
-      graft.functions.LmIndex.scoreBatch5(
-        store, "lm5", d.filter(col("doc_id") % 25 === 0), "doc_id", "text")
+      graft.functions.LmIndex.scoreBatch(
+        5, store, "lm5", d.filter(col("doc_id") % 25 === 0), "doc_id", "text")
         .orderBy("doc_id")
     }),
 
@@ -2422,27 +2419,28 @@ object SparkEntry {
     // split, score the held-out 20% — unseen words/pairs/.../5-grams
     // route through the documented backoff recipe at every level.
     "q_kn5_holdout" -> ((s, dir) =>
-      // The SHARED holdout score frame (cache_lm5h_scores):
-      // crossScore5(train80, heldout) over the shared 80%-split base —
-      // the persisted twin serves the identical frame (one oracle SQL
-      // verbatim), so the nine-exchange order-5 scoring chain runs once.
+      // The holdout score frame (cache_lm5h_scores): crossScore(5,
+      // train80, heldout) over the shared 80%-split base, whose
+      // checkpoint also feeds the persisted twin's build.
       lmhScoresShared(s, dir, 5).orderBy("doc_id")),
 
     // The persisted twin under OOV — shares q_kn5_holdout's oracle SQL
     // verbatim (the seventeen-table store roundtrip must not perturb a
-    // single count; the physical build stays inside this timed closure,
-    // and score5(store from base) == scoreFrames5(base frames) is
-    // pinned by LmSmoothingSpec score5==crossScore5 + LmSharedBaseSpec
-    // and re-pinned under OOV by LmHoldoutShareSpec).
+    // single count; the physical build from the shared base and the
+    // serve from that store both stay inside this timed closure, and
+    // LmHoldoutShareSpec pins store serve == base-frame score under OOV).
     "q_kn5_persisted_holdout" -> ((s, dir) => {
       val root = java.nio.file.Files.createTempDirectory("graft_lm5_").toString
       val store = new graft.io.ParquetTableStore(s, root)
-      graft.functions.LmIndex.build5FromBase(
-        store, "lm5", lmSharedBase(s, dir, "b5h80"))
-      lmhScoresShared(s, dir, 5).orderBy("doc_id")
+      graft.functions.LmIndex.buildFromBase(
+        5, store, "lm5", lmSharedBase(s, dir, "b5h80"))
+      graft.functions.LmIndex.score(5, store, "lm5",
+        pq(s, dir, "documents").filter(col("doc_id") % 5 === 0),
+        "doc_id", "text")
+        .orderBy("doc_id")
     }),
 
-    // FULL modified Kneser-Ney at ORDER 5 from the same build5 model —
+    // FULL modified Kneser-Ney at ORDER 5 from the same order-5 model —
     // the literal KenLM serve shape: seven levels, each with its own
     // D1/D2/D3+ estimated from that level's stored count-of-counts
     // (all seven calibrate on this corpus — the ESTIMATED branch is
@@ -2457,9 +2455,9 @@ object SparkEntry {
     "q_mkn5_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lmSharedStore(s, dir, 5)
-      graft.functions.LmIndex.scoreBatchMkn5(
-        store, "lm5", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
-        fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+      graft.functions.LmIndex.scoreBatch(
+        5, store, "lm5", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
+        graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
     }),
 
@@ -2475,7 +2473,7 @@ object SparkEntry {
     "q_kn5_pruned" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lm5PrunedSharedStore(s, dir)
-      graft.functions.LmIndex.score5(store, "lm5", d, "doc_id", "text")
+      graft.functions.LmIndex.score(5, store, "lm5", d, "doc_id", "text")
         .orderBy("doc_id")
     }),
 
@@ -2486,8 +2484,8 @@ object SparkEntry {
     "q_mkn5_pruned" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
       val store = lm5PrunedSharedStore(s, dir)
-      graft.functions.LmIndex.scoreMkn5(store, "lm5", d, "doc_id", "text",
-        fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+      graft.functions.LmIndex.score(5, store, "lm5", d, "doc_id", "text",
+        graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
     }),
 
@@ -2500,7 +2498,7 @@ object SparkEntry {
     // ppl-buckets tiling SQL).
     "q_ccnet_gate" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      // The gate composition over the SHARED scoreMkn5 frame
+      // The gate composition over the SHARED order-5 modified-KN frame
       // (q_mkn5_persisted reports the same one) — langid + join +
       // per-language terciles are the only per-query work.
       graft.functions.LmIndex.ccnetGateFrom(
@@ -2530,13 +2528,13 @@ object SparkEntry {
       // overlaps the score with the seventeen staged writes (§2.6):
       // the score reads the capped base-derived frames, bit-identical
       // to the written tables (spec-pinned).
-      graft.functions.LmIndex.build5Scored(store, "lm5", d, "doc_id", "text",
+      graft.functions.LmIndex.buildScored(5, store, "lm5", d, "doc_id", "text",
         docs = d, maxVocab = 20L)
         .orderBy("doc_id")
     }),
 
-    // Order-5 maintenance ORACLE-PINNED: build5 on two thirds of the
-    // corpus, append5 the remaining third, score everything — the
+    // Order-5 maintenance ORACLE-PINNED: build order 5 on two thirds of the
+    // corpus, append the remaining third, score everything — the
     // oracle RETRAINS from scratch on the full corpus (knPentaChainSql
     // reads all documents), so a hash match proves append == rebuild on
     // the union through all seventeen tables AND the scoring joins
@@ -2546,7 +2544,7 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft_lm5_").toString
       val store = new graft.io.ParquetTableStore(s, root)
       // The drill helper overlaps the two independent-job pairs the
-      // sequential build5/append5/score5 chain left idle (guide §2.6):
+      // sequential build/append/score chain left idle (guide §2.6):
       // the delta's base pass runs with the build's staged writes, and
       // the final score — reading only the checkpointed MERGED counts,
       // row-identical to the swapped tables (spec-pinned) — runs with
@@ -2554,7 +2552,7 @@ object SparkEntry {
       // unchanged (every table staged and swapped); the oracle still
       // retrains from scratch on the full corpus, so the hash match
       // keeps pinning append == rebuild.
-      graft.functions.LmIndex.appendDrill5(store, "lm5",
+      graft.functions.LmIndex.appendDrill(5, store, "lm5",
         d.filter(col("doc_id") % 3 =!= 0),
         d.filter(col("doc_id") % 3 === 0), d, "doc_id", "text")
         .orderBy("doc_id")
@@ -2581,7 +2579,7 @@ object SparkEntry {
       // §2.6: the score (positional-mode lag frame, like the build's)
       // reads the base-derived frames — bit-identical to the written
       // tables — so it overlaps the nine staged writes.
-      graft.functions.LmIndex.build3Scored(store, "lm3", d, "doc_id", "text",
+      graft.functions.LmIndex.buildScored(3, store, "lm3", d, "doc_id", "text",
         docs = d)
         .orderBy("doc_id")
     }),
@@ -4231,7 +4229,7 @@ object SparkEntry {
     * (trigram discounting over the continuation-BIGRAM middle level,
     * count-based bigram at the second token, MLE unigram first).
     * Shared verbatim by q_kn_trigram (inline) and q_kn3_persisted (the
-    * build3 store serve, which must be row-identical in-corpus);
+    * order-3 store serve, which must be row-identical in-corpus);
     * `scoreWhere` filters the SCORED documents only — the model CTEs
     * always read the full corpus — so q_kn3_probed replays the probed
     * in-corpus batch against the same frozen model. */
@@ -4304,7 +4302,7 @@ object SparkEntry {
 
   /** Frozen-model ORDER-3 cross-scoring replay (train split → score
     * split) — [[knCrossScoreSql]]'s shape one recursion level up,
-    * mirroring [[graft.functions.LmIndex.scoreFrames3]]'s total OOV
+    * mirroring the order-3 [[graft.functions.LmIndex.scoreFrames]]'s total OOV
     * recipe branch for branch: reserved 0.5-type continuation/unigram
     * mass; a seen 2-gram context covers seen and unseen triples in one
     * absolute-discount expression (c3 defaulting 0); an unseen 2-gram
@@ -4411,7 +4409,7 @@ object SparkEntry {
     * [[graft.functions.TextAnalysis.mknBigramLogProb]] (count-of-count
     * estimated D1/D2/D3+, per-context bucket tallies, the 0.5/1.0/1.5
     * fallback in the degenerate branch). Shared verbatim by q_mkn_bigram
-    * (inline) and q_mkn_persisted (the build3 store serve with the
+    * (inline) and q_mkn_persisted (the order-3 store serve with the
     * tallies READ from the model tables — row-identical in-corpus);
     * `scoreWhere` filters the SCORED documents only (per-doc scores are
     * independent, so filtering the aggregate equals scoring the batch —
@@ -4511,7 +4509,7 @@ object SparkEntry {
     * t1..t4, continuation-bigram level from m1..m4, the second-token
     * bigram fallback from b1..b4), per-context bucket tallies at every
     * level, 0.5/1.0/1.5 fallback per degenerate level. Shared verbatim
-    * by q_mkn_trigram (inline) and q_mkn3_persisted (the build3 store
+    * by q_mkn_trigram (inline) and q_mkn3_persisted (the order-3 store
     * serve reading the same tallies from its widened tables);
     * `scoreWhere` filters the SCORED documents only (q_mkn3_probed). */
   private def mknTrigramChainSql(scoreWhere: String = ""): String = {
@@ -4623,11 +4621,11 @@ object SparkEntry {
   }
 
   /** Order-5 interpolated-KN score chain — mirrors
-    * [[graft.functions.LmIndex.scoreFrames5]] term by term: raw counts
+    * the order-5 [[graft.functions.LmIndex.scoreFrames]] term by term: raw counts
     * at the top of each position-k chain, continuation counts below
     * (m2 = N1+ over trigram types, m3 over 4-gram types, m4 over 5-gram
     * types), D = 0.75 at every level. Shared verbatim by
-    * q_kn5_persisted (the build5 store serve — row-identical in-corpus)
+    * q_kn5_persisted (the order-5 store serve — row-identical in-corpus)
     * and q_kn5_probed (`scoreWhere` filters the SCORED documents only;
     * the model CTEs always read the full corpus). */
   private def knPentaChainSql(scoreWhere: String = ""): String = {
@@ -4749,12 +4747,12 @@ object SparkEntry {
 
   /** Frozen-model ORDER-5 cross-scoring replay (train split → score
     * split) — [[knTrigramCrossScoreSql]] two recursion levels up,
-    * mirroring [[graft.functions.LmIndex.scoreFrames5]]'s total OOV
+    * mirroring the order-5 [[graft.functions.LmIndex.scoreFrames]]'s total OOV
     * recipe branch for branch: every level covers its seen and unseen
     * events in one absolute-discount expression (count coalesced to 0);
     * an unseen context backs off a full level; reserved 0.5-type
     * continuation/unigram mass. Shared verbatim by q_kn5_holdout
-    * (inline cross-score) and q_kn5_persisted_holdout (the build5 store
+    * (inline cross-score) and q_kn5_persisted_holdout (the order-5 store
     * serve). */
   private def knPentaCrossScoreSql(
       trainWhere: String, scoreWhere: String): String =
@@ -4770,7 +4768,7 @@ object SparkEntry {
          |    FROM documents WHERE $scoreWhere""".stripMargin)
 
   /** VOCABULARY-CAPPED order-5 chain — mirrors
-    * [[graft.functions.LmIndex.build5]] with `maxVocab`: the model
+    * the order-5 [[graft.functions.LmIndex.build]] with `maxVocab`: the model
     * trains on tokens whose below-top-K words (by frequency, ties by
     * word ascending — both engines' ORDER BY cnt DESC, w) are mapped to
     * the reserved `<unk>`, then the RAW corpus scores against it — a
@@ -4796,7 +4794,7 @@ object SparkEntry {
     * defines the TRAINING token frame (CTE `ttoks`), `sptInner` the
     * scored documents' raw token SELECT; every level covers its seen
     * and unseen events with full backoff and the reserved 0.5-type
-    * mass ([[graft.functions.LmIndex.scoreFrames5]] branch for
+    * mass (the order-5 [[graft.functions.LmIndex.scoreFrames]] branch for
     * branch). */
   private def knPentaOovChainSql(
       ttoksCtes: String, sptInner: String): String = {
@@ -4930,11 +4928,11 @@ object SparkEntry {
   }
 
   /** Modified-KN ORDER-5 score chain — mirrors
-    * [[graft.functions.LmIndex.scoreFramesMkn5]]: the order-5 recursion
+    * the order-5 modified-KN [[graft.functions.LmIndex.scoreFrames]]: the order-5 recursion
     * with per-LEVEL estimated D1/D2/D3+ across all SEVEN levels (raw
     * 5/4/3/2-gram plus the three continuation levels), per-context
     * bucket tallies at every level, 0.5/1.0/1.5 fallback per degenerate
-    * level. The oracle of q_mkn5_persisted (the build5 store serve
+    * level. The oracle of q_mkn5_persisted (the order-5 store serve
     * reading the same tallies from its widened tables). */
   private def mknPentaChainSql(scoreWhere: String = ""): String =
     s"""WITH $mknPentaCtes
@@ -5180,7 +5178,7 @@ object SparkEntry {
        |FROM rk ORDER BY doc_id""".stripMargin
 
   /** Shared CTE block for the COUNT-PRUNED order-5 chains — the KenLM
-    * `--prune` analog's bookkeeping ([[graft.functions.LmIndex.build5]]
+    * `--prune` analog's bookkeeping ([[graft.functions.LmIndex.build]]
     * with pruneMin): full count tables (`bigf trif m2f fourf m3f fivef
     * m4f`) feed PRUNED event tables (`big tri m2 four m3 five m4`,
     * rows with count >= the key width's threshold) and context tables
@@ -5290,8 +5288,8 @@ object SparkEntry {
       |    AND pt.prev1 = mctx4.prev1""".stripMargin
 
   /** COUNT-PRUNED order-5 KN chain — mirrors
-    * [[graft.functions.LmIndex.scoreFrames5]] over a
-    * `build5(pruneMin)` model: pruned rows coalesce to 0 under their
+    * the order-5 [[graft.functions.LmIndex.scoreFrames]] over a
+    * `build(5, pruneMin)` model: pruned rows coalesce to 0 under their
     * (still-present, full-cc) contexts, every λ carries the pruned
     * mass, and a fully-pruned context backs off a whole level. The
     * oracle of q_kn5_pruned (in-corpus scoring of the pruned model, so
@@ -5336,7 +5334,7 @@ object SparkEntry {
   }
 
   /** COUNT-PRUNED order-5 modified-KN chain — mirrors
-    * [[graft.functions.LmIndex.scoreFramesMkn5]] over a pruned model:
+    * the order-5 modified-KN [[graft.functions.LmIndex.scoreFrames]] over a pruned model:
     * all seven levels' discounts estimate from the FULL count-of-count
     * tallies (calibration precedes pruning — KenLM's order), bucket
     * tallies count survivors, λ carries the pruned mass, D(0) = 0 for

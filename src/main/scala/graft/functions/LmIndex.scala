@@ -1,67 +1,186 @@
 package graft.functions
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.io.TableStore
 
-/** Persisted Kneser-Ney bigram language model over a
+/** Persisted Kneser-Ney language model of order 2..5 over a
   * [[graft.io.TableStore]] — the train-offline / score-online split the
-  * REAL CCNet deployment runs (Wenzek et al. 2020: the KenLM model is
-  * trained ONCE on a clean reference corpus, then every crawl shard is
-  * scored against the frozen model): the corpus-scale counting pass
-  * happens at [[build]] time and lands as model TABLES; scoring any
-  * later document set reads only those vocabulary-bounded tables. The
-  * LM twin of [[LexIndex]]/[[AnnIndex]]'s build/serve posture.
+  * REAL CCNet deployment runs (Wenzek et al. 2020: a frozen order-5
+  * KenLM under modified-KN discounts is trained ONCE on a clean
+  * reference corpus, then every crawl shard is scored against it): the
+  * corpus-scale counting pass happens at [[build]] time and lands as
+  * model TABLES; scoring any later document set reads only those
+  * vocabulary-bounded tables. The LM twin of [[LexIndex]]/[[AnnIndex]]'s
+  * build/serve posture.
   *
-  * Unlike the in-corpus scorer ([[TextAnalysis.knBigramLogProb]], which
-  * by construction never meets an unseen event), a frozen model scoring
-  * NEW text needs total out-of-vocabulary semantics. The recipe, every
-  * branch deterministic and oracle-replayable:
+  * ONE model, indexed by level — the order-generic recursion of KenLM's
+  * build (Heafield 2011): level k in 2..order holds its raw k-gram table
+  * and that table's context table; every level below the top also holds
+  * its CONTINUATION table N1+(•, k-gram), counted over the (k+1)-gram
+  * types (the standard KN lower-order counts), with its own context
+  * table. Orders 2 and 3 are prefixes of order 5: one order-N store
+  * serves every order <= N under both smoothings ([[Kn]], [[Mkn]])
+  * without retraining (spec-pinned).
   *
-  *   - continuation: P_cont(w) = N1+(•,w)/btypes when w was ever a
-  *     bigram continuation, else 0.5/btypes (half of one type's mass —
-  *     the reserved-OOV convention, mirroring [[build]]'s docs);
+  * Model tables under `prefix` (level k's key is prev(k-1)..prev, w —
+  * columns `prev`, `prev2`, ...; its context key drops `w`):
+  * {{{
+  *   table                       columns                                   at
+  *   uni                         w, c1                                     every order
+  *   cont                        w, n1c  (N1+(•,w) over bigram types)      every order
+  *   big  / tri  / four / five   key, c2 / c3 / c4 / c5                    raw level k = 2..5
+  *   ctx  / ctx3 / ctx4 / ctx5   ctx key, cc*, n1f*, 3 buckets, [pm]       raw level k
+  *   m2   / m3   / m4            key, mcount / m3c / m4c                   continuation k < order
+  *   mctx / mctx3 / mctx4        ctx key, mcc / m3cc / m4cc, n1f*c, ...    continuation k
+  *   stats                       ONE row: total_tokens, then per level     every order
+  *                               its types and count-of-counts 1..4,
+  *                               [prune2..pruneN]
+  * }}}
+  * The exact per-level names are the [[Grams]] table; an order-2 build
+  * writes the narrow bigram form (ctx without buckets, stats with
+  * `bigram_types` only) — modified KN serves from order >= 3 builds. The
+  * bucket columns (follower counts with count 1, 2, 3+) and the
+  * count-of-counts are the tallies modified KN estimates its discounts
+  * from (Chen & Goodman 1999 eq. 26), free at build time: one extra
+  * conditional sum in aggregations that already scan the count table.
+  *
+  * Frozen-model OOV semantics, every branch deterministic and
+  * oracle-replayable:
+  *   - continuation: P_cont(w) = N1+(•,w)/btypes when w was ever a bigram
+  *     continuation, else 0.5/btypes (half of one type's mass — the
+  *     reserved-OOV convention);
   *   - document-initial token: MLE unigram c1/total, else 0.5/total;
-  *   - seen context `prev`: P = max(c(prev,w) − D, 0)/cc +
-  *     D·N1+(prev,•)/cc · P_cont(w) — with c(prev,w) defaulting to 0,
-  *     this is the textbook absolute-discount interpolation covering
-  *     both the seen-pair and unseen-pair cases in one expression;
-  *   - unseen context: full backoff to P_cont(w).
-  *
+  *   - a position-j token (j-1 tokens of context) scores with the
+  *     order-min(j, order) chain: raw counts at the top, continuation
+  *     counts below, P_cont at the bottom;
+  *   - every level, seen context: max(count − D, 0)/cc + D·n1f/cc ·
+  *     lower (count defaulting 0 — one expression covers seen and unseen
+  *     events); unseen context: full backoff to the lower level.
   * Scoring the training corpus itself never reaches an OOV branch, so
-  * [[crossScore]](train, train) == [[TextAnalysis.knBigramLogProb]]
-  * bit-for-bit (spec-pinned, and q_kn_persisted shares q_kn_bigram's
-  * oracle SQL verbatim).
+  * in-corpus scores equal [[TextAnalysis]]'s inline chains bit for bit
+  * (spec-pinned; the persisted queries share those oracle SQLs).
   *
   * Scale: model tables are vocabulary-bounded (Heaps' law), written
   * key-sorted; the scoring joins stay UNHINTED — statically a 100 TB
   * corpus can never vocab-broadcast (the [[TextAnalysis]] joinVocab
   * rationale), and AQE broadcasts the SMALLER side from measured bytes
   * (for a micro-batch gate that is the batch's token frame, which is
-  * exactly right). The three KN aggregates derive from the bigram
-  * table, localCheckpoint'ed once at build so the corpus tokenizes
-  * exactly once ([[LexIndex.build]]'s discipline).
-  *
-  * Model tables (under `prefix`):
-  *   - `<prefix>_uni` (w, c1) — unigram counts
-  *   - `<prefix>_big` (prev, w, c2) — bigram counts
-  *   - `<prefix>_ctx` (prev, cc, n1f) — per-context total + distinct
-  *     followers
-  *   - `<prefix>_cont` (w, n1c) — continuation counts
-  *   - `<prefix>_stats` (total_tokens, bigram_types) — ONE row, longs
+  * exactly right). Every aggregate derives from the count tables, and
+  * the count tables from ONE checkpointed corpus aggregation
+  * ([[baseCounts]]), so the corpus tokenizes exactly once per build
+  * ([[LexIndex.build]]'s discipline).
   */
 object LmIndex {
 
-  /** The five model frames, derivable inline from a training corpus or
-    * loaded from a store — the single scoring input shape. */
+  /** A serve's interpolation smoothing. */
+  sealed trait Smoothing
+
+  /** Interpolated Kneser-Ney with one absolute `discount` D at every
+    * level ([[TextAnalysis.knBigramLogProb]]'s smoothing). */
+  final case class Kn(discount: Double = 0.75) extends Smoothing {
+    require(discount > 0.0 && discount < 1.0,
+      s"discount must be in (0, 1), got $discount")
+  }
+
+  /** MODIFIED Kneser-Ney ([[TextAnalysis.mknBigramLogProb]]'s smoothing —
+    * the KenLM default CCNet literally runs): per-LEVEL D1/D2/D3+
+    * estimated from that level's STORED count-of-count tallies, so serve
+    * time never rescans any corpus; D(0) = 0 (an unseen event under a
+    * seen context contributes only the context's λ-weighted backoff
+    * mass). A degenerate level (an empty n1/n2/n3 bucket) takes
+    * `fallbackDiscounts` (KenLM --discount_fallback) or raises the
+    * curated error — evaluated lazily per branch, the
+    * [[TextAnalysis.mknLevelDiscounts]] ANSI discipline. Needs the bucket
+    * tallies of an order >= 3 build. */
+  final case class Mkn(
+      fallbackDiscounts: Option[(Double, Double, Double)] = None)
+    extends Smoothing
+
+  /** One table family at key width k: the raw k-gram counts, or (`raw`
+    * = false) the continuation counts N1+(•, k-gram) over the (k+1)-gram
+    * types. Carries every stored name of the family: the table and its
+    * count column, the context table and its six columns (total,
+    * followers, the count-1/2/3+ buckets, pruned mass), the stats-row
+    * types column and tally prefix, and the modified-KN discount suffix
+    * ([[TextAnalysis.mknLevelDiscounts]]'s level prefix). */
+  private final case class Gram(
+      k: Int, raw: Boolean, name: String, count: String, ctx: String,
+      ctxCols: Seq[String], types: String, tally: String, disc: String) {
+    def ctxKeys: Seq[String] = lagCols(k).reverse
+    def keys: Seq[String] = ctxKeys :+ "w"
+  }
+
+  /** The per-level name table — every table and column name any build
+    * writes, so stores built by earlier code keep loading (the layout is
+    * pinned by LmStoreFormatSpec). */
+  private val Grams: Seq[Gram] = Seq(
+    Gram(2, raw = true, "big", "c2", "ctx",
+      Seq("cc", "n1f", "nf1", "nf2", "nf3p", "pmb"), "bigram_types", "n", "b"),
+    Gram(3, raw = true, "tri", "c3", "ctx3",
+      Seq("cc3", "n1f3", "tf1", "tf2", "tf3p", "pmt"), "trigram_types", "t", "t"),
+    Gram(4, raw = true, "four", "c4", "ctx4",
+      Seq("cc4", "n1f4", "ff1", "ff2", "ff3p", "pmf"), "fourgram_types", "f", "f"),
+    Gram(5, raw = true, "five", "c5", "ctx5",
+      Seq("cc5", "n1f5", "vf1", "vf2", "vf3p", "pmv"), "fivegram_types", "v", "v"),
+    Gram(2, raw = false, "m2", "mcount", "mctx",
+      Seq("mcc", "n1f2c", "mf1", "mf2", "mf3p", "pmm"), "m2_types", "m", "m"),
+    Gram(3, raw = false, "m3", "m3c", "mctx3",
+      Seq("m3cc", "n1f3c", "pf1", "pf2", "pf3p", "pmp"), "m3_types", "p", "p"),
+    Gram(4, raw = false, "m4", "m4c", "mctx4",
+      Seq("m4cc", "n1f4c", "qf1", "qf2", "qf3p", "pmq"), "m4_types", "q", "q"))
+
+  private def gram(k: Int, raw: Boolean): Gram =
+    Grams.find(g => g.k == k && g.raw == raw).get
+
+  /** An order's gram families in stored order: the raw bigram, then per
+    * level k >= 3 the raw k-gram and the (k-1) continuation. */
+  private def gramsOf(order: Int): Seq[Gram] = {
+    require(order >= 2 && order <= 5, s"order must be in [2, 5], got $order")
+    gram(2, raw = true) +:
+      (3 to order).flatMap(k => Seq(gram(k, raw = true), gram(k - 1, raw = false)))
+  }
+
+  /** An order's table names, in build (write) order. */
+  private[graft] def tableNames(order: Int): Seq[String] =
+    "uni" +: gramsOf(order).flatMap(g =>
+      if (g.name == "big") Seq(g.name, g.ctx, "cont") else Seq(g.name, g.ctx)) :+
+      "stats"
+
+  /** A table's word-valued key columns — its write sort order and the
+    * columns a batch pruner restricts. */
+  private def keysOf(table: String): Seq[String] = table match {
+    case "uni" | "cont" => Seq("w")
+    case "stats" => Nil
+    case t => Grams.collectFirst {
+      case g if g.name == t => g.keys
+      case g if g.ctx == t => g.ctxKeys
+    }.get
+  }
+
+  /** The model frames of one order, by table name ([[tableNames]]) —
+    * derivable inline from a training corpus or loaded from a store; the
+    * single scoring input shape. */
   private[graft] final case class KnModel(
-      uni: DataFrame, big: DataFrame, ctx: DataFrame, cont: DataFrame,
-      stats: DataFrame)
+      order: Int, tables: ListMap[String, DataFrame]) {
+    def apply(table: String): DataFrame = tables(table)
+    def map(f: (String, DataFrame) => DataFrame): KnModel =
+      copy(tables = tables.map { case (t, df) => t -> f(t, df) })
+  }
 
   private def tokens(df: DataFrame, idCol: String, textCol: String): DataFrame =
     df.select(col(idCol),
       posexplode(TextAnalysis.words(col(textCol))).as(Seq("pos", "w")))
+
+  // Every lag frame in this family funnels through
+  // [[TextAnalysis.laggedTokens]] — the per-doc window by default, the
+  // single-exchange positional join under `graft.lm.positionalJoin`
+  // (the executable form of the giant-document mitigation).
+  private def lagCols(order: Int): Seq[String] =
+    (1 until order).map(j => if (j == 1) "prev" else s"prev$j")
 
   /** Run independent eager jobs (checkpoint materializations) on a
     * short-lived pool — guide §2.6: a later job's tasks back-fill the
@@ -73,11 +192,11 @@ object LmIndex {
   /** Run a staged table write and an independent score-side job
     * CONCURRENTLY (guide §2.6 — overlap independent jobs): the score
     * reads only already-checkpointed count frames (never a store file),
-    * and those frames are row-identical to the tables the write swaps
-    * in (the framesFromCounts* == written-tables equalities, spec-
-    * pinned), so the score job back-fills the staging writes' stage
-    * tails instead of running serially after the swap. Returns the
-    * materialized (localCheckpoint) score frame. */
+    * and the frames [[assemble]] derives from them are row-identical to
+    * the tables the write swaps in (spec-pinned), so the score job
+    * back-fills the staging writes' stage tails instead of running
+    * serially after the swap. Returns the materialized
+    * (localCheckpoint) score frame. */
   private def writeAndScore(
       write: () => Unit, score: => DataFrame): DataFrame = {
     val Seq(_, scored) = concurrently[Any](Seq(
@@ -86,7 +205,7 @@ object LmIndex {
     scored.asInstanceOf[DataFrame]
   }
 
-  /** The reserved out-of-vocabulary token a [[build5]] vocabulary
+  /** The reserved out-of-vocabulary token a [[build]] vocabulary
     * envelope maps below-top-K words to — the `<unk>` convention of
     * every deployed n-gram LM (KenLM/SRILM). A corpus that literally
     * contains this token merges it with the OOV mass, which is the
@@ -123,36 +242,524 @@ object LmIndex {
       .drop("__in_vocab")
   }
 
-  // Every lag frame in this family funnels through
-  // [[TextAnalysis.laggedTokens]] — the per-doc window by default, the
-  // single-exchange positional join under `graft.lm.positionalJoin`
-  // (the executable form of the giant-document mitigation).
-  private def withPrev(toks: DataFrame, idCol: String): DataFrame =
-    TextAnalysis.laggedTokens(toks, idCol, Seq("prev"))
+  // ---- derivation: count tables -> model tables ----------------------------
 
-  /** Model frames computed LAZILY from a training corpus (no jobs fire
-    * here; [[build]] adds the one-tokenize checkpoint discipline). */
-  private[graft] def modelFrames(
-      train: DataFrame, idCol: String, textCol: String): KnModel = {
-    val toks = tokens(train, idCol, textCol)
-    val pt = withPrev(toks, idCol)
-    val uni = toks.groupBy("w").agg(count(lit(1)).cast("long").as("c1"))
-    val big = pt.filter(col("prev").isNotNull)
-      .groupBy("prev", "w").agg(count(lit(1)).cast("long").as("c2"))
-    val ctx = big.groupBy("prev").agg(
-      sum(col("c2")).cast("long").as("cc"),
-      count(lit(1)).cast("long").as("n1f"))
-    val cont = big.groupBy("w").agg(count(lit(1)).cast("long").as("n1c"))
-    val stats = uni.agg(sum(col("c1")).cast("long").as("total_tokens"))
-      .crossJoin(big.agg(count(lit(1)).cast("long").as("bigram_types")))
-    KnModel(uni, big, ctx, cont, stats)
+  /** Per-level count thresholds (index k-2 = key width k); `Nil` = no
+    * pruning. */
+  private def thresholds(order: Int, pruneMin: Seq[Long]): Seq[Long] = {
+    require(pruneMin.isEmpty ||
+      (pruneMin.length == order - 1 && pruneMin.forall(_ >= 1L)),
+      s"pruneMin must be ${order - 1} thresholds >= 1 (key widths " +
+        s"2..$order), got $pruneMin")
+    if (pruneMin.isEmpty) Seq.fill(order - 1)(1L) else pruneMin
   }
 
+  /** The continuation counts at width k from the raw (k+1)-gram table:
+    * the number of distinct left extensions of each k-gram (the middle
+    * KN levels count contexts, not raw frequency). */
+  private def contCounts(k: Int, higher: DataFrame): DataFrame = {
+    val g = gram(k, raw = false)
+    higher.groupBy(g.keys.map(col): _*)
+      .agg(count(lit(1)).cast("long").as(g.count))
+  }
+
+  /** One context table over a (possibly count-pruned) gram table. Unpruned
+    * (`minCount` 1): total + distinct followers, plus the count-bucket
+    * tallies when `tallies`. Pruned — the KenLM `--prune` analog's
+    * bookkeeping: the total stays the FULL count total, the
+    * follower/bucket tallies count SURVIVORS (count >= `minCount`), and
+    * pm is the PRUNED MASS (Σ of dropped counts). Serving folds pm into
+    * the backoff weight — λ = (ΣD·tally + pm)/cc — which keeps the level
+    * a proper distribution: Σ_surv (c−D(c))/cc + λ·Σ P_lower = (cc − pm −
+    * ΣD)/cc + (ΣD + pm)/cc = 1. A context whose EVERY follower was pruned
+    * drops out entirely: its λ would be pm/cc = 1, which is exactly the
+    * unseen-context full-backoff branch the serve already takes on a
+    * missing row (spec-pinned). Unpruned tables carry no pm column (the
+    * layout of every store written before pruning existed). */
+  private def contextTable(
+      df: DataFrame, g: Gram, minCount: Long, tallies: Boolean): DataFrame = {
+    val Seq(ccN, nfN, b1N, b2N, b3pN, pmN) = g.ctxCols
+    val c = col(g.count)
+    val grouped = df.groupBy(g.ctxKeys.map(col): _*)
+    if (minCount == 1L) {
+      def bucket(cond: Column) = sum(when(cond, 1L).otherwise(0L)).cast("long")
+      val buckets =
+        if (!tallies) Nil
+        else Seq(bucket(c === 1L).as(b1N), bucket(c === 2L).as(b2N),
+          bucket(c >= 3L).as(b3pN))
+      grouped.agg(sum(c).cast("long").as(ccN),
+        (count(lit(1)).cast("long").as(nfN) +: buckets): _*)
+    } else {
+      def surv(cond: Column) =
+        sum(when(c >= minCount && cond, 1L).otherwise(0L)).cast("long")
+      grouped.agg(
+        sum(c).cast("long").as(ccN),
+        surv(lit(true)).as(nfN),
+        surv(c === 1L).as(b1N),
+        surv(c === 2L).as(b2N),
+        surv(c >= 3L).as(b3pN),
+        coalesce(sum(when(c < minCount, c)), lit(0L)).cast("long").as(pmN))
+        .filter(col(nfN) > 0L)
+    }
+  }
+
+  /** One level's stats columns as a one-row frame: its types count, plus
+    * the count-of-count tallies 1..4 when `tallies`. */
+  private def countOfCounts(
+      df: DataFrame, g: Gram, tallies: Boolean): DataFrame = {
+    val c = col(g.count)
+    val cols = count(lit(1)).cast("long").as(g.types) +:
+      (if (!tallies) Nil
+      else (1 to 4).map(j =>
+        coalesce(sum(when(c === j.toLong, 1L).otherwise(0L)), lit(0L))
+          .cast("long").as(s"${g.tally}$j")))
+    df.agg(cols.head, cols.tail: _*)
+  }
+
+  /** Assemble an order's model frames from its count tables: `uni` and the
+    * raw k-gram counts for k = 2..order (`raws(0)` is the bigram table).
+    * `conts` are the continuation count tables when the caller already
+    * holds them (checkpointed, or stored), else they derive lazily from
+    * the raw tables. Shared by the lazy, base-derived, built, merged and
+    * pruned-from-store paths, so no derivation can drift between them.
+    *
+    * `pruneMin` (one threshold per key width 2..order, `Nil` = none)
+    * drops rows below their width's threshold from the raw AND
+    * continuation gram tables — each pruned on ITS OWN count, the
+    * table-per-level generalization of KenLM's per-order rule — and
+    * folds their mass into the context tables' pm columns
+    * ([[contextTable]]). Never pruned: uni and cont (KenLM forbids
+    * unigram pruning; P_cont is the floor of every backoff chain) and the
+    * stats row's tallies (discounts calibrate on the FULL counts, then
+    * pruning drops rows — KenLM's order of operations: adjusted counts
+    * and discounts precede pruning). Continuation counts and context
+    * tables likewise derive from the FULL tables. Unpruned levels get no
+    * trivial filters and no all-zero pm columns, so an unpruned build is
+    * byte-identical to the pre-pruning layout. */
+  private def assemble(
+      order: Int, uni: DataFrame, raws: Seq[DataFrame],
+      conts: Option[Seq[DataFrame]] = None,
+      pruneMin: Seq[Long] = Nil): KnModel = {
+    val thr = thresholds(order, pruneMin)
+    val ms = conts.getOrElse((2 until order).map(k => contCounts(k, raws(k - 1))))
+    val tallies = order > 2
+    val full = gramsOf(order).map(g =>
+      g -> (if (g.raw) raws(g.k - 2) else ms(g.k - 2)))
+    val levels = full.flatMap { case (g, df) =>
+      val t = thr(g.k - 2)
+      val kept = if (t == 1L) df else df.filter(col(g.count) >= t)
+      Seq(g.name -> kept, g.ctx -> contextTable(df, g, t, tallies)) ++
+        (if (g.name == "big")
+          Seq("cont" -> df.groupBy("w").agg(count(lit(1)).cast("long").as("n1c")))
+        else Nil)
+    }
+    val stats0 = full.foldLeft(
+      uni.agg(sum(col("c1")).cast("long").as("total_tokens"))) {
+      case (acc, (g, df)) => acc.crossJoin(countOfCounts(df, g, tallies))
+    }
+    val stats =
+      if (thr.forall(_ == 1L)) stats0
+      else stats0.select(col("*") +: thr.zipWithIndex.map { case (t, i) =>
+        lit(t).as(s"prune${i + 2}")
+      }: _*)
+    KnModel(order,
+      ListMap((("uni" -> uni) +: levels :+ ("stats" -> stats)): _*))
+  }
+
+  /** ONE corpus aggregation feeding EVERY count table of an order-N
+    * build: group the lag frame by its FULL context key — doc-start
+    * NULLs are ordinary group keys — and checkpoint the
+    * vocabulary-bounded result once. Each order's count table then
+    * re-derives by a cheap re-aggregation over the checkpointed base
+    * (count of a coarser group == Σ of its disjoint full-key subgroup
+    * counts — exact longs, bit-identical to aggregating the corpus per
+    * order, spec-pinned via the build==modelFrames table equalities).
+    * Aggregating the corpus once per count table instead charges one
+    * tokenize pass per order, and an explode-all-orders form pushes N×
+    * the token rows through its exchange and checkpoints every table's
+    * rows where the base is the top table's size alone — at 100 TB the
+    * corpus passes are the whole build cost (guide §1.2/§2.3: remove
+    * passes, then shuffle fewer bytes). */
+  private def baseCounts(pt: DataFrame, ctxCols: Seq[String]): DataFrame =
+    pt.groupBy((ctxCols :+ "w").map(col): _*)
+      .agg(count(lit(1)).cast("long").as("c"))
+
+  /** The order-`order` [[baseCounts]] frame of `train` (`maxVocab` > 0
+    * first caps the vocabulary — [[capVocab]]) — NOT checkpointed; the
+    * caller owns materialization and lifetime. The sharing handle for the
+    * one-corpus-pass discipline ACROSS queries: an inline cross-score
+    * ([[framesFromBase]]) and a persisted build ([[buildFromBase]]) of
+    * the SAME training split can both derive from one checkpointed base
+    * instead of each paying its own corpus pass. */
+  private[graft] def baseOf(
+      order: Int, train: DataFrame, idCol: String, textCol: String,
+      maxVocab: Long = 0L): DataFrame = {
+    require(maxVocab >= 0L,
+      s"maxVocab must be >= 0 (0 = unbounded), got $maxVocab")
+    val toks0 = tokens(train, idCol, textCol)
+    val toks = if (maxVocab > 0L) capVocab(toks0, maxVocab) else toks0
+    baseCounts(TextAnalysis.laggedTokens(toks, idCol, lagCols(order)),
+      lagCols(order).reverse)
+  }
+
+  /** Split a checkpointed [[baseOf]] frame into uni and the raw count
+    * tables — cheap re-aggregations of the vocabulary-bounded base (lag
+    * columns are monotone, so a non-null prevK implies non-null
+    * prev(K−1)..prev); the top level IS the base, renamed. */
+  private def countsFromBase(
+      order: Int, base: DataFrame): (DataFrame, Seq[DataFrame]) = {
+    val raws = (2 to order).map { k =>
+      val g = gram(k, raw = true)
+      val rows = base.filter(col(g.ctxKeys.head).isNotNull)
+      if (k == order) rows.select(g.keys.map(col) :+ col("c").as(g.count): _*)
+      else rows.groupBy(g.keys.map(col): _*)
+        .agg(sum(col("c")).cast("long").as(g.count))
+    }
+    (base.groupBy("w").agg(sum(col("c")).cast("long").as("c1")), raws)
+  }
+
+  /** Model frames computed LAZILY from a training corpus, each count
+    * table its own corpus aggregation (no jobs fire here; [[build]] adds
+    * the one-pass checkpoint discipline) — the reference derivation the
+    * base-derived paths are pinned against. */
+  private[graft] def modelFrames(
+      order: Int, train: DataFrame, idCol: String, textCol: String): KnModel = {
+    val toks = tokens(train, idCol, textCol)
+    val pt = TextAnalysis.laggedTokens(toks, idCol, lagCols(order))
+    val raws = (2 to order).map { k =>
+      val g = gram(k, raw = true)
+      pt.filter(col(g.ctxKeys.head).isNotNull)
+        .groupBy(g.keys.map(col): _*).agg(count(lit(1)).cast("long").as(g.count))
+    }
+    assemble(order,
+      toks.groupBy("w").agg(count(lit(1)).cast("long").as("c1")), raws)
+  }
+
+  /** Model frames from a (checkpointed) [[baseOf]] frame — bit-identical
+    * to [[modelFrames]] (sum of disjoint full-key subgroup counts;
+    * spec-pinned). */
+  private[graft] def framesFromBase(order: Int, base: DataFrame): KnModel = {
+    val (uni, raws) = countsFromBase(order, base)
+    assemble(order, uni, raws)
+  }
+
+  // ---- build and maintenance -----------------------------------------------
+
+  /** Derive every aggregate from the (checkpoint-backed or stored) count
+    * tables and swap all of the order's tables in. The continuation
+    * tables each feed several write jobs (their own table, their
+    * context, stats), so they checkpoint once unless the caller passes
+    * them. Kept SEQUENTIAL deliberately: a concurrently() variant (the
+    * §2.6 overlap) measured 1-2 s WORSE at sf0.1 (8.8-9.6 s vs 7.7-7.8 s
+    * for q_kn5_persisted_holdout) — re-aggregations of one tiny
+    * checkpointed base contend for the same cores overwriteAll's staging
+    * pool is about to use. */
+  private def writeTables(
+      order: Int, store: TableStore, prefix: String,
+      uni: DataFrame, raws: Seq[DataFrame], pruneMin: Seq[Long] = Nil,
+      conts: Option[Seq[DataFrame]] = None): Unit = {
+    val ms = conts.getOrElse(
+      (2 until order).map(k => contCounts(k, raws(k - 1)).localCheckpoint()))
+    val m = assemble(order, uni, raws, Some(ms), pruneMin)
+    try store.overwriteAll(m.tables.toSeq.map { case (t, df) =>
+      s"${prefix}_$t" ->
+        (if (t == "stats") df else df.sortWithinPartitions(keysOf(t).map(col): _*))
+    })
+    finally {
+      if (conts.isEmpty) ms.foreach(_.unpersist())
+      ()
+    }
+  }
+
+  /** Build (or rebuild) the order-`order` model tables from `train` — ONE
+    * tokenize pass ([[baseOf]]) feeding one checkpointed count frame;
+    * every table derives from its split (build-time only; swap for
+    * reliable checkpoint() on a real cluster — the [[LexIndex.build]]
+    * note).
+    *
+    * `pruneMin` is the COUNT-PRUNING threshold per key width 2..order —
+    * the KenLM `--prune` analog every deployed CCNet model runs (frozen
+    * gate models prune singletons at orders >= 3 precisely because in the
+    * near-unique-gram regime the unpruned model IS the corpus — the
+    * BASELINE heapsbigram record); see [[assemble]]. A pruned model is
+    * FROZEN: [[append]]/[[deleteDocs]] reject it (merged counts cannot
+    * reconstruct pruned totals); rebuild on the grown corpus instead.
+    *
+    * `maxVocab` > 0 additionally caps the VOCABULARY ([[capVocab]]:
+    * below-top-K words map to [[OovToken]] before any counting) — the
+    * envelope [[TextAnalysis.tokenizerMaxTypes]] gives the tokenizer
+    * trainers, applied to the model build; composes with pruneMin (cap
+    * first, then prune the capped counts): build(maxVocab) == build on
+    * the pre-mapped corpus, table for table (spec-pinned). 0 = unbounded
+    * (a Heaps-unbounded corpus then builds a vocabulary-sized unigram
+    * table — cap it for frozen gate models). */
+  def build(
+      order: Int, store: TableStore, prefix: String,
+      train: DataFrame, idCol: String, textCol: String,
+      pruneMin: Seq[Long] = Nil, maxVocab: Long = 0L): Unit = {
+    thresholds(order, pruneMin) // reject bad thresholds before the corpus pass
+    val base = baseOf(order, train, idCol, textCol, maxVocab).localCheckpoint()
+    try buildFromBase(order, store, prefix, base, pruneMin)
+    finally {
+      base.unpersist()
+      ()
+    }
+  }
+
+  /** [[build]] from an already-checkpointed [[baseOf]] frame the caller
+    * shares with other consumers of the same training split (lifetime
+    * owned by the caller). */
+  private[graft] def buildFromBase(
+      order: Int, store: TableStore, prefix: String, base: DataFrame,
+      pruneMin: Seq[Long] = Nil): Unit = {
+    val (uni, raws) = countsFromBase(order, base)
+    writeTables(order, store, prefix, uni, raws, pruneMin)
+  }
+
+  /** [[build]] with the score-side job OVERLAPPED with the staged table
+    * writes (§2.6): the score reads the base-derived frames
+    * (bit-identical to the written tables — the framesFromBase /
+    * buildFromBase equalities, spec-pinned), so it back-fills the write
+    * jobs' stage tails. Unpruned builds only (a pruned model's frames
+    * differ from the unpruned derivations). Returns the materialized
+    * plain-KN score frame (== [[score]] on the just-built store, row for
+    * row). */
+  private[graft] def buildScored(
+      order: Int, store: TableStore, prefix: String,
+      train: DataFrame, idCol: String, textCol: String,
+      docs: DataFrame, maxVocab: Long = 0L): DataFrame = {
+    val base = baseOf(order, train, idCol, textCol, maxVocab).localCheckpoint()
+    try {
+      val (uni, raws) = countsFromBase(order, base)
+      writeAndScore(
+        () => writeTables(order, store, prefix, uni, raws),
+        scoreFrames(assemble(order, uni, raws), docs, idCol, textCol, Kn()))
+    } finally {
+      base.unpersist()
+      ()
+    }
+  }
+
+  /** Build a COUNT-PRUNED model from an already-built UNPRUNED store of
+    * the SAME training corpus — §1.2 across stores: the unpruned store's
+    * gram tables ARE the full count tables a pruned build derives
+    * everything from (bit-identical by the build==frames table
+    * equalities), and its continuation tables ARE the full continuation
+    * counts, so the pruned build becomes vocabulary-bounded
+    * filter+aggregate WRITE jobs over stored tables — no corpus pass, no
+    * base re-aggregation, no continuation re-derivation. Identical tables
+    * to build(order, ..., pruneMin) (spec-pinned). */
+  private[graft] def buildPrunedFromStore(
+      order: Int, src: TableStore, srcPrefix: String,
+      dst: TableStore, dstPrefix: String, pruneMin: Seq[Long]): Unit = {
+    val m = loadModel(order, src, srcPrefix)
+    val (raws, conts) = gramsOf(order).partition(_.raw)
+    writeTables(order, dst, dstPrefix, m("uni"), raws.map(g => m(g.name)),
+      pruneMin, conts = Some(conts.map(g => m(g.name))))
+  }
+
+  /** Count-merge core shared by [[append]] (sign +1) and [[deleteDocs]]
+    * (sign −1): merge the delta's count tables into the stored ones
+    * (concurrently — independent jobs over the checkpointed delta base,
+    * guide §2.6, like overwriteAll's staging phase), re-derive every
+    * aggregate from the MERGED counts, and swap all tables. Every frame
+    * here is vocabulary-bounded — maintenance never rescans the training
+    * corpus, only tokenizes the delta. Merged tables localCheckpoint
+    * BEFORE the overwrite (plans derived from store tables must
+    * materialize before the store swaps them — the round-1 storage
+    * invariant). `deltaBase`: the delta's [[baseOf]] computed earlier by
+    * the caller (e.g. overlapped with a preceding build's staged writes —
+    * [[appendDrill]]); lifetime stays with the caller. `scoreDocs`:
+    * score these against the merged model, overlapped with the writes
+    * ([[writeAndScore]]). */
+  private def mergeCounts(
+      order: Int, store: TableStore, prefix: String,
+      delta: DataFrame, idCol: String, textCol: String, sign: Long,
+      deltaBase: Option[DataFrame] = None,
+      scoreDocs: Option[DataFrame] = None): Option[DataFrame] = {
+    // A count-pruned model is FROZEN: its stored gram tables are
+    // missing the below-threshold rows, so a count merge would compound
+    // new deltas onto incomplete counts and re-derive context totals
+    // that disagree with the true corpus (cc/pm unreconstructable).
+    // Fail loudly before any tokenize — one 1-row stats read.
+    val st = store.load(s"${prefix}_stats")
+    val pruneCols = st.columns.filter(_.startsWith("prune"))
+    if (pruneCols.nonEmpty)
+      require(st.select(pruneCols.map(col): _*).head().toSeq.forall(_ == 1L),
+        "LmIndex: append/deleteDocs on a COUNT-PRUNED model — merged " +
+          "counts cannot reconstruct the pruned totals; rebuild on the " +
+          "updated corpus instead (pruned models are frozen gate models)")
+    val g = deltaBase.getOrElse(
+      baseOf(order, delta, idCol, textCol).localCheckpoint())
+    try {
+      val (dUni, dRaws) = countsFromBase(order, g)
+      val counted = ("uni", "c1") +:
+        gramsOf(order).filter(_.raw).map(r => (r.name, r.count))
+      val merged = concurrently(counted.zip(dUni +: dRaws).map {
+        case ((t, c), dd) => () =>
+          val keys = keysOf(t).map(col)
+          store.load(s"${prefix}_$t")
+            .unionByName(dd.select(keys :+ (col(c) * lit(sign)).as(c): _*))
+            .groupBy(keys: _*).agg(sum(col(c)).cast("long").as(c))
+            .filter(col(c) =!= 0L)
+            .localCheckpoint()
+      })
+      try {
+        // A negative merged count means the delta was NOT a subset of
+        // what the model was trained on (deleting text never added, or
+        // adding a negative ghost) — the un-tombstoning lesson from
+        // LexIndex: fail loudly BEFORE the swap, never persist a corrupt
+        // model. One tripwire job over all count tables (checkpointed;
+        // the violation union is vocabulary-bounded and almost always
+        // empty).
+        require(merged.zip(counted).map { case (df, (_, c)) =>
+          df.filter(col(c) < 0L).select(col(c).as("bad"))
+        }.reduce(_ unionByName _).isEmpty,
+          "LmIndex delta drives a count negative — deletes must carry " +
+            "exactly previously-added documents (GDPR-erasure contract); " +
+            "rebuild the model if the original text is gone")
+        def write(): Unit =
+          writeTables(order, store, prefix, merged.head, merged.tail)
+        scoreDocs match {
+          case None =>
+            write()
+            None
+          case Some(docs) =>
+            Some(writeAndScore(() => write(),
+              scoreFrames(assemble(order, merged.head, merged.tail),
+                docs, idCol, textCol, Kn())))
+        }
+      } finally {
+        merged.foreach(_.unpersist())
+        ()
+      }
+    } finally {
+      if (deltaBase.isEmpty) g.unpersist()
+      ()
+    }
+  }
+
+  /** Add documents to the persisted model WITHOUT retraining: the
+    * delta's counts merge additively at every level and the aggregates
+    * re-derive from the merged counts — append == full rebuild on the
+    * grown corpus, table-for-table (spec-pinned and oracle-pinned:
+    * q_kn_append / q_kn5_append score against the oracle's
+    * train-on-union replay). Counts are content-based (no per-doc
+    * records), so appending the same documents twice double-counts —
+    * idempotency is the CALLER's ledger, exactly as with a real KenLM
+    * count merge. */
+  def append(
+      order: Int, store: TableStore, prefix: String,
+      delta: DataFrame, idCol: String, textCol: String): Unit = {
+    mergeCounts(order, store, prefix, delta, idCol, textCol, sign = 1L)
+    ()
+  }
+
+  /** Remove previously-added documents from the persisted model (the
+    * GDPR-erasure path): their counts subtract, zero-count rows drop,
+    * and the aggregates re-derive — delete == rebuild-without-deleted
+    * (spec- and oracle-pinned). The delta must be exactly text the model
+    * was trained on; a delta that drives any count negative fails loudly
+    * before the swap. */
+  def deleteDocs(
+      order: Int, store: TableStore, prefix: String,
+      docs: DataFrame, idCol: String, textCol: String): Unit = {
+    mergeCounts(order, store, prefix, docs, idCol, textCol, sign = -1L)
+    ()
+  }
+
+  /** The maintenance drill — [[build]] on `train`, [[append]] `delta`,
+    * score `docs` against the appended model — with BOTH §2.6 overlaps
+    * the sequential form leaves on the table:
+    *
+    *   1. the delta's [[baseOf]] pass reads only the corpus, so it runs
+    *      concurrently with the build's staged writes;
+    *   2. the final score reads only the checkpointed MERGED counts
+    *      (row-identical to the tables the merge swaps in —
+    *      spec-pinned), so it runs concurrently with the merge's staged
+    *      writes instead of serially after them.
+    *
+    * The physical append still happens in full (every table staged and
+    * swapped — the store-swap invariant untouched); only the idle
+    * cluster time between the independent jobs is removed. Returns the
+    * materialized plain-KN score frame (== [[score]] on the post-append
+    * store, row for row). */
+  private[graft] def appendDrill(
+      order: Int, store: TableStore, prefix: String,
+      train: DataFrame, delta: DataFrame, docs: DataFrame,
+      idCol: String, textCol: String): DataFrame = {
+    val Seq(_, db) = concurrently[Any](Seq(
+      () => { build(order, store, prefix, train, idCol, textCol); () },
+      () => baseOf(order, delta, idCol, textCol).localCheckpoint()))
+    val base = db.asInstanceOf[DataFrame]
+    try mergeCounts(order, store, prefix, delta, idCol, textCol, sign = 1L,
+      deltaBase = Some(base), scoreDocs = Some(docs)).get
+    finally {
+      base.unpersist()
+      ()
+    }
+  }
+
+  /** [[deleteDocs]] with the plain-KN score of `scoreDocs` OVERLAPPED
+    * with the merge's staged writes (§2.6) — the clone-then-mutate
+    * delete drill's serve side; same row-identity argument as
+    * [[appendDrill]]. Returns the materialized score frame. */
+  private[graft] def deleteDocsScored(
+      order: Int, store: TableStore, prefix: String,
+      docs: DataFrame, idCol: String, textCol: String,
+      scoreDocs: DataFrame): DataFrame =
+    mergeCounts(order, store, prefix, docs, idCol, textCol, sign = -1L,
+      scoreDocs = Some(scoreDocs)).get
+
+  /** Versioned rebuild under live serving — the [[LexIndex
+    * .rebuildVersioned]] posture: [[build]] writes its tables through
+    * SEQUENTIAL atomic swaps, so a serve loading mid-rebuild could pair
+    * new counts with old stats; the versioned path builds into a fresh
+    * `<name>_g<N>` prefix and publishes it with ONE manifest swap, last
+    * ([[graft.io.VersionedIndex]] — CAS-claimed, crash-drilled).
+    * `pruneMin`/`maxVocab` pass through to [[build]] (the natural
+    * lifecycle for pruned models, which cannot append). */
+  def rebuildVersioned(
+      order: Int, store: TableStore, name: String,
+      train: DataFrame, idCol: String, textCol: String,
+      pruneMin: Seq[Long] = Nil, maxVocab: Long = 0L): String =
+    graft.io.VersionedIndex.rebuild(store, name, train.sparkSession)(
+      p => build(order, store, p, train, idCol, textCol, pruneMin, maxVocab))
+
+  // ---- serve -----------------------------------------------------------------
+
+  /** Load an order's model frames from a store (lazy table reads). Any
+    * store built at order >= `order` serves it. */
+  def loadModel(order: Int, store: TableStore, prefix: String): KnModel =
+    KnModel(order, ListMap(
+      tableNames(order).map(t => t -> store.load(s"${prefix}_$t")): _*))
+
+  /** Model frames of the CURRENT generation, pinned: the manifest is
+    * resolved once, here — a rebuild publishing mid-serve cannot
+    * retarget the returned frames (they read the resolved generation's
+    * prefix). Feed to [[scoreFrames]], or pass the resolved prefix to a
+    * standing [[graft.stream.EventAnalytics.pplGateEachBatch]]. */
+  def loadModelVersioned(
+      order: Int, store: TableStore, name: String): KnModel =
+    loadModel(order, store, graft.io.VersionedIndex.currentPrefix(store, name))
+
+  /** [[score]] against the current generation (resolved once per call). */
+  def scoreVersioned(
+      order: Int, store: TableStore, name: String,
+      docs: DataFrame, idCol: String, textCol: String,
+      smoothing: Smoothing = Kn()): DataFrame =
+    scoreFrames(loadModelVersioned(order, store, name), docs, idCol, textCol,
+      smoothing)
+
   /** The reserved-0.5-type-mass OOV branches shared by EVERY serve path
-    * (order-2, order-3, modified-KN — the specs pin them as one recipe;
-    * a forked copy is the divergence risk). `btypes`/`total` are the
-    * caller's stat columns; the degenerate guards stay INSIDE the
-    * otherwise-branch (the lazy CaseWhen ANSI discipline). */
+    * (the specs pin them as one recipe; a forked copy is the divergence
+    * risk). `btypes`/`total` are the caller's stat columns; the
+    * degenerate guards stay INSIDE the otherwise-branch (the lazy
+    * CaseWhen ANSI discipline from mknBigramLogProb — ANSI mode errors on
+    * double division by zero, and only these branches can divide by a
+    * zero stat: a seen continuation/unigram implies its denominator is
+    * positive). A model with no bigram types (single-token training
+    * docs) or no tokens at all fails with guidance, not DIVIDE_BY_ZERO. */
   private def pcontOOV(btypes: Column): Column =
     when(col("n1c").isNotNull,
       col("n1c").cast("double") / btypes)
@@ -170,7 +777,7 @@ object LmIndex {
 
   /** Normalize a context frame for the serve recipes: ensure the
     * PRUNED-MASS column exists (0L when absent). Models written by a
-    * count-pruned [[build5]] carry real pruned-mass columns in their
+    * count-pruned [[build]] carry real pruned-mass columns in their
     * context tables; unpruned builds (and every model written before
     * pruning existed) do not — the scorers read the column
     * unconditionally, so absence normalizes to zero here, at the join
@@ -179,51 +786,105 @@ object LmIndex {
     if (df.columns.contains(pmName)) df
     else df.withColumn(pmName, lit(0L))
 
-  /** Score `docs` against a frozen model — the shared recipe every
-    * entry point funnels through (the hashUniform single-sourcing
-    * principle). Output: (idCol, n_tokens, logprob), the
+  /** The modified-KN discounts as ONE broadcast row: each level's stored
+    * count-of-count tallies renamed to its discount suffix (the bigram
+    * level's n1..n4 become b1..b4), then D1/D2/D3+ per level via
+    * [[TextAnalysis.mknLevelDiscounts]] — ONE eq.-26 edit point across
+    * the inline and persisted scorers (the pcontOOV single-sourcing
+    * discipline). Derived from the UNPRUNED stats row, so a probed
+    * serve's calibration never depends on its batch. */
+  private def discountsRow(
+      stats: DataFrame, order: Int,
+      fallback: Option[(Double, Double, Double)]): DataFrame = {
+    val grams = gramsOf(order)
+    val keep = Seq(col("total_tokens"), col("bigram_types"))
+    stats.select(keep ++ grams.flatMap(g =>
+        (1 to 4).map(j => col(s"${g.tally}$j").as(s"${g.disc}$j"))): _*)
+      .select(keep ++ grams.flatMap(g =>
+        TextAnalysis.mknLevelDiscounts(g.disc, fallback)): _*)
+  }
+
+  /** Score `docs` against a frozen model — the shared recipe every entry
+    * point funnels through (the hashUniform single-sourcing principle).
+    * Output: (idCol, n_tokens, logprob), the
     * [[TextAnalysis.knBigramLogProb]] contract (1e-6 fixed-point
-    * per-token longs, one division at the end). */
+    * per-token longs, one division at the end). The recursion and the
+    * OOV recipe are the object header's.
+    *
+    * Backoff weight at every level: (D·followers + pm)/cc under [[Kn]],
+    * (ΣD_j·bucket_j + pm)/cc under [[Mkn]] — pm is the count mass a
+    * pruned build dropped from this context (0 and bit-inert on unpruned
+    * models); the tallies count SURVIVING followers, so carrying pm
+    * keeps every pruned level a proper distribution (the KN-sums-to-1
+    * convention through pruned branches).
+    *
+    * Scale: the token frame is the fat side — every model join is one
+    * exchange of it. Tables fold losslessly by join key (uni+cont on w;
+    * at each level below the top the raw k-gram table with its
+    * continuation table, and the two context tables): each folded right
+    * side's keys are a SUBSET of its host's — an observed (k+1)-gram's
+    * suffix k-gram is observed at the same position, a continuation
+    * word IS a word — and a row is only consumed when its own branch's
+    * guard column is non-null. Context tables must stay their own probes:
+    * an unseen event under a SEEN context needs cc without an event-row
+    * hit. So the corpus exchanges 2·order − 1 times (3 at order 2, 5 at
+    * order 3, 9 at order 5) — the OOV floor; the in-corpus scorers'
+    * tighter folds are unsound here. */
   private[graft] def scoreFrames(
       m: KnModel, docs: DataFrame, idCol: String, textCol: String,
-      discount: Double): DataFrame = {
-    require(discount > 0.0 && discount < 1.0,
-      s"discount must be in (0, 1), got $discount")
-    val pt = withPrev(tokens(docs, idCol, textCol), idCol)
-    val total = col("total_tokens").cast("double")
-    val btypes = col("bigram_types").cast("double")
-    // Degenerate-model guards live INSIDE the OOV branches (the lazy
-    // CaseWhen discipline from mknBigramLogProb — ANSI mode errors on
-    // double division by zero, and only these branches can divide by a
-    // zero stat: a seen continuation/unigram implies its denominator is
-    // positive). A model with no bigram types (single-token training
-    // docs) or no tokens at all fails with guidance, not DIVIDE_BY_ZERO.
-    val pcont = pcontOOV(btypes)
-    val uniP = uniPOOV(total)
-    // Backoff weight: (D·n1f + pm)/cc — pm is the count mass a pruned
-    // build dropped from this context (0 on unpruned models, where the
-    // term is bit-inert). Folding it into λ keeps every pruned level a
-    // proper distribution: Σ_surv (c−D)/cc + λ·Σ P_lower = 1 exactly
-    // when λ carries the pruned mass (the KN-sums-to-1 convention
-    // through pruned branches).
-    val knP = greatest(coalesce(col("c2"), lit(0L)).cast("double")
-        - lit(discount), lit(0.0)) / col("cc").cast("double") +
-      (lit(discount) * col("n1f").cast("double")
-        + col("pmb").cast("double")) / col("cc").cast("double") * pcont
-    val p = when(col("prev").isNull, uniP)
-      .when(col("cc").isNotNull, knP)
-      .otherwise(pcont)
-    // The token frame is the fat side — every model join is one exchange
-    // of it. The two w-keyed tables fold into ONE probe (cont's keys are
-    // a subset of uni's: a continuation word IS a word), so the corpus
-    // shuffles three times (w, (prev,w), prev), not four. ctx must stay
-    // its own join: an unseen (prev,w) pair with a SEEN context needs
-    // cc/n1f without a bigram-row hit.
-    val wM = m.uni.join(m.cont, Seq("w"), "left")
-    pt.join(wM, Seq("w"), "left")
-      .join(m.big, Seq("prev", "w"), "left")
-      .join(withZero(m.ctx, "pmb"), Seq("prev"), "left")
-      .crossJoin(broadcast(m.stats))
+      smoothing: Smoothing): DataFrame = {
+    val order = m.order
+    val pt = TextAnalysis.laggedTokens(
+      tokens(docs, idCol, textCol), idCol, lagCols(order))
+    val row = smoothing match {
+      case Kn(_) => m("stats")
+      case Mkn(fb) => discountsRow(m("stats"), order, fb)
+    }
+    val pcont = pcontOOV(col("bigram_types").cast("double"))
+    val uniP = uniPOOV(col("total_tokens").cast("double"))
+    def level(g: Gram, lower: Column): Column = {
+      val Seq(ccN, nfN, b1N, b2N, b3pN, pmN) = g.ctxCols
+      def dbl(c: String) = col(c).cast("double")
+      val cnt = col(g.count)
+      val seen = smoothing match {
+        case Kn(discount) =>
+          val d = lit(discount)
+          greatest(coalesce(cnt, lit(0L)).cast("double") - d, lit(0.0)) /
+            dbl(ccN) + (d * dbl(nfN) + dbl(pmN)) / dbl(ccN) * lower
+        case Mkn(_) =>
+          def dj(j: Int) = col(s"d$j${g.disc}")
+          val lam = (dj(1) * dbl(b1N) + dj(2) * dbl(b2N) + dj(3) * dbl(b3pN)
+            + dbl(pmN)) / dbl(ccN)
+          val dOfC = when(cnt === 1L, dj(1)).when(cnt === 2L, dj(2))
+            .otherwise(dj(3))
+          when(cnt.isNotNull, (cnt.cast("double") - dOfC) / dbl(ccN))
+            .otherwise(lit(0.0)) + lam * lower
+      }
+      when(col(ccN).isNotNull, seen).otherwise(lower)
+    }
+    // contP(j): the continuation chain up to level j+1 (contP(0) = P_cont);
+    // raw level k backs off to continuation level k-1.
+    val contP = (2 until order).scanLeft(pcont)((lower, k) =>
+      level(gram(k, raw = false), lower))
+    val lags = lagCols(order)
+    val p = (2 until order).foldLeft(when(col("prev").isNull, uniP)) { (acc, k) =>
+      acc.when(col(lags(k - 1)).isNull, level(gram(k, raw = true), contP(k - 2)))
+    }.otherwise(level(gram(order, raw = true), contP(order - 2)))
+    def ctxOf(g: Gram) = withZero(m(g.ctx), g.ctxCols.last)
+    val joined = (2 to order).foldLeft(
+      pt.join(m("uni").join(m("cont"), Seq("w"), "left"), Seq("w"), "left")) {
+      (acc, k) =>
+        val r = gram(k, raw = true)
+        val (grams, ctxs) =
+          if (k == order) (m(r.name), ctxOf(r))
+          else {
+            val c = gram(k, raw = false)
+            (m(r.name).join(m(c.name), r.keys, "left"),
+              ctxOf(r).join(ctxOf(c), r.ctxKeys, "left"))
+          }
+        acc.join(grams, r.keys, "left").join(ctxs, r.ctxKeys, "left")
+    }
+    joined.crossJoin(broadcast(row))
       .select(col(idCol), round(log(p) * 1e6, 0).cast("long").as("lp"))
       .groupBy(idCol)
       .agg(sum(col("lp")).as("s"), count(lit(1)).cast("long").as("n_tokens"))
@@ -232,249 +893,15 @@ object LmIndex {
           .as("logprob"))
   }
 
-  /** Inline train-on-A / score-B — no store. With `docs eq train` this
-    * is exactly [[TextAnalysis.knBigramLogProb]] (no OOV branch can
-    * fire in-corpus; spec-pinned). */
+  /** Inline train-on-A / score-B — no store. With `docs eq train` this is
+    * exactly [[TextAnalysis]]'s in-corpus chain of the same order and
+    * smoothing (no OOV branch can fire in-corpus; spec-pinned); with all
+    * document lengths <= k it reduces to the order-k cross-score. */
   def crossScore(
-      train: DataFrame, docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames(modelFrames(train, idCol, textCol), docs, idCol, textCol,
-      discount)
-
-  /** ONE corpus aggregation feeding EVERY count table of an order-N
-    * build: group the lag frame by its FULL context key — doc-start
-    * NULLs are ordinary group keys — and checkpoint the
-    * vocabulary-bounded result once. Each order's count table then
-    * re-derives by a cheap re-aggregation over the checkpointed base
-    * (count of a coarser group == Σ of its disjoint full-key subgroup
-    * counts — exact longs, bit-identical to aggregating the corpus per
-    * order, spec-pinned via the build==modelFrames table equalities).
-    * Before this the builds materialized one corpus aggregation PER
-    * COUNT TABLE (order 2: two tokenize passes; order 3: three; the
-    * order-5 explode-all-orders form paid one pass but pushed 5× the
-    * token rows through its exchange and checkpointed all five tables'
-    * rows) — at 100 TB the corpus passes are the whole build cost
-    * (guide §1.2/§2.3: remove passes, then shuffle fewer bytes). */
-  private def baseCounts(pt: DataFrame, ctxCols: Seq[String]): DataFrame =
-    pt.groupBy((ctxCols :+ "w").map(col): _*)
-      .agg(count(lit(1)).cast("long").as("c"))
-
-  /** Build (or rebuild) the model tables from `train` — ONE corpus
-    * pass: the checkpointed [[baseCounts]] frame (grouped by the full
-    * (prev, w) key) feeds both count tables and every derived
-    * aggregate; `overwriteAll`'s per-table jobs re-aggregate the
-    * vocabulary-bounded base, never the corpus (build-time only; swap
-    * for reliable checkpoint() on a real cluster — the
-    * [[LexIndex.build]] note). */
-  def build(
-      store: TableStore, prefix: String,
-      train: DataFrame, idCol: String, textCol: String): Unit = {
-    val pt = withPrev(tokens(train, idCol, textCol), idCol)
-    val base = baseCounts(pt, Seq("prev")).localCheckpoint()
-    try {
-      val uni = base.groupBy("w").agg(sum(col("c")).cast("long").as("c1"))
-      val big = base.filter(col("prev").isNotNull)
-        .select(col("prev"), col("w"), col("c").as("c2"))
-      val ctx = big.groupBy("prev").agg(
-        sum(col("c2")).cast("long").as("cc"),
-        count(lit(1)).cast("long").as("n1f"))
-      val cont = big.groupBy("w").agg(count(lit(1)).cast("long").as("n1c"))
-      val stats = uni.agg(sum(col("c1")).cast("long").as("total_tokens"))
-        .crossJoin(big.agg(count(lit(1)).cast("long").as("bigram_types")))
-      store.overwriteAll(Seq(
-        s"${prefix}_uni" -> uni.sortWithinPartitions("w"),
-        s"${prefix}_big" -> big.sortWithinPartitions("prev", "w"),
-        s"${prefix}_ctx" -> ctx.sortWithinPartitions("prev"),
-        s"${prefix}_cont" -> cont.sortWithinPartitions("w"),
-        s"${prefix}_stats" -> stats))
-    } finally {
-      base.unpersist()
-      ()
-    }
-  }
-
-  /** Count-merge core shared by [[append]] (sign +1) and [[deleteDocs]]
-    * (sign −1): merge the delta's unigram/bigram counts into the stored
-    * tables, re-derive the three KN aggregates from the MERGED bigram
-    * table, and swap all five tables. Every frame here is
-    * vocabulary-bounded — maintenance never rescans the training corpus,
-    * only tokenizes the delta. Merged tables localCheckpoint BEFORE the
-    * overwrite (plans derived from store tables must materialize before
-    * the store swaps them — the round-1 storage invariant). */
-  private def mergeCounts(
-      store: TableStore, prefix: String,
-      delta: DataFrame, idCol: String, textCol: String, sign: Long,
-      deltaBase: Option[DataFrame] = None,
-      scoreDocs: Option[DataFrame] = None): Option[DataFrame] = {
-    // ONE delta pass: both merged tables derive from the checkpointed
-    // base frame (the [[baseCounts]] discipline — the lazy modelFrames
-    // form charged one delta tokenize per merged table). `deltaBase`:
-    // the same frame computed earlier by the caller (e.g. overlapped
-    // with a preceding build's staged writes — [[appendDrill]]);
-    // lifetime stays with the caller.
-    val dBase = deltaBase.getOrElse(
-      baseCounts(
-        withPrev(tokens(delta, idCol, textCol), idCol), Seq("prev"))
-        .localCheckpoint())
-    val dUni = dBase.groupBy("w").agg(sum(col("c")).cast("long").as("c1"))
-    val dBig = dBase.filter(col("prev").isNotNull)
-      .select(col("prev"), col("w"), col("c").as("c2"))
-    val uni = store.load(s"${prefix}_uni")
-      .unionByName(dUni.select(col("w"), (col("c1") * lit(sign)).as("c1")))
-      .groupBy("w").agg(sum(col("c1")).cast("long").as("c1"))
-      .filter(col("c1") =!= 0L)
-      .localCheckpoint()
-    val big = store.load(s"${prefix}_big")
-      .unionByName(dBig.select(col("prev"), col("w"),
-        (col("c2") * lit(sign)).as("c2")))
-      .groupBy("prev", "w").agg(sum(col("c2")).cast("long").as("c2"))
-      .filter(col("c2") =!= 0L)
-      .localCheckpoint()
-    if (deltaBase.isEmpty) dBase.unpersist()
-    try {
-      // A negative merged count means the delta was NOT a subset of what
-      // the model was trained on (deleting text never added, or adding a
-      // negative ghost) — the un-tombstoning lesson from LexIndex: fail
-      // loudly BEFORE the swap, never persist a corrupt model. Both
-      // probes run on the checkpointed (vocabulary-bounded) tables.
-      require(uni.filter(col("c1") < 0L).isEmpty &&
-        big.filter(col("c2") < 0L).isEmpty,
-        "LmIndex delta drives a count negative — deletes must carry " +
-          "exactly previously-added documents (GDPR-erasure contract); " +
-          "rebuild the model if the original text is gone")
-      val ctx = big.groupBy("prev").agg(
-        sum(col("c2")).cast("long").as("cc"),
-        count(lit(1)).cast("long").as("n1f"))
-      val cont = big.groupBy("w").agg(count(lit(1)).cast("long").as("n1c"))
-      val stats = uni.agg(sum(col("c1")).cast("long").as("total_tokens"))
-        .crossJoin(big.agg(count(lit(1)).cast("long").as("bigram_types")))
-      def write(): Unit = store.overwriteAll(Seq(
-        s"${prefix}_uni" -> uni.sortWithinPartitions("w"),
-        s"${prefix}_big" -> big.sortWithinPartitions("prev", "w"),
-        s"${prefix}_ctx" -> ctx.sortWithinPartitions("prev"),
-        s"${prefix}_cont" -> cont.sortWithinPartitions("w"),
-        s"${prefix}_stats" -> stats))
-      scoreDocs match {
-        case None =>
-          write()
-          None
-        case Some(docs) =>
-          // Overlap the five-table staged write with the score-side job
-          // (§2.6): both read only the checkpointed merged counts, and
-          // the derived frames are row-identical to the written tables.
-          Some(writeAndScore(() => write(),
-            scoreFrames(KnModel(uni, big, ctx, cont, stats),
-              docs, idCol, textCol, discount = 0.75)))
-      }
-    } finally {
-      uni.unpersist()
-      big.unpersist()
-      ()
-    }
-  }
-
-  /** Add documents to the persisted model WITHOUT retraining: the
-    * delta's counts merge additively and the KN aggregates re-derive
-    * from the merged bigram table — append == full rebuild on the
-    * grown corpus, table-for-table (spec-pinned and oracle-pinned:
-    * q_kn_append scores against the oracle's train-on-union replay).
-    * Counts are content-based (no per-doc records), so appending the
-    * same documents twice double-counts — idempotency is the CALLER's
-    * ledger, exactly as with a real KenLM count merge. */
-  def append(
-      store: TableStore, prefix: String,
-      delta: DataFrame, idCol: String, textCol: String): Unit = {
-    mergeCounts(store, prefix, delta, idCol, textCol, sign = 1L)
-    ()
-  }
-
-  /** The order-2 maintenance drill — build on `train`, [[append]]
-    * `delta`, score `docs` against the appended model — with the same
-    * two §2.6 overlaps as [[appendDrill5]]: the delta's base pass runs
-    * concurrently with the build's staged writes, and the score (which
-    * reads only the checkpointed merged counts, row-identical to the
-    * written tables) runs concurrently with the merge's staged writes.
-    * Physical append unchanged; returns the materialized score frame
-    * (== [[score]] on the post-append store, row for row). */
-  private[graft] def appendDrill(
-      store: TableStore, prefix: String,
-      train: DataFrame, delta: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val Seq(_, db) = concurrently[Any](Seq(
-      () => { build(store, prefix, train, idCol, textCol); () },
-      () => baseCounts(
-        withPrev(tokens(delta, idCol, textCol), idCol), Seq("prev"))
-        .localCheckpoint()))
-    val base = db.asInstanceOf[DataFrame]
-    try mergeCounts(store, prefix, delta, idCol, textCol, sign = 1L,
-      deltaBase = Some(base), scoreDocs = Some(docs)).get
-    finally {
-      base.unpersist()
-      ()
-    }
-  }
-
-  /** [[deleteDocs]] with the held-out score OVERLAPPED with the merge's
-    * five-table staged write (§2.6) — the clone-then-mutate delete
-    * drill's serve side; same row-identity argument as [[appendDrill]].
-    * Returns the materialized score frame. */
-  private[graft] def deleteDocsScored(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      scoreDocs: DataFrame): DataFrame =
-    mergeCounts(store, prefix, docs, idCol, textCol, sign = -1L,
-      scoreDocs = Some(scoreDocs)).get
-
-  /** Remove previously-added documents from the persisted model (the
-    * GDPR-erasure path): their counts subtract, zero-count rows drop,
-    * and the KN aggregates re-derive — delete == rebuild-without-deleted
-    * (spec- and oracle-pinned). The delta must be exactly text the model
-    * was trained on; a delta that drives any count negative fails loudly
-    * before the swap. */
-  def deleteDocs(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String): Unit = {
-    mergeCounts(store, prefix, docs, idCol, textCol, sign = -1L)
-    ()
-  }
-
-  /** Versioned rebuild under live serving — the [[LexIndex
-    * .rebuildVersioned]] posture: [[build]] writes five tables through
-    * SEQUENTIAL atomic swaps, so a serve loading mid-rebuild could pair
-    * new bigram counts with old stats; the versioned path builds into a
-    * fresh `<name>_g<N>` prefix and publishes it with ONE manifest swap,
-    * last ([[graft.io.VersionedIndex]] — CAS-claimed, crash-drilled). */
-  def rebuildVersioned(
-      store: TableStore, name: String,
-      train: DataFrame, idCol: String, textCol: String): String =
-    graft.io.VersionedIndex.rebuild(store, name, train.sparkSession)(
-      p => build(store, p, train, idCol, textCol))
-
-  /** Model frames of the CURRENT generation, pinned: the manifest is
-    * resolved once, here — a rebuild publishing mid-serve cannot
-    * retarget the returned frames (they read the resolved generation's
-    * prefix). Feed to [[scoreFrames]] via [[scoreVersioned]], or pass
-    * the resolved prefix to a standing [[graft.stream.EventAnalytics
-    * .pplGateEachBatch]]. */
-  def loadModelVersioned(store: TableStore, name: String): KnModel =
-    loadModel(store, graft.io.VersionedIndex.currentPrefix(store, name))
-
-  /** [[score]] against the current generation (resolved once per call). */
-  def scoreVersioned(
-      store: TableStore, name: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames(loadModelVersioned(store, name), docs, idCol, textCol,
-      discount)
-
-  /** Load the model frames from a store (lazy table reads). */
-  def loadModel(store: TableStore, prefix: String): KnModel =
-    KnModel(
-      uni = store.load(s"${prefix}_uni"),
-      big = store.load(s"${prefix}_big"),
-      ctx = store.load(s"${prefix}_ctx"),
-      cont = store.load(s"${prefix}_cont"),
-      stats = store.load(s"${prefix}_stats"))
+      order: Int, train: DataFrame, docs: DataFrame, idCol: String,
+      textCol: String, smoothing: Smoothing = Kn()): DataFrame =
+    scoreFrames(modelFrames(order, train, idCol, textCol), docs, idCol,
+      textCol, smoothing)
 
   /** Score `docs` against the persisted model — reads ONLY the model
     * tables; the training corpus is never touched. The model tables scan
@@ -483,29 +910,29 @@ object LmIndex {
     * batch use [[scoreBatch]], whose table reads prune to the batch's
     * own words. */
   def score(
-      store: TableStore, prefix: String,
+      order: Int, store: TableStore, prefix: String,
       docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames(loadModel(store, prefix), docs, idCol, textCol, discount)
+      smoothing: Smoothing = Kn()): DataFrame =
+    scoreFrames(loadModel(order, store, prefix), docs, idCol, textCol,
+      smoothing)
 
   /** Distinct-word ceiling for [[scoreBatch]]'s literal-IN pruning;
     * session-tunable via `graft.lm.probeMaxWords`. Below it, the batch's
     * words collect to the driver and push down as static IN filters
     * (In/InSet + parquet row-group skipping — the fastest shape at the
     * documented ~10³ words/batch). Above it, NOTHING collects: an
-    * oversized batch would inflate four filter expressions and the plan
+    * oversized batch would inflate the filter expressions and the plan
     * itself (driver memory pressure — the plan carries the literal list
     * per table), so pruning reroutes through a broadcast LEFT SEMI join
     * on the batch's word frame (the [[TextAnalysis]] joinVocab posture:
     * same rows kept, executor-side). The conf value is a TOTAL
     * literal-plan budget: [[batchWordPruner]] divides it by the number
-    * of tables it will prune (4/8/16 at orders 2/3/5), because the
-    * plan cost multiplies by that count — the BASELINE round-16
-    * wide-batch record measured the undivided failure mode (~13k words
-    * × 16 order-5 tables = 17 MB task binaries, 82-109 s p50, the plan
-    * itself the workload) and the semi-join reroute's recovery
-    * (28-38 docs/sec). The default 65536 keeps the total literal mass
-    * ≈ a few MB at every model order. */
+    * of tables it will prune, because the plan cost multiplies by that
+    * count — the BASELINE round-16 wide-batch record measured the
+    * undivided failure mode (~13k words × 16 order-5 tables = 17 MB task
+    * binaries, 82-109 s p50, the plan itself the workload) and the
+    * semi-join reroute's recovery (28-38 docs/sec). The default 65536
+    * keeps the total literal mass ≈ a few MB at every model order. */
   private[graft] def probeMaxWords(df: DataFrame): Int =
     math.min(
       TextAnalysis.confPositiveLong(df, "graft.lm.probeMaxWords", 65536L),
@@ -514,29 +941,25 @@ object LmIndex {
   /** A batch-vocabulary pruner with its release handle: [[release]]
     * unpins the semi-join regime's checkpointed word frame (a no-op in
     * the IN regime, which materializes nothing). One-shot serve calls
-    * ([[scoreBatch]]/[[scoreBatch3]]) return lazy plans and cannot know
-    * when the caller is done — they lean on Spark's ContextCleaner to
-    * reclaim the frame when it goes unreferenced (the pplBuckets
-    * localCheckpoint posture); a STANDING consumer (the streaming
-    * gates, which would otherwise leak one checkpoint per oversized
-    * micro-batch for the stream's lifetime) must call [[release]] after
-    * its sink has consumed the scored rows. */
+    * ([[scoreBatch]]) return lazy plans and cannot know when the caller
+    * is done — they lean on Spark's ContextCleaner to reclaim the frame
+    * when it goes unreferenced (the pplBuckets localCheckpoint posture);
+    * a STANDING consumer (the streaming gate, which would otherwise leak
+    * one checkpoint per oversized micro-batch for the stream's lifetime)
+    * must call [[release]] after its sink has consumed the scored rows. */
   private[graft] final class WordPruner(
       f: (DataFrame, Seq[String]) => DataFrame,
       val release: () => Unit) extends ((DataFrame, Seq[String]) => DataFrame) {
     def apply(t: DataFrame, cols: Seq[String]): DataFrame = f(t, cols)
   }
 
-  /** The probed-serve regime switch, shared by [[scoreBatch]],
-    * [[scoreBatch3]]/[[scoreBatch5]] and the modified-KN twins: returns
-    * a pruner that restricts a model table's given word-valued columns
-    * to the batch's vocabulary — static IN filters below the effective
-    * ceiling (one bounded driver collect; `limit(max+1)` caps the
-    * driver at max+1 rows even on a huge batch — the overflow probe IS
-    * the word collect when it fits), broadcast LEFT SEMI joins on the
-    * lazy word frame above it (no driver collect at any size; the
-    * frame is the batch's tokenize, re-derived per consumer — cheap,
-    * and the price of never materializing it driver-side).
+  /** The probed-serve regime switch: returns a pruner that restricts a
+    * model table's given word-valued columns to the batch's vocabulary —
+    * static IN filters below the effective ceiling (one bounded driver
+    * collect; `limit(max+1)` caps the driver at max+1 rows even on a huge
+    * batch — the overflow probe IS the word collect when it fits),
+    * broadcast LEFT SEMI joins on the word frame above it (no driver
+    * collect at any size).
     *
     * The effective ceiling is [[probeMaxWords]] / `prunedTables`: the
     * literal-IN plan cost multiplies by the number of tables pruned
@@ -576,1608 +999,56 @@ object LmIndex {
     }
   }
 
+  /** Restrict every keyed table of a model to `docs`' vocabulary through
+    * the [[batchWordPruner]] regime switch, dividing the literal budget
+    * by the model's keyed-table count (4 at order 2, 8 at order 3, 16 at
+    * order 5). Lossless for scoring `docs`: pruning only drops rows the
+    * left joins could never hit — every key outside the batch's
+    * vocabulary — and the stats row stays whole, so modified-KN
+    * calibration never depends on the batch. Works on stored AND pinned
+    * (cached) models: against a cached table the IN filter prunes at
+    * in-memory batch granularity via the cached column stats — the
+    * key-sorted build layout is what makes those stats selective (the
+    * order-3 gate measured 10.0 → 14.7 docs/s from exactly this; parquet
+    * row-group skipping remains finer-grained than cached-batch stats,
+    * so the probed store path still leads at 18). Returns the pruner's
+    * release handle for STANDING consumers ([[WordPruner.release]]). */
+  private[graft] def pruneModelR(
+      m: KnModel, docs: DataFrame, textCol: String): (KnModel, () => Unit) = {
+    val prune = batchWordPruner(docs, textCol, prunedTables = m.tables.size - 1)
+    (m.map((t, df) => if (t == "stats") df else prune(df, keysOf(t))),
+      prune.release)
+  }
+
   /** [[score]] for a QUERY-BATCH-sized document set — the probed serve
-    * shape ([[LexIndex.bm25TopK]]'s convention): the batch's DISTINCT
-    * words prune every model-table read to the batch's own vocabulary.
-    * Below [[probeMaxWords]] they collect once (batch-bounded by
-    * construction, never corpus-bounded) and push down as static `IN`
-    * filters — the key-sorted parquet layout turns them into row-group
-    * skipping, so serve cost is the probed slices, not the vocabulary.
-    * Past the ceiling the SAME pruning runs as a broadcast semi-join on
-    * the batch's word frame — no driver collect at any batch size.
-    * Row-identical to [[score]] in BOTH regimes (pruning only drops rows
-    * the left joins could never hit — every w/prev outside the batch's
-    * vocabulary; spec-pinned at both regimes, and q_kn_probed shares the
-    * cross-score oracle SQL). One batch-tokenization job per call (the
-    * word take/collect), the documented serve-call cost. */
+    * shape ([[LexIndex.bm25TopK]]'s convention): every model-table read
+    * prunes to the batch's DISTINCT words ([[pruneModelR]]). Below
+    * [[probeMaxWords]] they collect once (batch-bounded by construction,
+    * never corpus-bounded) and push down as static `IN` filters — the
+    * key-sorted parquet layout turns them into row-group skipping, so
+    * serve cost is the probed slices, not the vocabulary. Past the
+    * ceiling the SAME pruning runs as a broadcast semi-join on the
+    * batch's word frame. Row-identical to [[score]] in BOTH regimes
+    * (spec-pinned; the probed queries share their full-scan twins'
+    * oracle SQL). One batch-tokenization job per call (the word
+    * take/collect), the documented serve-call cost. */
   def scoreBatch(
-      store: TableStore, prefix: String,
+      order: Int, store: TableStore, prefix: String,
       docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame = {
-    val m = loadModel(store, prefix)
-    val prune = batchWordPruner(docs, textCol, prunedTables = 4)
-    val pruned = KnModel(
-      uni = prune(m.uni, Seq("w")),
-      big = prune(m.big, Seq("prev", "w")),
-      ctx = prune(m.ctx, Seq("prev")),
-      cont = prune(m.cont, Seq("w")),
-      stats = m.stats)
-    scoreFrames(pruned, docs, idCol, textCol, discount)
-  }
-
-  // ---- order-3 / modified-KN persisted model (the v2 model family) ----
-  //
-  // The REAL CCNet deployment serves a frozen order-5 KenLM with
-  // modified-KN discounts; [[build5]] (further below) reaches that
-  // literal posture. This intermediate family is the order-3 split:
-  // interpolated KN ([[TextAnalysis.knTrigramLogProb]]'s recursion) and
-  // modified-KN ([[TextAnalysis.mknBigramLogProb]]'s estimated
-  // discounts) from ONE extended model: [[build3]] writes the five
-  // bigram tables (ctx and stats widened with the count-bucket tallies
-  // modified KN estimates its discounts from) plus four trigram-level
-  // tables. A build3'd model therefore serves FOUR smoothings —
-  // [[score]] (order-2 KN, reads the five), [[score3]] (order-3 KN),
-  // [[scoreMkn]] / [[scoreMkn3]] (modified-KN at both orders) — without
-  // retraining, each with a probed twin and a streaming gate.
-
-  /** The nine model frames of the order-3 family. Bigram-level tables
-    * share the [[KnModel]] shapes (ctx/stats widened); trigram level:
-    *   - `<prefix>_tri`  (prev2, prev, w, c3) — trigram counts
-    *   - `<prefix>_ctx3` (prev2, prev, cc3, n1f3) — per-2-gram-context
-    *     total + distinct followers
-    *   - `<prefix>_m2`   (prev, w, mcount) — continuation-BIGRAM counts
-    *     N1+(•,prev,w) (the middle KN level counts distinct left
-    *     contexts, not raw frequency)
-    *   - `<prefix>_mctx` (prev, mcc, n1f2c) — middle-level context
-    *     totals. */
-  private[graft] final case class Kn3Model(
-      uni: DataFrame, big: DataFrame, ctx: DataFrame, cont: DataFrame,
-      tri: DataFrame, ctx3: DataFrame, m2: DataFrame, mctx: DataFrame,
-      stats: DataFrame)
-
-  /** The nine frames computed lazily from a training corpus. The
-    * bigram-level aggregates all derive from the bigram table and the
-    * trigram-level ones from the trigram table ([[build3]] checkpoints
-    * both so the corpus tokenizes once). ctx carries the per-context
-    * count buckets (nf1/nf2/nf3p) and stats the global count-of-counts
-    * (n1..n4) — the tallies [[scoreFramesMkn]] estimates D1/D2/D3+ from
-    * (Chen & Goodman 1999 eq. 26), free at build time: one extra
-    * conditional sum in aggregations that already scan the bigram
-    * table. */
-  private[graft] def modelFrames3(
-      train: DataFrame, idCol: String, textCol: String): Kn3Model = {
-    val toks = tokens(train, idCol, textCol)
-    val pt = TextAnalysis.laggedTokens(toks, idCol, Seq("prev", "prev2"))
-    val uni = toks.groupBy("w").agg(count(lit(1)).cast("long").as("c1"))
-    val big = pt.filter(col("prev").isNotNull)
-      .groupBy("prev", "w").agg(count(lit(1)).cast("long").as("c2"))
-    val tri = pt.filter(col("prev2").isNotNull)
-      .groupBy("prev2", "prev", "w").agg(count(lit(1)).cast("long").as("c3"))
-    framesFromCounts3(uni, big, tri)
-  }
-
-  /** Assemble the 9-frame order-3 model from the three count tables —
-    * shared by the lazy ([[modelFrames3]]) and base-derived
-    * ([[frames3FromBase]]) paths, so the aggregate derivations can never
-    * drift between them. */
-  private def framesFromCounts3(
-      uni: DataFrame, big: DataFrame, tri: DataFrame): Kn3Model = {
-    val m2 = derivedM2(tri)
-    Kn3Model(uni, big, derivedCtx(big), derivedCont(big),
-      tri, derivedCtx3(tri), m2, derivedMctx(m2),
-      stats = derivedStats3(uni, big, tri, m2))
-  }
-
-  /** The (prev2, prev, w) [[baseCounts]] frame of `train` — NOT
-    * checkpointed; the caller owns materialization and lifetime. The
-    * sharing handle for the one-corpus-pass discipline ACROSS queries:
-    * an inline cross-score ([[frames3FromBase]]) and a persisted build
-    * ([[build3FromBase]]) of the SAME training split can both derive
-    * from one checkpointed base instead of each paying its own corpus
-    * pass — at 100 TB the corpus passes are the whole training cost. */
-  private[graft] def base3Of(
-      train: DataFrame, idCol: String, textCol: String): DataFrame =
-    baseCounts(
-      TextAnalysis.laggedTokens(tokens(train, idCol, textCol), idCol,
-        Seq("prev", "prev2")),
-      Seq("prev2", "prev"))
-
-  /** Order-3 model frames derived from a (checkpointed) [[base3Of]]
-    * frame — counts bit-identical to [[modelFrames3]] (sum of disjoint
-    * full-key subgroup counts; spec-pinned). */
-  private[graft] def frames3FromBase(base: DataFrame): Kn3Model = {
-    val (uni, big, tri) = splitBase3(base)
-    framesFromCounts3(uni, big, tri)
-  }
-
-  /** [[build3]] from an already-checkpointed [[base3Of]] frame the
-    * caller shares with other consumers of the same training split (the
-    * caller owns the checkpoint's lifetime). */
-  private[graft] def build3FromBase(
-      store: TableStore, prefix: String, base: DataFrame): Unit = {
-    val (uni, big, tri) = splitBase3(base)
-    writeTables3(store, prefix, uni, big, tri)
-  }
-
-  private def derivedCtx(big: DataFrame): DataFrame =
-    big.groupBy("prev").agg(
-      sum(col("c2")).cast("long").as("cc"),
-      count(lit(1)).cast("long").as("n1f"),
-      sum(when(col("c2") === 1L, 1L).otherwise(0L)).cast("long").as("nf1"),
-      sum(when(col("c2") === 2L, 1L).otherwise(0L)).cast("long").as("nf2"),
-      sum(when(col("c2") >= 3L, 1L).otherwise(0L)).cast("long").as("nf3p"))
-
-  private def derivedCont(big: DataFrame): DataFrame =
-    big.groupBy("w").agg(count(lit(1)).cast("long").as("n1c"))
-
-  private def derivedCtx3(tri: DataFrame): DataFrame =
-    tri.groupBy("prev2", "prev").agg(
-      sum(col("c3")).cast("long").as("cc3"),
-      count(lit(1)).cast("long").as("n1f3"),
-      sum(when(col("c3") === 1L, 1L).otherwise(0L)).cast("long").as("tf1"),
-      sum(when(col("c3") === 2L, 1L).otherwise(0L)).cast("long").as("tf2"),
-      sum(when(col("c3") >= 3L, 1L).otherwise(0L)).cast("long").as("tf3p"))
-
-  private def derivedM2(tri: DataFrame): DataFrame =
-    tri.groupBy("prev", "w").agg(count(lit(1)).cast("long").as("mcount"))
-
-  private def derivedMctx(m2: DataFrame): DataFrame =
-    m2.groupBy("prev").agg(
-      sum(col("mcount")).cast("long").as("mcc"),
-      count(lit(1)).cast("long").as("n1f2c"),
-      sum(when(col("mcount") === 1L, 1L).otherwise(0L)).cast("long").as("mf1"),
-      sum(when(col("mcount") === 2L, 1L).otherwise(0L)).cast("long").as("mf2"),
-      sum(when(col("mcount") >= 3L, 1L).otherwise(0L)).cast("long").as("mf3p"))
-
-  /** The one-row stats table: token total plus PER-LEVEL count-of-count
-    * tallies — bigram (n1..n4, [[scoreMkn]]'s calibration), trigram
-    * (t1..t4) and continuation-bigram (m1..m4) for [[scoreMkn3]]'s
-    * per-order discounts. All ride aggregations over tables the build
-    * already derives — no extra corpus pass. */
-  private def derivedStats3(
-      uni: DataFrame, big: DataFrame, tri: DataFrame,
-      m2: DataFrame): DataFrame =
-    uni.agg(sum(col("c1")).cast("long").as("total_tokens"))
-      .crossJoin(big.agg(
-        count(lit(1)).cast("long").as("bigram_types"),
-        coalesce(sum(when(col("c2") === 1L, 1L).otherwise(0L)), lit(0L)).cast("long").as("n1"),
-        coalesce(sum(when(col("c2") === 2L, 1L).otherwise(0L)), lit(0L)).cast("long").as("n2"),
-        coalesce(sum(when(col("c2") === 3L, 1L).otherwise(0L)), lit(0L)).cast("long").as("n3"),
-        coalesce(sum(when(col("c2") === 4L, 1L).otherwise(0L)), lit(0L)).cast("long").as("n4")))
-      .crossJoin(tri.agg(
-        count(lit(1)).cast("long").as("trigram_types"),
-        coalesce(sum(when(col("c3") === 1L, 1L).otherwise(0L)), lit(0L)).cast("long").as("t1"),
-        coalesce(sum(when(col("c3") === 2L, 1L).otherwise(0L)), lit(0L)).cast("long").as("t2"),
-        coalesce(sum(when(col("c3") === 3L, 1L).otherwise(0L)), lit(0L)).cast("long").as("t3"),
-        coalesce(sum(when(col("c3") === 4L, 1L).otherwise(0L)), lit(0L)).cast("long").as("t4")))
-      .crossJoin(m2.agg(
-        count(lit(1)).cast("long").as("m2_types"),
-        coalesce(sum(when(col("mcount") === 1L, 1L).otherwise(0L)), lit(0L)).cast("long").as("m1"),
-        coalesce(sum(when(col("mcount") === 2L, 1L).otherwise(0L)), lit(0L)).cast("long").as("m2"),
-        coalesce(sum(when(col("mcount") === 3L, 1L).otherwise(0L)), lit(0L)).cast("long").as("m3"),
-        coalesce(sum(when(col("mcount") === 4L, 1L).otherwise(0L)), lit(0L)).cast("long").as("m4")))
-
-  /** Score `docs` against a frozen ORDER-3 model — the recursive KN
-    * chain ([[TextAnalysis.knTrigramLogProb]]) made total over unseen
-    * events by extending the bigram OOV recipe one level up, every
-    * branch deterministic and oracle-replayable:
-    *
-    *   - seen 2-gram context (prev2, prev): P = max(c3−D,0)/cc3 +
-    *     D·N1+(p2,p1,•)/cc3 · P_KN2(w|p1), c3 defaulting 0 (one
-    *     expression covers seen and unseen triples);
-    *   - unseen 2-gram context: full backoff to P_KN2(w|p1);
-    *   - P_KN2 over a seen middle context: max(N1+(•,p1,w)−D,0)/mcc +
-    *     D·N1+(p1,*)/mcc · P_cont(w); unseen middle context → P_cont(w);
-    *   - second token (no prev2): the bigram formula with
-    *     [[scoreFrames]]' OOV branches; first token: MLE unigram with
-    *     the reserved 0.5-type mass; P_cont OOV as in [[scoreFrames]].
-    *
-    * In-corpus no OOV branch can fire, so scoring the training corpus
-    * equals [[TextAnalysis.knTrigramLogProb]] bit-for-bit (spec-pinned;
-    * q_kn3_persisted shares q_kn_trigram's oracle SQL verbatim).
-    *
-    * Scale: the token frame is the fat side; tables fold by join key
-    * where OOV semantics allow (uni+cont on w; big+m2 on (prev,w);
-    * ctx+mctx on prev — each right side's keys make the fold lossless
-    * because a row is only CONSUMED when its own branch's guard column
-    * is non-null), so the corpus exchanges five times (w, (prev,w),
-    * prev, (prev2,prev,w), (prev2,prev)) — the OOV floor; the in-corpus
-    * scorer's 3-exchange fold is unsound here (an unseen triple with a
-    * seen 2-gram context still needs cc3). */
-  private[graft] def scoreFrames3(
-      m: Kn3Model, docs: DataFrame, idCol: String, textCol: String,
-      discount: Double): DataFrame = {
-    require(discount > 0.0 && discount < 1.0,
-      s"discount must be in (0, 1), got $discount")
-    val pt = TextAnalysis.laggedTokens(
-      tokens(docs, idCol, textCol), idCol, Seq("prev", "prev2"))
-    val total = col("total_tokens").cast("double")
-    val btypes = col("bigram_types").cast("double")
-    val d = lit(discount)
-    val pcont = pcontOOV(btypes)
-    val uniP = uniPOOV(total)
-    // λ = (D·followers + pm)/cc at every level — pm is the pruned mass
-    // (0 and bit-inert on unpruned models; the scoreFrames rationale).
-    val midP = when(col("mcc").isNotNull,
-      greatest(coalesce(col("mcount"), lit(0L)).cast("double") - d, lit(0.0))
-        / col("mcc").cast("double") +
-        (d * col("n1f2c").cast("double") + col("pmm").cast("double"))
-          / col("mcc").cast("double") * pcont)
-      .otherwise(pcont)
-    val bigP = when(col("cc").isNotNull,
-      greatest(coalesce(col("c2"), lit(0L)).cast("double") - d, lit(0.0))
-        / col("cc").cast("double") +
-        (d * col("n1f").cast("double") + col("pmb").cast("double"))
-          / col("cc").cast("double") * pcont)
-      .otherwise(pcont)
-    val triP = when(col("cc3").isNotNull,
-      greatest(coalesce(col("c3"), lit(0L)).cast("double") - d, lit(0.0))
-        / col("cc3").cast("double") +
-        (d * col("n1f3").cast("double") + col("pmt").cast("double"))
-          / col("cc3").cast("double") * midP)
-      .otherwise(midP)
-    val p = when(col("prev").isNull, uniP)
-      .when(col("prev2").isNull, bigP)
-      .otherwise(triP)
-    val wM = m.uni.join(m.cont, Seq("w"), "left")
-    val bigM = m.big.join(m.m2, Seq("prev", "w"), "left")
-    val ctxM = withZero(m.ctx, "pmb").select("prev", "cc", "n1f", "pmb")
-      .join(withZero(m.mctx, "pmm"), Seq("prev"), "left")
-    pt.join(wM, Seq("w"), "left")
-      .join(bigM, Seq("prev", "w"), "left")
-      .join(ctxM, Seq("prev"), "left")
-      .join(m.tri, Seq("prev2", "prev", "w"), "left")
-      .join(withZero(m.ctx3, "pmt"), Seq("prev2", "prev"), "left")
-      .crossJoin(broadcast(m.stats))
-      .select(col(idCol), round(log(p) * 1e6, 0).cast("long").as("lp"))
-      .groupBy(idCol)
-      .agg(sum(col("lp")).as("s"), count(lit(1)).cast("long").as("n_tokens"))
-      .select(col(idCol), col("n_tokens"),
-        round(col("s").cast("double") / col("n_tokens").cast("double") / 1e6, 6)
-          .as("logprob"))
-  }
-
-  /** Inline order-3 train-on-A / score-B — no store. With `docs eq
-    * train` this is exactly [[TextAnalysis.knTrigramLogProb]]
-    * (spec-pinned). */
-  def crossScore3(
-      train: DataFrame, docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames3(modelFrames3(train, idCol, textCol), docs, idCol, textCol,
-      discount)
-
-  /** Derive the three order-3 count tables from a checkpointed
-    * [[baseCounts]] frame keyed (prev2, prev, w) — cheap re-aggregations
-    * of the vocabulary-bounded base, bit-identical to the per-order
-    * corpus aggregations (the baseCounts argument; lag columns are
-    * monotone, so prev2 non-null implies prev non-null). */
-  private def splitBase3(base: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = (
-    base.groupBy("w").agg(sum(col("c")).cast("long").as("c1")),
-    base.filter(col("prev").isNotNull)
-      .groupBy("prev", "w").agg(sum(col("c")).cast("long").as("c2")),
-    base.filter(col("prev2").isNotNull)
-      .select(col("prev2"), col("prev"), col("w"), col("c").as("c3")))
-
-  /** Build (or rebuild) the NINE order-3 model tables from `train` —
-    * ONE corpus pass and ONE corpus-scale exchange: the checkpointed
-    * (prev2, prev, w) [[baseCounts]] frame feeds all three count tables
-    * (the previous form materialized uni, big AND tri each as its own
-    * corpus aggregation — three tokenize passes, the whole build cost
-    * at 100 TB). */
-  def build3(
-      store: TableStore, prefix: String,
-      train: DataFrame, idCol: String, textCol: String): Unit = {
-    val base = base3Of(train, idCol, textCol).localCheckpoint()
-    try build3FromBase(store, prefix, base)
-    finally {
-      base.unpersist()
-      ()
-    }
-  }
-
-  /** [[build3]] with the score-side job OVERLAPPED with the nine staged
-    * table writes (guide §2.6 — the order-3 [[build5Scored]]): the score
-    * reads the base-derived frames ([[frames3FromBase]] — bit-identical
-    * to the written tables, spec-pinned), so it back-fills the write
-    * jobs' stage tails instead of running serially after the swap.
-    * Returns the materialized score frame (== [[score3]] on the
-    * just-built store, row for row). */
-  private[graft] def build3Scored(
-      store: TableStore, prefix: String,
-      train: DataFrame, idCol: String, textCol: String,
-      docs: DataFrame): DataFrame = {
-    val base = base3Of(train, idCol, textCol).localCheckpoint()
-    try {
-      val (uni, big, tri) = splitBase3(base)
-      writeAndScore(
-        () => writeTables3(store, prefix, uni, big, tri),
-        scoreFrames3(framesFromCounts3(uni, big, tri),
-          docs, idCol, textCol, discount = 0.75))
-    } finally {
-      base.unpersist()
-      ()
-    }
-  }
-
-  /** Derive the six aggregate tables from (checkpointed) uni/big/tri and
-    * swap all nine — shared by [[build3]] and [[mergeCounts3]]. */
-  private def writeTables3(
-      store: TableStore, prefix: String,
-      uni: DataFrame, big: DataFrame, tri: DataFrame): Unit = {
-    // m2 is an aggregation over the LARGEST model table and feeds three
-    // of the write jobs (m2, mctx, stats) — checkpoint it once so
-    // overwriteAll's per-table jobs read blocks instead of re-running
-    // the groupBy over the trigram table per consumer.
-    val m2 = derivedM2(tri).localCheckpoint()
-    try store.overwriteAll(Seq(
-      s"${prefix}_uni" -> uni.sortWithinPartitions("w"),
-      s"${prefix}_big" -> big.sortWithinPartitions("prev", "w"),
-      s"${prefix}_ctx" -> derivedCtx(big).sortWithinPartitions("prev"),
-      s"${prefix}_cont" -> derivedCont(big).sortWithinPartitions("w"),
-      s"${prefix}_tri" -> tri.sortWithinPartitions("prev2", "prev", "w"),
-      s"${prefix}_ctx3" -> derivedCtx3(tri).sortWithinPartitions("prev2", "prev"),
-      s"${prefix}_m2" -> m2.sortWithinPartitions("prev", "w"),
-      s"${prefix}_mctx" -> derivedMctx(m2).sortWithinPartitions("prev"),
-      s"${prefix}_stats" -> derivedStats3(uni, big, tri, m2)))
-    finally {
-      m2.unpersist()
-      ()
-    }
-  }
-
-  /** Count-merge core for the order-3 model — [[mergeCounts]]' recipe
-    * over THREE count tables (uni/big/tri); all six aggregates re-derive
-    * from the merged tables, so maintenance is vocabulary-bounded and
-    * never rescans the training corpus. Same negative-count tripwire
-    * (the GDPR-erasure contract) before any swap. */
-  private def mergeCounts3(
-      store: TableStore, prefix: String,
-      delta: DataFrame, idCol: String, textCol: String, sign: Long): Unit = {
-    // ONE delta pass: the three delta count tables derive from the
-    // checkpointed base frame (the [[baseCounts]] discipline — the lazy
-    // modelFrames3 form charged one delta tokenize per merged table).
-    val dBase = baseCounts(
-      TextAnalysis.laggedTokens(tokens(delta, idCol, textCol), idCol,
-        Seq("prev", "prev2")), Seq("prev2", "prev"))
-      .localCheckpoint()
-    val (dUni, dBig, dTri) = splitBase3(dBase)
-    def merged(name: String, dd: DataFrame, keys: Seq[String], c: String) =
-      store.load(s"${prefix}_$name")
-        .unionByName(dd.select(keys.map(col) :+ (col(c) * lit(sign)).as(c): _*))
-        .groupBy(keys.map(col): _*).agg(sum(col(c)).cast("long").as(c))
-        .filter(col(c) =!= 0L)
-        .localCheckpoint()
-    val Seq(uni, big, tri) = concurrently(Seq(
-      () => merged("uni", dUni, Seq("w"), "c1"),
-      () => merged("big", dBig, Seq("prev", "w"), "c2"),
-      () => merged("tri", dTri, Seq("prev2", "prev", "w"), "c3")))
-    dBase.unpersist()
-    try {
-      require(uni.filter(col("c1") < 0L).isEmpty &&
-        big.filter(col("c2") < 0L).isEmpty &&
-        tri.filter(col("c3") < 0L).isEmpty,
-        "LmIndex delta drives a count negative — deletes must carry " +
-          "exactly previously-added documents (GDPR-erasure contract); " +
-          "rebuild the model if the original text is gone")
-      writeTables3(store, prefix, uni, big, tri)
-    } finally {
-      uni.unpersist(); big.unpersist(); tri.unpersist()
-      ()
-    }
-  }
-
-  /** [[append]] for the order-3 model: count merge at all three orders,
-    * aggregates re-derived — append == full rebuild on the grown corpus,
-    * table-for-table (spec-pinned). */
-  def append3(
-      store: TableStore, prefix: String,
-      delta: DataFrame, idCol: String, textCol: String): Unit =
-    mergeCounts3(store, prefix, delta, idCol, textCol, sign = 1L)
-
-  /** [[deleteDocs]] for the order-3 model (spec-pinned: delete ==
-    * rebuild-without-deleted). */
-  def deleteDocs3(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String): Unit =
-    mergeCounts3(store, prefix, docs, idCol, textCol, sign = -1L)
-
-  /** Load the order-3 model frames (lazy table reads). */
-  def loadModel3(store: TableStore, prefix: String): Kn3Model =
-    Kn3Model(
-      uni = store.load(s"${prefix}_uni"),
-      big = store.load(s"${prefix}_big"),
-      ctx = store.load(s"${prefix}_ctx"),
-      cont = store.load(s"${prefix}_cont"),
-      tri = store.load(s"${prefix}_tri"),
-      ctx3 = store.load(s"${prefix}_ctx3"),
-      m2 = store.load(s"${prefix}_m2"),
-      mctx = store.load(s"${prefix}_mctx"),
-      stats = store.load(s"${prefix}_stats"))
-
-  /** Corpus-scale order-3 scoring against the persisted model (full
-    * table scans — the CCNet posture; [[scoreBatch3]] is the probed
-    * twin). */
-  def score3(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames3(loadModel3(store, prefix), docs, idCol, textCol, discount)
-
-  /** [[scoreBatch]] at order 3: every model-table read prunes to the
-    * batch's vocabulary through the same [[batchWordPruner]] regime
-    * switch (static IN below [[probeMaxWords]], broadcast semi-join
-    * above). Row-identical to [[score3]] in both regimes — pruning only
-    * drops rows the left joins could never hit. */
-  /** Restrict every keyed table of an order-3 model to `docs`'
-    * vocabulary through the [[batchWordPruner]] regime switch — lossless
-    * for scoring `docs` (left joins outside the batch's words can never
-    * hit). Works on stored AND pinned (cached) models: against a cached
-    * table the IN filter prunes at in-memory batch granularity via the
-    * cached column stats — the key-sorted build layout is what makes
-    * those stats selective ([[graft.stream.EventAnalytics
-    * .pplGate3EachBatch]] measured 10.0 → 14.7 docs/s from exactly
-    * this; parquet row-group skipping remains finer-grained than
-    * cached-batch stats, so the probed store path still leads at 18). */
-  private[graft] def pruneModel3(
-      m: Kn3Model, docs: DataFrame, textCol: String): Kn3Model =
-    pruneModel3R(m, docs, textCol)._1
-
-  /** [[pruneModel3]] with the pruner's release handle — for STANDING
-    * consumers (the streaming gates): in the oversized-batch regime the
-    * pruner checkpoints the batch's word frame, and a gate that never
-    * releases it leaks one checkpoint per such micro-batch until the
-    * driver GC happens to collect it ([[WordPruner.release]]). One-shot
-    * callers keep [[pruneModel3]] (ContextCleaner reclaims the frame
-    * when the returned plan goes unreferenced). */
-  private[graft] def pruneModel3R(
-      m: Kn3Model, docs: DataFrame, textCol: String): (Kn3Model, () => Unit) = {
-    val prune = batchWordPruner(docs, textCol, prunedTables = 8)
-    (Kn3Model(
-      uni = prune(m.uni, Seq("w")),
-      big = prune(m.big, Seq("prev", "w")),
-      ctx = prune(m.ctx, Seq("prev")),
-      cont = prune(m.cont, Seq("w")),
-      tri = prune(m.tri, Seq("prev2", "prev", "w")),
-      ctx3 = prune(m.ctx3, Seq("prev2", "prev")),
-      m2 = prune(m.m2, Seq("prev", "w")),
-      mctx = prune(m.mctx, Seq("prev")),
-      stats = m.stats), prune.release)
-  }
-
-  def scoreBatch3(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames3(pruneModel3(loadModel3(store, prefix), docs, textCol),
-      docs, idCol, textCol, discount)
-
-  /** Versioned order-3 rebuild — [[rebuildVersioned]] over the
-    * nine-table build (one manifest swap publishes all nine). */
-  def rebuildVersioned3(
-      store: TableStore, name: String,
-      train: DataFrame, idCol: String, textCol: String): String =
-    graft.io.VersionedIndex.rebuild(store, name, train.sparkSession)(
-      p => build3(store, p, train, idCol, textCol))
-
-  /** Score `docs` against the persisted model with MODIFIED Kneser-Ney
-    * discounts ([[TextAnalysis.mknBigramLogProb]]'s smoothing — the
-    * KenLM default CCNet literally runs) — reads the five bigram-level
-    * tables of a [[build3]] model: D1/D2/D3+ estimate from the STORED
-    * count-of-count tallies (stats n1..n4; per-context buckets from
-    * ctx), so serve time never rescans any corpus. Frozen-model OOV
-    * semantics extend the absolute-discount recipe: D(0) = 0 (Chen &
-    * Goodman's modified discount for unseen counts), so an unseen pair
-    * under a seen context scores λ(prev)·P_cont(w); an unseen context
-    * backs off to P_cont(w); P_cont/unigram OOV take the reserved
-    * 0.5-type mass as everywhere in this family. In-corpus no OOV
-    * branch fires and the result equals mknBigramLogProb bit-for-bit
-    * (spec-pinned; q_mkn_persisted shares q_mkn_bigram's oracle SQL).
-    * Degenerate calibration (an empty n1/n2/n3 bucket) takes
-    * `fallbackDiscounts` (KenLM --discount_fallback) or raises the
-    * curated error — evaluated lazily per branch, the
-    * [[TextAnalysis.mknBigramLogProb]] ANSI discipline. */
-  def scoreMkn(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None): DataFrame =
-    scoreFramesMkn(loadModel3(store, prefix), docs, idCol, textCol,
-      fallbackDiscounts)
-
-  /** [[scoreBatch]] for the modified-KN bigram serve: the same
-    * [[batchWordPruner]] regime switch (static IN below
-    * [[probeMaxWords]], broadcast semi-join above) restricts the four
-    * keyed bigram-level reads to the batch's vocabulary — row-identical
-    * to [[scoreMkn]] in both regimes (left joins outside the batch's
-    * words can never hit; the broadcast discounts row derives from the
-    * UNPRUNED stats table, so calibration never depends on the batch).
-    * The pruner prunes ONLY the four bigram-level tables this serve
-    * reads (prunedTables = 4, [[scoreBatch]]'s budget) — routing
-    * through [[pruneModel3]]'s 8-table divisor would halve the
-    * literal-IN budget for tables this scorer never touches and
-    * reroute wide batches to the semi-join regime earlier than the
-    * plan cost warrants. */
-  def scoreBatchMkn(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None): DataFrame = {
-    val m = loadModel3(store, prefix)
-    val prune = batchWordPruner(docs, textCol, prunedTables = 4)
-    scoreFramesMkn(
-      m.copy(
-        uni = prune(m.uni, Seq("w")),
-        big = prune(m.big, Seq("prev", "w")),
-        ctx = prune(m.ctx, Seq("prev")),
-        cont = prune(m.cont, Seq("w"))),
-      docs, idCol, textCol, fallbackDiscounts)
-  }
-
-  /** The modified-KN bigram recipe over explicit frames (reads only the
-    * five bigram-level members of a [[Kn3Model]]) — shared by
-    * [[scoreMkn]] (full table scans), [[scoreBatchMkn]] (probed), and a
-    * pinned streaming gate. Discounts derive via
-    * [[TextAnalysis.mknLevelDiscounts]] from the stored bigram tallies
-    * (stats n1..n4 renamed to the estimator's level prefix) — ONE
-    * eq.-26 edit point across the inline, persisted, and order-3
-    * scorers (the pcontOOV single-sourcing discipline). */
-  private[graft] def scoreFramesMkn(
-      m: Kn3Model, docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)]): DataFrame = {
-    val pt = withPrev(tokens(docs, idCol, textCol), idCol)
-    val total = col("total_tokens").cast("double")
-    val btypes = col("bigram_types").cast("double")
-    val disc = m.stats
-      .select(Seq(col("total_tokens"), col("bigram_types")) ++
-        Seq("1", "2", "3", "4").map(k => col(s"n$k").as(s"b$k")): _*)
-      .select(col("total_tokens") +: col("bigram_types") +:
-        TextAnalysis.mknLevelDiscounts("b", fallbackDiscounts): _*)
-    val pcont = pcontOOV(btypes)
-    val uniP = uniPOOV(total)
-    val dOfC = when(col("c2") === 1L, col("d1b"))
-      .when(col("c2") === 2L, col("d2b")).otherwise(col("d3b"))
-    // λ carries the pruned mass (pmb; 0 and bit-inert unpruned): the
-    // bucket tallies count SURVIVING followers, so the level stays a
-    // proper distribution through pruned branches.
-    val lam = (col("d1b") * col("nf1").cast("double")
-      + col("d2b") * col("nf2").cast("double")
-      + col("d3b") * col("nf3p").cast("double")
-      + col("pmb").cast("double")) / col("cc").cast("double")
-    val seenCtx =
-      when(col("c2").isNotNull,
-        (col("c2").cast("double") - dOfC) / col("cc").cast("double"))
-        .otherwise(lit(0.0)) + lam * pcont
-    val p = when(col("prev").isNull, uniP)
-      .when(col("cc").isNotNull, seenCtx)
-      .otherwise(pcont)
-    val wM = m.uni.join(m.cont, Seq("w"), "left")
-    pt.join(wM, Seq("w"), "left")
-      .join(m.big, Seq("prev", "w"), "left")
-      .join(withZero(m.ctx, "pmb"), Seq("prev"), "left")
-      .crossJoin(broadcast(disc))
-      .select(col(idCol), round(log(p) * 1e6, 0).cast("long").as("lp"))
-      .groupBy(idCol)
-      .agg(sum(col("lp")).as("s"), count(lit(1)).cast("long").as("n_tokens"))
-      .select(col(idCol), col("n_tokens"),
-        round(col("s").cast("double") / col("n_tokens").cast("double") / 1e6, 6)
-          .as("logprob"))
-  }
-
-  /** Score `docs` against the persisted model with FULL modified
-    * Kneser-Ney at order 3 ([[TextAnalysis.mknTrigramLogProb]]'s
-    * smoothing — KenLM's literal shape: per-LEVEL D1/D2/D3+ estimated
-    * from that level's own count-of-count tallies, all READ from the
-    * stored stats row; the per-context bucket tallies come from the
-    * widened ctx/ctx3/mctx tables). Serve time never rescans any
-    * corpus. OOV semantics are [[scoreFrames3]]'s structure with
-    * modified discounts and D(0) = 0: an unseen event under a seen
-    * context contributes only the context's λ-weighted backoff mass; an
-    * unseen context backs off a full level; P_cont/unigram take the
-    * reserved 0.5-type mass. In-corpus no OOV branch fires and the
-    * result equals mknTrigramLogProb bit-for-bit (spec-pinned;
-    * q_mkn3_persisted shares q_mkn_trigram's oracle SQL). Degenerate
-    * levels take `fallbackDiscounts` (KenLM --discount_fallback, per
-    * order) or the curated error, lazily. */
-  def scoreMkn3(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None): DataFrame =
-    scoreFramesMkn3(loadModel3(store, prefix), docs, idCol, textCol,
-      fallbackDiscounts)
-
-  /** [[scoreBatch3]] for the modified-KN order-3 serve: all eight keyed
-    * table reads prune to the batch's vocabulary through
-    * [[pruneModel3]]'s regime switch — row-identical to [[scoreMkn3]]
-    * in both regimes (the discounts row reads the unpruned stats). */
-  def scoreBatchMkn3(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None): DataFrame =
-    scoreFramesMkn3(pruneModel3(loadModel3(store, prefix), docs, textCol),
-      docs, idCol, textCol, fallbackDiscounts)
-
-  /** The order-3 modified-KN recipe over explicit frames — shared by
-    * [[scoreMkn3]] (full scans), [[scoreBatchMkn3]] (probed), and
-    * [[graft.stream.EventAnalytics.pplGateMkn3EachBatch]] (pinned +
-    * pruned). */
-  private[graft] def scoreFramesMkn3(
-      m: Kn3Model, docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)]): DataFrame = {
-    val pt = TextAnalysis.laggedTokens(
-      tokens(docs, idCol, textCol), idCol, Seq("prev", "prev2"))
-    // Rename the stored per-level count-of-count columns to the
-    // mknLevelDiscounts naming (bigram n1..n4 -> b1..b4) and derive the
-    // nine discounts as ONE broadcast row.
-    val disc = m.stats.select(
-      Seq(col("total_tokens"), col("bigram_types").cast("double").as("btypes")) ++
-        Seq("1", "2", "3", "4").map(k => col(s"n$k").as(s"b$k")) ++
-        Seq("1", "2", "3", "4").map(k => col(s"t$k")) ++
-        Seq("1", "2", "3", "4").map(k => col(s"m$k")): _*)
-      .select(col("total_tokens") +: col("btypes") +:
-        Seq("b", "t", "m").flatMap(p =>
-          TextAnalysis.mknLevelDiscounts(p, fallbackDiscounts)): _*)
-    val total = col("total_tokens").cast("double")
-    val btypes = col("btypes")
-    val pcont = pcontOOV(btypes)
-    val uniP = uniPOOV(total)
-    def dOf(c: Column, p: String): Column =
-      when(c === 1L, col(s"d1$p")).when(c === 2L, col(s"d2$p"))
-        .otherwise(col(s"d3$p"))
-    // Every λ carries its level's pruned mass (pm*; 0 and bit-inert on
-    // unpruned models — the scoreFramesMkn rationale).
-    val lamB = (col("d1b") * col("nf1").cast("double")
-      + col("d2b") * col("nf2").cast("double")
-      + col("d3b") * col("nf3p").cast("double")
-      + col("pmb").cast("double")) / col("cc").cast("double")
-    val bigP = when(col("cc").isNotNull,
-      when(col("c2").isNotNull,
-        (col("c2").cast("double") - dOf(col("c2"), "b")) /
-          col("cc").cast("double")).otherwise(lit(0.0)) + lamB * pcont)
-      .otherwise(pcont)
-    val lamM = (col("d1m") * col("mf1").cast("double")
-      + col("d2m") * col("mf2").cast("double")
-      + col("d3m") * col("mf3p").cast("double")
-      + col("pmm").cast("double")) / col("mcc").cast("double")
-    val midP = when(col("mcc").isNotNull,
-      when(col("mcount").isNotNull,
-        (col("mcount").cast("double") - dOf(col("mcount"), "m")) /
-          col("mcc").cast("double")).otherwise(lit(0.0)) + lamM * pcont)
-      .otherwise(pcont)
-    val lamT = (col("d1t") * col("tf1").cast("double")
-      + col("d2t") * col("tf2").cast("double")
-      + col("d3t") * col("tf3p").cast("double")
-      + col("pmt").cast("double")) / col("cc3").cast("double")
-    val triP = when(col("cc3").isNotNull,
-      when(col("c3").isNotNull,
-        (col("c3").cast("double") - dOf(col("c3"), "t")) /
-          col("cc3").cast("double")).otherwise(lit(0.0)) + lamT * midP)
-      .otherwise(midP)
-    val p = when(col("prev").isNull, uniP)
-      .when(col("prev2").isNull, bigP)
-      .otherwise(triP)
-    // The OOV join layout of scoreFrames3 (5 token-frame exchanges);
-    // ctx/ctx3/mctx stay separate probes so a seen context reaches its
-    // λ tallies without an event-row hit.
-    val wM = m.uni.join(m.cont, Seq("w"), "left")
-    val bigM = m.big.join(m.m2, Seq("prev", "w"), "left")
-    val ctxM = withZero(m.ctx, "pmb")
-      .join(withZero(m.mctx, "pmm"), Seq("prev"), "left")
-    pt.join(wM, Seq("w"), "left")
-      .join(bigM, Seq("prev", "w"), "left")
-      .join(ctxM, Seq("prev"), "left")
-      .join(m.tri, Seq("prev2", "prev", "w"), "left")
-      .join(withZero(m.ctx3, "pmt"), Seq("prev2", "prev"), "left")
-      .crossJoin(broadcast(disc))
-      .select(col(idCol), round(log(p) * 1e6, 0).cast("long").as("lp"))
-      .groupBy(idCol)
-      .agg(sum(col("lp")).as("s"), count(lit(1)).cast("long").as("n_tokens"))
-      .select(col(idCol), col("n_tokens"),
-        round(col("s").cast("double") / col("n_tokens").cast("double") / 1e6, 6)
-          .as("logprob"))
-  }
-
-  // ---- order-5 persisted model (the v3 family — the literal CCNet
-  // posture) ----
-  //
-  // Wenzek et al. 2020 gate every crawl shard with a FROZEN ORDER-5
-  // KenLM under modified-KN discounts. [[build5]] extends [[build3]]'s
-  // table family two levels: raw 4-gram and 5-gram count tables with
-  // their context aggregates, the two continuation levels between them
-  // (N1+(•, 3-gram) from 4-gram types and N1+(•, 4-gram) from 5-gram
-  // types — the standard KN lower-order counts, exactly as m2/cont are
-  // to the trigram/bigram levels), and a stats row carrying EVERY
-  // level's count-of-count tallies. The bigram- and trigram-level
-  // tables are bit-identical to [[build3]]'s (same derivations over the
-  // same counts, spec-pinned), so ONE build5 model serves six
-  // smoothings without retraining: [[score]]/[[scoreMkn]] (order 2),
-  // [[score3]]/[[scoreMkn3]] (order 3), [[score5]]/[[scoreMkn5]]
-  // (order 5).
-
-  /** The seventeen model frames of the order-5 family — [[Kn3Model]]'s
-    * nine (stats widened further) plus:
-    *   - `<prefix>_four`  (prev3, prev2, prev, w, c4) — raw 4-gram counts
-    *   - `<prefix>_ctx4`  (prev3, prev2, prev, cc4, n1f4, ff1, ff2, ff3p)
-    *   - `<prefix>_m3`    (prev2, prev, w, m3c) — continuation-TRIGRAM
-    *     counts N1+(•, prev2, prev, w) over 4-gram types
-    *   - `<prefix>_mctx3` (prev2, prev, m3cc, n1f3c, pf1, pf2, pf3p)
-    *   - `<prefix>_five`  (prev4, prev3, prev2, prev, w, c5)
-    *   - `<prefix>_ctx5`  (prev4, prev3, prev2, prev, cc5, n1f5, vf1,
-    *     vf2, vf3p)
-    *   - `<prefix>_m4`    (prev3, prev2, prev, w, m4c) — continuation-
-    *     4-GRAM counts N1+(•, prev3, prev2, prev, w) over 5-gram types
-    *   - `<prefix>_mctx4` (prev3, prev2, prev, m4cc, n1f4c, qf1, qf2,
-    *     qf3p). */
-  private[graft] final case class Kn5Model(
-      uni: DataFrame, big: DataFrame, ctx: DataFrame, cont: DataFrame,
-      tri: DataFrame, ctx3: DataFrame, m2: DataFrame, mctx: DataFrame,
-      four: DataFrame, ctx4: DataFrame, m3: DataFrame, mctx3: DataFrame,
-      five: DataFrame, ctx5: DataFrame, m4: DataFrame, mctx4: DataFrame,
-      stats: DataFrame)
-
-  private def derivedCtx4(four: DataFrame): DataFrame =
-    four.groupBy("prev3", "prev2", "prev").agg(
-      sum(col("c4")).cast("long").as("cc4"),
-      count(lit(1)).cast("long").as("n1f4"),
-      sum(when(col("c4") === 1L, 1L).otherwise(0L)).cast("long").as("ff1"),
-      sum(when(col("c4") === 2L, 1L).otherwise(0L)).cast("long").as("ff2"),
-      sum(when(col("c4") >= 3L, 1L).otherwise(0L)).cast("long").as("ff3p"))
-
-  private def derivedM3(four: DataFrame): DataFrame =
-    four.groupBy("prev2", "prev", "w")
-      .agg(count(lit(1)).cast("long").as("m3c"))
-
-  private def derivedMctx3(m3: DataFrame): DataFrame =
-    m3.groupBy("prev2", "prev").agg(
-      sum(col("m3c")).cast("long").as("m3cc"),
-      count(lit(1)).cast("long").as("n1f3c"),
-      sum(when(col("m3c") === 1L, 1L).otherwise(0L)).cast("long").as("pf1"),
-      sum(when(col("m3c") === 2L, 1L).otherwise(0L)).cast("long").as("pf2"),
-      sum(when(col("m3c") >= 3L, 1L).otherwise(0L)).cast("long").as("pf3p"))
-
-  private def derivedCtx5(five: DataFrame): DataFrame =
-    five.groupBy("prev4", "prev3", "prev2", "prev").agg(
-      sum(col("c5")).cast("long").as("cc5"),
-      count(lit(1)).cast("long").as("n1f5"),
-      sum(when(col("c5") === 1L, 1L).otherwise(0L)).cast("long").as("vf1"),
-      sum(when(col("c5") === 2L, 1L).otherwise(0L)).cast("long").as("vf2"),
-      sum(when(col("c5") >= 3L, 1L).otherwise(0L)).cast("long").as("vf3p"))
-
-  private def derivedM4(five: DataFrame): DataFrame =
-    five.groupBy("prev3", "prev2", "prev", "w")
-      .agg(count(lit(1)).cast("long").as("m4c"))
-
-  private def derivedMctx4(m4: DataFrame): DataFrame =
-    m4.groupBy("prev3", "prev2", "prev").agg(
-      sum(col("m4c")).cast("long").as("m4cc"),
-      count(lit(1)).cast("long").as("n1f4c"),
-      sum(when(col("m4c") === 1L, 1L).otherwise(0L)).cast("long").as("qf1"),
-      sum(when(col("m4c") === 2L, 1L).otherwise(0L)).cast("long").as("qf2"),
-      sum(when(col("m4c") >= 3L, 1L).otherwise(0L)).cast("long").as("qf3p"))
-
-  /** One level's count-of-count tallies (types + buckets 1..4) as a
-    * one-row frame — the [[derivedStats3]] shape generalized to the new
-    * levels' prefixes. */
-  private def countOfCounts(
-      df: DataFrame, c: String, typesName: String, p: String): DataFrame = {
-    val cols = count(lit(1)).cast("long").as(typesName) +:
-      (1 to 4).map(k =>
-        coalesce(sum(when(col(c) === k.toLong, 1L).otherwise(0L)), lit(0L))
-          .cast("long").as(s"$p$k"))
-    df.agg(cols.head, cols.tail: _*)
-  }
-
-  /** The order-5 one-row stats table: [[derivedStats3]]'s columns plus
-    * the four new levels' count-of-counts — raw 4-gram (f1..f4), the
-    * continuation-trigram level (p1..p4), raw 5-gram (v1..v4), the
-    * continuation-4-gram level (q1..q4). */
-  private def derivedStats5(
-      uni: DataFrame, big: DataFrame, tri: DataFrame, m2: DataFrame,
-      four: DataFrame, m3: DataFrame, five: DataFrame,
-      m4: DataFrame): DataFrame =
-    derivedStats3(uni, big, tri, m2)
-      .crossJoin(countOfCounts(four, "c4", "fourgram_types", "f"))
-      .crossJoin(countOfCounts(m3, "m3c", "m3_types", "p"))
-      .crossJoin(countOfCounts(five, "c5", "fivegram_types", "v"))
-      .crossJoin(countOfCounts(m4, "m4c", "m4_types", "q"))
-
-  /** The seventeen frames computed lazily from a training corpus (no
-    * jobs fire; [[build5]] adds the one-pass count discipline). */
-  private[graft] def modelFrames5(
-      train: DataFrame, idCol: String, textCol: String): Kn5Model = {
-    val toks = tokens(train, idCol, textCol)
-    val pt = TextAnalysis.laggedTokens(toks, idCol,
-      Seq("prev", "prev2", "prev3", "prev4"))
-    val uni = toks.groupBy("w").agg(count(lit(1)).cast("long").as("c1"))
-    val big = pt.filter(col("prev").isNotNull)
-      .groupBy("prev", "w").agg(count(lit(1)).cast("long").as("c2"))
-    val tri = pt.filter(col("prev2").isNotNull)
-      .groupBy("prev2", "prev", "w").agg(count(lit(1)).cast("long").as("c3"))
-    val four = pt.filter(col("prev3").isNotNull)
-      .groupBy("prev3", "prev2", "prev", "w")
-      .agg(count(lit(1)).cast("long").as("c4"))
-    val five = pt.filter(col("prev4").isNotNull)
-      .groupBy("prev4", "prev3", "prev2", "prev", "w")
-      .agg(count(lit(1)).cast("long").as("c5"))
-    framesFromCounts5(uni, big, tri, four, five)
-  }
-
-  /** Assemble the 17-frame model from the five count tables (aggregates
-    * all derive from the counts — shared by the lazy, built, and merged
-    * paths). */
-  private def framesFromCounts5(
-      uni: DataFrame, big: DataFrame, tri: DataFrame, four: DataFrame,
-      five: DataFrame): Kn5Model = {
-    val m2 = derivedM2(tri)
-    val m3 = derivedM3(four)
-    val m4 = derivedM4(five)
-    Kn5Model(uni, big, derivedCtx(big), derivedCont(big),
-      tri, derivedCtx3(tri), m2, derivedMctx(m2),
-      four, derivedCtx4(four), m3, derivedMctx3(m3),
-      five, derivedCtx5(five), m4, derivedMctx4(m4),
-      stats = derivedStats5(uni, big, tri, m2, four, m3, five, m4))
-  }
-
-  /** ALL FIVE count tables from ONE corpus pass and ONE corpus-scale
-    * exchange: the caller checkpoints [[baseCounts]] keyed by the FULL
-    * (prev4..prev, w) context — doc-start nulls are ordinary group keys
-    * — and each order's table re-derives by a cheap re-aggregation of
-    * the vocabulary-bounded base (count of a coarser group == Σ of its
-    * disjoint full-key subgroup counts; lag columns are monotone, so a
-    * non-null prevK implies non-null prev(K−1)..prev). Counts are
-    * bit-identical to [[modelFrames5]]'s per-order aggregations
-    * (spec-pinned). This replaced the round-16 explode-all-orders form,
-    * which pushed 5× the token rows through its exchange (15 context
-    * fields per position vs 5 here) and checkpointed all five tables'
-    * rows where the base is the 5-gram table's size alone — guide
-    * §2.3: shuffle fewer bytes; aggregate once, re-aggregate the small
-    * result. */
-  private def splitBase5(base: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame, DataFrame) = (
-    base.groupBy("w").agg(sum(col("c")).cast("long").as("c1")),
-    base.filter(col("prev").isNotNull)
-      .groupBy("prev", "w").agg(sum(col("c")).cast("long").as("c2")),
-    base.filter(col("prev2").isNotNull)
-      .groupBy("prev2", "prev", "w")
-      .agg(sum(col("c")).cast("long").as("c3")),
-    base.filter(col("prev3").isNotNull)
-      .groupBy("prev3", "prev2", "prev", "w")
-      .agg(sum(col("c")).cast("long").as("c4")),
-    base.filter(col("prev4").isNotNull)
-      .select(col("prev4"), col("prev3"), col("prev2"), col("prev"),
-        col("w"), col("c").as("c5")))
-
-  /** One context table over a (possibly count-pruned) gram table — the
-    * KenLM `--prune` analog's bookkeeping: `cc` stays the FULL count
-    * total, the follower/bucket tallies count SURVIVORS (count >=
-    * `minCount`), and `pm` is the PRUNED MASS (Σ of dropped counts).
-    * Serving folds pm into the backoff weight — λ = (ΣD·tally + pm)/cc
-    * — which keeps the level a proper distribution: Σ_surv (c−D(c))/cc
-    * + λ·Σ P_lower = (cc − pm − ΣD)/cc + (ΣD + pm)/cc = 1. A context
-    * whose EVERY follower was pruned drops out entirely: its λ would be
-    * pm/cc = 1, which is exactly the unseen-context full-backoff branch
-    * the serve already takes on a missing row (spec-pinned). */
-  private def ctxAgg(
-      df: DataFrame, keys: Seq[String], c: String, minCount: Long,
-      names: Seq[String]): DataFrame = {
-    val Seq(ccN, nfN, b1N, b2N, b3pN, pmN) = names
-    def surv(cond: Column) =
-      sum(when(col(c) >= minCount && cond, 1L).otherwise(0L)).cast("long")
-    df.groupBy(keys.map(col): _*).agg(
-      sum(col(c)).cast("long").as(ccN),
-      surv(lit(true)).as(nfN),
-      surv(col(c) === 1L).as(b1N),
-      surv(col(c) === 2L).as(b2N),
-      surv(col(c) >= 3L).as(b3pN),
-      coalesce(sum(when(col(c) < minCount, col(c))), lit(0L))
-        .cast("long").as(pmN))
-      .filter(col(nfN) > 0L)
-  }
-
-  /** Build (or rebuild) the SEVENTEEN order-5 model tables from `train`
-    * — ONE tokenize pass ([[baseCounts]]) feeding one checkpointed
-    * combined count frame; every aggregate derives from its split.
-    *
-    * `pruneMin` is the COUNT-PRUNING threshold per key width (2, 3, 4,
-    * 5 words) — the KenLM `--prune` analog every deployed CCNet model
-    * runs (Wenzek et al. 2020 train with KenLM defaults; KenLM prunes
-    * n-grams below the per-order threshold, and frozen gate models
-    * prune singletons at orders >= 3 precisely because in the
-    * near-unique-gram regime the unpruned model IS the corpus — the
-    * BASELINE heapsbigram record). A table row whose count is below its
-    * width's threshold is dropped from the stored gram table (raw
-    * {big,tri,four,five} AND continuation {m2,m3,m4}, each pruned on
-    * ITS OWN count — the table-per-level generalization of KenLM's
-    * per-order rule); its mass folds into the context table's `pm`
-    * column so every serve distribution stays proper ([[ctxAgg]]).
-    * Never pruned: uni and cont (KenLM forbids unigram pruning; P_cont
-    * is the floor of every backoff chain) and the stats row's
-    * count-of-count tallies (discounts calibrate on the FULL counts,
-    * then pruning drops rows — KenLM's order of operations: adjusted
-    * counts and discounts precede pruning). Continuation counts
-    * likewise derive from the FULL higher-order tables. The default
-    * Seq(1,1,1,1) prunes nothing and writes byte-identical tables to
-    * the pre-pruning layout (spec-pinned), preserving the build3
-    * bigram/trigram-level table identity. A pruned model is FROZEN:
-    * [[append5]]/[[deleteDocs5]] reject it (merged counts cannot
-    * reconstruct pruned totals); rebuild on the grown corpus instead.
-    *
-    * `maxVocab` > 0 additionally caps the VOCABULARY ([[capVocab]]:
-    * below-top-K words map to [[OovToken]] before any counting) — the
-    * envelope [[TextAnalysis.tokenizerMaxTypes]] gives the tokenizer
-    * trainers, applied to the model build; composes with pruneMin
-    * (cap first, then prune the capped counts). */
-  def build5(
-      store: TableStore, prefix: String,
-      train: DataFrame, idCol: String, textCol: String,
-      pruneMin: Seq[Long] = Seq(1L, 1L, 1L, 1L),
-      maxVocab: Long = 0L): Unit = {
-    require(pruneMin.length == 4 && pruneMin.forall(_ >= 1L),
-      s"pruneMin must be four thresholds >= 1 (key widths 2,3,4,5), " +
-        s"got $pruneMin")
-    require(maxVocab >= 0L,
-      s"maxVocab must be >= 0 (0 = unbounded), got $maxVocab")
-    // maxVocab > 0 caps the vocabulary FIRST ([[capVocab]]: below-top-K
-    // words become [[OovToken]] at tokenize time), so pruning and every
-    // table derivation see the capped corpus — build5(maxVocab) ==
-    // build5 on the pre-mapped corpus, table for table (spec-pinned).
-    // 0 = unbounded (the default; a Heaps-unbounded corpus then builds
-    // a vocabulary-sized unigram table — cap it for frozen gate models).
-    val toks0 = tokens(train, idCol, textCol)
-    val toks = if (maxVocab > 0L) capVocab(toks0, maxVocab) else toks0
-    val pt = TextAnalysis.laggedTokens(toks, idCol,
-      Seq("prev", "prev2", "prev3", "prev4"))
-    val base = baseCounts(pt, Seq("prev4", "prev3", "prev2", "prev"))
-      .localCheckpoint()
-    try build5FromBase(store, prefix, base, pruneMin)
-    finally {
-      base.unpersist()
-      ()
-    }
-  }
-
-  /** The (prev4..prev, w) [[baseCounts]] frame of `train` — NOT
-    * checkpointed; the caller owns materialization and lifetime
-    * ([[base3Of]]'s cross-query sharing contract one family up: the
-    * full-corpus base feeds the plain AND count-pruned shared builds,
-    * the 80%-split base feeds the inline holdout cross-score and the
-    * persisted-holdout build, each paying ONE corpus pass total). */
-  private[graft] def base5Of(
-      train: DataFrame, idCol: String, textCol: String): DataFrame =
-    baseCounts(
-      TextAnalysis.laggedTokens(tokens(train, idCol, textCol), idCol,
-        Seq("prev", "prev2", "prev3", "prev4")),
-      Seq("prev4", "prev3", "prev2", "prev"))
-
-  /** Order-5 model frames from a (checkpointed) [[base5Of]] frame —
-    * counts bit-identical to [[modelFrames5]]'s per-order aggregations
-    * (sum of disjoint full-key subgroup counts; spec-pinned). */
-  private[graft] def frames5FromBase(base: DataFrame): Kn5Model = {
-    val (uni, big, tri, four, five) = splitBase5(base)
-    framesFromCounts5(uni, big, tri, four, five)
-  }
-
-  /** [[build5]] from an already-checkpointed [[base5Of]] frame the
-    * caller shares (lifetime owned by the caller). `pruneMin` as in
-    * [[build5]]. */
-  private[graft] def build5FromBase(
-      store: TableStore, prefix: String, base: DataFrame,
-      pruneMin: Seq[Long] = Seq(1L, 1L, 1L, 1L)): Unit = {
-    require(pruneMin.length == 4 && pruneMin.forall(_ >= 1L),
-      s"pruneMin must be four thresholds >= 1 (key widths 2,3,4,5), " +
-        s"got $pruneMin")
-    val (uni, big, tri, four, five) = splitBase5(base)
-    writeTables5(store, prefix, uni, big, tri, four, five, pruneMin)
-  }
-
-  /** Derive the twelve aggregate tables from the (checkpoint-backed)
-    * count tables and swap all seventeen — shared by [[build5]] and
-    * [[mergeCounts5]]. The three continuation-count tables each feed
-    * multiple write jobs, so they checkpoint once ([[writeTables3]]'s
-    * discipline). */
-  private def writeTables5(
-      store: TableStore, prefix: String,
-      uni: DataFrame, big: DataFrame, tri: DataFrame, four: DataFrame,
-      five: DataFrame,
-      pruneMin: Seq[Long] = Seq(1L, 1L, 1L, 1L),
-      mTables: Option[(DataFrame, DataFrame, DataFrame)] = None): Unit = {
-    val Seq(t2, t3, t4, t5) = pruneMin
-    // Continuation counts derive from the FULL higher-order tables
-    // (adjusted counts precede pruning — the KenLM order), then prune
-    // on their own counts at their key width's threshold. Kept
-    // SEQUENTIAL deliberately: a concurrently() variant (the §2.6
-    // overlap) measured 1-2 s WORSE at sf0.1 (8.8-9.6 s vs 7.7-7.8 s
-    // for q_kn5_persisted_holdout) — three re-aggregations of one tiny
-    // checkpointed base contend for the same cores overwriteAll's
-    // staging pool is about to use. `mTables`: the caller already HOLDS
-    // the three continuation tables (a pruned rebuild reading an
-    // unpruned store of the same corpus — [[build5PrunedFromStore]]);
-    // the derivation jobs are then skipped entirely.
-    val ownsM = mTables.isEmpty
-    val (m2, m3, m4) = mTables.getOrElse((
-      derivedM2(tri).localCheckpoint(),
-      derivedM3(four).localCheckpoint(),
-      derivedM4(five).localCheckpoint()))
-    // Per-table switches keep the unpruned path BYTE-IDENTICAL to the
-    // pre-pruning layout (no trivial filters, no all-zero pm columns in
-    // unpruned tables — the build3 table-identity contract); a pruned
-    // width filters its gram tables and swaps its context aggregates
-    // for [[ctxAgg]]'s full-cc + survivors + pm form.
-    def keep(df: DataFrame, c: String, t: Long) =
-      if (t == 1L) df else df.filter(col(c) >= t)
-    def ctxOf(t: Long, unpruned: => DataFrame, df: DataFrame,
-        keys: Seq[String], c: String, names: Seq[String]) =
-      if (t == 1L) unpruned else ctxAgg(df, keys, c, t, names)
-    val stats0 = derivedStats5(uni, big, tri, m2, four, m3, five, m4)
-    val stats =
-      if (pruneMin.forall(_ == 1L)) stats0
-      else stats0.withColumn("prune2", lit(t2)).withColumn("prune3", lit(t3))
-        .withColumn("prune4", lit(t4)).withColumn("prune5", lit(t5))
-    try store.overwriteAll(Seq(
-      s"${prefix}_uni" -> uni.sortWithinPartitions("w"),
-      s"${prefix}_big" -> keep(big, "c2", t2).sortWithinPartitions("prev", "w"),
-      s"${prefix}_ctx" -> ctxOf(t2, derivedCtx(big), big, Seq("prev"), "c2",
-        Seq("cc", "n1f", "nf1", "nf2", "nf3p", "pmb"))
-        .sortWithinPartitions("prev"),
-      s"${prefix}_cont" -> derivedCont(big).sortWithinPartitions("w"),
-      s"${prefix}_tri" -> keep(tri, "c3", t3)
-        .sortWithinPartitions("prev2", "prev", "w"),
-      s"${prefix}_ctx3" -> ctxOf(t3, derivedCtx3(tri), tri,
-        Seq("prev2", "prev"), "c3",
-        Seq("cc3", "n1f3", "tf1", "tf2", "tf3p", "pmt"))
-        .sortWithinPartitions("prev2", "prev"),
-      s"${prefix}_m2" -> keep(m2, "mcount", t2)
-        .sortWithinPartitions("prev", "w"),
-      s"${prefix}_mctx" -> ctxOf(t2, derivedMctx(m2), m2, Seq("prev"),
-        "mcount", Seq("mcc", "n1f2c", "mf1", "mf2", "mf3p", "pmm"))
-        .sortWithinPartitions("prev"),
-      s"${prefix}_four" -> keep(four, "c4", t4)
-        .sortWithinPartitions("prev3", "prev2", "prev", "w"),
-      s"${prefix}_ctx4" -> ctxOf(t4, derivedCtx4(four), four,
-        Seq("prev3", "prev2", "prev"), "c4",
-        Seq("cc4", "n1f4", "ff1", "ff2", "ff3p", "pmf"))
-        .sortWithinPartitions("prev3", "prev2", "prev"),
-      s"${prefix}_m3" -> keep(m3, "m3c", t3)
-        .sortWithinPartitions("prev2", "prev", "w"),
-      s"${prefix}_mctx3" -> ctxOf(t3, derivedMctx3(m3), m3,
-        Seq("prev2", "prev"), "m3c",
-        Seq("m3cc", "n1f3c", "pf1", "pf2", "pf3p", "pmp"))
-        .sortWithinPartitions("prev2", "prev"),
-      s"${prefix}_five" -> keep(five, "c5", t5)
-        .sortWithinPartitions("prev4", "prev3", "prev2", "prev", "w"),
-      s"${prefix}_ctx5" -> ctxOf(t5, derivedCtx5(five), five,
-        Seq("prev4", "prev3", "prev2", "prev"), "c5",
-        Seq("cc5", "n1f5", "vf1", "vf2", "vf3p", "pmv"))
-        .sortWithinPartitions("prev4", "prev3", "prev2", "prev"),
-      s"${prefix}_m4" -> keep(m4, "m4c", t4)
-        .sortWithinPartitions("prev3", "prev2", "prev", "w"),
-      s"${prefix}_mctx4" -> ctxOf(t4, derivedMctx4(m4), m4,
-        Seq("prev3", "prev2", "prev"), "m4c",
-        Seq("m4cc", "n1f4c", "qf1", "qf2", "qf3p", "pmq"))
-        .sortWithinPartitions("prev3", "prev2", "prev"),
-      s"${prefix}_stats" -> stats))
-    finally {
-      if (ownsM) { m2.unpersist(); m3.unpersist(); m4.unpersist() }
-      ()
-    }
-  }
-
-  /** Build a COUNT-PRUNED order-5 model from an already-built UNPRUNED
-    * store of the SAME training corpus — §1.2 across stores: the
-    * unpruned store's five gram tables ARE the full count tables a
-    * pruned build derives everything from (bit-identical by the
-    * build==frames table equalities), and its m2/m3/m4 tables ARE the
-    * full continuation counts, so the pruned build becomes
-    * vocabulary-bounded filter+aggregate WRITE jobs over stored tables —
-    * no corpus pass, no base re-aggregation, no m-table re-derivation.
-    * Identical tables to build5FromBase(base, pruneMin) (spec-pinned). */
-  private[graft] def build5PrunedFromStore(
-      src: TableStore, srcPrefix: String,
-      dst: TableStore, dstPrefix: String,
-      pruneMin: Seq[Long]): Unit =
-    writeTables5(dst, dstPrefix,
-      src.load(s"${srcPrefix}_uni"), src.load(s"${srcPrefix}_big"),
-      src.load(s"${srcPrefix}_tri"), src.load(s"${srcPrefix}_four"),
-      src.load(s"${srcPrefix}_five"), pruneMin,
-      mTables = Some((src.load(s"${srcPrefix}_m2"),
-        src.load(s"${srcPrefix}_m3"), src.load(s"${srcPrefix}_m4"))))
-
-  /** Count-merge core for the order-5 model — [[mergeCounts3]]'s recipe
-    * over FIVE count tables; the delta's counts come from one
-    * [[baseCounts]] pass, every aggregate re-derives from the merged
-    * tables (maintenance is vocabulary-bounded, never rescans the
-    * training corpus), and the same negative-count tripwire (the
-    * GDPR-erasure contract) runs on all five before any swap. */
-  private def mergeCounts5(
-      store: TableStore, prefix: String,
-      delta: DataFrame, idCol: String, textCol: String, sign: Long,
-      deltaBase: Option[DataFrame] = None,
-      scoreDocs: Option[DataFrame] = None): Option[DataFrame] = {
-    // A count-pruned model is FROZEN: its stored gram tables are
-    // missing the below-threshold rows, so a count merge would compound
-    // new deltas onto incomplete counts and re-derive context totals
-    // that disagree with the true corpus (cc/pm unreconstructable).
-    // Fail loudly before any tokenize — one 1-row stats read.
-    val st = store.load(s"${prefix}_stats")
-    if (st.columns.contains("prune2"))
-      require(st.select("prune2", "prune3", "prune4", "prune5")
-        .head().toSeq.forall(_ == 1L),
-        "LmIndex: append5/deleteDocs5 on a COUNT-PRUNED model — merged " +
-          "counts cannot reconstruct the pruned totals; rebuild5 on the " +
-          "updated corpus instead (pruned models are frozen gate models)")
-    // `deltaBase`: an already-checkpointed [[base5Of]] of the SAME delta
-    // the caller computed earlier (e.g. overlapped with the preceding
-    // build's staged writes — [[appendDrill5]]); lifetime stays with the
-    // caller. Without it the delta pays its base pass here.
-    val g = deltaBase.getOrElse(
-      baseCounts(
-        TextAnalysis.laggedTokens(tokens(delta, idCol, textCol), idCol,
-          Seq("prev", "prev2", "prev3", "prev4")),
-        Seq("prev4", "prev3", "prev2", "prev"))
-        .localCheckpoint())
-    def merged(name: String, dd: DataFrame, keys: Seq[String], c: String) =
-      store.load(s"${prefix}_$name")
-        .unionByName(dd.select(keys.map(col) :+ (col(c) * lit(sign)).as(c): _*))
-        .groupBy(keys.map(col): _*).agg(sum(col(c)).cast("long").as(c))
-        .filter(col(c) =!= 0L)
-        .localCheckpoint()
-    try {
-      val (dUni, dBig, dTri, dFour, dFive) = splitBase5(g)
-      // The five merged-count checkpoints are independent jobs over the
-      // already-checkpointed delta base — run them concurrently
-      // (guide §2.6), like overwriteAll's staging phase.
-      val Seq(uni, big, tri, four, five) = concurrently(Seq(
-        () => merged("uni", dUni, Seq("w"), "c1"),
-        () => merged("big", dBig, Seq("prev", "w"), "c2"),
-        () => merged("tri", dTri, Seq("prev2", "prev", "w"), "c3"),
-        () => merged("four", dFour, Seq("prev3", "prev2", "prev", "w"), "c4"),
-        () => merged("five", dFive,
-          Seq("prev4", "prev3", "prev2", "prev", "w"), "c5")))
-      try {
-        // One tripwire job over all five tables, not five sequential
-        // probes (the tables are checkpointed; the violation union is
-        // vocabulary-bounded and almost always empty).
-        require(uni.filter(col("c1") < 0L).select(col("c1").as("bad"))
-          .unionByName(big.filter(col("c2") < 0L).select(col("c2").as("bad")))
-          .unionByName(tri.filter(col("c3") < 0L).select(col("c3").as("bad")))
-          .unionByName(four.filter(col("c4") < 0L).select(col("c4").as("bad")))
-          .unionByName(five.filter(col("c5") < 0L).select(col("c5").as("bad")))
-          .isEmpty,
-          "LmIndex delta drives a count negative — deletes must carry " +
-            "exactly previously-added documents (GDPR-erasure contract); " +
-            "rebuild the model if the original text is gone")
-        scoreDocs match {
-          case None =>
-            writeTables5(store, prefix, uni, big, tri, four, five)
-            None
-          case Some(docs) =>
-            // Overlap the seventeen-table staged write with the score-
-            // side job (§2.6): both read only the checkpointed merged
-            // counts, and the frames are row-identical to the tables
-            // the swap publishes (framesFromCounts5 — spec-pinned), so
-            // scoring the frames == scoring the post-merge store.
-            val frames = framesFromCounts5(uni, big, tri, four, five)
-            Some(writeAndScore(
-              () => writeTables5(store, prefix, uni, big, tri, four, five),
-              scoreFrames5(frames, docs, idCol, textCol, discount = 0.75)))
-        }
-      } finally {
-        uni.unpersist(); big.unpersist(); tri.unpersist()
-        four.unpersist(); five.unpersist()
-        ()
-      }
-    } finally {
-      if (deltaBase.isEmpty) g.unpersist()
-      ()
-    }
-  }
-
-  /** [[append]] for the order-5 model: count merge at all five orders,
-    * aggregates re-derived — append == full rebuild on the grown corpus,
-    * table-for-table (spec-pinned). */
-  def append5(
-      store: TableStore, prefix: String,
-      delta: DataFrame, idCol: String, textCol: String): Unit = {
-    mergeCounts5(store, prefix, delta, idCol, textCol, sign = 1L)
-    ()
-  }
-
-  /** The order-5 maintenance drill — build on `train`, [[append5]]
-    * `delta`, score `docs` against the appended model — with BOTH §2.6
-    * overlaps the sequential form leaves on the table:
-    *
-    *   1. the delta's [[base5Of]] pass reads only the corpus, so it
-    *      runs concurrently with the build's seventeen staged writes;
-    *   2. the final score reads only the checkpointed MERGED counts
-    *      (row-identical to the tables the merge swaps in —
-    *      spec-pinned), so it runs concurrently with the merge's
-    *      seventeen staged writes instead of serially after them.
-    *
-    * The physical append still happens in full (every table staged and
-    * swapped — the store-swap invariant untouched); only the idle
-    * cluster time between the independent jobs is removed. Returns the
-    * materialized score frame (== [[score5]] on the post-append store,
-    * row for row). */
-  private[graft] def appendDrill5(
-      store: TableStore, prefix: String,
-      train: DataFrame, delta: DataFrame, docs: DataFrame,
-      idCol: String, textCol: String): DataFrame = {
-    val Seq(_, db) = concurrently[Any](Seq(
-      () => { build5(store, prefix, train, idCol, textCol); () },
-      () => base5Of(delta, idCol, textCol).localCheckpoint()))
-    val base = db.asInstanceOf[DataFrame]
-    try mergeCounts5(store, prefix, delta, idCol, textCol, sign = 1L,
-      deltaBase = Some(base), scoreDocs = Some(docs)).get
-    finally {
-      base.unpersist()
-      ()
-    }
-  }
-
-  /** [[build5]] with the score-side job OVERLAPPED with the seventeen
-    * staged table writes (§2.6): the score reads the base-derived count
-    * frames (bit-identical to the written tables — the
-    * frames5FromBase/build5FromBase equalities, spec-pinned), so it
-    * back-fills the write jobs' stage tails. Unpruned builds only (a
-    * pruned model's frames differ from the unpruned derivations);
-    * `maxVocab` as in [[build5]]. Returns the materialized score frame
-    * (== [[score5]] on the just-built store, row for row). */
-  private[graft] def build5Scored(
-      store: TableStore, prefix: String,
-      train: DataFrame, idCol: String, textCol: String,
-      docs: DataFrame, maxVocab: Long = 0L): DataFrame = {
-    require(maxVocab >= 0L,
-      s"maxVocab must be >= 0 (0 = unbounded), got $maxVocab")
-    val toks0 = tokens(train, idCol, textCol)
-    val toks = if (maxVocab > 0L) capVocab(toks0, maxVocab) else toks0
-    val base = baseCounts(
-      TextAnalysis.laggedTokens(toks, idCol,
-        Seq("prev", "prev2", "prev3", "prev4")),
-      Seq("prev4", "prev3", "prev2", "prev"))
-      .localCheckpoint()
-    try {
-      val (uni, big, tri, four, five) = splitBase5(base)
-      writeAndScore(
-        () => writeTables5(store, prefix, uni, big, tri, four, five),
-        scoreFrames5(framesFromCounts5(uni, big, tri, four, five),
-          docs, idCol, textCol, discount = 0.75))
-    } finally {
-      base.unpersist()
-      ()
-    }
-  }
-
-  /** [[deleteDocs]] for the order-5 model (spec-pinned: delete ==
-    * rebuild-without-deleted). */
-  def deleteDocs5(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String): Unit = {
-    mergeCounts5(store, prefix, docs, idCol, textCol, sign = -1L)
-    ()
-  }
-
-  /** Load the order-5 model frames (lazy table reads). */
-  def loadModel5(store: TableStore, prefix: String): Kn5Model =
-    Kn5Model(
-      uni = store.load(s"${prefix}_uni"),
-      big = store.load(s"${prefix}_big"),
-      ctx = store.load(s"${prefix}_ctx"),
-      cont = store.load(s"${prefix}_cont"),
-      tri = store.load(s"${prefix}_tri"),
-      ctx3 = store.load(s"${prefix}_ctx3"),
-      m2 = store.load(s"${prefix}_m2"),
-      mctx = store.load(s"${prefix}_mctx"),
-      four = store.load(s"${prefix}_four"),
-      ctx4 = store.load(s"${prefix}_ctx4"),
-      m3 = store.load(s"${prefix}_m3"),
-      mctx3 = store.load(s"${prefix}_mctx3"),
-      five = store.load(s"${prefix}_five"),
-      ctx5 = store.load(s"${prefix}_ctx5"),
-      m4 = store.load(s"${prefix}_m4"),
-      mctx4 = store.load(s"${prefix}_mctx4"),
-      stats = store.load(s"${prefix}_stats"))
-
-  /** Score `docs` against a frozen ORDER-5 model — the recursive KN
-    * chain two levels past [[scoreFrames3]], every unseen event total
-    * under the same OOV recipe:
-    *
-    *   - position-k tokens (k <= 4) score with the order-k chain (raw
-    *     counts at the top, continuation counts below — exactly the
-    *     [[scoreFrames3]] treatment of positions 1-3, extended with the
-    *     raw-4-gram level for position 4);
-    *   - position-5+ tokens: raw 5-gram → continuation-4-gram (m4) →
-    *     continuation-trigram (m3) → continuation-bigram (m2) → P_cont;
-    *   - every level: seen context c → max(count−D,0)/total +
-    *     D·N1+(c,•)/total · lower, count defaulting 0; unseen context →
-    *     full backoff; P_cont/unigram OOV take the reserved
-    *     0.5-type mass.
-    *
-    * Scale: the token frame is the fat side; tables fold losslessly by
-    * join key (uni+cont on w; big+m2 on (prev,w); ctx+mctx on prev;
-    * tri+m3 on (prev2,prev,w); ctx3+mctx3 on (prev2,prev); four+m4 and
-    * ctx4+mctx4 on their 4-gram keys — each folded right side's keys
-    * are a SUBSET of its host's: an observed (k+1)-gram's suffix k-gram
-    * is observed at the same position, and a row is only consumed when
-    * its own guard column is non-null), so the corpus exchanges nine
-    * times — the order-5 OOV floor. */
-  private[graft] def scoreFrames5(
-      m: Kn5Model, docs: DataFrame, idCol: String, textCol: String,
-      discount: Double): DataFrame = {
-    require(discount > 0.0 && discount < 1.0,
-      s"discount must be in (0, 1), got $discount")
-    val pt = TextAnalysis.laggedTokens(tokens(docs, idCol, textCol), idCol,
-      Seq("prev", "prev2", "prev3", "prev4"))
-    val total = col("total_tokens").cast("double")
-    val btypes = col("bigram_types").cast("double")
-    val d = lit(discount)
-    val pcont = pcontOOV(btypes)
-    val uniP = uniPOOV(total)
-    // λ = (D·followers + pm)/cc at every level — pm is the level's
-    // pruned count mass (0 and bit-inert on unpruned models); carrying
-    // it keeps each pruned level a proper distribution (the
-    // KN-sums-to-1 convention through pruned branches).
-    def level(cnt: Column, cc: Column, nf: Column, pm: Column,
-        lower: Column): Column =
-      when(cc.isNotNull,
-        greatest(coalesce(cnt, lit(0L)).cast("double") - d, lit(0.0))
-          / cc.cast("double") +
-          (d * nf.cast("double") + pm.cast("double"))
-            / cc.cast("double") * lower)
-        .otherwise(lower)
-    val midP = level(col("mcount"), col("mcc"), col("n1f2c"), col("pmm"), pcont)
-    val bigP = level(col("c2"), col("cc"), col("n1f"), col("pmb"), pcont)
-    val triP = level(col("c3"), col("cc3"), col("n1f3"), col("pmt"), midP)
-    val mid3P = level(col("m3c"), col("m3cc"), col("n1f3c"), col("pmp"), midP)
-    val fourP = level(col("c4"), col("cc4"), col("n1f4"), col("pmf"), mid3P)
-    val mid4P = level(col("m4c"), col("m4cc"), col("n1f4c"), col("pmq"), mid3P)
-    val fiveP = level(col("c5"), col("cc5"), col("n1f5"), col("pmv"), mid4P)
-    val p = when(col("prev").isNull, uniP)
-      .when(col("prev2").isNull, bigP)
-      .when(col("prev3").isNull, triP)
-      .when(col("prev4").isNull, fourP)
-      .otherwise(fiveP)
-    joinModel5(m, pt, narrowCtx = true)
-      .crossJoin(broadcast(m.stats))
-      .select(col(idCol), round(log(p) * 1e6, 0).cast("long").as("lp"))
-      .groupBy(idCol)
-      .agg(sum(col("lp")).as("s"), count(lit(1)).cast("long").as("n_tokens"))
-      .select(col(idCol), col("n_tokens"),
-        round(col("s").cast("double") / col("n_tokens").cast("double") / 1e6, 6)
-          .as("logprob"))
-  }
-
-  /** The order-5 OOV join layout (nine token-frame exchanges), shared by
-    * [[scoreFrames5]] and [[scoreFramesMkn5]]. `narrowCtx` drops the
-    * modified-KN bucket columns from the context tables (plain KN never
-    * reads them); the mkn scorer keeps them for its λ tallies. */
-  private def joinModel5(
-      m: Kn5Model, pt: DataFrame, narrowCtx: Boolean): DataFrame = {
-    val wM = m.uni.join(m.cont, Seq("w"), "left")
-    val bigM = m.big.join(m.m2, Seq("prev", "w"), "left")
-    // Every context table normalizes its pruned-mass column first (0
-    // when absent — unpruned and legacy models), so the serve recipes
-    // read it unconditionally; narrowCtx keeps it (plain KN's λ needs
-    // the pruned mass even without the mkn buckets).
-    val ctx =
-      if (narrowCtx) withZero(m.ctx, "pmb").select("prev", "cc", "n1f", "pmb")
-      else withZero(m.ctx, "pmb")
-    val mctx =
-      if (narrowCtx)
-        withZero(m.mctx, "pmm").select("prev", "mcc", "n1f2c", "pmm")
-      else withZero(m.mctx, "pmm")
-    val ctxM = ctx.join(mctx, Seq("prev"), "left")
-    val triM = m.tri.join(m.m3, Seq("prev2", "prev", "w"), "left")
-    val ctx3 =
-      if (narrowCtx)
-        withZero(m.ctx3, "pmt").select("prev2", "prev", "cc3", "n1f3", "pmt")
-      else withZero(m.ctx3, "pmt")
-    val mctx3 =
-      if (narrowCtx)
-        withZero(m.mctx3, "pmp")
-          .select("prev2", "prev", "m3cc", "n1f3c", "pmp")
-      else withZero(m.mctx3, "pmp")
-    val ctx3M = ctx3.join(mctx3, Seq("prev2", "prev"), "left")
-    val fourM = m.four.join(m.m4, Seq("prev3", "prev2", "prev", "w"), "left")
-    val ctx4 =
-      if (narrowCtx)
-        withZero(m.ctx4, "pmf")
-          .select("prev3", "prev2", "prev", "cc4", "n1f4", "pmf")
-      else withZero(m.ctx4, "pmf")
-    val mctx4 =
-      if (narrowCtx)
-        withZero(m.mctx4, "pmq")
-          .select("prev3", "prev2", "prev", "m4cc", "n1f4c", "pmq")
-      else withZero(m.mctx4, "pmq")
-    val ctx4M = ctx4.join(mctx4, Seq("prev3", "prev2", "prev"), "left")
-    pt.join(wM, Seq("w"), "left")
-      .join(bigM, Seq("prev", "w"), "left")
-      .join(ctxM, Seq("prev"), "left")
-      .join(triM, Seq("prev2", "prev", "w"), "left")
-      .join(ctx3M, Seq("prev2", "prev"), "left")
-      .join(fourM, Seq("prev3", "prev2", "prev", "w"), "left")
-      .join(ctx4M, Seq("prev3", "prev2", "prev"), "left")
-      .join(m.five, Seq("prev4", "prev3", "prev2", "prev", "w"), "left")
-      .join(withZero(m.ctx5, "pmv"),
-        Seq("prev4", "prev3", "prev2", "prev"), "left")
-  }
-
-  /** Inline order-5 train-on-A / score-B — no store. With all-document
-    * lengths <= 3 this reduces to [[crossScore3]] exactly (the 4- and
-    * 5-gram levels are empty and no position-4+ token exists;
-    * spec-pinned). */
-  def crossScore5(
-      train: DataFrame, docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames5(modelFrames5(train, idCol, textCol), docs, idCol, textCol,
-      discount)
-
-  /** Corpus-scale order-5 scoring against the persisted model (full
-    * table scans — the CCNet posture; [[scoreBatch5]] is the probed
-    * twin). */
-  def score5(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames5(loadModel5(store, prefix), docs, idCol, textCol, discount)
-
-  /** Restrict every keyed table of an order-5 model to `docs`'
-    * vocabulary through the [[batchWordPruner]] regime switch —
-    * lossless for scoring `docs` ([[pruneModel3]]'s argument, two
-    * levels up). */
-  private[graft] def pruneModel5(
-      m: Kn5Model, docs: DataFrame, textCol: String): Kn5Model =
-    pruneModel5R(m, docs, textCol)._1
-
-  /** [[pruneModel5]] with the pruner's release handle — for standing
-    * consumers (the order-5 streaming gates), [[pruneModel3R]]'s
-    * contract two levels up. */
-  private[graft] def pruneModel5R(
-      m: Kn5Model, docs: DataFrame, textCol: String): (Kn5Model, () => Unit) = {
-    val prune = batchWordPruner(docs, textCol, prunedTables = 16)
-    (Kn5Model(
-      uni = prune(m.uni, Seq("w")),
-      big = prune(m.big, Seq("prev", "w")),
-      ctx = prune(m.ctx, Seq("prev")),
-      cont = prune(m.cont, Seq("w")),
-      tri = prune(m.tri, Seq("prev2", "prev", "w")),
-      ctx3 = prune(m.ctx3, Seq("prev2", "prev")),
-      m2 = prune(m.m2, Seq("prev", "w")),
-      mctx = prune(m.mctx, Seq("prev")),
-      four = prune(m.four, Seq("prev3", "prev2", "prev", "w")),
-      ctx4 = prune(m.ctx4, Seq("prev3", "prev2", "prev")),
-      m3 = prune(m.m3, Seq("prev2", "prev", "w")),
-      mctx3 = prune(m.mctx3, Seq("prev2", "prev")),
-      five = prune(m.five, Seq("prev4", "prev3", "prev2", "prev", "w")),
-      ctx5 = prune(m.ctx5, Seq("prev4", "prev3", "prev2", "prev")),
-      m4 = prune(m.m4, Seq("prev3", "prev2", "prev", "w")),
-      mctx4 = prune(m.mctx4, Seq("prev3", "prev2", "prev")),
-      stats = m.stats), prune.release)
-  }
-
-  /** [[scoreBatch]] at order 5: all sixteen keyed table reads prune to
-    * the batch's vocabulary through the same [[batchWordPruner]] regime
-    * switch. Row-identical to [[score5]] in both regimes. */
-  def scoreBatch5(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      discount: Double = 0.75): DataFrame =
-    scoreFrames5(pruneModel5(loadModel5(store, prefix), docs, textCol),
-      docs, idCol, textCol, discount)
-
-  /** Versioned order-5 rebuild — one manifest swap publishes all
-    * seventeen tables. `pruneMin` passes through to [[build5]] (the
-    * natural lifecycle for pruned models, which cannot append). */
-  def rebuildVersioned5(
-      store: TableStore, name: String,
-      train: DataFrame, idCol: String, textCol: String,
-      pruneMin: Seq[Long] = Seq(1L, 1L, 1L, 1L),
-      maxVocab: Long = 0L): String =
-    graft.io.VersionedIndex.rebuild(store, name, train.sparkSession)(
-      p => build5(store, p, train, idCol, textCol, pruneMin, maxVocab))
-
-  /** Score `docs` against the persisted order-5 model with FULL modified
-    * Kneser-Ney — the literal KenLM/CCNet serve: per-LEVEL D1/D2/D3+
-    * estimated from each of the seven levels' own count-of-count
-    * tallies (all read from the stored stats row; per-context buckets
-    * from the widened context tables), the [[scoreFrames5]] backoff
-    * structure with D(0) = 0 semantics. Degenerate levels take
-    * `fallbackDiscounts` (KenLM --discount_fallback) or the curated
-    * error, lazily. With all-document lengths <= 3 this reduces to
-    * [[scoreMkn3]] exactly (spec-pinned). */
-  def scoreMkn5(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None): DataFrame =
-    scoreFramesMkn5(loadModel5(store, prefix), docs, idCol, textCol,
-      fallbackDiscounts)
-
-  /** [[scoreBatch5]] for the modified-KN order-5 serve — row-identical
-    * to [[scoreMkn5]] in both pruner regimes (the discounts row reads
-    * the unpruned stats). */
-  def scoreBatchMkn5(
-      store: TableStore, prefix: String,
-      docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None): DataFrame =
-    scoreFramesMkn5(pruneModel5(loadModel5(store, prefix), docs, textCol),
-      docs, idCol, textCol, fallbackDiscounts)
-
-  /** The order-5 modified-KN recipe over explicit frames. The seven
-    * discount levels: b (raw bigram), t (raw trigram), m (continuation
-    * bigram), f (raw 4-gram), p (continuation trigram), v (raw 5-gram),
-    * q (continuation 4-gram) — each calibrated from its own stored
-    * tallies via [[TextAnalysis.mknLevelDiscounts]] (one eq.-26 edit
-    * point), assembled into ONE broadcast row. */
-  private[graft] def scoreFramesMkn5(
-      m: Kn5Model, docs: DataFrame, idCol: String, textCol: String,
-      fallbackDiscounts: Option[(Double, Double, Double)]): DataFrame = {
-    val pt = TextAnalysis.laggedTokens(tokens(docs, idCol, textCol), idCol,
-      Seq("prev", "prev2", "prev3", "prev4"))
-    val disc = m.stats.select(
-      Seq(col("total_tokens"), col("bigram_types").cast("double").as("btypes")) ++
-        Seq("1", "2", "3", "4").map(k => col(s"n$k").as(s"b$k")) ++
-        Seq("1", "2", "3", "4").flatMap(k =>
-          Seq("t", "m", "f", "p", "v", "q").map(p => col(s"$p$k"))): _*)
-      .select(col("total_tokens") +: col("btypes") +:
-        Seq("b", "t", "m", "f", "p", "v", "q").flatMap(p =>
-          TextAnalysis.mknLevelDiscounts(p, fallbackDiscounts)): _*)
-    val total = col("total_tokens").cast("double")
-    val btypes = col("btypes")
-    val pcont = pcontOOV(btypes)
-    val uniP = uniPOOV(total)
-    def dOf(c: Column, p: String): Column =
-      when(c === 1L, col(s"d1$p")).when(c === 2L, col(s"d2$p"))
-        .otherwise(col(s"d3$p"))
-    // λ carries each level's pruned mass (pm*; 0 and bit-inert on
-    // unpruned models — the scoreFramesMkn rationale seven levels up).
-    def mLevel(cnt: Column, cc: Column, f1: Column, f2: Column, f3p: Column,
-        pm: Column, p: String, lower: Column): Column = {
-      val lam = (col(s"d1$p") * f1.cast("double")
-        + col(s"d2$p") * f2.cast("double")
-        + col(s"d3$p") * f3p.cast("double")
-        + pm.cast("double")) / cc.cast("double")
-      when(cc.isNotNull,
-        when(cnt.isNotNull, (cnt.cast("double") - dOf(cnt, p)) / cc.cast("double"))
-          .otherwise(lit(0.0)) + lam * lower)
-        .otherwise(lower)
-    }
-    val bigP = mLevel(col("c2"), col("cc"),
-      col("nf1"), col("nf2"), col("nf3p"), col("pmb"), "b", pcont)
-    val midP = mLevel(col("mcount"), col("mcc"),
-      col("mf1"), col("mf2"), col("mf3p"), col("pmm"), "m", pcont)
-    val triP = mLevel(col("c3"), col("cc3"),
-      col("tf1"), col("tf2"), col("tf3p"), col("pmt"), "t", midP)
-    val mid3P = mLevel(col("m3c"), col("m3cc"),
-      col("pf1"), col("pf2"), col("pf3p"), col("pmp"), "p", midP)
-    val fourP = mLevel(col("c4"), col("cc4"),
-      col("ff1"), col("ff2"), col("ff3p"), col("pmf"), "f", mid3P)
-    val mid4P = mLevel(col("m4c"), col("m4cc"),
-      col("qf1"), col("qf2"), col("qf3p"), col("pmq"), "q", mid3P)
-    val fiveP = mLevel(col("c5"), col("cc5"),
-      col("vf1"), col("vf2"), col("vf3p"), col("pmv"), "v", mid4P)
-    val p = when(col("prev").isNull, uniP)
-      .when(col("prev2").isNull, bigP)
-      .when(col("prev3").isNull, triP)
-      .when(col("prev4").isNull, fourP)
-      .otherwise(fiveP)
-    joinModel5(m, pt, narrowCtx = false)
-      .crossJoin(broadcast(disc))
-      .select(col(idCol), round(log(p) * 1e6, 0).cast("long").as("lp"))
-      .groupBy(idCol)
-      .agg(sum(col("lp")).as("s"), count(lit(1)).cast("long").as("n_tokens"))
-      .select(col(idCol), col("n_tokens"),
-        round(col("s").cast("double") / col("n_tokens").cast("double") / 1e6, 6)
-          .as("logprob"))
-  }
+      smoothing: Smoothing = Kn()): DataFrame =
+    scoreFrames(pruneModelR(loadModel(order, store, prefix), docs, textCol)._1,
+      docs, idCol, textCol, smoothing)
 
   /** The LITERAL CCNet gate, composed end to end (Wenzek et al. 2020
     * §4.3 verbatim): language-ID every document
     * ([[TextAnalysis.langDetect]] — content-detected, no label
     * needed), score it against the PERSISTED order-5 modified-KN model
-    * ([[scoreMkn5]] — the frozen KenLM serve), split each DETECTED
-    * language into `tiles` equal perplexity bands
-    * ([[TextAnalysis.pplTiles]] — two-phase histogram rank, so a
-    * dominant crawl language never single-reduces), and keep
-    * head+middle (`kept` = tile < tiles). Every piece is individually
-    * oracle-pinned; this is the composition a user deploys, itself
-    * oracle-pinned as q_ccnet_gate.
+    * (the frozen KenLM serve), split each DETECTED language into `tiles`
+    * equal perplexity bands ([[TextAnalysis.pplTiles]] — two-phase
+    * histogram rank, so a dominant crawl language never single-reduces),
+    * and keep head+middle (`kept` = tile < tiles). Every piece is
+    * individually oracle-pinned; this is the composition a user deploys,
+    * itself oracle-pinned as q_ccnet_gate.
     *
     * Output: (idCol, predicted_lang, n_tokens, logprob, tile, bucket,
     * kept).
@@ -2188,7 +1059,7 @@ object LmIndex {
     * design (one narrow language-ID pass, one tokenize for scoring —
     * both narrow maps over (id, text)), and the tiling ranks the
     * NARROW scored projection. Works unchanged over a count-pruned
-    * and/or vocabulary-capped [[build5]] model — the production gate
+    * and/or vocabulary-capped [[build]] model — the production gate
     * model posture. */
   def ccnetGate(
       store: TableStore, prefix: String,
@@ -2196,14 +1067,14 @@ object LmIndex {
       tiles: Int = 3,
       fallbackDiscounts: Option[(Double, Double, Double)] = None): DataFrame =
     ccnetGateFrom(
-      scoreMkn5(store, prefix, docs, idCol, textCol, fallbackDiscounts),
+      score(5, store, prefix, docs, idCol, textCol, Mkn(fallbackDiscounts)),
       docs, idCol, textCol, tiles)
 
-  /** [[ccnetGate]] over an ALREADY-COMPUTED (shared/persisted)
-    * [[scoreMkn5]] frame — the gate composition alone (langid + join +
-    * per-language terciles), so one standing scores frame can serve both
-    * the raw scorer surface and the gate (the dsirResampleFrom split
-    * applied to the CCNet chain; the scores are deterministic in
+  /** [[ccnetGate]] over an ALREADY-COMPUTED (shared/persisted) order-5
+    * modified-KN score frame — the gate composition alone (langid + join
+    * + per-language terciles), so one standing scores frame can serve
+    * both the raw scorer surface and the gate (the dsirResampleFrom
+    * split applied to the CCNet chain; the scores are deterministic in
     * (model, corpus, discounts)). */
   def ccnetGateFrom(
       scores: DataFrame, docs: DataFrame, idCol: String, textCol: String,

@@ -494,7 +494,7 @@ object TextAnalysis {
     // scorer's OOV branches can fire and the result is the textbook
     // in-corpus Kneser-Ney score. One formula, one edit point — the
     // hashUniform principle applied to smoothing arithmetic.
-    LmIndex.crossScore(df, df, idCol, textCol, discount)
+    LmIndex.crossScore(2, df, df, idCol, textCol, LmIndex.Kn(discount))
 
   /** Interpolated Kneser-Ney TRIGRAM score — the recursive KN chain at
     * order 3 (Chen & Goodman 1999 §4; KenLM runs this recursion at

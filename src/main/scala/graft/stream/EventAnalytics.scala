@@ -296,246 +296,85 @@ object EventAnalytics {
 
   /** Streaming perplexity curation gate — the CCNet deployment of
     * [[graft.functions.LmIndex]]: score each micro-batch against a
-    * FROZEN Kneser-Ney model (trained offline on the clean reference
-    * corpus, refreshed like the DSIR fit table) and keep documents
-    * whose per-token logprob clears `minLogprob` (the head/middle cut,
-    * calibrated offline from [[graft.functions.TextAnalysis.pplBuckets]]
-    * — DSIR-gate lesson: thresholds come from observed score
-    * distributions, never assumed).
+    * FROZEN order-`order` Kneser-Ney model under `smoothing` (trained
+    * offline on the clean reference corpus, refreshed like the DSIR fit
+    * table) and keep documents whose per-token logprob clears
+    * `minLogprob` (the head/middle cut, calibrated offline from
+    * [[graft.functions.TextAnalysis.pplBuckets]] — DSIR-gate lesson:
+    * thresholds come from observed score distributions, never assumed).
     *
     * The model tables are PINNED at construction (cache + count, the
     * ivfSnapshot discipline) so a standing gate never re-reads or
     * re-LISTs them per trigger; per-batch cost is the batch's token
     * frame joined against the cached vocabulary tables — AQE broadcasts
     * the BATCH side from measured bytes, so the model never ships. A
-    * document's score depends only on its own text and the frozen
-    * model, so batch boundaries cannot change any decision (spec-pinned
-    * batch == stream). Emits surviving rows with (n_tokens, logprob)
-    * appended. */
+    * document's score depends only on its own text and the frozen model
+    * (and, under modified KN, the model-wide calibration re-derived from
+    * the pinned stats row each trigger), so batch boundaries cannot
+    * change any decision (spec-pinned batch == stream). Emits surviving
+    * rows with (n_tokens, logprob) appended.
+    *
+    * Order >= 3 ALSO prunes its pinned tables to each batch's vocabulary
+    * ([[graft.functions.LmIndex.pruneModelR]]). The BenchLmServe order-3
+    * record drove this: with the batch side broadcast, every join's cost
+    * is a scan of the MODEL side (~60M rows across eight tables at 20M
+    * bigram types), and an unpruned in-memory scan costs what the
+    * page-cache-warm parquet scans cost — pinning alone TIED the full
+    * scan, while the IN filters skip cached batches via the in-memory
+    * column stats the key-sorted build layout makes selective (1.47×).
+    * At order 2 the four small tables serve unpruned. Pruning is
+    * lossless (left joins outside the batch's words can never hit), and
+    * the pruner RELEASES per batch: in the oversized-batch regime it
+    * checkpoints the batch's word frame, and without the release every
+    * such micro-batch leaks checkpoint blocks for the stream's lifetime
+    * (the pplBuckets unreleasable-materialization class). */
   def pplGateEachBatch(
-      store: graft.io.TableStore, prefix: String,
+      order: Int, store: graft.io.TableStore, prefix: String,
       idCol: String, textCol: String, minLogprob: Double,
-      discount: Double = 0.75)(
+      smoothing: graft.functions.LmIndex.Smoothing =
+        graft.functions.LmIndex.Kn())(
       sink: DataFrame => Unit): PplGate = {
-    val m0 = graft.functions.LmIndex.loadModel(store, prefix)
-    val m = graft.functions.LmIndex.KnModel(
-      uni = materializeBatch(m0.uni), big = materializeBatch(m0.big),
-      ctx = materializeBatch(m0.ctx), cont = materializeBatch(m0.cont),
-      stats = materializeBatch(m0.stats))
+    // The measured order-5 serve law, surfaced where a user would
+    // otherwise deploy a slow gate (BASELINE.md round-16 wide-batch
+    // record): at narrow trigger batches (~64 docs) EVERY order-5 path
+    // serves ~4-5 docs/s — the sixteen keyed table probes, not the
+    // scoring math, bound throughput — while wide batches amortize them
+    // (40+ docs/s at 1024-doc triggers under the default divided
+    // literal-IN budget). Logged once per gate construction; the full
+    // record is docs/OPERATORS.md ("Order-5 serving") and
+    // tools/BenchLmServe.
+    if (order == 5)
+      org.slf4j.LoggerFactory.getLogger(getClass).info(
+        "pplGateEachBatch: order-5 serves are table-bound — narrow " +
+          "trigger batches cap at ~4-5 docs/s on every path; widen the " +
+          "source's trigger batches (maxFilesPerTrigger/" +
+          "maxOffsetsPerTrigger) to amortize the 16 keyed probes " +
+          "(docs/OPERATORS.md, 'Order-5 serving')")
+    val m = graft.functions.LmIndex.loadModel(order, store, prefix)
+      .map((_, df) => materializeBatch(df))
     new PplGate((batch, _) => {
       graft.functions.Sampling.requireFreeColumns(
         batch, "pplGateEachBatch", Seq("n_tokens", "logprob"))
       // The batch feeds BOTH the score subtree and the rejoin — the
       // double-subtree rule: materialize once, release in finally.
       val b = materializeBatch(batch)
+      val (served, release) =
+        if (order == 2) (m, () => ())
+        else graft.functions.LmIndex.pruneModelR(m, b, textCol)
       try
         sink(b.join(
             graft.functions.LmIndex.scoreFrames(
-              m, b, idCol, textCol, discount),
+              served, b, idCol, textCol, smoothing),
             Seq(idCol))
           .filter(col("logprob") >= minLogprob))
       finally {
-        b.unpersist()
-        ()
-      }
-    }, Seq(m.uni, m.big, m.ctx, m.cont, m.stats))
-  }
-
-  /** [[pplGateEachBatch]] at ORDER 3 — the same pinned-serve contract
-    * over the nine-table [[graft.functions.LmIndex.build3]] model: all
-    * nine tables cache at construction, each batch scores through
-    * [[graft.functions.LmIndex.scoreFrames3]]'s total OOV recipe and
-    * keeps rows clearing `minLogprob`. The BenchLmServe order-3 record
-    * record shows the order-2 hierarchy does not carry here: with the
-    * batch side broadcast, every join's cost is a scan of the MODEL
-    * side (~60M rows across eight tables at 20M bigram types), and an
-    * unpruned in-memory scan costs what the page-cache-warm parquet
-    * scans cost — so this gate ALSO prunes its pinned tables to each
-    * batch's vocabulary ([[graft.functions.LmIndex.pruneModel3]]): the
-    * IN filters skip cached batches via the in-memory column stats the
-    * key-sorted build layout makes selective. Pruning is lossless
-    * (left joins outside the batch's words can never hit), so the
-    * batch==stream law (a doc's score depends only on its text and the
-    * frozen model) and the release() lifecycle are unchanged. */
-  def pplGate3EachBatch(
-      store: graft.io.TableStore, prefix: String,
-      idCol: String, textCol: String, minLogprob: Double,
-      discount: Double = 0.75)(
-      sink: DataFrame => Unit): PplGate = {
-    val m0 = graft.functions.LmIndex.loadModel3(store, prefix)
-    val m = graft.functions.LmIndex.Kn3Model(
-      uni = materializeBatch(m0.uni), big = materializeBatch(m0.big),
-      ctx = materializeBatch(m0.ctx), cont = materializeBatch(m0.cont),
-      tri = materializeBatch(m0.tri), ctx3 = materializeBatch(m0.ctx3),
-      m2 = materializeBatch(m0.m2), mctx = materializeBatch(m0.mctx),
-      stats = materializeBatch(m0.stats))
-    new PplGate((batch, _) => {
-      graft.functions.Sampling.requireFreeColumns(
-        batch, "pplGate3EachBatch", Seq("n_tokens", "logprob"))
-      val b = materializeBatch(batch)
-      // A standing gate must RELEASE the pruner after each batch: in the
-      // oversized-batch regime the pruner checkpoints the batch's word
-      // frame, and without the release every such micro-batch leaks
-      // checkpoint blocks for the stream's lifetime (the pplBuckets
-      // unreleasable-materialization class). Released in finally, after
-      // the sink has consumed the scored rows — the b.unpersist contract.
-      val (pruned, release) =
-        graft.functions.LmIndex.pruneModel3R(m, b, textCol)
-      try
-        sink(b.join(
-            graft.functions.LmIndex.scoreFrames3(
-              pruned, b, idCol, textCol, discount),
-            Seq(idCol))
-          .filter(col("logprob") >= minLogprob))
-      finally {
+        // After the sink has consumed the scored rows — the b.unpersist
+        // contract.
         release()
         b.unpersist()
         ()
       }
-    }, Seq(m.uni, m.big, m.ctx, m.cont, m.tri, m.ctx3, m.m2, m.mctx, m.stats))
-  }
-
-  /** [[pplGate3EachBatch]] under FULL modified Kneser-Ney — the literal
-    * CCNet gate smoothing: the same pinned-plus-pruned nine-table serve,
-    * scored through [[graft.functions.LmIndex.scoreFramesMkn3]]
-    * (per-level discounts re-derived from the pinned stats row each
-    * trigger — one broadcast row, no corpus rescans). Batch boundaries
-    * cannot change any decision (a doc's score depends only on its text,
-    * the frozen model, and the model-wide calibration; spec-pinned
-    * batch == stream), and the pruner releases per batch exactly as the
-    * KN gate does. */
-  def pplGateMkn3EachBatch(
-      store: graft.io.TableStore, prefix: String,
-      idCol: String, textCol: String, minLogprob: Double,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None)(
-      sink: DataFrame => Unit): PplGate = {
-    val m0 = graft.functions.LmIndex.loadModel3(store, prefix)
-    val m = graft.functions.LmIndex.Kn3Model(
-      uni = materializeBatch(m0.uni), big = materializeBatch(m0.big),
-      ctx = materializeBatch(m0.ctx), cont = materializeBatch(m0.cont),
-      tri = materializeBatch(m0.tri), ctx3 = materializeBatch(m0.ctx3),
-      m2 = materializeBatch(m0.m2), mctx = materializeBatch(m0.mctx),
-      stats = materializeBatch(m0.stats))
-    new PplGate((batch, _) => {
-      graft.functions.Sampling.requireFreeColumns(
-        batch, "pplGateMkn3EachBatch", Seq("n_tokens", "logprob"))
-      val b = materializeBatch(batch)
-      val (pruned, release) =
-        graft.functions.LmIndex.pruneModel3R(m, b, textCol)
-      try
-        sink(b.join(
-            graft.functions.LmIndex.scoreFramesMkn3(
-              pruned, b, idCol, textCol, fallbackDiscounts),
-            Seq(idCol))
-          .filter(col("logprob") >= minLogprob))
-      finally {
-        release()
-        b.unpersist()
-        ()
-      }
-    }, Seq(m.uni, m.big, m.ctx, m.cont, m.tri, m.ctx3, m.m2, m.mctx, m.stats))
-  }
-
-  /** Pin all seventeen frames of an order-5 model (cache + count at
-    * construction — the ivfSnapshot discipline), shared by the two
-    * order-5 gates. */
-  private def pinModel5(
-      m0: graft.functions.LmIndex.Kn5Model): graft.functions.LmIndex.Kn5Model =
-    graft.functions.LmIndex.Kn5Model(
-      uni = materializeBatch(m0.uni), big = materializeBatch(m0.big),
-      ctx = materializeBatch(m0.ctx), cont = materializeBatch(m0.cont),
-      tri = materializeBatch(m0.tri), ctx3 = materializeBatch(m0.ctx3),
-      m2 = materializeBatch(m0.m2), mctx = materializeBatch(m0.mctx),
-      four = materializeBatch(m0.four), ctx4 = materializeBatch(m0.ctx4),
-      m3 = materializeBatch(m0.m3), mctx3 = materializeBatch(m0.mctx3),
-      five = materializeBatch(m0.five), ctx5 = materializeBatch(m0.ctx5),
-      m4 = materializeBatch(m0.m4), mctx4 = materializeBatch(m0.mctx4),
-      stats = materializeBatch(m0.stats))
-
-  private def pinned5Seq(
-      m: graft.functions.LmIndex.Kn5Model): Seq[DataFrame] =
-    Seq(m.uni, m.big, m.ctx, m.cont, m.tri, m.ctx3, m.m2, m.mctx,
-      m.four, m.ctx4, m.m3, m.mctx3, m.five, m.ctx5, m.m4, m.mctx4,
-      m.stats)
-
-  /** The measured order-5 serve law, surfaced where a user would
-    * otherwise deploy a slow gate (BASELINE.md round-16 wide-batch
-    * record): at narrow trigger batches (~64 docs) EVERY order-5 path
-    * serves ~4-5 docs/s — the sixteen keyed table probes, not the
-    * scoring math, bound throughput — while wide batches amortize them
-    * (40+ docs/s at 1024-doc triggers under the default divided
-    * literal-IN budget). Logged once per gate construction; the full
-    * record is docs/OPERATORS.md ("Order-5 serving") and
-    * tools/BenchLmServe. */
-  private def logOrder5ServeHint(gate: String): Unit =
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
-      s"$gate: order-5 serves are table-bound — narrow trigger batches " +
-        "cap at ~4-5 docs/s on every path; widen the source's trigger " +
-        "batches (maxFilesPerTrigger/maxOffsetsPerTrigger) to amortize " +
-        "the 16 keyed probes (docs/OPERATORS.md, 'Order-5 serving')")
-
-  /** [[pplGate3EachBatch]] at ORDER 5 — the literal CCNet gate depth:
-    * all SEVENTEEN [[graft.functions.LmIndex.build5]] tables pinned at
-    * construction and pruned to each batch's vocabulary
-    * ([[graft.functions.LmIndex.pruneModel5R]], lossless; the pruner's
-    * checkpointed word frame releases per batch). Batch boundaries
-    * cannot change any decision (spec-pinned batch == stream). */
-  def pplGate5EachBatch(
-      store: graft.io.TableStore, prefix: String,
-      idCol: String, textCol: String, minLogprob: Double,
-      discount: Double = 0.75)(
-      sink: DataFrame => Unit): PplGate = {
-    logOrder5ServeHint("pplGate5EachBatch")
-    val m = pinModel5(graft.functions.LmIndex.loadModel5(store, prefix))
-    new PplGate((batch, _) => {
-      graft.functions.Sampling.requireFreeColumns(
-        batch, "pplGate5EachBatch", Seq("n_tokens", "logprob"))
-      val b = materializeBatch(batch)
-      val (pruned, release) =
-        graft.functions.LmIndex.pruneModel5R(m, b, textCol)
-      try
-        sink(b.join(
-            graft.functions.LmIndex.scoreFrames5(
-              pruned, b, idCol, textCol, discount),
-            Seq(idCol))
-          .filter(col("logprob") >= minLogprob))
-      finally {
-        release()
-        b.unpersist()
-        ()
-      }
-    }, pinned5Seq(m))
-  }
-
-  /** [[pplGateMkn3EachBatch]] at ORDER 5 — the full CCNet serve
-    * (frozen order-5 model, modified-KN discounts) as a standing gate:
-    * seventeen pinned tables, per-batch pruning, seven levels of
-    * discounts re-derived from the pinned stats row each trigger. */
-  def pplGateMkn5EachBatch(
-      store: graft.io.TableStore, prefix: String,
-      idCol: String, textCol: String, minLogprob: Double,
-      fallbackDiscounts: Option[(Double, Double, Double)] = None)(
-      sink: DataFrame => Unit): PplGate = {
-    logOrder5ServeHint("pplGateMkn5EachBatch")
-    val m = pinModel5(graft.functions.LmIndex.loadModel5(store, prefix))
-    new PplGate((batch, _) => {
-      graft.functions.Sampling.requireFreeColumns(
-        batch, "pplGateMkn5EachBatch", Seq("n_tokens", "logprob"))
-      val b = materializeBatch(batch)
-      val (pruned, release) =
-        graft.functions.LmIndex.pruneModel5R(m, b, textCol)
-      try
-        sink(b.join(
-            graft.functions.LmIndex.scoreFramesMkn5(
-              pruned, b, idCol, textCol, fallbackDiscounts),
-            Seq(idCol))
-          .filter(col("logprob") >= minLogprob))
-      finally {
-        release()
-        b.unpersist()
-        ()
-      }
-    }, pinned5Seq(m))
+    }, m.tables.values.toSeq)
   }
 
   /** Streaming drift alarm — per-micro-batch

@@ -37,14 +37,11 @@ import org.apache.spark.sql.streaming.Trigger
   * tables, e.g. synth:500000:3000000:40 yields ~20M bigram types),
   * the regime the IN pushdown exists for.
   *
-  * A 4th arg `order` (2, the default, 3, or mkn3) picks the model
-  * family: order 3 builds the NINE-table [[LmIndex.build3]] model and
-  * drives [[LmIndex.score3]] (full) vs [[LmIndex.scoreBatch3]] (probed)
-  * vs [[EventAnalytics.pplGate3EachBatch]] (pinned) over the same
-  * batches; `mkn3` drives the same build3 model through the MODIFIED-KN
-  * serve family ([[LmIndex.scoreMkn3]] / [[LmIndex.scoreBatchMkn3]] /
-  * [[EventAnalytics.pplGateMkn3EachBatch]]) — the smoothing the CCNet
-  * deployment actually gates with.
+  * A 4th arg `order` (2, the default, 3, mkn3, 5 or mkn5) picks the
+  * model order and smoothing: the store is built at that order and all
+  * three phases serve it — `mkn*` under MODIFIED-KN discounts
+  * ([[LmIndex.Mkn]], the smoothing the CCNet deployment actually gates
+  * with), the rest under plain KN.
   *
   * Usage: BenchLmServe [documentsParquet|synth:n:v:w] [nBatches] [batchSize] [order]
   */
@@ -53,11 +50,15 @@ object BenchLmServe {
     val corpusPath = args.headOption.getOrElse("/root/testdata/sf0.1/documents.parquet")
     val nBatches = if (args.length > 1) args(1).toInt else 16
     val batchSize = if (args.length > 2) args(2).toInt else 64
-    val order = if (args.length > 3) args(3) else "2"
+    val orderArg = if (args.length > 3) args(3) else "2"
     require(nBatches >= 2, s"nBatches must be >= 2, got $nBatches")
-    require(Set("2", "3", "mkn3", "5", "mkn5").contains(order),
-      s"order must be 2, 3, mkn3, 5 or mkn5, got $order")
-    val fb = Some((0.5, 1.0, 1.5))
+    val (order, smoothing) = orderArg match {
+      case "2" | "3" | "5" => (orderArg.toInt, LmIndex.Kn())
+      case "mkn3" | "mkn5" =>
+        (orderArg.last.asDigit, LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
+      case _ => throw new IllegalArgumentException(
+        s"order must be 2, 3, mkn3, 5 or mkn5, got $orderArg")
+    }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -88,11 +89,7 @@ object BenchLmServe {
     val root = java.nio.file.Files.createTempDirectory("graft_lm_serve").toString
     val store = new ParquetTableStore(spark, root)
     val tBuild0 = System.nanoTime()
-    order match {
-      case "5" | "mkn5" => LmIndex.build5(store, "lm", corpus, "doc_id", "text")
-      case "3" | "mkn3" => LmIndex.build3(store, "lm", corpus, "doc_id", "text")
-      case _ => LmIndex.build(store, "lm", corpus, "doc_id", "text")
-    }
+    LmIndex.build(order, store, "lm", corpus, "doc_id", "text")
     val buildSec = (System.nanoTime() - tBuild0) / 1e9
 
     val docRows = corpus.limit(nBatches * batchSize)
@@ -122,55 +119,18 @@ object BenchLmServe {
 
     @volatile var gotFull = 0L
     val fullSecs = drive((batch, _) => {
-      gotFull += (order match {
-        case "3" => LmIndex.score3(store, "lm", batch, "doc_id", "text")
-        case "mkn3" =>
-          LmIndex.scoreMkn3(store, "lm", batch, "doc_id", "text", fb)
-        case "5" => LmIndex.score5(store, "lm", batch, "doc_id", "text")
-        case "mkn5" =>
-          LmIndex.scoreMkn5(store, "lm", batch, "doc_id", "text", fb)
-        case _ => LmIndex.score(store, "lm", batch, "doc_id", "text")
-      }).count()
+      gotFull += LmIndex.score(order, store, "lm", batch, "doc_id", "text",
+        smoothing).count()
     }, () => gotFull)
     @volatile var gotProbed = 0L
     val probedSecs = drive((batch, _) => {
-      gotProbed += (order match {
-        case "3" => LmIndex.scoreBatch3(store, "lm", batch, "doc_id", "text")
-        case "mkn3" =>
-          LmIndex.scoreBatchMkn3(store, "lm", batch, "doc_id", "text", fb)
-        case "5" => LmIndex.scoreBatch5(store, "lm", batch, "doc_id", "text")
-        case "mkn5" =>
-          LmIndex.scoreBatchMkn5(store, "lm", batch, "doc_id", "text", fb)
-        case _ => LmIndex.scoreBatch(store, "lm", batch, "doc_id", "text")
-      }).count()
+      gotProbed += LmIndex.scoreBatch(order, store, "lm", batch, "doc_id",
+        "text", smoothing).count()
     }, () => gotProbed)
     @volatile var gotGate = 0L
-    val gate = order match {
-      case "3" =>
-        EventAnalytics.pplGate3EachBatch(
-          store, "lm", "doc_id", "text", minLogprob = -1e9) { out =>
-          gotGate += out.count(); ()
-        }
-      case "mkn3" =>
-        EventAnalytics.pplGateMkn3EachBatch(
-          store, "lm", "doc_id", "text", minLogprob = -1e9, fb) { out =>
-          gotGate += out.count(); ()
-        }
-      case "5" =>
-        EventAnalytics.pplGate5EachBatch(
-          store, "lm", "doc_id", "text", minLogprob = -1e9) { out =>
-          gotGate += out.count(); ()
-        }
-      case "mkn5" =>
-        EventAnalytics.pplGateMkn5EachBatch(
-          store, "lm", "doc_id", "text", minLogprob = -1e9, fb) { out =>
-          gotGate += out.count(); ()
-        }
-      case _ =>
-        EventAnalytics.pplGateEachBatch(
-          store, "lm", "doc_id", "text", minLogprob = -1e9) { out =>
-          gotGate += out.count(); ()
-        }
+    val gate = EventAnalytics.pplGateEachBatch(order, store, "lm", "doc_id",
+      "text", minLogprob = -1e9, smoothing = smoothing) { out =>
+      gotGate += out.count(); ()
     }
     val gateSecs = drive(gate, () => gotGate)
     gate.release()
@@ -189,7 +149,7 @@ object BenchLmServe {
     val (pQ, pW, pP50, pMax) = stats(probedSecs)
     val (gQ, gW, gP50, gMax) = stats(gateSecs)
     println(s"""{"metric":"lm_serve_docs_per_sec","value":${r3(pQ)},""" +
-      s""""unit":"docs/sec","order":"$order","corpus_docs":$nDocs,"batches":$nBatches,""" +
+      s""""unit":"docs/sec","order":"$orderArg","corpus_docs":$nDocs,"batches":$nBatches,""" +
       s""""batch_size":$batchSize,"build_sec":${r3(buildSec)},""" +
       s""""full_dps":${r3(fQ)},"full_warm_batch_sec":${r3(fW)},""" +
       s""""full_p50_sec":${r3(fP50)},"full_max_sec":${r3(fMax)},""" +

@@ -163,7 +163,7 @@ object BenchScale {
     // rows: the tokenizer trainers (one corpus-scale word-frequency pass
     // + a vocabulary-bounded driver merge loop — the collect sits behind
     // the graft.tokenizer.maxTypes envelope), the persisted order-3 /
-    // modified-KN serves (build3's nine tables + the store-read scoring
+    // modified-KN serves (the order-3 build's nine tables + the store-read scoring
     // joins — the model-table-growth regime the templated corpora cannot
     // express), and the trained-gate north-star.
     "q_bpe_train",
@@ -173,11 +173,11 @@ object BenchScale {
     "q_pipeline_manifest_v2",
     // round-15 session 2: full modified-KN at order 3 (per-level
     // estimated discounts — the heaviest inline LM shape) and its
-    // persisted twin (build3 + tally-read serve).
+    // persisted twin (order-3 build + tally-read serve).
     "q_mkn_trigram",
     "q_mkn3_persisted",
     // round-16 additions: the ORDER-5 persisted family (seventeen-table
-    // gramCounts5 build + the nine-exchange scoring joins — the literal
+    // order-5 build + the nine-exchange scoring joins — the literal
     // CCNet model shape; run against `heaps`/`heapsbigram` corpora for
     // the model-table-growth rows) and q_kn3_persisted under the
     // positional-join scorer mode (the giant-document mitigation — run
@@ -185,7 +185,7 @@ object BenchScale {
     "q_kn5_persisted",
     "q_mkn5_persisted",
     "q_kn3_positional",
-    // round-16 session 2: order-5 maintenance (build5 + append5 count
+    // round-16 session 2: order-5 maintenance (build + append count
     // merge + full score — two passes over the gram tables) and the
     // probed modified-KN order-5 serve (weight is the in-closure build;
     // the serve is the probed slices).

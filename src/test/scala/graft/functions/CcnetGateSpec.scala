@@ -25,7 +25,7 @@ class CcnetGateSpec extends SparkSpec {
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val store = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_ccnet_").toString)
-    LmIndex.build5(store, "lm5", train, "doc_id", "text")
+    LmIndex.build(5, store, "lm5", train, "doc_id", "text")
     store
   }
 
@@ -69,7 +69,8 @@ class CcnetGateSpec extends SparkSpec {
     // narrow checkpoint pplTiles ranks): each model table exactly once,
     // and only model tables — the training corpus is structurally
     // unreachable (the model came from the store).
-    val scoring = LmIndex.scoreMkn5(store, "lm5", gated, "doc_id", "text", fb)
+    val scoring = LmIndex.score(5, store, "lm5", gated, "doc_id", "text",
+      LmIndex.Mkn(fb))
     val splan = scoring.queryExecution.executedPlan
     for (t <- Seq("lm5_uni", "lm5_big", "lm5_tri", "lm5_four", "lm5_five",
         "lm5_ctx5", "lm5_m4", "lm5_stats"))
@@ -102,7 +103,7 @@ class CcnetGateSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val store = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_ccnetp_").toString)
-    LmIndex.build5(store, "lm5", train, "doc_id", "text",
+    LmIndex.build(5, store, "lm5", train, "doc_id", "text",
       pruneMin = Seq(1L, 2L, 2L, 2L), maxVocab = 8L)
     val gated = Seq(
       (1L, "the cat sat of the mat"), (2L, "the mat sat of the cat"),

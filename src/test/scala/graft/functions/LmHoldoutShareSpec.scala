@@ -6,14 +6,15 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 
-/** The shared-holdout-score equality behind the r18 cross-query sharing:
-  * each order's inline holdout cross-score and its persisted twin serve
-  * ONE checkpointed frame (SparkEntry.lmhScoresShared), so the identity
-  * the persisted twins now rely on — score from a store built on the
-  * 80% split == the base/frame-derived cross-score of the SAME held-out
-  * docs, with genuine OOV events firing — is pinned here directly, per
-  * order, on a corpus whose holdout contains words/contexts absent from
-  * the training split. */
+/** The store-serve == frame-serve equality under OOV behind the LM
+  * holdout twins: each order's inline holdout cross-score (SparkEntry
+  * .lmhScoresShared — a lazy or base-derived frame) and its persisted
+  * twin (q_kn_persisted, q_kn{3,5}_persisted_holdout — a serve from a
+  * store built on the 80% split) share one oracle SQL, so score from the
+  * store == the frame cross-score of the SAME held-out docs, with genuine
+  * OOV events firing, is pinned here directly, per order. Rows compare as
+  * MULTISETS (sorted sequences), so a duplicated row — a bad join fanning
+  * out — fails the spec. */
 class LmHoldoutShareSpec extends SparkSpec {
   import spark.implicits._
 
@@ -33,8 +34,8 @@ class LmHoldoutShareSpec extends SparkSpec {
     (1L to 60L).map(i => (i, txt(i))).toDF("doc_id", "text")
   }
 
-  private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
-    df.collect().map(_.toString).toSet
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
 
   private def store() = new graft.io.ParquetTableStore(spark,
     Files.createTempDirectory("graft_lmh_").toString)
@@ -51,32 +52,27 @@ class LmHoldoutShareSpec extends SparkSpec {
     assert(!trainVocab.contains("zz") && !trainVocab.contains("yy"),
       "fixture must keep zz/yy out of the training split")
 
-    // Order 2: score(store) == crossScore — the q_kn_persisted /
-    // q_kn_score_holdout shared frame.
-    val s2 = store()
-    LmIndex.build(s2, "lm", train, "doc_id", "text")
-    assert(rows(LmIndex.score(s2, "lm", hold, "doc_id", "text")) ===
-      rows(LmIndex.crossScore(train, hold, "doc_id", "text")),
-      "order-2 persisted holdout serve diverged from the shared frame")
-
-    // Order 3: score3(store built from the shared base) == the
-    // base-frame cross-score — q_kn3_persisted_holdout / q_kn3_holdout.
-    val base3 = LmIndex.base3Of(train, "doc_id", "text").localCheckpoint()
-    val s3 = store()
-    LmIndex.build3FromBase(s3, "lm3", base3)
-    assert(rows(LmIndex.score3(s3, "lm3", hold, "doc_id", "text")) ===
-      rows(LmIndex.scoreFrames3(LmIndex.frames3FromBase(base3), hold,
-        "doc_id", "text", 0.75)),
-      "order-3 persisted holdout serve diverged from the shared frame")
-
-    // Order 5: score5(store built from the shared base) == the
-    // base-frame cross-score — q_kn5_persisted_holdout / q_kn5_holdout.
-    val base5 = LmIndex.base5Of(train, "doc_id", "text").localCheckpoint()
-    val s5 = store()
-    LmIndex.build5FromBase(s5, "lm5", base5)
-    assert(rows(LmIndex.score5(s5, "lm5", hold, "doc_id", "text")) ===
-      rows(LmIndex.scoreFrames5(LmIndex.frames5FromBase(base5), hold,
-        "doc_id", "text", 0.75)),
-      "order-5 persisted holdout serve diverged from the shared frame")
+    // Order 2: score(store) == crossScore — q_kn_persisted /
+    // q_kn_score_holdout. Orders 3 and 5: score(store built from the
+    // shared base) == the base-frame cross-score — the
+    // q_kn{3,5}_persisted_holdout / q_kn{3,5}_holdout pairs.
+    for (order <- Seq(2, 3, 5)) {
+      val s = store()
+      val frames =
+        if (order == 2) {
+          LmIndex.build(2, s, "lm", train, "doc_id", "text")
+          LmIndex.modelFrames(2, train, "doc_id", "text")
+        } else {
+          val base = LmIndex.baseOf(order, train, "doc_id", "text").localCheckpoint()
+          LmIndex.buildFromBase(order, s, "lm", base)
+          LmIndex.framesFromBase(order, base)
+        }
+      val served = rows(LmIndex.score(order, s, "lm", hold, "doc_id", "text"))
+      assert(served.length === hold.count(),
+        s"order-$order persisted holdout serve is not one row per doc")
+      assert(served === rows(LmIndex.scoreFrames(frames, hold, "doc_id",
+        "text", LmIndex.Kn())),
+        s"order-$order persisted holdout serve diverged from the shared frame")
+    }
   }
 }

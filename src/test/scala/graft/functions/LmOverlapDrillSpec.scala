@@ -41,12 +41,12 @@ class LmOverlapDrillSpec extends SparkSpec {
     val delta = docs.filter(col("doc_id") % 3 === 0)
 
     val sa = store()
-    LmIndex.build5(sa, "lm5", train, "doc_id", "text")
-    LmIndex.append5(sa, "lm5", delta, "doc_id", "text")
-    val seqScore = LmIndex.score5(sa, "lm5", docs, "doc_id", "text")
+    LmIndex.build(5, sa, "lm5", train, "doc_id", "text")
+    LmIndex.append(5, sa, "lm5", delta, "doc_id", "text")
+    val seqScore = LmIndex.score(5, sa, "lm5", docs, "doc_id", "text")
 
     val sb = store()
-    val drill = LmIndex.appendDrill5(sb, "lm5", train, delta, docs,
+    val drill = LmIndex.appendDrill(5, sb, "lm5", train, delta, docs,
       "doc_id", "text")
     for (t <- Tables5)
       assert(rows(sb.load(s"lm5_$t")) === rows(sa.load(s"lm5_$t")),
@@ -63,12 +63,12 @@ class LmOverlapDrillSpec extends SparkSpec {
     val hold = docs.filter(col("doc_id") % 5 === 0)
 
     val sa = store()
-    LmIndex.build(sa, "lm", train, "doc_id", "text")
-    LmIndex.append(sa, "lm", delta, "doc_id", "text")
-    val seqScore = LmIndex.score(sa, "lm", hold, "doc_id", "text")
+    LmIndex.build(2, sa, "lm", train, "doc_id", "text")
+    LmIndex.append(2, sa, "lm", delta, "doc_id", "text")
+    val seqScore = LmIndex.score(2, sa, "lm", hold, "doc_id", "text")
 
     val sb = store()
-    val drill = LmIndex.appendDrill(sb, "lm", train, delta, hold,
+    val drill = LmIndex.appendDrill(2, sb, "lm", train, delta, hold,
       "doc_id", "text")
     for (t <- Tables2)
       assert(rows(sb.load(s"lm_$t")) === rows(sa.load(s"lm_$t")),
@@ -78,9 +78,9 @@ class LmOverlapDrillSpec extends SparkSpec {
 
     // Delete drill: both stores now hold the same appended model —
     // delete the delta back out of each.
-    LmIndex.deleteDocs(sa, "lm", delta, "doc_id", "text")
-    val seqDel = LmIndex.score(sa, "lm", hold, "doc_id", "text")
-    val delScored = LmIndex.deleteDocsScored(sb, "lm", delta,
+    LmIndex.deleteDocs(2, sa, "lm", delta, "doc_id", "text")
+    val seqDel = LmIndex.score(2, sa, "lm", hold, "doc_id", "text")
+    val delScored = LmIndex.deleteDocsScored(2, sb, "lm", delta,
       "doc_id", "text", scoreDocs = hold)
     for (t <- Tables2)
       assert(rows(sb.load(s"lm_$t")) === rows(sa.load(s"lm_$t")),
@@ -94,10 +94,10 @@ class LmOverlapDrillSpec extends SparkSpec {
     val docs = corpus(73)
 
     val s5a = store()
-    LmIndex.build5(s5a, "lm5", docs, "doc_id", "text", maxVocab = 5L)
-    val seq5 = LmIndex.score5(s5a, "lm5", docs, "doc_id", "text")
+    LmIndex.build(5, s5a, "lm5", docs, "doc_id", "text", maxVocab = 5L)
+    val seq5 = LmIndex.score(5, s5a, "lm5", docs, "doc_id", "text")
     val s5b = store()
-    val ov5 = LmIndex.build5Scored(s5b, "lm5", docs, "doc_id", "text",
+    val ov5 = LmIndex.buildScored(5, s5b, "lm5", docs, "doc_id", "text",
       docs = docs, maxVocab = 5L)
     for (t <- Tables5)
       assert(rows(s5b.load(s"lm5_$t")) === rows(s5a.load(s"lm5_$t")),
@@ -106,10 +106,10 @@ class LmOverlapDrillSpec extends SparkSpec {
       "capped order-5 overlapped score diverged from score5")
 
     val s3a = store()
-    LmIndex.build3(s3a, "lm3", docs, "doc_id", "text")
-    val seq3 = LmIndex.score3(s3a, "lm3", docs, "doc_id", "text")
+    LmIndex.build(3, s3a, "lm3", docs, "doc_id", "text")
+    val seq3 = LmIndex.score(3, s3a, "lm3", docs, "doc_id", "text")
     val s3b = store()
-    val ov3 = LmIndex.build3Scored(s3b, "lm3", docs, "doc_id", "text",
+    val ov3 = LmIndex.buildScored(3, s3b, "lm3", docs, "doc_id", "text",
       docs = docs)
     for (t <- Seq("uni", "big", "ctx", "cont", "tri", "ctx3", "m2", "mctx",
         "stats"))
@@ -124,13 +124,13 @@ class LmOverlapDrillSpec extends SparkSpec {
     val pruneMin = Seq(2L, 2L, 2L, 2L)
 
     val direct = store()
-    LmIndex.build5(direct, "lm5", docs, "doc_id", "text",
+    LmIndex.build(5, direct, "lm5", docs, "doc_id", "text",
       pruneMin = pruneMin)
 
     val plain = store()
-    LmIndex.build5(plain, "lm5", docs, "doc_id", "text")
+    LmIndex.build(5, plain, "lm5", docs, "doc_id", "text")
     val derived = store()
-    LmIndex.build5PrunedFromStore(plain, "lm5", derived, "lm5", pruneMin)
+    LmIndex.buildPrunedFromStore(5, plain, "lm5", derived, "lm5", pruneMin)
 
     for (t <- Tables5)
       assert(rows(derived.load(s"lm5_$t")) === rows(direct.load(s"lm5_$t")),

@@ -49,22 +49,22 @@ class LmPrunedSpec extends SparkSpec {
     val probe = Seq((5001L, "u v u v u v u"), (5002L, "v v u u v"),
       (5003L, "u u u u u u"), (5004L, "v u v")).toDF("doc_id", "text")
     val plain = tmpStore(); val pruned = tmpStore()
-    LmIndex.build5(plain, "lm5", corpus, "doc_id", "text")
-    LmIndex.build5(pruned, "lm5", corpus, "doc_id", "text",
+    LmIndex.build(5, plain, "lm5", corpus, "doc_id", "text")
+    LmIndex.build(5, pruned, "lm5", corpus, "doc_id", "text",
       pruneMin = Seq(2L, 2L, 2L, 2L))
     val fb = Some((0.5, 1.0, 1.5))
     def scores(st: graft.io.TableStore): Seq[Set[(Long, Long, Double)]] = Seq(
-      LmIndex.score(st, "lm5", probe, "doc_id", "text")
+      LmIndex.score(2, st, "lm5", probe, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet,
-      LmIndex.score3(st, "lm5", probe, "doc_id", "text")
+      LmIndex.score(3, st, "lm5", probe, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet,
-      LmIndex.score5(st, "lm5", probe, "doc_id", "text")
+      LmIndex.score(5, st, "lm5", probe, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet,
-      LmIndex.scoreMkn(st, "lm5", probe, "doc_id", "text", fb)
+      LmIndex.score(2, st, "lm5", probe, "doc_id", "text", LmIndex.Mkn(fb))
         .as[(Long, Long, Double)].collect().toSet,
-      LmIndex.scoreMkn3(st, "lm5", probe, "doc_id", "text", fb)
+      LmIndex.score(3, st, "lm5", probe, "doc_id", "text", LmIndex.Mkn(fb))
         .as[(Long, Long, Double)].collect().toSet,
-      LmIndex.scoreMkn5(st, "lm5", probe, "doc_id", "text", fb)
+      LmIndex.score(5, st, "lm5", probe, "doc_id", "text", LmIndex.Mkn(fb))
         .as[(Long, Long, Double)].collect().toSet)
     assert(scores(pruned) === scores(plain),
       "a non-biting prune changed a serve result")
@@ -93,7 +93,7 @@ class LmPrunedSpec extends SparkSpec {
     val train = Seq((1L, "a b a b a c"), (2L, "b c b c"))
       .toDF("doc_id", "text")
     val store = tmpStore()
-    LmIndex.build5(store, "lm5", train, "doc_id", "text",
+    LmIndex.build(5, store, "lm5", train, "doc_id", "text",
       pruneMin = Seq(2L, 1L, 1L, 1L))
     val d = 0.75
     // (10, "a b"): surviving pair under a pruned context —
@@ -106,7 +106,7 @@ class LmPrunedSpec extends SparkSpec {
     val pAC = (d * 1 + 1.0) / 3 * (2.0 / 5)
     val probes = Seq((10L, "a b"), (11L, "c b"), (12L, "a c"))
       .toDF("doc_id", "text")
-    val got = LmIndex.score(store, "lm5", probes, "doc_id", "text")
+    val got = LmIndex.score(2, store, "lm5", probes, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Double)].collect()
     assert(got === Array(
       (10L, 2L, lpOf(3.0 / 10, pAB)),
@@ -131,25 +131,25 @@ class LmPrunedSpec extends SparkSpec {
       (1L, "a b c d a"), (2L, "a b c d a"), (3L, "a b c d b"),
       (4L, "d c b a d"), (5L, "b a d c b a")).toDF("doc_id", "text")
     val store = tmpStore()
-    LmIndex.build5(store, "lm5", train, "doc_id", "text",
+    LmIndex.build(5, store, "lm5", train, "doc_id", "text",
       pruneMin = Seq(2L, 2L, 2L, 2L))
     val vocab = Seq("a", "b", "c", "d")
     val prefix = Seq((100L, "a b c d")).toDF("doc_id", "text")
     val probes = vocab.zipWithIndex
       .map { case (w, i) => (200L + i, s"a b c d $w") }
       .toDF("doc_id", "text")
-    val pre = LmIndex.score5(store, "lm5", prefix, "doc_id", "text")
+    val pre = LmIndex.score(5, store, "lm5", prefix, "doc_id", "text")
       .as[(Long, Long, Double)].head()._3 * 4e6
-    val total = LmIndex.score5(store, "lm5", probes, "doc_id", "text")
+    val total = LmIndex.score(5, store, "lm5", probes, "doc_id", "text")
       .as[(Long, Long, Double)].collect()
       .map(r => math.exp((r._3 * 5e6 - pre) / 1e6)).sum
     assert(math.abs(total - 1.0) < 1e-4,
       s"P(.|a b c d) sums to $total, not 1 — pruned mass leaked")
     // Same law under the seven-level modified-KN serve.
     val fb = Some((0.5, 1.0, 1.5))
-    val preM = LmIndex.scoreMkn5(store, "lm5", prefix, "doc_id", "text", fb)
+    val preM = LmIndex.score(5, store, "lm5", prefix, "doc_id", "text", LmIndex.Mkn(fb))
       .as[(Long, Long, Double)].head()._3 * 4e6
-    val totalM = LmIndex.scoreMkn5(store, "lm5", probes, "doc_id", "text", fb)
+    val totalM = LmIndex.score(5, store, "lm5", probes, "doc_id", "text", LmIndex.Mkn(fb))
       .as[(Long, Long, Double)].collect()
       .map(r => math.exp((r._3 * 5e6 - preM) / 1e6)).sum
     assert(math.abs(totalM - 1.0) < 1e-4,
@@ -162,29 +162,31 @@ class LmPrunedSpec extends SparkSpec {
     val batch = randomCorpus(60, 7L)
       .select((col("doc_id") + 200L).as("doc_id"), col("text"))
     val plain = tmpStore(); val pruned = tmpStore()
-    LmIndex.build5(plain, "lm5", train, "doc_id", "text")
-    LmIndex.build5(pruned, "lm5", train, "doc_id", "text",
+    LmIndex.build(5, plain, "lm5", train, "doc_id", "text")
+    LmIndex.build(5, pruned, "lm5", train, "doc_id", "text",
       pruneMin = Seq(1L, 2L, 2L, 2L))
     for (t <- Seq("tri", "four", "five", "m3", "m4"))
       assert(pruned.load(s"lm5_$t").count() < plain.load(s"lm5_$t").count(),
         s"pruning did not shrink lm5_$t")
     val fb = Some((0.5, 1.0, 1.5))
-    val want = LmIndex.score5(pruned, "lm5", batch, "doc_id", "text")
+    val want = LmIndex.score(5, pruned, "lm5", batch, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
-    val wantM = LmIndex.scoreMkn5(pruned, "lm5", batch, "doc_id", "text", fb)
+    val wantM = LmIndex.score(5, pruned, "lm5", batch, "doc_id", "text", LmIndex.Mkn(fb))
       .as[(Long, Long, Double)].collect().toSet
-    assert(LmIndex.scoreBatch5(pruned, "lm5", batch, "doc_id", "text")
+    assert(LmIndex.scoreBatch(5, pruned, "lm5", batch, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet === want,
       "probed serve diverged on the pruned model (IN regime)")
-    assert(LmIndex.scoreBatchMkn5(pruned, "lm5", batch, "doc_id", "text", fb)
+    assert(LmIndex.scoreBatch(5, pruned, "lm5", batch, "doc_id", "text",
+        LmIndex.Mkn(fb))
       .as[(Long, Long, Double)].collect().toSet === wantM,
       "probed mkn serve diverged on the pruned model (IN regime)")
     spark.conf.set("graft.lm.probeMaxWords", "3")
     try {
-      assert(LmIndex.scoreBatch5(pruned, "lm5", batch, "doc_id", "text")
+      assert(LmIndex.scoreBatch(5, pruned, "lm5", batch, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet === want,
         "probed serve diverged on the pruned model (semi-join regime)")
-      assert(LmIndex.scoreBatchMkn5(pruned, "lm5", batch, "doc_id", "text", fb)
+      assert(LmIndex.scoreBatch(5, pruned, "lm5", batch, "doc_id", "text",
+        LmIndex.Mkn(fb))
         .as[(Long, Long, Double)].collect().toSet === wantM,
         "probed mkn serve diverged on the pruned model (semi-join regime)")
     } finally spark.conf.unset("graft.lm.probeMaxWords")
@@ -194,16 +196,16 @@ class LmPrunedSpec extends SparkSpec {
       "before touching any table") {
     val train = randomCorpus(63, 40L)
     val store = tmpStore()
-    LmIndex.build5(store, "lm5", train, "doc_id", "text",
+    LmIndex.build(5, store, "lm5", train, "doc_id", "text",
       pruneMin = Seq(1L, 2L, 2L, 2L))
     val before = store.load("lm5_tri").count()
     val delta = Seq((900L, "kk ll mm nn oo")).toDF("doc_id", "text")
     val e1 = intercept[IllegalArgumentException] {
-      LmIndex.append5(store, "lm5", delta, "doc_id", "text")
+      LmIndex.append(5, store, "lm5", delta, "doc_id", "text")
     }
     assert(e1.getMessage.contains("COUNT-PRUNED"))
     val e2 = intercept[IllegalArgumentException] {
-      LmIndex.deleteDocs5(store, "lm5", delta, "doc_id", "text")
+      LmIndex.deleteDocs(5, store, "lm5", delta, "doc_id", "text")
     }
     assert(e2.getMessage.contains("COUNT-PRUNED"))
     assert(store.load("lm5_tri").count() === before,

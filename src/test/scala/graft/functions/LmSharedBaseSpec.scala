@@ -31,34 +31,19 @@ class LmSharedBaseSpec extends SparkSpec {
     val train = docs.filter(col("doc_id") % 5 =!= 0)
     val hold = docs.filter(col("doc_id") % 5 === 0)
 
-    val base5 = LmIndex.base5Of(train, "doc_id", "text").localCheckpoint()
-    val fromBase5 = LmIndex.frames5FromBase(base5)
-    val lazy5 = LmIndex.modelFrames5(train, "doc_id", "text")
-    for (((n, a), b) <- Seq(
-        "uni" -> fromBase5.uni, "big" -> fromBase5.big,
-        "ctx" -> fromBase5.ctx, "cont" -> fromBase5.cont,
-        "tri" -> fromBase5.tri, "ctx3" -> fromBase5.ctx3,
-        "m2" -> fromBase5.m2, "mctx" -> fromBase5.mctx,
-        "four" -> fromBase5.four, "ctx4" -> fromBase5.ctx4,
-        "m3" -> fromBase5.m3, "mctx3" -> fromBase5.mctx3,
-        "five" -> fromBase5.five, "ctx5" -> fromBase5.ctx5,
-        "m4" -> fromBase5.m4, "mctx4" -> fromBase5.mctx4,
-        "stats" -> fromBase5.stats).zip(Seq(
-        lazy5.uni, lazy5.big, lazy5.ctx, lazy5.cont, lazy5.tri, lazy5.ctx3,
-        lazy5.m2, lazy5.mctx, lazy5.four, lazy5.ctx4, lazy5.m3, lazy5.mctx3,
-        lazy5.five, lazy5.ctx5, lazy5.m4, lazy5.mctx4, lazy5.stats)))
-      assert(rows(a) === rows(b), s"order-5 frame $n diverged from lazy")
-    assert(
-      rows(LmIndex.scoreFrames5(fromBase5, hold, "doc_id", "text", 0.75)) ===
-        rows(LmIndex.crossScore5(train, hold, "doc_id", "text")),
-      "base-derived order-5 cross-score diverged")
-
-    val base3 = LmIndex.base3Of(train, "doc_id", "text").localCheckpoint()
-    assert(
-      rows(LmIndex.scoreFrames3(LmIndex.frames3FromBase(base3), hold,
-        "doc_id", "text", 0.75)) ===
-        rows(LmIndex.crossScore3(train, hold, "doc_id", "text")),
-      "base-derived order-3 cross-score diverged")
+    for (order <- Seq(3, 5)) {
+      val base = LmIndex.baseOf(order, train, "doc_id", "text").localCheckpoint()
+      val fromBase = LmIndex.framesFromBase(order, base)
+      val lazyM = LmIndex.modelFrames(order, train, "doc_id", "text")
+      assert(fromBase.tables.keys.toSeq === lazyM.tables.keys.toSeq)
+      for ((n, df) <- fromBase.tables)
+        assert(rows(df) === rows(lazyM(n)),
+          s"order-$order frame $n diverged from lazy")
+      assert(
+        rows(LmIndex.scoreFrames(fromBase, hold, "doc_id", "text", LmIndex.Kn())) ===
+          rows(LmIndex.crossScore(order, train, hold, "doc_id", "text")),
+        s"base-derived order-$order cross-score diverged")
+    }
   }
 
   test("buildNFromBase == buildN table-for-table (orders 3 and 5, " +
@@ -67,25 +52,17 @@ class LmSharedBaseSpec extends SparkSpec {
     def store() = new graft.io.ParquetTableStore(spark,
       Files.createTempDirectory("graft_lmb_").toString)
 
-    val s3a = store(); val s3b = store()
-    LmIndex.build3(s3a, "lm3", docs, "doc_id", "text")
-    LmIndex.build3FromBase(s3b, "lm3",
-      LmIndex.base3Of(docs, "doc_id", "text").localCheckpoint())
-    for (t <- Seq("uni", "big", "ctx", "cont", "tri", "ctx3", "m2", "mctx",
-        "stats"))
-      assert(rows(s3b.load(s"lm3_$t")) === rows(s3a.load(s"lm3_$t")),
-        s"order-3 table $t diverged")
-
-    val s5a = store(); val s5b = store()
-    val pruneMin = Seq(1L, 2L, 1L, 2L)
-    LmIndex.build5(s5a, "lm5", docs, "doc_id", "text", pruneMin = pruneMin)
-    LmIndex.build5FromBase(s5b, "lm5",
-      LmIndex.base5Of(docs, "doc_id", "text").localCheckpoint(), pruneMin)
-    for (t <- Seq("uni", "big", "ctx", "cont", "tri", "ctx3", "m2", "mctx",
-        "four", "ctx4", "m3", "mctx3", "five", "ctx5", "m4", "mctx4",
-        "stats"))
-      assert(rows(s5b.load(s"lm5_$t")) === rows(s5a.load(s"lm5_$t")),
-        s"order-5 pruned table $t diverged")
+    for ((order, pruneMin) <- Seq(3 -> Nil, 5 -> Seq(1L, 2L, 1L, 2L))) {
+      val direct = store(); val fromBase = store()
+      LmIndex.build(order, direct, "lm", docs, "doc_id", "text",
+        pruneMin = pruneMin)
+      LmIndex.buildFromBase(order, fromBase, "lm",
+        LmIndex.baseOf(order, docs, "doc_id", "text").localCheckpoint(),
+        pruneMin)
+      for (t <- LmIndex.tableNames(order))
+        assert(rows(fromBase.load(s"lm_$t")) === rows(direct.load(s"lm_$t")),
+          s"order-$order table $t diverged")
+    }
   }
 
 }

@@ -144,74 +144,9 @@ class LmSmoothingSpec extends SparkSpec {
     val exp10 = mean6(Seq(3.0 / 6,
       0.75 * 2 / 3 * (0.5 / 3), 1.0 / 3, 0.75 * 1 / 1 * (1.0 / 3), 0.5 / 3))
     val exp11 = mean6(Seq(0.5 / 6))
-    val got = LmIndex.crossScore(train, docs, "doc_id", "text")
+    val got = LmIndex.crossScore(2, train, docs, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Double)].collect()
     assert(got === Array((10L, 5L, exp10), (11L, 1L, exp11)))
-  }
-
-  test("persisted LmIndex.score == inline crossScore (store round trip)") {
-    val rnd = new scala.util.Random(3)
-    val pool = Vector("red", "green", "blue", "qq", "zz", "tt", "mm")
-    def txt(): String =
-      (0 until (2 + rnd.nextInt(9))).map(_ => pool(rnd.nextInt(7)))
-        .mkString(" ")
-    val all = (1L to 60L).map(i => (i, txt())).toDF("doc_id", "text")
-    val train = all.filter(col("doc_id") % 3 =!= 0L)
-    val score = all.filter(col("doc_id") % 3 === 0L)
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm_spec_").toString)
-    LmIndex.build(store, "lm", train, "doc_id", "text")
-    val got = LmIndex.score(store, "lm", score, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val want = LmIndex.crossScore(train, score, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got === want, "persisted serve diverged from the inline cross-score")
-  }
-
-  test("LmIndex.append == rebuild on the union; deleteDocs == rebuild without") {
-    val rnd = new scala.util.Random(23)
-    val pool = Vector("aa", "bb", "cc", "dd", "ee", "ff")
-    def txt(): String =
-      (0 until (3 + rnd.nextInt(6))).map(_ => pool(rnd.nextInt(6))).mkString(" ")
-    val all = (1L to 90L).map(i => (i, txt())).toDF("doc_id", "text")
-    val a = all.filter(col("doc_id") <= 30L)
-    val b = all.filter(col("doc_id") > 30L && col("doc_id") <= 60L)
-    val probe = all.filter(col("doc_id") > 60L)
-    def tmp() = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm_maint_").toString)
-
-    // append: build(a) + append(b) must equal build(a ∪ b).
-    val s1 = tmp()
-    LmIndex.build(s1, "lm", a, "doc_id", "text")
-    LmIndex.append(s1, "lm", b, "doc_id", "text")
-    val s2 = tmp()
-    LmIndex.build(s2, "lm", all.filter(col("doc_id") <= 60L), "doc_id", "text")
-    for (t <- Seq("lm_uni", "lm_big", "lm_ctx", "lm_cont", "lm_stats"))
-      assert(s1.load(t).collect().toSet === s2.load(t).collect().toSet,
-        s"appended $t diverged from the rebuilt table")
-    val g1 = LmIndex.score(s1, "lm", probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val g2 = LmIndex.score(s2, "lm", probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(g1 === g2)
-
-    // delete: build(a ∪ b) − b must equal build(a).
-    LmIndex.deleteDocs(s2, "lm", b, "doc_id", "text")
-    val s3 = tmp()
-    LmIndex.build(s3, "lm", a, "doc_id", "text")
-    for (t <- Seq("lm_uni", "lm_big", "lm_ctx", "lm_cont", "lm_stats"))
-      assert(s2.load(t).collect().toSet === s3.load(t).collect().toSet,
-        s"deleted $t diverged from the rebuilt-without table")
-
-    // Deleting text the model never saw fails loudly BEFORE any swap.
-    val before = s3.load("lm_stats").collect().toSeq
-    val alien = Seq((999L, "zz zz yy xx")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      LmIndex.deleteDocs(s3, "lm", alien, "doc_id", "text")
-    }
-    assert(e.getMessage.contains("negative"), e.getMessage)
-    assert(s3.load("lm_stats").collect().toSeq === before,
-      "a rejected delete must not have touched the store")
   }
 
   test("Kneser-Ney conditionals sum to 1 over the vocabulary, OOV branches included") {
@@ -229,14 +164,14 @@ class LmSmoothingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val vocab = Seq("a", "b", "c", "d")
     // The bigram table must be INCOMPLETE or no OOV branch fires.
-    val nBigrams = LmIndex.modelFrames(train, "doc_id", "text").big.count()
+    val nBigrams = LmIndex.modelFrames(2, train, "doc_id", "text")("big").count()
     assert(nBigrams < 16, s"fixture too dense: $nBigrams of 16 pairs seen")
     val singles = vocab.zipWithIndex.map { case (w, i) => (100L + i, w) }
     val pairs = for {
       (p, i) <- vocab.zipWithIndex
       (w, j) <- vocab.zipWithIndex
     } yield (1000L + i * 10 + j, s"$p $w")
-    val scored = LmIndex.crossScore(
+    val scored = LmIndex.crossScore(2, 
       train, (singles ++ pairs).toDF("doc_id", "text"), "doc_id", "text")
       .as[(Long, Long, Double)].collect()
       .map(r => r._1 -> (r._2, r._3)).toMap
@@ -254,64 +189,200 @@ class LmSmoothingSpec extends SparkSpec {
     }
   }
 
-  test("versioned LM rebuild under a pinned serve: generations never mix") {
-    val a = Seq((1L, "aa bb aa bb"), (2L, "aa cc")).toDF("doc_id", "text")
-    val b = Seq((1L, "xx yy xx yy xx"), (2L, "yy zz")).toDF("doc_id", "text")
-    val probe = Seq((10L, "aa bb xx")).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm_ver_").toString)
-    LmIndex.rebuildVersioned(store, "lm", a, "doc_id", "text")
+  // ---- per-order properties: one body each, registered per order ----------
+  //
+  // Each property below is ONE spec body over (order, smoothing); every
+  // registration keeps the test name it had when each order carried its
+  // own copy of the property.
+
+  private val fb = Some((0.5, 1.0, 1.5))
+
+  private def tmpStore(tag: String) = new graft.io.ParquetTableStore(spark,
+    java.nio.file.Files.createTempDirectory(s"graft_lm_${tag}_").toString)
+
+  private def scores(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
+    df.as[(Long, Long, Double)].collect().toSet
+
+  /** The scan of an order's top raw gram table in a serve plan. */
+  private val topTable = Map(2 -> "lm_big", 3 -> "lm_tri", 5 -> "lm_five")
+
+  private def hasWordIn(f: org.apache.spark.sql.execution.FileSourceScanExec)
+      : Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+    f.dataFilters.exists(_.exists {
+      case i: In => i.value.toString.contains("prev") ||
+        i.value.toString.contains("w")
+      case i: InSet => i.child.toString.contains("prev") ||
+        i.child.toString.contains("w")
+      case _ => false
+    })
+  }
+
+  private def persistedEqualsCross(order: Int): Unit = {
+    val rnd = new scala.util.Random(11)
+    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp", "rr", "zz")
+    def txt(): String =
+      (0 until (3 + rnd.nextInt(8))).map(_ => pool(rnd.nextInt(8))).mkString(" ")
+    val all = (1L to 100L).map(i => (i, txt())).toDF("doc_id", "text")
+    val train = all.filter(col("doc_id") % 5 =!= 0)
+    val hold = all.filter(col("doc_id") % 5 === 0)
+    val store = tmpStore("persist")
+    LmIndex.build(order, store, "lm", train, "doc_id", "text")
+    assert(scores(LmIndex.score(order, store, "lm", hold, "doc_id", "text")) ===
+      scores(LmIndex.crossScore(order, train, hold, "doc_id", "text")),
+      s"persisted order-$order serve diverged from the inline cross-score")
+  }
+
+  Seq(
+    2 -> "persisted LmIndex.score == inline crossScore (store round trip)",
+    3 -> ("order-3 persisted serve == inline cross-score on a held-out split " +
+      "(OOV branches live)"))
+    .foreach { case (order, name) => test(name)(persistedEqualsCross(order)) }
+
+  private def appendDeleteEqualsRebuild(order: Int): Unit = {
+    val rnd = new scala.util.Random(53)
+    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp")
+    def txt(): String =
+      (0 until (3 + rnd.nextInt(6))).map(_ => pool(rnd.nextInt(6))).mkString(" ")
+    val a = (1L to 40L).map(i => (i, txt())).toDF("doc_id", "text")
+    val b = (41L to 70L).map(i => (i, txt())).toDF("doc_id", "text")
+    val probe = (900L to 905L).map(i => (i, txt())).toDF("doc_id", "text")
+    def tablesOf(st: graft.io.ParquetTableStore): Map[String, Set[String]] =
+      LmIndex.tableNames(order).map(t => t -> st.load(s"lm_$t").collect()
+        .map(_.toString).toSet).toMap
+    // append: build(a) + append(b) must equal build(a ∪ b), table for
+    // table and score for score.
+    val incr = tmpStore("maint")
+    LmIndex.build(order, incr, "lm", a, "doc_id", "text")
+    LmIndex.append(order, incr, "lm", b, "doc_id", "text")
+    val full = tmpStore("maint")
+    LmIndex.build(order, full, "lm", a.unionByName(b), "doc_id", "text")
+    assert(tablesOf(incr) === tablesOf(full),
+      s"order-$order append diverged from the full rebuild")
+    assert(scores(LmIndex.score(order, incr, "lm", probe, "doc_id", "text")) ===
+      scores(LmIndex.score(order, full, "lm", probe, "doc_id", "text")))
+    // delete: build(a ∪ b) − b must equal build(a).
+    LmIndex.deleteDocs(order, incr, "lm", b, "doc_id", "text")
+    val onlyA = tmpStore("maint")
+    LmIndex.build(order, onlyA, "lm", a, "doc_id", "text")
+    assert(tablesOf(incr) === tablesOf(onlyA),
+      s"order-$order delete diverged from rebuilding without the deleted docs")
+    // Deleting text the model never saw fails loudly BEFORE any swap.
+    val before = onlyA.load("lm_stats").collect().toSeq
+    val alien = Seq((999L, "zz zz yy xx ww vv")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException] {
+      LmIndex.deleteDocs(order, onlyA, "lm", alien, "doc_id", "text")
+    }
+    assert(e.getMessage.contains("negative"), e.getMessage)
+    assert(onlyA.load("lm_stats").collect().toSeq === before,
+      s"a rejected order-$order delete must not have touched the store")
+  }
+
+  Seq(
+    2 -> "LmIndex.append == rebuild on the union; deleteDocs == rebuild without",
+    3 -> ("order-3 maintenance: append3 == rebuild on the union; deleteDocs3 " +
+      "== rebuild without — table-for-table and score-for-score"),
+    5 -> ("order-5 maintenance: append5 == rebuild on the union; deleteDocs5 " +
+      "== rebuild without — all seventeen tables; alien deletes refuse " +
+      "before any swap"))
+    .foreach { case (order, name) => test(name)(appendDeleteEqualsRebuild(order)) }
+
+  private def versionedIsolation(order: Int): Unit = {
+    val a = Seq((1L, "aa bb cc dd ee aa bb"), (2L, "aa cc dd ee ff"))
+      .toDF("doc_id", "text")
+    val b = Seq((1L, "xx yy zz ww vv xx yy"), (2L, "yy zz ww vv uu"))
+      .toDF("doc_id", "text")
+    val probe = Seq((10L, "aa bb cc dd xx yy zz ww")).toDF("doc_id", "text")
+    val store = tmpStore("ver")
+    LmIndex.rebuildVersioned(order, store, "lm", a, "doc_id", "text")
     // Pin a model, then publish a NEW generation underneath it.
-    val pinned = LmIndex.loadModelVersioned(store, "lm")
-    LmIndex.rebuildVersioned(store, "lm", b, "doc_id", "text")
-    val gotPinned = LmIndex.scoreFrames(pinned, probe, "doc_id", "text", 0.75)
-      .as[(Long, Long, Double)].collect().toSet
-    val wantA = LmIndex.crossScore(a, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(gotPinned === wantA,
-      "pinned model drifted off its generation after a rebuild published")
-    // A fresh resolution serves the NEW generation.
-    val gotFresh = LmIndex.scoreVersioned(store, "lm", probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val wantB = LmIndex.crossScore(b, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(gotFresh === wantB)
+    val pinned = LmIndex.loadModelVersioned(order, store, "lm")
+    LmIndex.rebuildVersioned(order, store, "lm", b, "doc_id", "text")
+    val gotPinned = scores(
+      LmIndex.scoreFrames(pinned, probe, "doc_id", "text", LmIndex.Kn()))
+    assert(gotPinned === scores(LmIndex.crossScore(order, a, probe, "doc_id", "text")),
+      s"pinned order-$order model drifted off its generation after a rebuild")
+    // A fresh resolution serves the NEW generation — per call, and
+    // through an explicitly resolved prefix.
+    val gotFresh = scores(
+      LmIndex.scoreVersioned(order, store, "lm", probe, "doc_id", "text"))
+    assert(gotFresh === scores(LmIndex.crossScore(order, b, probe, "doc_id", "text")))
+    val freshPrefix = graft.io.VersionedIndex.currentPrefix(store, "lm")
+    assert(scores(LmIndex.score(order, store, freshPrefix, probe,
+      "doc_id", "text")) === gotFresh)
     assert(gotPinned !== gotFresh,
       "fixture too weak: the two generations score identically")
   }
 
-  test("scoreBatch == score, and its model-table scans carry the word IN pushdown") {
-    val rnd = new scala.util.Random(5)
-    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp", "rr")
+  Seq(
+    2 -> "versioned LM rebuild under a pinned serve: generations never mix",
+    3 -> ("versioned order-3 rebuild under a pinned serve: generations never " +
+      "mix across nine tables"),
+    5 -> ("versioned order-5 rebuild under a pinned serve: generations never " +
+      "mix across seventeen tables"))
+    .foreach { case (order, name) => test(name)(versionedIsolation(order)) }
+
+  /** scoreBatch == score under each smoothing in BOTH pruner regimes:
+    * the IN regime pushes the batch's words into the top gram table's
+    * scan; past a forced tiny ceiling the prune is a LeftSemi join and no
+    * literal IN remains. */
+  private def probedEqualsFull(
+      order: Int, smoothings: Seq[LmIndex.Smoothing]): Unit = {
+    val rnd = new scala.util.Random(37)
+    // Quadratic-skew draws over 25 word types: a Zipf-ish count spectrum
+    // so the order-3 levels CALIBRATE — the probed modified-KN serve must
+    // reproduce the estimated branch, not just the fallback.
     def txt(): String =
-      (0 until (3 + rnd.nextInt(7))).map(_ => pool(rnd.nextInt(7))).mkString(" ")
-    val train = (1L to 80L).map(i => (i, txt())).toDF("doc_id", "text")
+      (0 until (4 + rnd.nextInt(7)))
+        .map(_ => "w" + (25 * rnd.nextDouble() * rnd.nextDouble()).toInt)
+        .mkString(" ")
+    val train = (1L to 120L).map(i => (i, txt())).toDF("doc_id", "text")
     val batch = (200L to 206L).map(i => (i, txt())).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm_probe_").toString)
-    LmIndex.build(store, "lm", train, "doc_id", "text")
-    val probed = LmIndex.scoreBatch(store, "lm", batch, "doc_id", "text")
-    val got = probed.as[(Long, Long, Double)].collect().toSet
-    val want = LmIndex.score(store, "lm", batch, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got === want, "probed serve diverged from the full-scan score")
-    // The big-table scan must carry the collected IN-list itself (a bare
-    // isnotnull would also stringify with the column name).
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-    val scans = graft.PlanTestUtils.scansOf(
-      probed.queryExecution.executedPlan, "lm_big")
-    assert(scans.nonEmpty, "no lm_big scan in the probed serve plan")
-    scans.foreach { f =>
-      val hasIn = f.dataFilters.exists(_.exists {
-        case i: In => i.value.toString.contains("prev") ||
-          i.value.toString.contains("w")
-        case i: InSet => i.child.toString.contains("prev") ||
-          i.child.toString.contains("w")
-        case _ => false
-      })
-      assert(hasIn, s"lm_big scan lost the word IN pushdown: ${f.dataFilters}")
+    val store = tmpStore("probe")
+    // Modified KN reads the bucket tallies an order >= 3 build writes.
+    val buildOrder =
+      if (smoothings.exists(_.isInstanceOf[LmIndex.Mkn])) order max 3 else order
+    LmIndex.build(buildOrder, store, "lm", train, "doc_id", "text")
+    val top = topTable(order)
+    for (sm <- smoothings) {
+      val want = scores(LmIndex.score(order, store, "lm", batch, "doc_id", "text", sm))
+      val probed = LmIndex.scoreBatch(order, store, "lm", batch, "doc_id", "text", sm)
+      assert(scores(probed) === want,
+        s"probed order-$order $sm serve diverged from the full-scan score")
+      val scans = graft.PlanTestUtils.scansOf(probed.queryExecution.executedPlan, top)
+      assert(scans.nonEmpty, s"no $top scan in the probed order-$order $sm plan")
+      scans.foreach(f => assert(hasWordIn(f),
+        s"$top scan lost the word IN pushdown: ${f.dataFilters}"))
+      spark.conf.set("graft.lm.probeMaxWords", "3")
+      try {
+        val semi = LmIndex.scoreBatch(order, store, "lm", batch, "doc_id", "text", sm)
+        assert(scores(semi) === want,
+          s"semi-join probed order-$order $sm serve diverged")
+        val plan = semi.queryExecution.executedPlan
+        assert(plan.toString.contains("LeftSemi"),
+          s"no LeftSemi join in the oversized-batch order-$order $sm plan")
+        graft.PlanTestUtils.scansOf(plan, top).foreach(f => assert(!hasWordIn(f),
+          s"oversized batch still pushed a literal IN: ${f.dataFilters}"))
+      } finally spark.conf.unset("graft.lm.probeMaxWords")
     }
   }
+
+  Seq(
+    (2, Seq(LmIndex.Kn()),
+      "scoreBatch == score, and its model-table scans carry the word IN pushdown"),
+    (3, Seq(LmIndex.Kn()),
+      "scoreBatch3 == score3 with the trigram-table word pushdown; " +
+        "semi-join regime row-identical too"),
+    (2, Seq(LmIndex.Mkn(fb)),
+      "scoreBatchMkn == scoreMkn in both pruner regimes, with the IN " +
+        "pushdown / LeftSemi plan gates"),
+    (3, Seq(LmIndex.Mkn(fb)),
+      "scoreBatchMkn3 == scoreMkn3 in both pruner regimes, with the " +
+        "trigram-table IN pushdown"),
+    (5, Seq(LmIndex.Kn(), LmIndex.Mkn(fb)),
+      "scoreBatch5 == score5 and scoreBatchMkn5 == scoreMkn5 in both " +
+        "pruner regimes, with the 5-gram-table IN pushdown"))
+    .foreach { case (order, sms, name) => test(name)(probedEqualsFull(order, sms)) }
 
   // ---- order-3 / modified-KN persisted model ------------------------------
 
@@ -321,28 +392,9 @@ class LmSmoothingSpec extends SparkSpec {
       (4L, "a"), (5L, "a b c a b")).toDF("doc_id", "text")
     val want = TextAnalysis.knTrigramLogProb(df, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
-    val got = LmIndex.crossScore3(df, df, "doc_id", "text")
+    val got = LmIndex.crossScore(3, df, df, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
     assert(got === want)
-  }
-
-  test("order-3 persisted serve == inline cross-score on a held-out split " +
-      "(OOV branches live)") {
-    val rnd = new scala.util.Random(11)
-    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp", "rr", "zz")
-    def txt(): String =
-      (0 until (3 + rnd.nextInt(8))).map(_ => pool(rnd.nextInt(8))).mkString(" ")
-    val all = (1L to 100L).map(i => (i, txt())).toDF("doc_id", "text")
-    val train = all.filter(col("doc_id") % 5 =!= 0)
-    val hold = all.filter(col("doc_id") % 5 === 0)
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm3_").toString)
-    LmIndex.build3(store, "lm3", train, "doc_id", "text")
-    val got = LmIndex.score3(store, "lm3", hold, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val want = LmIndex.crossScore3(train, hold, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(got === want, "persisted order-3 serve diverged from inline")
   }
 
   test("order-3 OOV recipe matches the hand-computed fixture at every " +
@@ -374,103 +426,9 @@ class LmSmoothingSpec extends SparkSpec {
     val midE = d * 2 / 2 * (0.5 / 3)
     val triE = d * 2 / 2 * midE
     val exp10 = r6((fp(2.0 / 6) + fp(pba) + fp(triE)) / 3.0 / 1e6)
-    val got = LmIndex.crossScore3(train, docs, "doc_id", "text")
+    val got = LmIndex.crossScore(3, train, docs, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Double)].collect()
     assert(got === Array((9L, 4L, exp9), (10L, 3L, exp10)))
-  }
-
-  test("order-3 maintenance: append3 == rebuild on the union; deleteDocs3 " +
-      "== rebuild without — table-for-table and score-for-score") {
-    val rnd = new scala.util.Random(13)
-    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp")
-    def txt(): String =
-      (0 until (3 + rnd.nextInt(6))).map(_ => pool(rnd.nextInt(6))).mkString(" ")
-    val a = (1L to 40L).map(i => (i, txt())).toDF("doc_id", "text")
-    val b = (41L to 70L).map(i => (i, txt())).toDF("doc_id", "text")
-    val probe = (900L to 905L).map(i => (i, txt())).toDF("doc_id", "text")
-    def newStore() = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm3m_").toString)
-    def tablesOf(st: graft.io.ParquetTableStore): Map[String, Set[String]] =
-      Seq("uni", "big", "ctx", "cont", "tri", "ctx3", "m2", "mctx", "stats")
-        .map(t => t -> st.load(s"lm3_$t").collect()
-          .map(_.toString).toSet).toMap
-    val incr = newStore()
-    LmIndex.build3(incr, "lm3", a, "doc_id", "text")
-    LmIndex.append3(incr, "lm3", b, "doc_id", "text")
-    val full = newStore()
-    LmIndex.build3(full, "lm3", a.unionByName(b), "doc_id", "text")
-    assert(tablesOf(incr) === tablesOf(full),
-      "append3 diverged from the full rebuild")
-    assert(LmIndex.score3(incr, "lm3", probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet ===
-      LmIndex.score3(full, "lm3", probe, "doc_id", "text")
-        .as[(Long, Long, Double)].collect().toSet)
-    // Delete side: removing b from the incremented store recovers a.
-    LmIndex.deleteDocs3(incr, "lm3", b, "doc_id", "text")
-    val onlyA = newStore()
-    LmIndex.build3(onlyA, "lm3", a, "doc_id", "text")
-    assert(tablesOf(incr) === tablesOf(onlyA),
-      "deleteDocs3 diverged from rebuilding without the deleted docs")
-  }
-
-  test("scoreBatch3 == score3 with the trigram-table word pushdown; " +
-      "semi-join regime row-identical too") {
-    val rnd = new scala.util.Random(17)
-    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp", "rr")
-    def txt(): String =
-      (0 until (4 + rnd.nextInt(6))).map(_ => pool(rnd.nextInt(7))).mkString(" ")
-    val train = (1L to 80L).map(i => (i, txt())).toDF("doc_id", "text")
-    val batch = (200L to 206L).map(i => (i, txt())).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm3p_").toString)
-    LmIndex.build3(store, "lm3", train, "doc_id", "text")
-    val want = LmIndex.score3(store, "lm3", batch, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val probed = LmIndex.scoreBatch3(store, "lm3", batch, "doc_id", "text")
-    assert(probed.as[(Long, Long, Double)].collect().toSet === want)
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-    val scans = graft.PlanTestUtils.scansOf(
-      probed.queryExecution.executedPlan, "lm3_tri")
-    assert(scans.nonEmpty, "no lm3_tri scan in the probed plan")
-    scans.foreach { f =>
-      assert(f.dataFilters.exists(_.exists {
-        case _: In => true; case _: InSet => true; case _ => false
-      }), s"lm3_tri scan lost the word IN pushdown: ${f.dataFilters}")
-    }
-    spark.conf.set("graft.lm.probeMaxWords", "3")
-    try {
-      val semi = LmIndex.scoreBatch3(store, "lm3", batch, "doc_id", "text")
-      assert(semi.as[(Long, Long, Double)].collect().toSet === want,
-        "order-3 semi-join probed serve diverged")
-      assert(semi.queryExecution.executedPlan.toString.contains("LeftSemi"))
-    } finally spark.conf.unset("graft.lm.probeMaxWords")
-  }
-
-  test("versioned order-3 rebuild under a pinned serve: generations never " +
-      "mix across nine tables") {
-    val a = Seq((1L, "aa bb cc aa bb"), (2L, "aa cc dd")).toDF("doc_id", "text")
-    val b = Seq((1L, "xx yy zz xx yy"), (2L, "yy zz ww")).toDF("doc_id", "text")
-    val probe = Seq((10L, "aa bb cc xx yy zz")).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm3v_").toString)
-    LmIndex.rebuildVersioned3(store, "lm3", a, "doc_id", "text")
-    val pinnedPrefix = graft.io.VersionedIndex.currentPrefix(store, "lm3")
-    val pinned = LmIndex.loadModel3(store, pinnedPrefix)
-    LmIndex.rebuildVersioned3(store, "lm3", b, "doc_id", "text")
-    val gotPinned = LmIndex.scoreFrames3(pinned, probe, "doc_id", "text", 0.75)
-      .as[(Long, Long, Double)].collect().toSet
-    val wantA = LmIndex.crossScore3(a, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(gotPinned === wantA,
-      "pinned order-3 model drifted off its generation after a rebuild")
-    val freshPrefix = graft.io.VersionedIndex.currentPrefix(store, "lm3")
-    val gotFresh = LmIndex.score3(store, freshPrefix, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val wantB = LmIndex.crossScore3(b, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(gotFresh === wantB)
-    assert(gotPinned !== gotFresh,
-      "fixture too weak: the two generations score identically")
   }
 
   test("scoreMkn in-corpus == mknBigramLogProb: calibrated discounts from " +
@@ -482,8 +440,8 @@ class LmSmoothingSpec extends SparkSpec {
       .map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
     val store = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_mkn_").toString)
-    LmIndex.build3(store, "mkn", docs, "doc_id", "text")
-    val got = LmIndex.scoreMkn(store, "mkn", docs, "doc_id", "text")
+    LmIndex.build(3, store, "mkn", docs, "doc_id", "text")
+    val got = LmIndex.score(2, store, "mkn", docs, "doc_id", "text", LmIndex.Mkn())
       .as[(Long, Long, Double)].collect().toSet
     val want = TextAnalysis.mknBigramLogProb(docs, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
@@ -493,8 +451,8 @@ class LmSmoothingSpec extends SparkSpec {
     def fp(p: Double): Long = math.round(math.log(p) * 1e6)
     val exp = BigDecimal((fp(0.5 / 20) + fp(0.5 / 4)) / 2.0 / 1e6)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val oov = LmIndex.scoreMkn(store, "mkn",
-      Seq((99L, "x p")).toDF("doc_id", "text"), "doc_id", "text")
+    val oov = LmIndex.score(2, store, "mkn",
+      Seq((99L, "x p")).toDF("doc_id", "text"), "doc_id", "text", LmIndex.Mkn())
       .as[(Long, Long, Double)].collect()
     assert(oov === Array((99L, 2L, exp)))
     // Degenerate corpus (every bigram repeats, n1=0): persisted serve
@@ -502,9 +460,9 @@ class LmSmoothingSpec extends SparkSpec {
     val degen = (0L to 5L).map(i => (i, "aa bb aa bb")).toDF("doc_id", "text")
     val st2 = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_mkn_d_").toString)
-    LmIndex.build3(st2, "mkn", degen, "doc_id", "text")
-    val gotD = LmIndex.scoreMkn(st2, "mkn", degen, "doc_id", "text",
-      fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+    LmIndex.build(3, st2, "mkn", degen, "doc_id", "text")
+    val gotD = LmIndex.score(2, st2, "mkn", degen, "doc_id", "text",
+      LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
       .as[(Long, Long, Double)].collect().toSet
     val wantD = TextAnalysis.mknBigramLogProb(degen, "doc_id", "text",
       fallbackDiscounts = Some((0.5, 1.0, 1.5)))
@@ -513,7 +471,7 @@ class LmSmoothingSpec extends SparkSpec {
     // Without the fallback the degenerate model refuses with the curated
     // calibration error, not DIVIDE_BY_ZERO.
     val e = intercept[Exception] {
-      LmIndex.scoreMkn(st2, "mkn", degen, "doc_id", "text").collect()
+      LmIndex.score(2, st2, "mkn", degen, "doc_id", "text", LmIndex.Mkn()).collect()
     }
     assert(e.getMessage.contains("discount"), e.getMessage)
   }
@@ -532,18 +490,19 @@ class LmSmoothingSpec extends SparkSpec {
     // The fixture must CALIBRATE at all three levels, or the spec would
     // silently test only the fallback path: assert n1/n2/n3 nonzero for
     // bigram counts, trigram counts, AND continuation-bigram counts.
-    val m = LmIndex.modelFrames3(docs, "doc_id", "text")
+    val m = LmIndex.modelFrames(3, docs, "doc_id", "text")
     def buckets(t: org.apache.spark.sql.DataFrame, c: String): Seq[Long] =
       (1 to 3).map(k => t.filter(col(c) === k.toLong).count())
-    assert(buckets(m.big, "c2").forall(_ > 0L), "bigram level degenerate")
-    assert(buckets(m.tri, "c3").forall(_ > 0L), "trigram level degenerate")
-    assert(buckets(m.m2, "mcount").forall(_ > 0L), "middle level degenerate")
+    assert(buckets(m("big"), "c2").forall(_ > 0L), "bigram level degenerate")
+    assert(buckets(m("tri"), "c3").forall(_ > 0L), "trigram level degenerate")
+    assert(buckets(m("m2"), "mcount").forall(_ > 0L), "middle level degenerate")
     val inline = TextAnalysis.mknTrigramLogProb(docs, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
     val store = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_mkn3_").toString)
-    LmIndex.build3(store, "mkn3", docs, "doc_id", "text")
-    val persisted = LmIndex.scoreMkn3(store, "mkn3", docs, "doc_id", "text")
+    LmIndex.build(3, store, "mkn3", docs, "doc_id", "text")
+    val persisted = LmIndex.score(3, store, "mkn3", docs, "doc_id", "text",
+      LmIndex.Mkn())
       .as[(Long, Long, Double)].collect().toSet
     assert(persisted === inline,
       "persisted modified-KN order-3 diverged from inline in-corpus")
@@ -555,13 +514,14 @@ class LmSmoothingSpec extends SparkSpec {
     // OOV totality at the persisted serve, hand-checkable without
     // touching any discount: a fully-novel 2-token doc scores OOV
     // unigram then unseen-context continuation backoff.
-    val total = m.uni.agg(sum(col("c1"))).as[Long].head().toDouble
-    val btypes = m.big.count().toDouble
+    val total = m("uni").agg(sum(col("c1"))).as[Long].head().toDouble
+    val btypes = m("big").count().toDouble
     def fp(p: Double): Long = math.round(math.log(p) * 1e6)
     val exp = BigDecimal((fp(0.5 / total) + fp(0.5 / btypes)) / 2.0 / 1e6)
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val oov = LmIndex.scoreMkn3(store, "mkn3",
-      Seq((999L, "zz yy")).toDF("doc_id", "text"), "doc_id", "text")
+    val oov = LmIndex.score(3, store, "mkn3",
+      Seq((999L, "zz yy")).toDF("doc_id", "text"), "doc_id", "text",
+      LmIndex.Mkn())
       .as[(Long, Long, Double)].collect()
     assert(oov === Array((999L, 2L, exp)))
   }
@@ -600,14 +560,14 @@ class LmSmoothingSpec extends SparkSpec {
     val batch = (200L to 206L).map(i => (i, txt())).toDF("doc_id", "text")
     val store = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_lm_semi_").toString)
-    LmIndex.build(store, "lm", train, "doc_id", "text")
-    val want = LmIndex.score(store, "lm", batch, "doc_id", "text")
+    LmIndex.build(2, store, "lm", train, "doc_id", "text")
+    val want = LmIndex.score(2, store, "lm", batch, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
     // Force the oversized-batch regime: ceiling below the batch's
     // distinct words (the pool holds 8).
     spark.conf.set("graft.lm.probeMaxWords", "3")
     try {
-      val probed = LmIndex.scoreBatch(store, "lm", batch, "doc_id", "text")
+      val probed = LmIndex.scoreBatch(2, store, "lm", batch, "doc_id", "text")
       assert(probed.as[(Long, Long, Double)].collect().toSet === want,
         "semi-join probed serve diverged from the full-scan score")
       // Plan gate: the big-table prune is a LeftSemi join, not an IN.
@@ -629,87 +589,7 @@ class LmSmoothingSpec extends SparkSpec {
     } finally spark.conf.unset("graft.lm.probeMaxWords")
   }
 
-  // ---- probed modified-KN serves (round 16) --------------------------------
-
-  test("scoreBatchMkn == scoreMkn in both pruner regimes, with the IN " +
-      "pushdown / LeftSemi plan gates") {
-    val rnd = new scala.util.Random(31)
-    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp", "rr")
-    def txt(): String =
-      (0 until (3 + rnd.nextInt(7))).map(_ => pool(rnd.nextInt(7))).mkString(" ")
-    val train = (1L to 80L).map(i => (i, txt())).toDF("doc_id", "text")
-    val batch = (200L to 206L).map(i => (i, txt())).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_mkn_probe_").toString)
-    LmIndex.build3(store, "lm3", train, "doc_id", "text")
-    val fb = Some((0.5, 1.0, 1.5))
-    val want = LmIndex.scoreMkn(store, "lm3", batch, "doc_id", "text", fb)
-      .as[(Long, Long, Double)].collect().toSet
-    val probed = LmIndex.scoreBatchMkn(store, "lm3", batch, "doc_id", "text", fb)
-    assert(probed.as[(Long, Long, Double)].collect().toSet === want,
-      "probed modified-KN serve diverged from the full-scan scoreMkn")
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-    val scans = graft.PlanTestUtils.scansOf(
-      probed.queryExecution.executedPlan, "lm3_big")
-    assert(scans.nonEmpty, "no lm3_big scan in the probed mkn plan")
-    scans.foreach { f =>
-      assert(f.dataFilters.exists(_.exists {
-        case _: In => true; case _: InSet => true; case _ => false
-      }), s"lm3_big scan lost the word IN pushdown: ${f.dataFilters}")
-    }
-    spark.conf.set("graft.lm.probeMaxWords", "3")
-    try {
-      val semi = LmIndex.scoreBatchMkn(store, "lm3", batch, "doc_id", "text", fb)
-      assert(semi.as[(Long, Long, Double)].collect().toSet === want,
-        "semi-join probed modified-KN serve diverged")
-      val plan = semi.queryExecution.executedPlan
-      assert(plan.toString.contains("LeftSemi"),
-        "no LeftSemi join in the oversized-batch probed mkn plan")
-      graft.PlanTestUtils.scansOf(plan, "lm3_big").foreach { f =>
-        assert(!f.dataFilters.exists(_.exists {
-          case _: In => true; case _: InSet => true; case _ => false
-        }), s"oversized mkn batch still pushed a literal IN: ${f.dataFilters}")
-      }
-    } finally spark.conf.unset("graft.lm.probeMaxWords")
-  }
-
-  test("scoreBatchMkn3 == scoreMkn3 in both pruner regimes, with the " +
-      "trigram-table IN pushdown") {
-    val rnd = new scala.util.Random(37)
-    // Quadratic-skew draws (the mknTrigram fixture recipe) so all three
-    // levels CALIBRATE — the probed serve must reproduce the estimated
-    // branch, not just the fallback.
-    def txt(): String =
-      (0 until (4 + rnd.nextInt(7)))
-        .map(_ => "w" + (25 * rnd.nextDouble() * rnd.nextDouble()).toInt)
-        .mkString(" ")
-    val train = (1L to 120L).map(i => (i, txt())).toDF("doc_id", "text")
-    val batch = (200L to 206L).map(i => (i, txt())).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_mkn3_probe_").toString)
-    LmIndex.build3(store, "lm3", train, "doc_id", "text")
-    val want = LmIndex.scoreMkn3(store, "lm3", batch, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val probed = LmIndex.scoreBatchMkn3(store, "lm3", batch, "doc_id", "text")
-    assert(probed.as[(Long, Long, Double)].collect().toSet === want,
-      "probed order-3 modified-KN serve diverged from scoreMkn3")
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-    val scans = graft.PlanTestUtils.scansOf(
-      probed.queryExecution.executedPlan, "lm3_tri")
-    assert(scans.nonEmpty, "no lm3_tri scan in the probed mkn3 plan")
-    scans.foreach { f =>
-      assert(f.dataFilters.exists(_.exists {
-        case _: In => true; case _: InSet => true; case _ => false
-      }), s"lm3_tri scan lost the word IN pushdown: ${f.dataFilters}")
-    }
-    spark.conf.set("graft.lm.probeMaxWords", "3")
-    try {
-      val semi = LmIndex.scoreBatchMkn3(store, "lm3", batch, "doc_id", "text")
-      assert(semi.as[(Long, Long, Double)].collect().toSet === want,
-        "semi-join probed mkn3 serve diverged")
-      assert(semi.queryExecution.executedPlan.toString.contains("LeftSemi"))
-    } finally spark.conf.unset("graft.lm.probeMaxWords")
-  }
+  // ---- probed-serve literal budget ------------------------------------------
 
   test("probeMaxWords is a TOTAL literal-plan budget: the effective " +
       "ceiling divides by the pruned-table count, so one conf value " +
@@ -724,7 +604,7 @@ class LmSmoothingSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("graft_budget_").toString)
     // ONE build5 store serves both orders (its bigram-level tables ARE
     // the order-2 model).
-    LmIndex.build5(store, "lm", train, "doc_id", "text")
+    LmIndex.build(5, store, "lm", train, "doc_id", "text")
     // Budget 56: order 2 prunes 4 tables -> ceiling 14 >= the pool's 8
     // words (IN regime); order 5 prunes 16 -> ceiling 3 < 8 (semi-join).
     spark.conf.set("graft.lm.probeMaxWords", "56")
@@ -734,15 +614,15 @@ class LmSmoothingSpec extends SparkSpec {
           table: String): Boolean =
         graft.PlanTestUtils.scansOf(plan, table).exists(_.dataFilters.exists(
           _.exists { case _: In => true; case _: InSet => true; case _ => false }))
-      val p2 = LmIndex.scoreBatch(store, "lm", batch, "doc_id", "text")
+      val p2 = LmIndex.scoreBatch(2, store, "lm", batch, "doc_id", "text")
       assert(p2.as[(Long, Long, Double)].collect().toSet ===
-        LmIndex.score(store, "lm", batch, "doc_id", "text")
+        LmIndex.score(2, store, "lm", batch, "doc_id", "text")
           .as[(Long, Long, Double)].collect().toSet)
       assert(hasIn(p2.queryExecution.executedPlan, "lm_big"),
         "order 2 under the shared budget lost the IN pushdown")
-      val p5 = LmIndex.scoreBatch5(store, "lm", batch, "doc_id", "text")
+      val p5 = LmIndex.scoreBatch(5, store, "lm", batch, "doc_id", "text")
       assert(p5.as[(Long, Long, Double)].collect().toSet ===
-        LmIndex.score5(store, "lm", batch, "doc_id", "text")
+        LmIndex.score(5, store, "lm", batch, "doc_id", "text")
           .as[(Long, Long, Double)].collect().toSet)
       val plan5 = p5.queryExecution.executedPlan
       assert(!hasIn(plan5, "lm_five") && plan5.toString.contains("LeftSemi"),
@@ -791,8 +671,8 @@ class LmSmoothingSpec extends SparkSpec {
       TextAnalysis.knTrigramLogProb(docs, "doc_id", "text"),
       TextAnalysis.mknTrigramLogProb(docs, "doc_id", "text",
         Some((0.5, 1.0, 1.5))),
-      LmIndex.crossScore3(train, hold, "doc_id", "text"),
-      LmIndex.crossScore5(train, hold, "doc_id", "text"))
+      LmIndex.crossScore(3, train, hold, "doc_id", "text"),
+      LmIndex.crossScore(5, train, hold, "doc_id", "text"))
       .map(_.collect().map(_.toString).toSet)
     val windowForm = all()
     spark.conf.set("graft.lm.positionalJoin", "true")
@@ -828,30 +708,24 @@ class LmSmoothingSpec extends SparkSpec {
     val all = (1L to 60L).map(i => (i, txt())).toDF("doc_id", "text")
     val store = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_lm5_").toString)
-    LmIndex.build5(store, "lm5", all, "doc_id", "text")
-    val lazyM = LmIndex.modelFrames5(all, "doc_id", "text")
-    val frames = Seq(
-      "uni" -> lazyM.uni, "big" -> lazyM.big, "ctx" -> lazyM.ctx,
-      "cont" -> lazyM.cont, "tri" -> lazyM.tri, "ctx3" -> lazyM.ctx3,
-      "m2" -> lazyM.m2, "mctx" -> lazyM.mctx, "four" -> lazyM.four,
-      "ctx4" -> lazyM.ctx4, "m3" -> lazyM.m3, "mctx3" -> lazyM.mctx3,
-      "five" -> lazyM.five, "ctx5" -> lazyM.ctx5, "m4" -> lazyM.m4,
-      "mctx4" -> lazyM.mctx4, "stats" -> lazyM.stats)
-    frames.foreach { case (n, df) =>
+    LmIndex.build(5, store, "lm5", all, "doc_id", "text")
+    val lazyM = LmIndex.modelFrames(5, all, "doc_id", "text")
+    assert(lazyM.tables.size === 17)
+    lazyM.tables.foreach { case (n, df) =>
       assert(store.load(s"lm5_$n").collect().map(_.toString).toSet ===
         df.collect().map(_.toString).toSet,
         s"built lm5_$n diverged from the lazy per-order derivation")
     }
-    val got = LmIndex.score5(store, "lm5", all, "doc_id", "text")
+    val got = LmIndex.score(5, store, "lm5", all, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
-    val want = LmIndex.crossScore5(all, all, "doc_id", "text")
+    val want = LmIndex.crossScore(5, all, all, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
     assert(got === want, "persisted order-5 serve diverged from inline")
     // OOV path through the store roundtrip too.
     val probe = (900L to 905L).map(i => (i, txt())).toDF("doc_id", "text")
-    assert(LmIndex.score5(store, "lm5", probe, "doc_id", "text")
+    assert(LmIndex.score(5, store, "lm5", probe, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet ===
-      LmIndex.crossScore5(all, probe, "doc_id", "text")
+      LmIndex.crossScore(5, all, probe, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet)
   }
 
@@ -891,7 +765,7 @@ class LmSmoothingSpec extends SparkSpec {
     val exp11 = r6((fp(2.0 / 10) + fp(pba) + fp(triC) + fp(fourZ) + fp(0.2))
       / 5.0 / 1e6)
     val docs = Seq((10L, "a b c d z"), (11L, "a b c z e")).toDF("doc_id", "text")
-    val got = LmIndex.crossScore5(train, docs, "doc_id", "text")
+    val got = LmIndex.crossScore(5, train, docs, "doc_id", "text")
       .orderBy("doc_id").as[(Long, Long, Double)].collect()
     assert(got === Array((10L, 5L, exp10), (11L, 5L, exp11)))
   }
@@ -904,146 +778,36 @@ class LmSmoothingSpec extends SparkSpec {
     def short(): String =
       (0 until (1 + rnd.nextInt(3))).map(_ => pool(rnd.nextInt(6))).mkString(" ")
     val docs = (1L to 40L).map(i => (i, short())).toDF("doc_id", "text")
-    assert(LmIndex.crossScore5(docs, docs, "doc_id", "text")
+    assert(LmIndex.crossScore(5, docs, docs, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet ===
-      LmIndex.crossScore3(docs, docs, "doc_id", "text")
+      LmIndex.crossScore(3, docs, docs, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet,
       "order-5 KN did not reduce to order-3 without 4-grams")
     val store = new graft.io.ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_lm5r_").toString)
-    LmIndex.build5(store, "lm5", docs, "doc_id", "text")
-    val fb = Some((0.5, 1.0, 1.5))
-    assert(LmIndex.scoreMkn5(store, "lm5", docs, "doc_id", "text", fb)
+    LmIndex.build(5, store, "lm5", docs, "doc_id", "text")
+    assert(LmIndex.score(5, store, "lm5", docs, "doc_id", "text", LmIndex.Mkn(fb))
       .as[(Long, Long, Double)].collect().toSet ===
-      LmIndex.scoreMkn3(store, "lm5", docs, "doc_id", "text", fb)
+      LmIndex.score(3, store, "lm5", docs, "doc_id", "text", LmIndex.Mkn(fb))
         .as[(Long, Long, Double)].collect().toSet,
       "order-5 modified KN did not reduce to order-3 without 4-grams")
     // The build5 model's bigram/trigram-level tables are build3's, so
     // every lower-order smoothing serves from the SAME prefix.
-    assert(LmIndex.score(store, "lm5", docs, "doc_id", "text")
+    assert(LmIndex.score(2, store, "lm5", docs, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet ===
-      LmIndex.crossScore(docs, docs, "doc_id", "text")
+      LmIndex.crossScore(2, docs, docs, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet,
       "build5 model failed to serve the order-2 KN score")
-    assert(LmIndex.score3(store, "lm5", docs, "doc_id", "text")
+    assert(LmIndex.score(3, store, "lm5", docs, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet ===
-      LmIndex.crossScore3(docs, docs, "doc_id", "text")
+      LmIndex.crossScore(3, docs, docs, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet,
       "build5 model failed to serve the order-3 KN score")
-    assert(LmIndex.scoreMkn(store, "lm5", docs, "doc_id", "text", fb)
+    assert(LmIndex.score(2, store, "lm5", docs, "doc_id", "text", LmIndex.Mkn(fb))
       .as[(Long, Long, Double)].collect().toSet ===
       TextAnalysis.mknBigramLogProb(docs, "doc_id", "text", fb)
         .as[(Long, Long, Double)].collect().toSet,
       "build5 model failed to serve the order-2 modified-KN score")
-  }
-
-  test("order-5 maintenance: append5 == rebuild on the union; deleteDocs5 " +
-      "== rebuild without — all seventeen tables; alien deletes refuse " +
-      "before any swap") {
-    val rnd = new scala.util.Random(53)
-    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp")
-    def txt(): String =
-      (0 until (3 + rnd.nextInt(6))).map(_ => pool(rnd.nextInt(6))).mkString(" ")
-    val a = (1L to 40L).map(i => (i, txt())).toDF("doc_id", "text")
-    val b = (41L to 70L).map(i => (i, txt())).toDF("doc_id", "text")
-    def newStore() = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm5m_").toString)
-    val names = Seq("uni", "big", "ctx", "cont", "tri", "ctx3", "m2", "mctx",
-      "four", "ctx4", "m3", "mctx3", "five", "ctx5", "m4", "mctx4", "stats")
-    def tablesOf(st: graft.io.ParquetTableStore): Map[String, Set[String]] =
-      names.map(t => t -> st.load(s"lm5_$t").collect()
-        .map(_.toString).toSet).toMap
-    val incr = newStore()
-    LmIndex.build5(incr, "lm5", a, "doc_id", "text")
-    LmIndex.append5(incr, "lm5", b, "doc_id", "text")
-    val full = newStore()
-    LmIndex.build5(full, "lm5", a.unionByName(b), "doc_id", "text")
-    assert(tablesOf(incr) === tablesOf(full),
-      "append5 diverged from the full rebuild")
-    LmIndex.deleteDocs5(incr, "lm5", b, "doc_id", "text")
-    val onlyA = newStore()
-    LmIndex.build5(onlyA, "lm5", a, "doc_id", "text")
-    assert(tablesOf(incr) === tablesOf(onlyA),
-      "deleteDocs5 diverged from rebuilding without the deleted docs")
-    val before = onlyA.load("lm5_stats").collect().toSeq
-    val alien = Seq((999L, "zz zz yy xx ww vv")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException] {
-      LmIndex.deleteDocs5(onlyA, "lm5", alien, "doc_id", "text")
-    }
-    assert(e.getMessage.contains("negative"), e.getMessage)
-    assert(onlyA.load("lm5_stats").collect().toSeq === before,
-      "a rejected order-5 delete must not have touched the store")
-  }
-
-  test("scoreBatch5 == score5 and scoreBatchMkn5 == scoreMkn5 in both " +
-      "pruner regimes, with the 5-gram-table IN pushdown") {
-    val rnd = new scala.util.Random(59)
-    val pool = Vector("kk", "ll", "mm", "nn", "oo", "pp", "rr")
-    def txt(): String =
-      (0 until (4 + rnd.nextInt(6))).map(_ => pool(rnd.nextInt(7))).mkString(" ")
-    val train = (1L to 80L).map(i => (i, txt())).toDF("doc_id", "text")
-    val batch = (200L to 206L).map(i => (i, txt())).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm5p_").toString)
-    LmIndex.build5(store, "lm5", train, "doc_id", "text")
-    val fb = Some((0.5, 1.0, 1.5))
-    val want = LmIndex.score5(store, "lm5", batch, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val probed = LmIndex.scoreBatch5(store, "lm5", batch, "doc_id", "text")
-    assert(probed.as[(Long, Long, Double)].collect().toSet === want)
-    import org.apache.spark.sql.catalyst.expressions.{In, InSet}
-    val scans = graft.PlanTestUtils.scansOf(
-      probed.queryExecution.executedPlan, "lm5_five")
-    assert(scans.nonEmpty, "no lm5_five scan in the probed order-5 plan")
-    scans.foreach { f =>
-      assert(f.dataFilters.exists(_.exists {
-        case _: In => true; case _: InSet => true; case _ => false
-      }), s"lm5_five scan lost the word IN pushdown: ${f.dataFilters}")
-    }
-    val wantM = LmIndex.scoreMkn5(store, "lm5", batch, "doc_id", "text", fb)
-      .as[(Long, Long, Double)].collect().toSet
-    assert(LmIndex.scoreBatchMkn5(store, "lm5", batch, "doc_id", "text", fb)
-      .as[(Long, Long, Double)].collect().toSet === wantM,
-      "probed order-5 modified-KN serve diverged")
-    spark.conf.set("graft.lm.probeMaxWords", "3")
-    try {
-      val semi = LmIndex.scoreBatch5(store, "lm5", batch, "doc_id", "text")
-      assert(semi.as[(Long, Long, Double)].collect().toSet === want,
-        "order-5 semi-join probed serve diverged")
-      assert(semi.queryExecution.executedPlan.toString.contains("LeftSemi"))
-      assert(LmIndex.scoreBatchMkn5(store, "lm5", batch, "doc_id", "text", fb)
-        .as[(Long, Long, Double)].collect().toSet === wantM,
-        "order-5 semi-join probed mkn serve diverged")
-    } finally spark.conf.unset("graft.lm.probeMaxWords")
-  }
-
-  test("versioned order-5 rebuild under a pinned serve: generations never " +
-      "mix across seventeen tables") {
-    val a = Seq((1L, "aa bb cc dd ee aa bb"), (2L, "aa cc dd ee ff"))
-      .toDF("doc_id", "text")
-    val b = Seq((1L, "xx yy zz ww vv xx yy"), (2L, "yy zz ww vv uu"))
-      .toDF("doc_id", "text")
-    val probe = Seq((10L, "aa bb cc dd xx yy zz ww")).toDF("doc_id", "text")
-    val store = new graft.io.ParquetTableStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_lm5v_").toString)
-    LmIndex.rebuildVersioned5(store, "lm5", a, "doc_id", "text")
-    val pinnedPrefix = graft.io.VersionedIndex.currentPrefix(store, "lm5")
-    val pinned = LmIndex.loadModel5(store, pinnedPrefix)
-    LmIndex.rebuildVersioned5(store, "lm5", b, "doc_id", "text")
-    val gotPinned = LmIndex.scoreFrames5(pinned, probe, "doc_id", "text", 0.75)
-      .as[(Long, Long, Double)].collect().toSet
-    val wantA = LmIndex.crossScore5(a, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(gotPinned === wantA,
-      "pinned order-5 model drifted off its generation after a rebuild")
-    val freshPrefix = graft.io.VersionedIndex.currentPrefix(store, "lm5")
-    val gotFresh = LmIndex.score5(store, freshPrefix, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    val wantB = LmIndex.crossScore5(b, probe, "doc_id", "text")
-      .as[(Long, Long, Double)].collect().toSet
-    assert(gotFresh === wantB)
-    assert(gotPinned !== gotFresh,
-      "fixture too weak: the two generations score identically")
   }
 
   test("degenerate models fail with guidance, not DIVIDE_BY_ZERO") {
@@ -1052,12 +816,12 @@ class LmSmoothingSpec extends SparkSpec {
     val train = Seq((1L, "solo"), (2L, "alone")).toDF("doc_id", "text")
     val docs = Seq((9L, "solo alone")).toDF("doc_id", "text")
     val e = intercept[Exception] {
-      LmIndex.crossScore(train, docs, "doc_id", "text").collect()
+      LmIndex.crossScore(2, train, docs, "doc_id", "text").collect()
     }
     assert(e.getMessage.contains("no bigram types"), e.getMessage)
     // Scoring KNOWN single tokens against the same model stays fine
     // (their unigram denominators are positive).
-    val ok = LmIndex.crossScore(
+    val ok = LmIndex.crossScore(2, 
       train, Seq((8L, "solo")).toDF("doc_id", "text"), "doc_id", "text")
       .as[(Long, Long, Double)].collect()
     assert(ok.length === 1 && ok.head._2 === 1L)
@@ -1068,7 +832,7 @@ class LmSmoothingSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val a = TextAnalysis.knBigramLogProb(df, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
-    val b = LmIndex.crossScore(df, df, "doc_id", "text")
+    val b = LmIndex.crossScore(2, df, df, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet
     assert(a === b)
   }

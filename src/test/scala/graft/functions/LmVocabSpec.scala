@@ -28,8 +28,8 @@ class LmVocabSpec extends SparkSpec {
       (1L, "a b a b c <unk>"), (2L, "a b <unk> c"), (3L, "b a <unk> <unk>"))
       .toDF("doc_id", "text")
     val capped = tmpStore(); val manual = tmpStore()
-    LmIndex.build5(capped, "lm5", raw, "doc_id", "text", maxVocab = 3L)
-    LmIndex.build5(manual, "lm5", mapped, "doc_id", "text")
+    LmIndex.build(5, capped, "lm5", raw, "doc_id", "text", maxVocab = 3L)
+    LmIndex.build(5, manual, "lm5", mapped, "doc_id", "text")
     Tables.foreach { t =>
       assert(capped.load(s"lm5_$t").collect().map(_.toString).toSet ===
         manual.load(s"lm5_$t").collect().map(_.toString).toSet,
@@ -39,9 +39,9 @@ class LmVocabSpec extends SparkSpec {
     // with capped-out words routing through the OOV branches.
     val probe = Seq((10L, "a b c"), (11L, "d f e"), (12L, "a d a"))
       .toDF("doc_id", "text")
-    assert(LmIndex.score5(capped, "lm5", probe, "doc_id", "text")
+    assert(LmIndex.score(5, capped, "lm5", probe, "doc_id", "text")
       .as[(Long, Long, Double)].collect().toSet ===
-      LmIndex.score5(manual, "lm5", probe, "doc_id", "text")
+      LmIndex.score(5, manual, "lm5", probe, "doc_id", "text")
         .as[(Long, Long, Double)].collect().toSet)
     // The unigram table is bounded by construction: top-3 plus <unk>.
     assert(capped.load("lm5_uni").count() === 4L)
@@ -68,9 +68,9 @@ class LmVocabSpec extends SparkSpec {
         .mkString(" "))
     }.toDF("doc_id", "text")
     val a = tmpStore(); val b = tmpStore()
-    LmIndex.build5(a, "lm5", raw, "doc_id", "text",
+    LmIndex.build(5, a, "lm5", raw, "doc_id", "text",
       pruneMin = Seq(1L, 2L, 2L, 2L), maxVocab = 5L)
-    LmIndex.build5(b, "lm5", mapped, "doc_id", "text",
+    LmIndex.build(5, b, "lm5", mapped, "doc_id", "text",
       pruneMin = Seq(1L, 2L, 2L, 2L))
     Tables.foreach { t =>
       assert(a.load(s"lm5_$t").collect().map(_.toString).toSet ===
@@ -83,7 +83,7 @@ class LmVocabSpec extends SparkSpec {
     val d = Seq((1L, "a b")).toDF("doc_id", "text")
     val store = tmpStore()
     val e = intercept[IllegalArgumentException] {
-      LmIndex.build5(store, "lm5", d, "doc_id", "text", maxVocab = -3L)
+      LmIndex.build(5, store, "lm5", d, "doc_id", "text", maxVocab = -3L)
     }
     assert(e.getMessage.contains("maxVocab"))
   }

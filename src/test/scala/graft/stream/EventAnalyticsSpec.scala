@@ -265,10 +265,10 @@ class EventAnalyticsSpec extends SparkSpec {
       (200L to 209L).map(i => (i, salad()))).toDF("doc_id", "text")
     val store = new ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_lm_gate_").toString)
-    LmIndex.build(store, "lm", train, "doc_id", "text")
+    LmIndex.build(2, store, "lm", train, "doc_id", "text")
     // Threshold calibrated from the OBSERVED scores (the DSIR-gate
     // lesson): the midpoint of the two class means.
-    val scores = LmIndex.score(store, "lm", docs, "doc_id", "text")
+    val scores = LmIndex.score(2, store, "lm", docs, "doc_id", "text")
       .select($"doc_id", $"logprob").as[(Long, Double)].collect()
     val natMean = scores.filter(_._1 < 200).map(_._2).sum / 10
     val salMean = scores.filter(_._1 >= 200).map(_._2).sum / 10
@@ -282,7 +282,7 @@ class EventAnalyticsSpec extends SparkSpec {
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
     val gate = EventAnalytics.pplGateEachBatch(
-      store, "lm", "doc_id", "text", minLogprob = thr) { out =>
+      2, store, "lm", "doc_id", "text", minLogprob = thr) { out =>
       acc.synchronized {
         acc ++= out.select("doc_id", "logprob").as[(Long, Double)].collect()
       }
@@ -304,7 +304,7 @@ class EventAnalyticsSpec extends SparkSpec {
 
     // Reserved-column guard: a batch already carrying logprob fails loudly.
     val gate2 = EventAnalytics.pplGateEachBatch(
-      store, "lm", "doc_id", "text", minLogprob = 0.0)(_ => ())
+      2, store, "lm", "doc_id", "text", minLogprob = 0.0)(_ => ())
     val e = intercept[IllegalArgumentException](
       gate2(Seq((1L, "a", 0.5)).toDF("doc_id", "text", "logprob"), 0L))
     assert(e.getMessage.contains("pplGateEachBatch"))
@@ -328,8 +328,8 @@ class EventAnalyticsSpec extends SparkSpec {
       (200L to 209L).map(i => (i, salad()))).toDF("doc_id", "text")
     val store = new ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_lm3_gate_").toString)
-    LmIndex.build3(store, "lm3", train, "doc_id", "text")
-    val scores = LmIndex.score3(store, "lm3", docs, "doc_id", "text")
+    LmIndex.build(3, store, "lm3", train, "doc_id", "text")
+    val scores = LmIndex.score(3, store, "lm3", docs, "doc_id", "text")
       .select($"doc_id", $"logprob").as[(Long, Double)].collect()
     val natMean = scores.filter(_._1 < 200).map(_._2).sum / 10
     val salMean = scores.filter(_._1 >= 200).map(_._2).sum / 10
@@ -340,8 +340,8 @@ class EventAnalyticsSpec extends SparkSpec {
 
     val input = MemoryStream[(Long, String)]
     val acc = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-    val gate = EventAnalytics.pplGate3EachBatch(
-      store, "lm3", "doc_id", "text", minLogprob = thr) { out =>
+    val gate = EventAnalytics.pplGateEachBatch(
+      3, store, "lm3", "doc_id", "text", minLogprob = thr) { out =>
       acc.synchronized {
         acc ++= out.select("doc_id", "logprob").as[(Long, Double)].collect()
       }
@@ -361,11 +361,11 @@ class EventAnalyticsSpec extends SparkSpec {
     assert(acc.toSet === want, "order-3 stream gate diverged from batch score3")
     gate.release()
 
-    val gate2 = EventAnalytics.pplGate3EachBatch(
-      store, "lm3", "doc_id", "text", minLogprob = 0.0)(_ => ())
+    val gate2 = EventAnalytics.pplGateEachBatch(
+      3, store, "lm3", "doc_id", "text", minLogprob = 0.0)(_ => ())
     val e = intercept[IllegalArgumentException](
       gate2(Seq((1L, "a", 0.5)).toDF("doc_id", "text", "logprob"), 0L))
-    assert(e.getMessage.contains("pplGate3EachBatch"))
+    assert(e.getMessage.contains("pplGateEachBatch"))
     gate2.release()
   }
 
@@ -386,9 +386,10 @@ class EventAnalyticsSpec extends SparkSpec {
       (200L to 209L).map(i => (i, salad()))).toDF("doc_id", "text")
     val store = new ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_mkn3_gate_").toString)
-    LmIndex.build3(store, "lm3", train, "doc_id", "text")
+    LmIndex.build(3, store, "lm3", train, "doc_id", "text")
     val fb = Some((0.5, 1.0, 1.5))
-    val scores = LmIndex.scoreMkn3(store, "lm3", docs, "doc_id", "text", fb)
+    val scores = LmIndex.score(3, store, "lm3", docs, "doc_id", "text",
+      LmIndex.Mkn(fb))
       .select($"doc_id", $"logprob").as[(Long, Double)].collect()
     val natMean = scores.filter(_._1 < 200).map(_._2).sum / 10
     val salMean = scores.filter(_._1 >= 200).map(_._2).sum / 10
@@ -405,8 +406,8 @@ class EventAnalyticsSpec extends SparkSpec {
       try {
         val input = MemoryStream[(Long, String)]
         val acc = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-        val gate = EventAnalytics.pplGateMkn3EachBatch(
-          store, "lm3", "doc_id", "text", minLogprob = thr, fb) { out =>
+        val gate = EventAnalytics.pplGateEachBatch(3, store, "lm3",
+          "doc_id", "text", minLogprob = thr, LmIndex.Mkn(fb)) { out =>
           acc.synchronized {
             acc ++= out.select("doc_id", "logprob").as[(Long, Double)].collect()
           }
@@ -430,11 +431,11 @@ class EventAnalyticsSpec extends SparkSpec {
       } finally ceiling.foreach(_ => spark.conf.unset("graft.lm.probeMaxWords"))
     }
 
-    val gate2 = EventAnalytics.pplGateMkn3EachBatch(
-      store, "lm3", "doc_id", "text", minLogprob = 0.0)(_ => ())
+    val gate2 = EventAnalytics.pplGateEachBatch(3, store, "lm3", "doc_id",
+      "text", minLogprob = 0.0, LmIndex.Mkn())(_ => ())
     val e = intercept[IllegalArgumentException](
       gate2(Seq((1L, "a", 0.5)).toDF("doc_id", "text", "logprob"), 0L))
-    assert(e.getMessage.contains("pplGateMkn3EachBatch"))
+    assert(e.getMessage.contains("pplGateEachBatch"))
     gate2.release()
   }
 
@@ -456,11 +457,11 @@ class EventAnalyticsSpec extends SparkSpec {
       (200L to 209L).map(i => (i, salad()))).toDF("doc_id", "text")
     val store = new ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_lm5_gate_").toString)
-    LmIndex.build5(store, "lm5", train, "doc_id", "text")
+    LmIndex.build(5, store, "lm5", train, "doc_id", "text")
     val fb = Some((0.5, 1.0, 1.5))
 
     // KN gate: threshold from observed batch scores.
-    val kn = LmIndex.score5(store, "lm5", docs, "doc_id", "text")
+    val kn = LmIndex.score(5, store, "lm5", docs, "doc_id", "text")
       .select($"doc_id", $"logprob").as[(Long, Double)].collect()
     val thrKn = (kn.filter(_._1 < 200).map(_._2).sum / 10 +
       kn.filter(_._1 >= 200).map(_._2).sum / 10) / 2
@@ -471,8 +472,8 @@ class EventAnalyticsSpec extends SparkSpec {
       ceiling.foreach(c => spark.conf.set("graft.lm.probeMaxWords", c))
       try {
         val acc = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-        val gate = EventAnalytics.pplGate5EachBatch(
-          store, "lm5", "doc_id", "text", minLogprob = thrKn) { out =>
+        val gate = EventAnalytics.pplGateEachBatch(
+          5, store, "lm5", "doc_id", "text", minLogprob = thrKn) { out =>
           acc.synchronized {
             acc ++= out.select("doc_id", "logprob").as[(Long, Double)].collect()
           }
@@ -495,14 +496,15 @@ class EventAnalyticsSpec extends SparkSpec {
     }
 
     // Modified-KN gate: same corpus, same contract.
-    val mkn = LmIndex.scoreMkn5(store, "lm5", docs, "doc_id", "text", fb)
+    val mkn = LmIndex.score(5, store, "lm5", docs, "doc_id", "text",
+      LmIndex.Mkn(fb))
       .select($"doc_id", $"logprob").as[(Long, Double)].collect()
     val thrM = (mkn.filter(_._1 < 200).map(_._2).sum / 10 +
       mkn.filter(_._1 >= 200).map(_._2).sum / 10) / 2
     val wantM = mkn.filter(_._2 >= thrM).toSet
     val accM = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-    val gateM = EventAnalytics.pplGateMkn5EachBatch(
-      store, "lm5", "doc_id", "text", minLogprob = thrM, fb) { out =>
+    val gateM = EventAnalytics.pplGateEachBatch(
+      5, store, "lm5", "doc_id", "text", minLogprob = thrM, LmIndex.Mkn(fb)) { out =>
       accM.synchronized {
         accM ++= out.select("doc_id", "logprob").as[(Long, Double)].collect()
       }
@@ -522,11 +524,11 @@ class EventAnalyticsSpec extends SparkSpec {
       "order-5 modified-KN stream gate diverged from batch scoreMkn5")
     gateM.release()
 
-    val gate2 = EventAnalytics.pplGate5EachBatch(
-      store, "lm5", "doc_id", "text", minLogprob = 0.0)(_ => ())
+    val gate2 = EventAnalytics.pplGateEachBatch(
+      5, store, "lm5", "doc_id", "text", minLogprob = 0.0)(_ => ())
     val e = intercept[IllegalArgumentException](
       gate2(Seq((1L, "a", 0.5)).toDF("doc_id", "text", "logprob"), 0L))
-    assert(e.getMessage.contains("pplGate5EachBatch"))
+    assert(e.getMessage.contains("pplGateEachBatch"))
     gate2.release()
   }
 
@@ -1249,13 +1251,13 @@ class EventAnalyticsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val store = new ParquetTableStore(spark,
       java.nio.file.Files.createTempDirectory("graft_lm_soak_").toString)
-    LmIndex.build(store, "lm", train, "doc_id", "text")
+    LmIndex.build(2, store, "lm", train, "doc_id", "text")
 
     val before = spark.sparkContext.getPersistentRDDs.size
     val input = MemoryStream[(Long, String)]
     val acc = new java.util.concurrent.atomic.AtomicInteger(0)
     val gate = EventAnalytics.pplGateEachBatch(
-      store, "lm", "doc_id", "text", minLogprob = -100.0) { out =>
+      2, store, "lm", "doc_id", "text", minLogprob = -100.0) { out =>
       acc.addAndGet(out.count().toInt); ()
     }
     val q = input.toDF().toDF("doc_id", "text")
