@@ -21,7 +21,7 @@ object SparkEntry {
     * sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    Validate.classify(csvInput(spark, dir), contactsStandIn(spark, dir), "u1")
+    Validate.classifyKeyed(csvInput(spark, dir), contactsStandIn(spark, dir), jobUsersStandIn(spark))
   }
 
   private def withCtes(body: String): String =
@@ -457,7 +457,7 @@ object SparkEntry {
     scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def classified(s: SparkSession, dir: String): DataFrame =
     classifiedCache.getOrElseUpdate((s, dir),
-      Validate.classify(csvInput(s, dir), contactsStandIn(s, dir), "u1").cache())
+      Validate.classifyKeyed(csvInput(s, dir), contactsStandIn(s, dir), jobUsersStandIn(s)).cache())
 
   /** Production near-duplicate pairs over `documents` — LSH band-collision
     * candidates + exact content-hash floor, exact-jaccard-verified on the
@@ -853,7 +853,8 @@ object SparkEntry {
 
     // J2/P4 — existing-contact semi-join (tenant-scoped)
     "q_existing_emails" -> ((s, dir) =>
-      Validate.existingEmails(csvInput(s, dir), contactsStandIn(s, dir), "u1")
+      Validate.existingEmailsKeyed(csvInput(s, dir), contactsStandIn(s, dir), jobUsersStandIn(s))
+        .select(col("existing_email").as("contact_email"))
         .orderBy("contact_email")),
 
     // V1-V4 — the full first-failure-wins classification (flagship)
@@ -907,7 +908,9 @@ object SparkEntry {
     // A5/A6/W8 — job-level counters incl. the gating unresolved count
     "q_job_counters" -> ((s, dir) => {
       val c = classified(s, dir)
-      Consolidate.jobCounters(c, Issues.deriveIssues(c))
+      Consolidate.jobCountersKeyed(
+        c.withColumn("staging_job_id", col("job_id")), Issues.deriveIssues(c))
+        .drop("job_id")
     }),
 
     // §3.2 reprocess + J5/W4 — user edits, DISCARD exclusion, issue merge,
@@ -940,7 +943,8 @@ object SparkEntry {
         .select(col("staging_id").as("row_number"), col("staging_id"), col("job_id"),
           col("staging_email").as("email"), col("staging_first_name").as("first_name"),
           col("staging_last_name").as("last_name"), col("staging_company").as("company"))
-      val reclass = Validate.classify(working, contactsStandIn(s, dir), "u1").cache()
+      val reclass = Validate.classifyKeyed(working, contactsStandIn(s, dir), jobUsersStandIn(s))
+        .cache()
       val newStatus = edited.select("staging_id")
         .join(reclass.select(col("staging_id"), col("staging_status").as("ns")),
           Seq("staging_id"), "left")
@@ -3906,12 +3910,14 @@ object SparkEntry {
       val c = classified(s, dir)
       val staging = c.select(
         col("row_number").as("staging_id"),
+        col("job_id").as("staging_job_id"),
         trimmed(col("email")).as("staging_email"),
         trimmed(col("first_name")).as("staging_first_name"),
         trimmed(col("last_name")).as("staging_last_name"),
         trimmed(col("company")).as("staging_company"),
         col("staging_status"))
-      Consolidate.readyToContacts(staging, "u1").orderBy("staging_id")
+      Consolidate.readyToContactsKeyed(staging, jobUsersStandIn(s))
+        .drop("staging_job_id").orderBy("staging_id")
     })
   )
 

@@ -67,6 +67,13 @@ object StandIn {
       when(k % 53 === 0, lit("")).otherwise(col("c_mktsegment")).as("company"))
   }
 
+  /** The (job_id, job_user_id) map of [[csvInput]]: its one job, 1, belongs
+    * to tenant u1. */
+  def jobUsersStandIn(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq((1, "u1")).toDF("job_id", "job_user_id")
+  }
+
   /** `contacts`-shaped existing contacts derived from `supplier`; two
     * tenants to exercise per-user isolation (ADR-005). */
   def contactsStandIn(spark: SparkSession, dir: String): DataFrame = {

@@ -298,9 +298,10 @@ class ParquetTableStore(
   }
 
   /** Two-phase: materialize EVERY plan into its tmp dir while all source
-    * files still exist, then swap. A FlowResult's staging/issues/contacts
-    * plans all read the pre-run snapshots — replacing one table before the
-    * others are written would yield FileNotFound stage failures.
+    * files still exist, then swap. A wave's staging/issues/contacts plans
+    * ([[graft.pipeline.Lifecycle.KeyedFlowResult]]) all read the pre-run
+    * snapshots — replacing one table before the others are written would
+    * yield FileNotFound stage failures.
     *
     * The staging phase runs its independent write JOBS concurrently
     * (guide §2.6 — overlap independent jobs so the next job's tasks

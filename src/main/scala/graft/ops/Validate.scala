@@ -26,76 +26,25 @@ object Validate {
 
   import Normalize._
 
-  /** Normalized emails occurring >1x among rows with non-empty email —
-    * reference _identify_duplicate_emails (processor.py:674-726). NOTE: the
-    * set is built from ALL rows with a non-empty email, including rows that
-    * will fail earlier validation rules; first-failure-wins only affects
-    * which issue a row is FLAGGED with, not set membership. Both copies of a
-    * duplicate are flagged (no keep-first).
-    */
-  def duplicateEmails(input: DataFrame): DataFrame =
-    input
-      .select(normEmail(col("email")).as("norm_email"))
-      .filter(col("norm_email") =!= "")
-      .groupBy("norm_email")
-      .count()
-      .filter(col("count") > 1)
-      .select("norm_email")
-
-  /** Distinct normalized non-empty emails of the batch (A9,
-    * processor.py:162). */
-  def distinctEmails(input: DataFrame): DataFrame =
-    input
-      .select(normEmail(col("email")).as("norm_email"))
-      .filter(col("norm_email") =!= "")
-      .distinct()
-
-  /** Existing-contact emails for one tenant, restricted (semi-join) to the
-    * batch's own email set — the set-based analogue of the reference's
-    * `WHERE contact_email IN (:emails) AND contacts_user_id = :uid`
-    * (contact_repository.py:34-39). The semi-join replaces the IN-list so the
-    * probe side scales past driver memory. NB the reference compares the
-    * NORMALIZED csv email against the RAW stored contact_email (no lower() on
-    * the contacts side) — reproduced exactly here.
-    */
-  def existingEmails(input: DataFrame, contacts: DataFrame, userId: String): DataFrame =
-    contacts
-      .filter(col("contacts_user_id") === userId)
-      .select(col("contact_email"))
-      .join(distinctEmails(input), col("contact_email") === col("norm_email"), "left_semi")
-      .distinct()
-
-  /** Full classification: validation chain V1-V4 in reference order
-    * (README.md:110-118): missing-required-field (field declaration order:
-    * email, first_name, last_name, company; row_validator.py:67-75) ->
-    * invalid format -> duplicate-in-batch -> existing-contact. Produces
-    * `issue_type`, `issue_message`, `staging_status`.
-    */
-  def classify(input: DataFrame, contacts: DataFrame, userId: String): DataFrame = {
-    val dups = duplicateEmails(input).withColumn("is_dup", lit(true))
-    val existing = existingEmails(input, contacts, userId)
-      .withColumnRenamed("contact_email", "existing_email")
-
-    val withFlags = input
-      .withColumn("norm_email", normEmail(col("email")))
-      .join(dups, Seq("norm_email"), "left")
-      .join(existing, col("norm_email") === col("existing_email"), "left")
-      .withColumn("is_dup", coalesce(col("is_dup"), lit(false)))
-      .withColumn("is_existing", col("existing_email").isNotNull)
-      .drop("existing_email")
-
-    applyValidationChain(withFlags)
-  }
-
-  /** [[classify]] generalized over MANY jobs in one plan: `input` carries a
-    * `job_id` column spanning several jobs, `jobUsers` maps each job to its
-    * tenant (`job_id`, `job_user_id` — control-plane small, broadcast). Every
-    * validation set becomes job-scoped ((job_id, norm_email) keys), so one
-    * Catalyst plan classifies a whole dispatch wave at constant plan-compile
-    * cost — N per-job plans collapse to 1 (the round-7 streaming floor was
-    * per-job plan compilation, not data volume). Row-for-row equal to
-    * per-job [[classify]] unioned (KeyedLifecycleSpec pins the equality). */
+  /** Full classification over MANY jobs in one plan: validation chain
+    * V1-V4 in reference order (README.md:110-118): missing-required-field
+    * (field declaration order: email, first_name, last_name, company;
+    * row_validator.py:67-75) -> invalid format -> duplicate-in-batch ->
+    * existing-contact. `input` carries a `job_id` column spanning one or
+    * more jobs, `jobUsers` maps each job to its tenant (`job_id`,
+    * `job_user_id` — control-plane small, broadcast). Every validation set
+    * is job-scoped ((job_id, norm_email) keys), so one Catalyst plan
+    * classifies a whole dispatch wave at constant plan-compile cost — N
+    * per-job plans collapse to 1 (the round-7 streaming floor was per-job
+    * plan compilation, not data volume). Produces `norm_email`,
+    * `issue_type`, `issue_message`, `staging_status`. */
   def classifyKeyed(input: DataFrame, contacts: DataFrame, jobUsers: DataFrame): DataFrame = {
+    // Normalized emails occurring >1x per job among rows with non-empty
+    // email — reference _identify_duplicate_emails (processor.py:674-726).
+    // The set is built from ALL rows with a non-empty email, including rows
+    // that will fail earlier validation rules; first-failure-wins only
+    // affects which issue a row is FLAGGED with, not set membership. Both
+    // copies of a duplicate are flagged (no keep-first).
     val dups = input
       .select(col("job_id"), normEmail(col("email")).as("norm_email"))
       .filter(col("norm_email") =!= "")
@@ -105,27 +54,10 @@ object Validate {
       .select("job_id", "norm_email")
       .withColumn("is_dup", lit(true))
 
-    val batchEmails = input
-      .select(col("job_id").as("b_job_id"), normEmail(col("email")).as("b_norm_email"))
-      .filter(col("b_norm_email") =!= "")
-      .distinct()
-    // Tenant-scoped existing-contact set, all jobs at once: tag each contact
-    // row with the wave job(s) of its tenant via the broadcast jobUsers map,
-    // then semi-join against the batch's own (job, email) set — the keyed
-    // analogue of existingEmails' `WHERE user = :uid AND email IN (...)`.
-    // Raw stored contact_email vs normalized CSV email, as in the reference.
-    val existingScoped = contacts
-      .join(broadcast(jobUsers), col("contacts_user_id") === col("job_user_id"))
-      .select(col("job_id").as("e_job_id"), col("contact_email").as("existing_email"))
-      .join(batchEmails,
-        col("e_job_id") === col("b_job_id") && col("existing_email") === col("b_norm_email"),
-        "left_semi")
-      .distinct()
-
     val withFlags = input
       .withColumn("norm_email", normEmail(col("email")))
       .join(dups, Seq("job_id", "norm_email"), "left")
-      .join(existingScoped,
+      .join(existingEmailsKeyed(input, contacts, jobUsers),
         col("job_id") === col("e_job_id") && col("norm_email") === col("existing_email"),
         "left")
       .withColumn("is_dup", coalesce(col("is_dup"), lit(false)))
@@ -135,9 +67,32 @@ object Validate {
     applyValidationChain(withFlags)
   }
 
+  /** Existing-contact emails per job (`e_job_id`, `existing_email`): each
+    * contact row is tagged with the job(s) of its tenant via the broadcast
+    * `jobUsers` map, then semi-joined against the batch's own distinct
+    * (job, normalized non-empty email) set (A9, processor.py:162) — the
+    * set-based analogue of the reference's `WHERE contact_email IN (:emails)
+    * AND contacts_user_id = :uid` (contact_repository.py:34-39). The
+    * semi-join replaces the IN-list so the probe side scales past driver
+    * memory. NB the reference compares the NORMALIZED csv email against the
+    * RAW stored contact_email (no lower() on the contacts side) — reproduced
+    * exactly here. */
+  def existingEmailsKeyed(input: DataFrame, contacts: DataFrame, jobUsers: DataFrame): DataFrame = {
+    val batchEmails = input
+      .select(col("job_id").as("b_job_id"), normEmail(col("email")).as("b_norm_email"))
+      .filter(col("b_norm_email") =!= "")
+      .distinct()
+    contacts
+      .join(broadcast(jobUsers), col("contacts_user_id") === col("job_user_id"))
+      .select(col("job_id").as("e_job_id"), col("contact_email").as("existing_email"))
+      .join(batchEmails,
+        col("e_job_id") === col("b_job_id") && col("existing_email") === col("b_norm_email"),
+        "left_semi")
+      .distinct()
+  }
+
   /** The ordered V1-V4 validator (first-failure-wins when-chain) applied to a
-    * flagged frame (`is_dup`, `is_existing` present) — shared verbatim by the
-    * single-job and keyed classify paths so they cannot drift. */
+    * flagged frame (`is_dup`, `is_existing` present). */
   private def applyValidationChain(withFlags: DataFrame): DataFrame = {
     val emailT = trimmed(col("email"))
     val issueType =

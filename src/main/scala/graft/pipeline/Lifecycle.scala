@@ -2,122 +2,43 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.model.Schemas.{JobStatus, StagingStatus}
+import graft.model.Schemas.StagingStatus
 import graft.ops.{Consolidate, Issues, Normalize, Validate}
 
-/** The three job flows (SURVEY.md §3) as pure DataFrame -> DataFrame
-  * pipelines. Storage commits happen outside (the caller holds a
-  * [[graft.io.TableStore]]); everything here is a lazy plan, so each flow is
-  * one Catalyst-optimized job when the caller materializes it.
+/** The job flows (SURVEY.md §3) as pure DataFrame -> DataFrame pipelines,
+  * keyed by `job_id`: one plan carries every job of a dispatch wave, and a
+  * job processed alone is a wave of one. Storage commits happen outside
+  * (the caller holds a [[graft.io.TableStore]]); everything here is a lazy
+  * plan, so each flow is one Catalyst-optimized job when the caller
+  * materializes it.
   */
 object Lifecycle {
 
   import Normalize._
 
-  /** Reference-parity error for an input CSV with no data rows
-    * (processor.py:149-151); shared by the sequential require() and the
-    * dispatch wave's batched probe so both paths report identically. */
-  val EmptyCsvMessage = "CSV file is empty"
-
-  /** Result of a processing flow, pre-commit. All plan members are lazy.
+  /** Result of a flow, pre-commit. All plan members are lazy and span every
+    * job of the wave; `counters` is one row PER job (keyed by `job_id`).
     *
     * The ADR-002 consolidation decision (unresolved issues pending?) is NOT
-    * taken eagerly at build time — a batched dispatch wave of N jobs would
-    * pay N sequential driver-side count() actions (the round-6 streaming
-    * throughput floor). Instead the decision value ships inside `counters`
-    * (whose one collect the committer needs anyway): read the row, then ask
-    * [[stagingDecided]]/[[newContactsDecided]] for the matching gate-free
-    * plans. The zero-argument `staging`/`newContacts`/`jobStatus` members
-    * keep the eager single-job ergonomics (they collect `counters` once,
-    * memoized in [[counterRow]]). */
-  case class FlowResult(
+    * taken at build time — that would cost one driver-side action per job.
+    * The decision value ships inside `counters` (whose one collect the
+    * committer needs anyway): read the rows, then ask
+    * [[stagingDecided]]/[[newContactsDecided]] for the gate-free plans of
+    * the clean jobs. `contactCandidates` keeps `staging_job_id` so each
+    * job's candidates follow its own decision; the canonical-shape
+    * projection at commit drops it. */
+  case class KeyedFlowResult(
       stagingPre: DataFrame,  // staging snapshot BEFORE the READY->SUCCESS rewrite
       issues: DataFrame,      // full post-run issue set (with issue_resolved)
       issueItems: DataFrame,  // full post-run link set
-      contactCandidates: DataFrame, // rows that become contacts IF consolidation runs
-      counters: DataFrame,    // 1-row job counters (A4-A8), post-decision statuses
+      contactCandidates: DataFrame, // rows that become contacts IF their job consolidates
+      counters: DataFrame,    // per-job counters (A4-A8), post-decision statuses
       cachedFrames: Seq[DataFrame] = Nil) { // caches to release after commit
 
     /** Release this flow's cached intermediates. Call AFTER the last
       * materialization (commit + counters) — a long-running dispatch
-      * stream otherwise accumulates one dead cached frame per processed
-      * job in the storage pool. */
-    def unpersist(): Unit =
-      cachedFrames.foreach(df => try df.unpersist(false) catch { case _: Exception => () })
-
-    /** Whether consolidation proceeds (ADR-002), from a collected
-      * `counters` row. */
-    def isClean(counterRow: org.apache.spark.sql.Row): Boolean =
-      counterRow.getAs[Long]("unresolved_issues") == 0L
-
-    /** Job status from an already-collected `counters` row (no action). */
-    def statusOf(counterRow: org.apache.spark.sql.Row): String =
-      Consolidate.decideJobStatus(counterRow.getAs[Long]("unresolved_issues"))
-
-    /** Post-decision staging snapshot: consolidation rewrites READY ->
-      * SUCCESS, a blocked job leaves statuses untouched. Gate-free plan. */
-    def stagingDecided(clean: Boolean): DataFrame =
-      if (!clean) stagingPre
-      else stagingPre.withColumn(
-        "staging_status",
-        when(col("staging_status") === StagingStatus.Ready, lit(StagingStatus.Success))
-          .otherwise(col("staging_status")))
-
-    /** Post-decision contacts append set ([] unless consolidated). */
-    def newContactsDecided(clean: Boolean): DataFrame =
-      if (clean) contactCandidates else contactCandidates.limit(0)
-
-    /** Memoized counters row — the ONE action behind the eager members. */
-    lazy val counterRow: org.apache.spark.sql.Row = counters.head()
-
-    /** Eager conveniences (first use collects `counters` once). */
-    def jobStatus: String = statusOf(counterRow)
-    def staging: DataFrame = stagingDecided(isClean(counterRow))
-    def newContacts: DataFrame = newContactsDecided(isClean(counterRow))
-  }
-
-  /** Deterministic surrogate staging id: (job_id << 40) | row_number.
-    * Unlike the reference's DB autoincrement this is stable across resumes —
-    * replaying a message assigns the same ids, keeping issue_items joins
-    * idempotent. Nothing in the contract depends on density (SURVEY.md §1.5). */
-  def stagingId(jobId: Column, rowNumber: Column): Column =
-    (jobId.cast("long") * lit(1L << 40)) + rowNumber.cast("long")
-
-  /** Natural pair key for issue_items merges. */
-  private val itemPairKey = Seq("issues_job_id", "issue_type", "issue_key", "item_staging_id")
-
-  /** Commit a flow result to storage as ONE two-phase `commitAll`: every
-    * output plan — the contacts append included — materializes against the
-    * pre-commit snapshots before any table is mutated, then the mutations
-    * run in the reference's consolidation order (contacts ->
-    * staging/issues/links; processor.py:728-788). Staging the append
-    * matters: the staging plan's classify subtree reads contacts, and a
-    * mutate-first append would flip this job's own READY rows to
-    * EXISTING_EMAIL when the plan re-evaluates (Spark re-caches cached
-    * plans on writes to paths they read). The job status update (W7: 1
-    * row) is the caller's last step, making a crash anywhere before it a
-    * repairable retry (ADR-001 idempotent resume). */
-  def commit(store: graft.io.TableStore, r: FlowResult): Unit =
-    store.commitAll(
-      appends = Seq("contacts" -> r.newContacts),
-      overwrites = Seq(
-        "staging" -> r.staging,
-        "issues" -> r.issues,
-        "issue_items" -> r.issueItems))
-
-  /** Result of a KEYED (multi-job, single-plan) flow: same table frames as
-    * [[FlowResult]] but spanning every job in the wave, and `counters` is
-    * one row PER job (keyed by `job_id`). `contactCandidates` keeps
-    * `staging_job_id` so the committer can apply each job's own ADR-002
-    * decision; the canonical-shape projection at commit drops it. */
-  case class KeyedFlowResult(
-      stagingPre: DataFrame,
-      issues: DataFrame,
-      issueItems: DataFrame,
-      contactCandidates: DataFrame,
-      counters: DataFrame,
-      cachedFrames: Seq[DataFrame] = Nil) {
-
+      * stream otherwise accumulates one dead cached frame per wave in the
+      * storage pool. */
     def unpersist(): Unit =
       cachedFrames.foreach(df => try df.unpersist(false) catch { case _: Exception => () })
 
@@ -138,18 +59,28 @@ object Lifecycle {
       else contactCandidates.filter(col("staging_job_id").isin(cleanJobIds: _*))
   }
 
-  /** [[initialProcess]] over MANY jobs as ONE Catalyst plan (the dispatch
-    * wave's fast path): `input` is the union of the wave's CSV contract
-    * frames tagged with a `job_id` column, `jobUsers` the broadcast
-    * (job_id, job_user_id) map. Every set-building step is already
-    * job-keyed in the single-job plan (dup/existing sets, J1 anti-join,
-    * issue natural keys, staging surrogate ids) — this keys the two that
-    * were not (classify's validation sets, the counters) and leaves the
-    * rest byte-identical, so N jobs compile ONE classify/issues/consolidate
+  /** Deterministic surrogate staging id: (job_id << 40) | row_number.
+    * Unlike the reference's DB autoincrement this is stable across resumes —
+    * replaying a message assigns the same ids, keeping issue_items joins
+    * idempotent. Nothing in the contract depends on density (SURVEY.md §1.5). */
+  def stagingId(jobId: Column, rowNumber: Column): Column =
+    (jobId.cast("long") * lit(1L << 40)) + rowNumber.cast("long")
+
+  /** Natural pair key for issue_items merges. */
+  private val itemPairKey = Seq("issues_job_id", "issue_type", "issue_key", "item_staging_id")
+
+  /** INITIAL PROCESSING (§3.1, processor.py:124-388) over MANY jobs as ONE
+    * Catalyst plan: `input` is the union of the wave's CSV contract frames
+    * (row_number, email, first_name, last_name, company) tagged with a
+    * `job_id` column, `jobUsers` the broadcast (job_id, job_user_id) map,
+    * and the `existing*` frames the wave jobs' prior state (resume case;
+    * empty on a first pass). Every set-building step is job-keyed
+    * (dup/existing sets, J1 anti-join, issue natural keys, staging surrogate
+    * ids, counters), so N jobs compile ONE classify/issues/consolidate
     * subtree instead of N (the round-7 streaming throughput floor was plan
-    * compilation at ~0.5 s/job, not data volume). Equality with the
-    * per-job path is pinned by KeyedLifecycleSpec and MultiJobSpec's
-    * drain==batch gate. */
+    * compilation at ~0.5 s/job, not data volume). KeyedLifecycleSpec pins
+    * that a wave of N jobs equals the union of N waves of one. The caller
+    * has already rejected empty inputs (processor.py:149-151). */
   def initialProcessKeyed(
       input: DataFrame,
       jobUsers: DataFrame,
@@ -158,159 +89,13 @@ object Lifecycle {
       existingItems: DataFrame,
       contacts: DataFrame): KeyedFlowResult = {
 
-    val classified = graft.ops.Validate.classifyKeyed(input, contacts, jobUsers)
-      .withColumn("staging_row_hash",
-        rowHash(col("job_id"), col("row_number"), col("email"),
-          col("first_name"), col("last_name"), col("company")))
-      .withColumn("staging_id", stagingId(col("job_id"), col("row_number")))
-      .cache()
-
-    val newRows = classified.join(
-      existingStaging.select(col("staging_job_id").as("job_id"), col("staging_row_hash")),
-      Seq("job_id", "staging_row_hash"), "left_anti")
-
-    val newStaging = newRows.select(
-      col("staging_id"),
-      col("job_id").as("staging_job_id"),
-      col("email").as("staging_email"),
-      col("first_name").as("staging_first_name"),
-      col("last_name").as("staging_last_name"),
-      col("company").as("staging_company"),
-      col("staging_status"),
-      col("staging_row_hash"))
-    val stagingAfter = existingStaging.unionByName(newStaging, allowMissingColumns = true)
-
-    val derivedIssues = Issues.deriveIssues(newRows, "row_", "row_number")
-    val issuesAfter = Issues.mergeIssues(existingIssues, derivedIssues)
-    val derivedItems = Issues.deriveIssueItems(newRows, "row_", "row_number")
-      .withColumn("item_staging_id", stagingId(col("issues_job_id"), col("item_staging_id")))
-    val itemsAfter = existingItems.unionByName(
-      derivedItems.join(existingItems, itemPairKey, "left_anti"),
-      allowMissingColumns = true)
-
-    finalizeFlowKeyed(stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
-      .copy(cachedFrames = Seq(classified))
-  }
-
-  /** [[reprocess]] over MANY jobs as ONE plan (see [[initialProcessKeyed]]).
-    * `staging`/`issues`/`issueItems` span every reprocess-route job of the
-    * wave (routing already proved each has staging rows). */
-  def reprocessKeyed(
-      staging: DataFrame,
-      issues: DataFrame,
-      issueItems: DataFrame,
-      contacts: DataFrame,
-      jobUsers: DataFrame): KeyedFlowResult = {
-
-    val working = staging
-      .filter(coalesce(col("staging_status"), lit("")) =!= StagingStatus.Discard)
-      .select(
-        col("staging_id").as("row_number"),
-        col("staging_id"),
-        col("staging_job_id").as("job_id"),
-        col("staging_email").as("email"),
-        col("staging_first_name").as("first_name"),
-        col("staging_last_name").as("last_name"),
-        col("staging_company").as("company"),
-        col("staging_row_hash"))
-
-    val classified = graft.ops.Validate.classifyKeyed(working, contacts, jobUsers).cache()
-
-    val revalidated = classified.select(
-      col("staging_id"),
-      col("job_id").as("staging_job_id"),
-      col("email").as("staging_email"),
-      col("first_name").as("staging_first_name"),
-      col("last_name").as("staging_last_name"),
-      col("company").as("staging_company"),
-      col("staging_status"),
-      col("staging_row_hash"))
-    val stagingAfter = staging.filter(col("staging_status") === StagingStatus.Discard)
-      .select(revalidated.columns.map(col): _*)
-      .unionByName(revalidated)
-
-    val derivedIssues = Issues.deriveIssues(classified, "staging_", "staging_id")
-    val issuesAfter = Issues.mergeIssues(issues, derivedIssues)
-    val derivedItems = Issues.deriveIssueItems(classified, "staging_", "staging_id")
-    val itemsAfter = issueItems.unionByName(
-      derivedItems.join(issueItems, itemPairKey, "left_anti"),
-      allowMissingColumns = true)
-
-    finalizeFlowKeyed(stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
-      .copy(cachedFrames = Seq(classified))
-  }
-
-  /** Keyed [[finalizeFlow]]: same resolution recompute and contacts
-    * anti-join (both already job-safe — staging surrogate ids embed the
-    * job), per-job counters with the post-decision fold applied row-wise. */
-  private def finalizeFlowKeyed(
-      stagingAfter: DataFrame,
-      issuesAfter: DataFrame,
-      itemsAfter: DataFrame,
-      contacts: DataFrame,
-      jobUsers: DataFrame): KeyedFlowResult = {
-
-    val resolvedIssues =
-      Issues.recomputeResolution(issuesAfter, itemsAfter, stagingAfter)
-    val dedupedContacts = Consolidate.readyToContactsKeyed(stagingAfter, jobUsers)
-      .join(
-        if (contacts.columns.contains("staging_id")) contacts.select("staging_id")
-        else contacts.sparkSession.emptyDataFrame
-          .selectExpr("CAST(null AS BIGINT) AS staging_id").limit(0),
-        Seq("staging_id"), "left_anti")
-    val counters = Consolidate.jobCountersKeyed(stagingAfter, resolvedIssues)
-      .withColumn("total_issues", coalesce(col("total_issues"), lit(0L)))
-      .withColumn("unresolved_issues", coalesce(col("unresolved_issues"), lit(0L)))
-      .withColumn("ready_rows", coalesce(col("ready_rows"), lit(0L)))
-      .withColumn("issue_rows", coalesce(col("issue_rows"), lit(0L)))
-      .withColumn("discard_rows", coalesce(col("discard_rows"), lit(0L)))
-      .withColumn("success_rows", coalesce(col("success_rows"), lit(0L)))
-      .withColumn("success_rows",
-        when(col("unresolved_issues") === 0, col("success_rows") + col("ready_rows"))
-          .otherwise(col("success_rows")))
-      .withColumn("ready_rows",
-        when(col("unresolved_issues") === 0, lit(0L)).otherwise(col("ready_rows")))
-
-    KeyedFlowResult(
-      stagingPre = stagingAfter,
-      issues = resolvedIssues,
-      issueItems = itemsAfter,
-      contactCandidates = dedupedContacts,
-      counters = counters)
-  }
-
-  /** INITIAL PROCESSING (§3.1, processor.py:124-388).
-    *
-    * @param input cleaned numbered CSV contract frame:
-    *              row_number, email, first_name, last_name, company
-    * @param existingStaging prior staging rows of this job (resume case;
-    *                        empty frame on first pass)
-    * @param checkNonEmpty set false when the caller has ALREADY probed the
-    *                      input (the batched dispatch wave probes every
-    *                      CSV in one action) — the check here costs one
-    *                      driver-synchronous action per job
-    */
-  def initialProcess(
-      input: DataFrame,
-      jobId: Int,
-      userId: String,
-      existingStaging: DataFrame,
-      existingIssues: DataFrame,
-      existingItems: DataFrame,
-      contacts: DataFrame,
-      checkNonEmpty: Boolean = true): FlowResult = {
-
-    if (checkNonEmpty)
-      require(!input.isEmpty, EmptyCsvMessage) // processor.py:149-151
-
-    val withJob = input.withColumn("job_id", lit(jobId))
     // Validation sets (duplicates, existing-contacts) are built from ALL CSV
     // rows — including rows later skipped by the idempotency check
     // (processor.py:153-163 runs before the row loop).
     // Cached: the classified frame is referenced by the staging snapshot,
     // the issue derivation, AND the link derivation — uncached, every
     // commit materialization would re-run the whole classify subtree.
-    val classified = Validate.classify(withJob, contacts, userId)
+    val classified = Validate.classifyKeyed(input, contacts, jobUsers)
       .withColumn("staging_row_hash",
         rowHash(col("job_id"), col("row_number"), col("email"),
           col("first_name"), col("last_name"), col("company")))
@@ -346,40 +131,37 @@ object Lifecycle {
       derivedItems.join(existingItems, itemPairKey, "left_anti"),
       allowMissingColumns = true)
 
-    finalizeFlow(stagingAfter, issuesAfter, itemsAfter, contacts, jobId, userId)
+    finalizeFlowKeyed(stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
       .copy(cachedFrames = Seq(classified))
   }
 
-  /** REPROCESSING (§3.2, processor.py:390-672): re-validate the staging set
-    * (user-edited), skipping DISCARD rows (user decision honored —
-    * excluded from BOTH re-validation and the duplicate set,
-    * processor.py:428-459); recompute issue resolution deterministically.
-    */
-  def reprocess(
+  /** REPROCESSING (§3.2, processor.py:390-672) over MANY jobs as ONE plan:
+    * re-validate the staging set (user-edited), skipping DISCARD rows (user
+    * decision honored — excluded from BOTH re-validation and the duplicate
+    * set, processor.py:428-459); recompute issue resolution
+    * deterministically. `staging`/`issues`/`issueItems` span every
+    * reprocess-route job of the wave (routing already proved each has
+    * staging rows). */
+  def reprocessKeyed(
       staging: DataFrame,
       issues: DataFrame,
       issueItems: DataFrame,
       contacts: DataFrame,
-      jobId: Int,
-      userId: String,
-      checkNonEmpty: Boolean = true): FlowResult = {
-
-    if (checkNonEmpty)
-      require(!staging.isEmpty, s"No staging records found for job $jobId")
+      jobUsers: DataFrame): KeyedFlowResult = {
 
     val working = staging
       .filter(coalesce(col("staging_status"), lit("")) =!= StagingStatus.Discard)
       .select(
         col("staging_id").as("row_number"), // classify's generic row id
         col("staging_id"),
-        lit(jobId).as("job_id"),
+        col("staging_job_id").as("job_id"),
         col("staging_email").as("email"),
         col("staging_first_name").as("first_name"),
         col("staging_last_name").as("last_name"),
         col("staging_company").as("company"),
         col("staging_row_hash"))
 
-    val classified = Validate.classify(working, contacts, userId).cache()
+    val classified = Validate.classifyKeyed(working, contacts, jobUsers).cache()
 
     // New statuses: re-validated for working rows, DISCARD preserved.
     val revalidated = classified.select(
@@ -404,7 +186,7 @@ object Lifecycle {
       derivedItems.join(issueItems, itemPairKey, "left_anti"),
       allowMissingColumns = true)
 
-    finalizeFlow(stagingAfter, issuesAfter, itemsAfter, contacts, jobId, userId)
+    finalizeFlowKeyed(stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
       .copy(cachedFrames = Seq(classified))
   }
 
@@ -412,18 +194,17 @@ object Lifecycle {
     * issues (ADR-002), and consolidate when clean. Empty READY set still
     * completes (processor.py:750-756).
     *
-    * No driver-side gate action here: the counters frame carries the
+    * No driver-side gate action here: the counters frame carries each job's
     * unresolved count AND already reflects the post-decision statuses (a
-    * clean job's READY rows count as SUCCESS — the adjustment is a 1-row
-    * column rewrite inside the frame, no extra subplan, no broadcast). The
-    * caller reads the row and picks the decided staging/contacts plans. */
-  private def finalizeFlow(
+    * clean job's READY rows count as SUCCESS — a row-wise column rewrite
+    * inside the frame, no extra subplan). The caller reads the rows and
+    * picks the decided staging/contacts plans. */
+  private def finalizeFlowKeyed(
       stagingAfter: DataFrame,
       issuesAfter: DataFrame,
       itemsAfter: DataFrame,
       contacts: DataFrame,
-      jobId: Int,
-      userId: String): FlowResult = {
+      jobUsers: DataFrame): KeyedFlowResult = {
 
     val resolvedIssues =
       Issues.recomputeResolution(issuesAfter, itemsAfter, stagingAfter)
@@ -431,19 +212,20 @@ object Lifecycle {
     // replayed consolidation a no-op instead of a loud failure. Built from
     // stagingAfter (pre-consolidation statuses — READY rows are the ones
     // that become contacts).
-    val dedupedContacts = Consolidate.readyToContacts(stagingAfter, userId)
+    val dedupedContacts = Consolidate.readyToContactsKeyed(stagingAfter, jobUsers)
       .join(
         if (contacts.columns.contains("staging_id")) contacts.select("staging_id")
         else contacts.sparkSession.emptyDataFrame
           .selectExpr("CAST(null AS BIGINT) AS staging_id").limit(0),
         Seq("staging_id"), "left_anti")
     // Counters over the PRE-decision staging, then folded to post-decision
-    // inside the 1-row frame: when nothing is unresolved, consolidation
-    // will rewrite READY -> SUCCESS, so report those rows as SUCCESS.
-    // sum() over an EMPTY issues frame (a fully clean CSV — the common
-    // case) yields NULL, so the issue counts normalize to 0 FIRST; the
-    // fold and every downstream getAs[Long] read then see real zeros.
-    val counters = Consolidate.jobCounters(stagingAfter, resolvedIssues)
+    // row-wise: when a job has nothing unresolved, consolidation will
+    // rewrite its READY -> SUCCESS, so report those rows as SUCCESS. A job
+    // with no issues (a fully clean CSV — the common case) has no
+    // issues-side row, so the counts normalize to 0 FIRST; the fold and
+    // every downstream getAs[Long] read then see real zeros.
+    val counters = Consolidate.jobCountersKeyed(stagingAfter, resolvedIssues)
+      .withColumn("total_issues", coalesce(col("total_issues"), lit(0L)))
       .withColumn("unresolved_issues", coalesce(col("unresolved_issues"), lit(0L)))
       .withColumn("ready_rows", coalesce(col("ready_rows"), lit(0L)))
       .withColumn("issue_rows", coalesce(col("issue_rows"), lit(0L)))
@@ -455,7 +237,7 @@ object Lifecycle {
       .withColumn("ready_rows",
         when(col("unresolved_issues") === 0, lit(0L)).otherwise(col("ready_rows")))
 
-    FlowResult(
+    KeyedFlowResult(
       stagingPre = stagingAfter,
       issues = resolvedIssues,
       issueItems = itemsAfter,

@@ -62,12 +62,54 @@ object JobDispatch {
   /** Outcome of one processed message (driver-side record). */
   case class MessageOutcome(job_id: Option[Int], body: String, outcome: String, detail: String)
 
-  /** One runnable message inside a batched wave. `body` is the raw message
-    * text — FAILED outcomes carry it (not the s3_key) so an external retry
-    * queue can re-enqueue the original message verbatim. */
+  /** One runnable message inside a wave. `body` is the raw message text —
+    * FAILED outcomes carry it (not the s3_key) so an external retry queue
+    * can re-enqueue the original message verbatim. */
   private case class WaveItem(
       idx: Int, jobId: Int, s3Key: String, body: String,
       userId: String, route: Router.Route)
+
+  /** Wave chunk bound: an AvailableNow drain of a deep backlog delivers ONE
+    * batch, and a single wave of 1000+ jobs would build 1000-branch union
+    * plans (superlinear optimizer time, codegen size limits, one cached
+    * frame per job held at once). Chunks commit sequentially; members are
+    * distinct jobs AND tenants, so chunk boundaries are semantically
+    * invisible. */
+  private val MaxWave = 64
+
+  private def debug(e: Exception): Unit =
+    if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
+
+  /** Jobs metadata (status, tenant) and staging presence of `ids`: one jobs
+    * lookup + one staging-presence aggregate, however many ids. */
+  private def lookup(
+      store: TableStore, ids: Seq[Int]): (Map[Int, (String, String)], Set[Int]) = {
+    val jobsMeta: Map[Int, (String, String)] =
+      if (store.exists("jobs"))
+        store.load("jobs").filter(col("job_id").isin(ids: _*))
+          .select("job_id", "job_status", "job_user_id").collect()
+          .map(r => r.getAs[Int]("job_id") ->
+            (r.getAs[String]("job_status"), r.getAs[String]("job_user_id"))).toMap
+      else Map.empty
+    val stagingJobs: Set[Int] =
+      if (jobsMeta.nonEmpty && store.exists("staging"))
+        store.load("staging").filter(col("staging_job_id").isin(ids: _*))
+          .select("staging_job_id").distinct().collect()
+          .map(_.getAs[Int]("staging_job_id")).toSet
+      else Set.empty
+    (jobsMeta, stagingJobs)
+  }
+
+  /** The outcome of a skip route (stale message, completed job); None for a
+    * runnable route. */
+  private def skipOutcome(jobId: Int, s3Key: String, route: Router.Route): Option[MessageOutcome] =
+    route match {
+      case Router.SkipMissingJob =>
+        Some(MessageOutcome(Some(jobId), s3Key, "SKIPPED", "job not found (stale message)"))
+      case Router.SkipCompleted =>
+        Some(MessageOutcome(Some(jobId), s3Key, "SKIPPED", "job already COMPLETED"))
+      case _ => None
+    }
 
   /** Process one micro-batch of raw message bodies against the store.
     * Message cardinality is jobs-per-trigger (control plane, not data
@@ -81,10 +123,10 @@ object JobDispatch {
     * PROCESSING update, one counters action, one contacts append, one
     * 3-table partition commit, one final jobs update — instead of ~10
     * Spark actions per message (the round-6 throughput floor). Messages
-    * that repeat a job or tenant already in the wave fall back to the
-    * sequential [[processOne]] path AFTER the wave commits, preserving the
-    * reference's sequential visibility (the second message for a tenant
-    * sees the first one's contacts). */
+    * that repeat a job or tenant already in the wave run AFTER the wave
+    * commits, each as a wave of one routed against the post-wave store,
+    * preserving the reference's sequential visibility (the second message
+    * for a tenant sees the first one's contacts). */
   def processBatch(
       spark: SparkSession,
       store: TableStore,
@@ -106,100 +148,84 @@ object JobDispatch {
       }
     }
 
-    // Route of every wave member, hoisted for the degraded-sequential path:
-    // once the wave has set statuses to PROCESSING, a replay must keep the
-    // route computed from the PRE-wave state.
+    // Route of every wave member, hoisted for the degraded path: once the
+    // wave has set statuses to PROCESSING, a replay must keep the route
+    // computed from the PRE-wave state.
     val waveRoutes = scala.collection.mutable.Map.empty[Int, Router.Route]
     if (valid.nonEmpty) try {
-      val ids = valid.map(_._2).distinct.toSeq
-      // One jobs lookup + one staging-presence aggregate for the whole batch
-      // (vs a lookup + an isEmpty scan per message).
-      val jobsMeta: Map[Int, (String, String)] =
-        if (store.exists("jobs"))
-          store.load("jobs").filter(col("job_id").isin(ids: _*))
-            .select("job_id", "job_status", "job_user_id").collect()
-            .map(r => r.getAs[Int]("job_id") ->
-              (r.getAs[String]("job_status"), r.getAs[String]("job_user_id"))).toMap
-        else Map.empty
-      val stagingJobs: Set[Int] =
-        if (jobsMeta.nonEmpty && store.exists("staging"))
-          store.load("staging").filter(col("staging_job_id").isin(ids: _*))
-            .select("staging_job_id").distinct().collect()
-            .map(_.getAs[Int]("staging_job_id")).toSet
-        else Set.empty
+      val (jobsMeta, stagingJobs) = lookup(store, valid.map(_._2).distinct.toSeq)
 
       val wave = scala.collection.mutable.ArrayBuffer.empty[WaveItem]
       val tail = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String, String)]
       val seenJobs = scala.collection.mutable.Set.empty[Int]
       val seenUsers = scala.collection.mutable.Set.empty[String]
       valid.foreach { case (i, jobId, s3Key, body) =>
-        jobsMeta.get(jobId) match {
+        val meta = jobsMeta.get(jobId)
+        val route = Router.route(meta.map(_._1), stagingJobs(jobId))
+        skipOutcome(jobId, s3Key, route) match {
+          case Some(o) => outcomes(i) = o
           case None =>
-            outcomes(i) =
-              MessageOutcome(Some(jobId), s3Key, "SKIPPED", "job not found (stale message)")
-          case Some((status, userId)) =>
-            Router.route(Some(status), stagingJobs(jobId)) match {
-              case Router.SkipCompleted =>
-                outcomes(i) =
-                  MessageOutcome(Some(jobId), s3Key, "SKIPPED", "job already COMPLETED")
-              case route if !seenJobs(jobId) && !seenUsers(userId) =>
-                seenJobs += jobId; seenUsers += userId
-                waveRoutes(i) = route
-                wave += WaveItem(i, jobId, s3Key, body, userId, route)
-              case _ => tail += ((i, jobId, s3Key, body))
-            }
+            val userId = meta.get._2
+            if (!seenJobs(jobId) && !seenUsers(userId)) {
+              seenJobs += jobId; seenUsers += userId
+              waveRoutes(i) = route
+              wave += WaveItem(i, jobId, s3Key, body, userId, route)
+            } else tail += ((i, jobId, s3Key, body))
         }
       }
 
-      // Bounded wave size: an AvailableNow drain of a deep backlog delivers
-      // ONE batch, and a single wave of 1000+ jobs would build 1000-branch
-      // union plans (superlinear optimizer time, codegen size limits, one
-      // cached frame per job held at once). Chunks commit sequentially;
-      // members are distinct jobs AND tenants, so chunk boundaries are
-      // semantically invisible.
-      val maxWave = sys.env.get("GRAFT_MAX_WAVE").flatMap(_.toIntOption).getOrElse(64)
-      wave.grouped(math.max(1, maxWave)).foreach { chunk =>
-        processWave(spark, store, chunk.toSeq, resolveCsv)
+      wave.grouped(MaxWave).foreach { chunk =>
+        processWave(spark, store, chunk.toSeq, resolveCsv, replay = true)
           .foreach { case (i, o) => outcomes(i) = o }
       }
-      // Sequential tail: repeated job/tenant messages re-route against the
-      // post-wave store state, exactly as back-to-back micro-batches would.
+      // Tail: repeated job/tenant messages re-route against the post-wave
+      // store state, exactly as back-to-back micro-batches would.
       tail.foreach { case (i, jobId, s3Key, body) =>
-        outcomes(i) = runOneCaught(spark, store, jobId, s3Key, body, resolveCsv)
+        outcomes(i) = runAlone(spark, store, jobId, s3Key, body, resolveCsv, None)
       }
     } catch {
       case e: Exception =>
         // The BATCHED routing itself failed (a store hiccup in the shared
         // jobs/staging reads or a status write) — degrade every unresolved
-        // message to the sequential path, which isolates failures per job
-        // and keeps the stream alive (the error-isolation contract). Wave
-        // members replay with their ALREADY-COMPUTED route: the wave set
-        // them PROCESSING, so a re-route would send a Reprocessing job
-        // through the Initial branch.
-        if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
+        // message to a wave of one, which isolates failures per job and
+        // keeps the stream alive (the error-isolation contract). Wave
+        // members replay with their ALREADY-COMPUTED route.
+        debug(e)
         valid.foreach { case (i, jobId, s3Key, body) =>
           if (outcomes(i) == null)
-            outcomes(i) =
-              runOneCaught(spark, store, jobId, s3Key, body, resolveCsv, waveRoutes.get(i))
+            outcomes(i) = runAlone(spark, store, jobId, s3Key, body, resolveCsv, waveRoutes.get(i))
         }
     }
     outcomes.toSeq
   }
 
-  private def runOneCaught(
+  /** Route one message against the LIVE store and run it as a wave of one
+    * that does not replay. `forcedRoute` is a replay's route computed from
+    * the PRE-wave job state, because the wave already moved its members to
+    * PROCESSING — re-routing now would send a NEEDS_REVIEW (Reprocessing)
+    * job down the Initial branch. Skip routes (missing job, COMPLETED)
+    * still come from the live state: they guard conditions a forced route
+    * must not override. Never throws: a failure is a FAILED outcome. */
+  private def runAlone(
       spark: SparkSession, store: TableStore,
       jobId: Int, s3Key: String, body: String,
       resolveCsv: String => String,
-      forcedRoute: Option[Router.Route] = None): MessageOutcome =
-    try processOne(spark, store, jobId, s3Key, resolveCsv, forcedRoute)
-    catch {
+      forcedRoute: Option[Router.Route]): MessageOutcome =
+    try {
+      val (jobsMeta, stagingJobs) = lookup(store, Seq(jobId))
+      val liveRoute = Router.route(jobsMeta.get(jobId).map(_._1), stagingJobs(jobId))
+      skipOutcome(jobId, s3Key, liveRoute).getOrElse {
+        val w = WaveItem(0, jobId, s3Key, body, jobsMeta(jobId)._2,
+          forcedRoute.getOrElse(liveRoute))
+        processWave(spark, store, Seq(w), resolveCsv, replay = false).head._2
+      }
+    } catch {
       case e: Exception =>
-        if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
+        debug(e)
         // Not acked in the reference (visibility timeout redelivers); here
         // the source offset IS committed, so the failure is recorded — with
         // the RAW message body, re-enqueueable verbatim — for an external
-        // retry queue. Job state was set to FAILED by processOne's error
-        // path.
+        // retry queue.
         MessageOutcome(Some(jobId), body, "FAILED", String.valueOf(e.getMessage))
     }
 
@@ -207,177 +233,177 @@ object JobDispatch {
     * job_id-keyed Catalyst plan per route: the wave's CSV inputs union
     * under a `job_id` tag and classify/issues/consolidate compile ONCE
     * ([[Lifecycle.initialProcessKeyed]]/[[Lifecycle.reprocessKeyed]]) —
-    * every reference join/agg already carries `staging_job_id`, so one plan
-    * serves N jobs at constant compile cost (the round-7 floor was ~0.5 s
-    * of plan compilation per job, not data volume). Store round trips stay
+    * every reference join/agg carries the job id, so one plan serves N
+    * jobs at constant compile cost (the round-7 floor was ~0.5 s of plan
+    * compilation per job, not data volume). Store round trips stay
     * batched: one PROCESSING update, one counters action, one contacts
     * append, one 3-table partition commit, one jobs update per wave.
     *
-    * Per-message CSV build failures isolate (that job goes FAILED, the rest
-    * continue); a failure in a shared action falls back to sequential
-    * [[processOne]] WITH the pre-wave route so one bad job still can't sink
-    * its wave-mates. Returns outcomes keyed by original message index. */
+    * Per-message CSV failures isolate (that job goes FAILED, the rest
+    * continue). A shared failure (keyed-plan build, counters, commit) of a
+    * wave built from a batch (`replay`) replays each affected member ONCE
+    * as a wave of one WITH its pre-wave route, so one bad job can't sink its
+    * wave-mates; a wave of one that is itself a replay, a tail message or
+    * a direct call fails its member with the error instead. Returns one
+    * outcome per member, keyed by original message index. */
   private def processWave(
       spark: SparkSession,
       store: TableStore,
       wave: Seq[WaveItem],
-      resolveCsv: String => String): Seq[(Int, MessageOutcome)] = {
+      resolveCsv: String => String,
+      replay: Boolean): Seq[(Int, MessageOutcome)] = {
     import graft.pipeline.Lifecycle.KeyedFlowResult
-    if (wave.isEmpty) return Seq.empty
     setJobStatusAll(store, wave.map(_.jobId), JobStatus.Processing)
 
-    def tbl(name: String, shape: StructType): DataFrame =
-      if (store.exists(name)) store.load(name) else emptyLike(spark, shape)
-    val staging = tbl("staging", stagingShape)
-    val issues = tbl("issues", issuesShape)
-    val items = tbl("issue_items", itemsShape)
-    // The contacts table only matters through this wave's OWN tenants: the
-    // existing-email check is tenant-scoped by the reference (ADR-005) and
-    // a contact row carrying one of this wave's staging_ids can only have
-    // been written by the same job (= same tenant), so the idempotency
-    // anti-join needs no other tenant either. The explicit filter turns the
-    // per-wave contacts read into a partition-pruned scan of <= wave-size
-    // tenant dirs instead of the whole corpus (contacts is
-    // tenant-partitioned) — at 100 TB that is the difference between a
-    // bounded read and a full-table scan per commit.
-    val waveTenants = wave.map(_.userId).distinct
-    val contacts = tbl("contacts", contactsShape)
-      .filter(col("contacts_user_id").isin(waveTenants: _*))
-
-    // Which wave jobs actually HAVE prior state, probed once per table for
-    // the whole wave. A wave of first-pass jobs (the steady-stream common
-    // case) then feeds the keyed plan a known-empty LOCAL relation:
-    // Catalyst's empty-relation propagation collapses the J1 anti-join and
-    // the issue/link merge branches; otherwise ONE filtered scan serves
-    // every job in the keyed plan.
-    val waveIds = wave.map(_.jobId)
-    def presentIn(name: String, partCol: String): Set[Int] =
-      if (!store.exists(name)) Set.empty
-      else store.load(name).filter(col(partCol).isin(waveIds: _*))
-        .select(partCol).distinct().collect().map(_.getAs[Int](partCol)).toSet
-    val hasStaging = presentIn("staging", "staging_job_id")
-    val hasIssues = presentIn("issues", "issues_job_id")
-    val hasItems = presentIn("issue_items", "issues_job_id")
-    def slice(base: DataFrame, shape: StructType, partCol: String,
-        present: Set[Int], ids: Seq[Int]): DataFrame = {
-      val have = ids.filter(present)
-      if (have.isEmpty) emptyLike(spark, shape)
-      else base.filter(col(partCol).isin(have: _*))
-    }
-
-    val failed = scala.collection.mutable.ArrayBuffer.empty[(Int, MessageOutcome)]
-    def fail(w: WaveItem, detail: String): Unit = {
+    val done = scala.collection.mutable.ArrayBuffer.empty[(Int, MessageOutcome)]
+    def fail(w: WaveItem, detail: String): (Int, MessageOutcome) = {
       // The status write must not mask the original failure (or kill the
       // wave from inside a catch handler).
       try setJobStatus(store, w.jobId, JobStatus.Failed)
       catch { case _: Exception => () }
-      failed += w.idx -> MessageOutcome(Some(w.jobId), w.body, "FAILED", detail)
+      w.idx -> MessageOutcome(Some(w.jobId), w.body, "FAILED", detail)
     }
-
-    // Sniff every initial-route CSV (per-job isolation for bad paths /
-    // sniffs), then read the healthy ones as ONE multi-file scan per sniff
-    // group — plan-LEAF count, not data volume, was the wave's remaining
-    // floor (a 64-leaf per-file union measured 7.8 s against 0.44 s for
-    // one 64-file scan at the same data; BASELINE.md round 8).
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val (reproAll, initialAll) = wave.partition(_.route == Router.Reprocessing)
-    val sniffed: Seq[(WaveItem, CsvSource.WaveFile)] = initialAll.flatMap { w =>
-      try {
-        val p = resolveCsv(w.s3Key)
-        val sn = graft.ingest.CsvSniffer.sniff(p, hconf)
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val size = hp.getFileSystem(hconf).getFileStatus(hp).getLen
-        Some(w -> CsvSource.WaveFile(w.jobId, p, sn, size))
-      } catch {
-        case e: Exception =>
-          if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
-          fail(w, String.valueOf(e.getMessage)); None
+    // Safe because the pipeline is idempotent (J1 anti-join +
+    // staging_id-unique contacts insert): a partially committed wave
+    // replays as a no-op for the already-landed rows.
+    def onFailure(ws: Seq[WaveItem], e: Exception): Seq[(Int, MessageOutcome)] = {
+      debug(e)
+      ws.map { w =>
+        if (replay)
+          w.idx -> runAlone(spark, store, w.jobId, w.s3Key, w.body, resolveCsv, Some(w.route))
+        else fail(w, String.valueOf(e.getMessage))
       }
-    }
-    val keyedInput: Option[DataFrame] =
-      if (sniffed.isEmpty) None
-      else Some(CsvSource.readWaveKeyed(spark, sniffed.map(_._2)))
-    // Empty-CSV detection (processor.py:149-151 parity): the job ids with
-    // at least one row, in ONE action over the shared scan. On a runtime
-    // read failure, degrade to per-file probes (binary-splitting around
-    // the poison) — a job whose read still throws counts as non-empty so
-    // its REAL error surfaces at commit, attributed to the right message.
-    val presentJobs: Set[Int] = keyedInput match {
-      case None => Set.empty
-      case Some(df) =>
-        try df.select("job_id").distinct().collect().map(_.getInt(0)).toSet
-        catch {
-          case e: Exception =>
-            if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
-            val perFile = sniffed.map { case (w, f) =>
-              w.idx -> CsvSource.toContract(CsvSource.readWith(spark, f.path, f.sniff))
-            }
-            val emptyIdx = probeEmptyIdx(perFile)
-            sniffed.collect { case (w, _) if !emptyIdx(w.idx) => w.jobId }.toSet
-        }
-    }
-    val initialRunnable = sniffed.map(_._1).filter { w =>
-      val ok = presentJobs(w.jobId)
-      // Same message the sequential require(!input.isEmpty, ...) raises.
-      if (!ok) fail(w, s"requirement failed: ${Lifecycle.EmptyCsvMessage}")
-      ok
-    }
-
-    // ONE keyed plan per route present in the wave (at most two plan
-    // compiles per wave, independent of wave size).
-    def usersDf(ws: Seq[WaveItem]): DataFrame = {
-      import spark.implicits._
-      ws.map(w => (w.jobId, w.userId)).toDF("job_id", "job_user_id")
     }
     val built = scala.collection.mutable.ArrayBuffer.empty[(Seq[WaveItem], KeyedFlowResult)]
-    val degraded = scala.collection.mutable.ArrayBuffer.empty[(Int, MessageOutcome)]
-    // A keyed-plan BUILD failure (rare — plan construction, not execution)
-    // must not sink the whole route: degrade its members to the sequential
-    // path with their pre-wave routes, where per-job isolation attributes
-    // the real error to the right message and healthy jobs still commit.
-    def degrade(ws: Seq[WaveItem]): Unit =
-      ws.foreach { w =>
-        degraded += w.idx ->
-          runOneCaught(spark, store, w.jobId, w.s3Key, w.body, resolveCsv, Some(w.route))
-      }
-    if (initialRunnable.nonEmpty) try {
-      val ids = initialRunnable.map(_.jobId)
-      built += initialRunnable -> Lifecycle.initialProcessKeyed(
-        keyedInput.get, usersDf(initialRunnable),
-        slice(staging, stagingShape, "staging_job_id", hasStaging, ids),
-        slice(issues, issuesShape, "issues_job_id", hasIssues, ids),
-        slice(items, itemsShape, "issues_job_id", hasItems, ids),
-        contacts)
-    } catch {
-      case e: Exception =>
-        if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
-        degrade(initialRunnable)
-    }
-    if (reproAll.nonEmpty) try {
-      val ids = reproAll.map(_.jobId)
-      built += reproAll -> Lifecycle.reprocessKeyed(
-        slice(staging, stagingShape, "staging_job_id", hasStaging, ids),
-        slice(issues, issuesShape, "issues_job_id", hasIssues, ids),
-        slice(items, itemsShape, "issues_job_id", hasItems, ids),
-        contacts, usersDf(reproAll))
-    } catch {
-      case e: Exception =>
-        if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
-        degrade(reproAll)
-    }
-    if (built.isEmpty) return failed.toSeq ++ degraded.toSeq
 
     try {
-      val debug = sys.env.contains("GRAFT_DISPATCH_DEBUG")
+      def tbl(name: String, shape: StructType): DataFrame =
+        if (store.exists(name)) store.load(name) else emptyLike(spark, shape)
+      val staging = tbl("staging", stagingShape)
+      val issues = tbl("issues", issuesShape)
+      val items = tbl("issue_items", itemsShape)
+      // The contacts table only matters through this wave's OWN tenants: the
+      // existing-email check is tenant-scoped by the reference (ADR-005) and
+      // a contact row carrying one of this wave's staging_ids can only have
+      // been written by the same job (= same tenant), so the idempotency
+      // anti-join needs no other tenant either. The explicit filter turns the
+      // per-wave contacts read into a partition-pruned scan of <= wave-size
+      // tenant dirs instead of the whole corpus (contacts is
+      // tenant-partitioned) — at 100 TB that is the difference between a
+      // bounded read and a full-table scan per commit.
+      val waveTenants = wave.map(_.userId).distinct
+      val contacts = tbl("contacts", contactsShape)
+        .filter(col("contacts_user_id").isin(waveTenants: _*))
+
+      // Which wave jobs actually HAVE prior state, probed once per table for
+      // the whole wave. A wave of first-pass jobs (the steady-stream common
+      // case) then feeds the keyed plan a known-empty LOCAL relation:
+      // Catalyst's empty-relation propagation collapses the J1 anti-join and
+      // the issue/link merge branches; otherwise ONE filtered scan serves
+      // every job in the keyed plan.
+      val waveIds = wave.map(_.jobId)
+      def presentIn(name: String, partCol: String): Set[Int] =
+        if (!store.exists(name)) Set.empty
+        else store.load(name).filter(col(partCol).isin(waveIds: _*))
+          .select(partCol).distinct().collect().map(_.getAs[Int](partCol)).toSet
+      val hasStaging = presentIn("staging", "staging_job_id")
+      val hasIssues = presentIn("issues", "issues_job_id")
+      val hasItems = presentIn("issue_items", "issues_job_id")
+      def slice(base: DataFrame, shape: StructType, partCol: String,
+          present: Set[Int], ids: Seq[Int]): DataFrame = {
+        val have = ids.filter(present)
+        if (have.isEmpty) emptyLike(spark, shape)
+        else base.filter(col(partCol).isin(have: _*))
+      }
+
+      // Sniff every initial-route CSV (per-job isolation for bad paths /
+      // sniffs), then read the healthy ones as ONE multi-file scan per sniff
+      // group — plan-LEAF count, not data volume, was the wave's remaining
+      // floor (a 64-leaf per-file union measured 7.8 s against 0.44 s for
+      // one 64-file scan at the same data; BASELINE.md round 8).
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val (reproAll, initialAll) = wave.partition(_.route == Router.Reprocessing)
+      val sniffed: Seq[(WaveItem, CsvSource.WaveFile)] = initialAll.flatMap { w =>
+        try {
+          val p = resolveCsv(w.s3Key)
+          val sn = graft.ingest.CsvSniffer.sniff(p, hconf)
+          val hp = new org.apache.hadoop.fs.Path(p)
+          val size = hp.getFileSystem(hconf).getFileStatus(hp).getLen
+          Some(w -> CsvSource.WaveFile(w.jobId, p, sn, size))
+        } catch {
+          case e: Exception =>
+            debug(e)
+            done += fail(w, String.valueOf(e.getMessage)); None
+        }
+      }
+      val keyedInput: Option[DataFrame] =
+        if (sniffed.isEmpty) None
+        else Some(CsvSource.readWaveKeyed(spark, sniffed.map(_._2)))
+      // Empty-CSV detection (processor.py:149-151 parity): the job ids with
+      // at least one row, in ONE action over the shared scan. On a runtime
+      // read failure, degrade to per-file probes (binary-splitting around
+      // the poison) — a job whose read still throws counts as non-empty so
+      // its REAL error surfaces at commit, attributed to the right message.
+      val presentJobs: Set[Int] = keyedInput match {
+        case None => Set.empty
+        case Some(df) =>
+          try df.select("job_id").distinct().collect().map(_.getInt(0)).toSet
+          catch {
+            case e: Exception =>
+              debug(e)
+              val perFile = sniffed.map { case (w, f) =>
+                w.idx -> CsvSource.toContract(CsvSource.readWith(spark, f.path, f.sniff))
+              }
+              val emptyIdx = probeEmptyIdx(perFile)
+              sniffed.collect { case (w, _) if !emptyIdx(w.idx) => w.jobId }.toSet
+          }
+      }
+      val initialRunnable = sniffed.map(_._1).filter { w =>
+        val ok = presentJobs(w.jobId)
+        if (!ok) done += fail(w, "requirement failed: CSV file is empty")
+        ok
+      }
+
+      // ONE keyed plan per route present in the wave (at most two plan
+      // compiles per wave, independent of wave size). A keyed-plan BUILD
+      // failure (rare — plan construction, not execution) fails only its
+      // own route's members.
+      def usersDf(ws: Seq[WaveItem]): DataFrame = {
+        import spark.implicits._
+        ws.map(w => (w.jobId, w.userId)).toDF("job_id", "job_user_id")
+      }
+      def build(ws: Seq[WaveItem])(flow: Seq[Int] => KeyedFlowResult): Unit =
+        if (ws.nonEmpty) {
+          try built += ws -> flow(ws.map(_.jobId))
+          catch { case e: Exception => done ++= onFailure(ws, e) }
+        }
+      build(initialRunnable) { ids =>
+        Lifecycle.initialProcessKeyed(
+          keyedInput.get, usersDf(initialRunnable),
+          slice(staging, stagingShape, "staging_job_id", hasStaging, ids),
+          slice(issues, issuesShape, "issues_job_id", hasIssues, ids),
+          slice(items, itemsShape, "issues_job_id", hasItems, ids),
+          contacts)
+      }
+      build(reproAll) { ids =>
+        Lifecycle.reprocessKeyed(
+          slice(staging, stagingShape, "staging_job_id", hasStaging, ids),
+          slice(issues, issuesShape, "issues_job_id", hasIssues, ids),
+          slice(items, itemsShape, "issues_job_id", hasItems, ids),
+          contacts, usersDf(reproAll))
+      }
+      if (built.isEmpty) return done.toSeq
+
+      val debugTimes = sys.env.contains("GRAFT_DISPATCH_DEBUG")
       var t0 = System.nanoTime()
-      def lap(tag: String): Unit = if (debug) {
+      def lap(tag: String): Unit = if (debugTimes) {
         System.err.println(f"[wave] $tag ${(System.nanoTime() - t0) / 1e9}%.1f s")
         t0 = System.nanoTime()
       }
       // Counters materialize BEFORE the commits (their plans read the
-      // pre-commit snapshots) — ONE action for the whole wave, which fixes
-      // every job's ADR-002 decision and warms the keyed classify cache for
-      // the commit materializations below.
+      // pre-commit snapshots, which the commit replaces) — ONE action for
+      // the whole wave, which fixes every job's ADR-002 decision and warms
+      // the keyed classify cache for the commit materializations below.
       val counterRows = built.map(_._2.counters)
         .reduce(_.unionByName(_)).collect()
         .map(r => r.getAs[Int]("job_id") -> r).toMap
@@ -391,7 +417,9 @@ object JobDispatch {
       // partition swap. commitAll stages every plan against the pre-commit
       // snapshots before mutating anything — the classify subtree reads
       // contacts, so an append-then-write sequence would re-evaluate the
-      // staging plan against the wave's own appended contacts.
+      // staging plan against the wave's own appended contacts (flipping its
+      // READY rows to EXISTING_EMAIL). Only the wave's own partitions are
+      // replaced: other jobs' files are never rewritten.
       val jobIds = built.toSeq.flatMap(_._1).map(_.jobId)
       // Cluster the multi-tenant contacts append by its partition key for
       // the same reason the store clusters multi-job partition commits:
@@ -416,29 +444,25 @@ object JobDispatch {
         val c = counterRows(w.jobId)
         JobUpdate(w.jobId, statusOf(w.jobId),
           totalRows = c.getAs[Long]("total_rows"),
-          processedRows = c.getAs[Long]("total_rows"),
+          processedRows = c.getAs[Long]("total_rows"), // all rows seen (processor.py:313-330)
           issueCount = c.getAs[Long]("unresolved_issues"))
       })
-      failed.toSeq ++ degraded.toSeq ++ built.toSeq.flatMap(_._1).map { w =>
+      done ++= built.toSeq.flatMap(_._1).map { w =>
         w.idx -> MessageOutcome(Some(w.jobId), w.s3Key, statusOf(w.jobId), "ok")
       }
     } catch {
       case e: Exception =>
-        if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
-        // Shared-action failure: replay each wave job individually — WITH
-        // its pre-wave route (statuses are PROCESSING now, so a re-route
-        // would misroute Reprocessing jobs to Initial) — so the culprit
-        // fails alone. Safe because the pipeline is idempotent (J1
-        // anti-join + staging_id-unique contacts insert): a partially
-        // committed wave replays as a no-op for the already-landed rows.
-        failed.toSeq ++ degraded.toSeq ++ built.toSeq.flatMap(_._1).map { w =>
-          w.idx -> runOneCaught(spark, store, w.jobId, w.s3Key, w.body, resolveCsv, Some(w.route))
-        }
+        // A shared step failed: every member without an outcome yet takes
+        // the failure path (statuses are PROCESSING now, so a replay keeps
+        // the pre-wave route).
+        val settled = done.map(_._1).toSet
+        done ++= onFailure(wave.filterNot(w => settled(w.idx)), e)
     } finally {
       // Release the keyed classify caches — a long-running stream would
       // otherwise hold one dead cached frame per wave in the storage pool.
       built.foreach { case (_, k) => k.unpersist() }
     }
+    done.toSeq
   }
 
   /** Probe a set of (idx, plan) inputs for emptiness in as few actions as
@@ -463,7 +487,7 @@ object JobDispatch {
       try probe(group)
       catch {
         case e: Exception =>
-          if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
+          debug(e)
           if (group.length <= 1) Set.empty
           else {
             val (l, r) = group.splitAt(group.length / 2)
@@ -477,129 +501,17 @@ object JobDispatch {
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Route + run one job message end-to-end (the reference's
-    * Processor.process_job, §2.11 flow router). */
+    * Processor.process_job, §2.11 flow router) as a wave of one that does
+    * not replay. Never throws: a failure returns a FAILED outcome and leaves
+    * the job FAILED. A direct call has no raw message body, so its outcomes
+    * carry `s3Key` in the body field. */
   def processOne(
       spark: SparkSession,
       store: TableStore,
       jobId: Int,
       s3Key: String,
       resolveCsv: String => String): MessageOutcome =
-    processOne(spark, store, jobId, s3Key, resolveCsv, None)
-
-  /** [[processOne]] with an optional FORCED route: a wave replay passes the
-    * route computed from the PRE-wave job state, because the wave already
-    * moved its members to PROCESSING — re-routing now would send a
-    * NEEDS_REVIEW (Reprocessing) job down the Initial branch. Skip routes
-    * (missing job, COMPLETED) still come from the live state: they guard
-    * conditions a forced route must not override. */
-  def processOne(
-      spark: SparkSession,
-      store: TableStore,
-      jobId: Int,
-      s3Key: String,
-      resolveCsv: String => String,
-      forcedRoute: Option[Router.Route]): MessageOutcome = {
-    import graft.model.Schemas
-
-    val jobs = if (store.exists("jobs")) store.load("jobs") else null
-    val jobRow = Option(jobs).flatMap(_.filter(col("job_id") === jobId).collect().headOption)
-    val jobStatus = jobRow.map(_.getAs[String]("job_status"))
-    val userId = jobRow.map(_.getAs[String]("job_user_id")).getOrElse("")
-
-    def tbl(name: String, schema: StructType): DataFrame =
-      if (store.exists(name)) store.load(name) else emptyLike(spark, schema)
-    val staging = tbl("staging", stagingShape)
-    val hasStaging = store.exists("staging") &&
-      !staging.filter(col("staging_job_id") === jobId).isEmpty
-
-    val liveRoute = Router.route(jobStatus, hasStaging)
-    val effective = forcedRoute match {
-      case Some(r)
-        if liveRoute != Router.SkipMissingJob && liveRoute != Router.SkipCompleted => r
-      case _ => liveRoute
-    }
-    effective match {
-      case Router.SkipMissingJob =>
-        MessageOutcome(Some(jobId), s3Key, "SKIPPED", "job not found (stale message)")
-      case Router.SkipCompleted =>
-        MessageOutcome(Some(jobId), s3Key, "SKIPPED", "job already COMPLETED")
-      case route =>
-        setJobStatus(store, jobId, JobStatus.Processing)
-        try {
-          val issues = tbl("issues", issuesShape)
-          val items = tbl("issue_items", itemsShape)
-          // Tenant-pruned contacts read (same argument as the wave path:
-          // existing-email is tenant-scoped, and this job's staging_ids can
-          // only collide with its own tenant's contacts).
-          val contacts = tbl("contacts", contactsShape)
-            .filter(col("contacts_user_id") === userId)
-          // hasStaging was already probed for routing: a first-pass job gets
-          // a known-empty local relation so Catalyst collapses the J1
-          // anti-join branch instead of re-scanning the store (same trick as
-          // the wave's batched presence probes).
-          val jobStaging =
-            if (hasStaging) staging.filter(col("staging_job_id") === jobId)
-            else emptyLike(spark, stagingShape)
-          val result = route match {
-            case Router.Reprocessing =>
-              Lifecycle.reprocess(
-                jobStaging,
-                issues.filter(col("issues_job_id") === jobId),
-                items.filter(col("issues_job_id") === jobId),
-                contacts, jobId, userId)
-            case _ =>
-              val input = CsvSource.toContract(CsvSource.read(spark, resolveCsv(s3Key)))
-              Lifecycle.initialProcess(
-                input, jobId, userId,
-                jobStaging,
-                issues.filter(col("issues_job_id") === jobId),
-                items.filter(col("issues_job_id") === jobId),
-                contacts)
-          }
-          // Per-job commit: normalize THIS job's result rows to the canonical
-          // table shapes (columns absent from a result frame become typed
-          // nulls) and replace only this job's partitions. Other jobs' files
-          // are never rewritten, and their rows never flow through this
-          // job's plan — at 100 TB a message commit touches one partition,
-          // not the corpus.
-          def norm(df: DataFrame, shape: StructType): DataFrame = normTo(df, shape)
-          // Counters must materialize BEFORE the commit: their plan reads the
-          // pre-commit table snapshots, which the commit replaces — a
-          // post-commit collect() hits deleted files from the second job of a
-          // session onward. (The contacts append runs first for the same
-          // reason: its plan reads the pre-commit staging snapshot.)
-          val c = result.counters.collect().head
-          val status = result.statusOf(c)
-          val clean = result.isClean(c)
-          // One two-phase commit (append + partition swaps): every plan is
-          // staged against the pre-commit snapshots before any mutation, so
-          // the staging plan can never observe this job's own appended
-          // contacts (classify reads contacts; a sequential append-then-
-          // write would flip the job's READY rows to EXISTING_EMAIL when
-          // Spark re-caches the classify frame on the contacts write).
-          store.commitAll(
-            Seq("contacts" -> result.newContactsDecided(clean)),
-            Seq(
-              graft.io.PartitionCommit("staging", norm(result.stagingDecided(clean), stagingShape),
-                "staging_job_id", jobId),
-              graft.io.PartitionCommit("issues", norm(result.issues, issuesShape),
-                "issues_job_id", jobId),
-              graft.io.PartitionCommit("issue_items", norm(result.issueItems, itemsShape),
-                "issues_job_id", jobId)))
-          // W7/W8 last (crash-repairable): status + counters in one 1-row update.
-          updateJob(store, jobId, status,
-            totalRows = c.getAs[Long]("total_rows"),
-            processedRows = c.getAs[Long]("total_rows"), // all rows seen (processor.py:313-330)
-            issueCount = c.getAs[Long]("unresolved_issues"))
-          result.unpersist() // release the classify cache (post-commit)
-          MessageOutcome(Some(jobId), s3Key, status, "ok")
-        } catch {
-          case e: Exception =>
-            setJobStatus(store, jobId, JobStatus.Failed)
-            throw e
-        }
-    }
-  }
+    runAlone(spark, store, jobId, s3Key, s3Key, resolveCsv, None)
 
   /** Add any missing metadata columns as typed nulls (seed jobs tables can
     * stay minimal; columns appear on first use). */
@@ -645,17 +557,11 @@ object JobDispatch {
       jobId: Int, status: String,
       totalRows: Long, processedRows: Long, issueCount: Long)
 
-  /** W7+W8: status + progress counters + process_end in one update
-    * (processor.py:313-330, job_repository.py:32-110). Metadata columns are
-    * created on first use so seed jobs tables can stay minimal. */
-  def updateJob(
-      store: TableStore, jobId: Int, status: String,
-      totalRows: Long, processedRows: Long, issueCount: Long): Unit =
-    updateJobs(store, Seq(JobUpdate(jobId, status, totalRows, processedRows, issueCount)))
-
-  /** W7+W8, batched: every job's status + counters land in ONE jobs-table
-    * write (a broadcast-joined update — the jobs table is control-plane
-    * small, the updates list is ≤ messages-per-trigger). */
+  /** W7+W8: every job's status + progress counters + process_end land in
+    * ONE jobs-table write (processor.py:313-330, job_repository.py:32-110) —
+    * a broadcast-joined update: the jobs table is control-plane small, the
+    * updates list is ≤ messages-per-trigger. Metadata columns are created
+    * on first use so seed jobs tables can stay minimal. */
   def updateJobs(store: TableStore, updates: Seq[JobUpdate]): Unit = {
     if (updates.isEmpty || !store.exists("jobs")) return
     val jobs = ensureCols(store.load("jobs"),
@@ -719,9 +625,7 @@ object JobDispatch {
         // safe here — no plan from this batch is still unmaterialized).
         if (maintainEvery > 0 && batches.incrementAndGet() % maintainEvery == 0)
           try store.maintain(maintainedTables)
-          catch { case e: Exception =>
-            if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
-          }
+          catch { case e: Exception => debug(e) }
       }
       .start()
   }

@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import graft.pipeline.OneJob
 import graft.model.Schemas.{JobStatus, StagingStatus}
 import org.apache.spark.sql.functions._
 
@@ -8,6 +9,7 @@ import org.apache.spark.sql.functions._
 class ConsolidateSpec extends SparkSpec {
   import spark.implicits._
 
+  // One job (1) of tenant u1.
   private val staging = Seq(
     (1L, "a@b.co", "Ann", "Bee", "Acme", StagingStatus.Ready),
     (2L, "c@d.co", "Cat", "Dee", "", StagingStatus.Ready),   // missing field: skipped
@@ -15,9 +17,11 @@ class ConsolidateSpec extends SparkSpec {
     (4L, "g@h.co", "Gus", "Hay", "Co", StagingStatus.Discard)
   ).toDF("staging_id", "staging_email", "staging_first_name",
     "staging_last_name", "staging_company", "staging_status")
+    .withColumn("staging_job_id", lit(1))
 
   test("readyToContacts projects only READY rows with all fields present") {
-    val contacts = Consolidate.readyToContacts(staging, "u1").collect()
+    val contacts = Consolidate.readyToContactsKeyed(staging, OneJob.jobUsers(spark, 1, "u1"))
+      .collect()
     assert(contacts.length === 1)
     val c = contacts.head
     assert(c.getAs[Long]("staging_id") === 1L)
@@ -35,7 +39,7 @@ class ConsolidateSpec extends SparkSpec {
   test("jobCounters: totals + gating unresolved count") {
     val issues = Seq((1, "T", "k1", false), (1, "T", "k2", true))
       .toDF("issues_job_id", "issue_type", "issue_key", "issue_resolved")
-    val r = Consolidate.jobCounters(staging, issues).head()
+    val r = Consolidate.jobCountersKeyed(staging, issues).head()
     assert(r.getAs[Long]("total_rows") === 4L)
     assert(r.getAs[Long]("ready_rows") === 2L)
     assert(r.getAs[Long]("issue_rows") === 1L)

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
-import graft.pipeline.Lifecycle
+import graft.pipeline.OneJob
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
@@ -78,15 +78,15 @@ class PropertiesSpec extends SparkSpec {
   test("property: initial processing is a fixed point under replay (any prefix staged)") {
     // Whatever subset of rows landed before a crash, re-running converges to
     // the same final state — the at-least-once contract (README ADR-001).
-    // (the empty prefix is excluded: an empty CSV raises by contract,
+    // (the empty prefix is excluded: an empty CSV fails its job by contract,
     // covered in LifecycleSpec)
     samples(Gen.someOf(scenarioRows), 5).map(_.toSeq).filter(_.nonEmpty).foreach { staged =>
-      val full = Lifecycle.initialProcess(anyInput(scenarioRows), 1, "u1",
+      val full = OneJob.initial(anyInput(scenarioRows), 1, "u1",
         emptyStaging, emptyIssues, emptyItems, contacts)
-      val partial = Lifecycle.initialProcess(anyInput(staged.toSeq), 1, "u1",
+      val partial = OneJob.initial(anyInput(staged.toSeq), 1, "u1",
         emptyStaging, emptyIssues, emptyItems, contacts)
       // resume from the partial state (issues from partial pass kept):
-      val resumed = Lifecycle.initialProcess(anyInput(scenarioRows), 1, "u1",
+      val resumed = OneJob.initial(anyInput(scenarioRows), 1, "u1",
         partial.staging, partial.issues, partial.issueItems, contacts)
       assert(resumed.staging.count() === full.staging.count())
       val fullKeys = full.staging.select("staging_id", "staging_row_hash")
@@ -100,7 +100,8 @@ class PropertiesSpec extends SparkSpec {
   test("property: classification is permutation-invariant (set semantics)") {
     val perm = scala.util.Random.shuffle(scenarioRows)
     def classifySet(rows: Seq[(Long, String, String, String, String)]) =
-      Validate.classify(anyInput(rows).withColumn("job_id", lit(1)), contacts, "u1")
+      Validate.classifyKeyed(anyInput(rows).withColumn("job_id", lit(1)), contacts,
+        OneJob.jobUsers(spark, 1, "u1"))
         .select("row_number", "staging_status", "issue_type")
         .as[(Long, String, String)].collect().toSet
     assert(classifySet(perm) === classifySet(scenarioRows))

@@ -5,11 +5,13 @@ import graft.model.Schemas.StagingStatus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The keyed (multi-job, single-plan) lifecycle flows must be ROW-FOR-ROW
-  * equal to the per-job flows unioned — the wave dispatch rides on this
-  * equality (one Catalyst plan for N jobs instead of N plans). Exercises
-  * every validation class across jobs that share emails (dup/existing sets
-  * must stay job-scoped) and tenants with pre-existing contacts. */
+/** A wave of N jobs must be ROW-FOR-ROW equal to the union of N waves of
+  * one — the job-isolation property the dispatcher rides on (one Catalyst
+  * plan for N jobs instead of N plans, and a lone message is a wave of
+  * one). Exercises every validation class across jobs that share emails
+  * (dup/existing sets must stay job-scoped) and tenants with pre-existing
+  * contacts. Frames compare as sorted multisets, so a duplicated or
+  * dropped row fails. */
 class KeyedLifecycleSpec extends SparkSpec {
   import spark.implicits._
 
@@ -48,14 +50,16 @@ class KeyedLifecycleSpec extends SparkSpec {
   private def emptyItems = Seq.empty[(Int, String, String, Long)]
     .toDF("issues_job_id", "issue_type", "issue_key", "item_staging_id")
 
-  private def sortedSet(df: DataFrame, cols: Seq[String]): Set[Seq[Any]] =
-    df.select(cols.map(col): _*).collect().map(_.toSeq).toSet
+  /** Rows of `dfs` over `cols`, as one sorted multiset. */
+  private def multiset(dfs: Seq[DataFrame], cols: Seq[String]): Seq[Seq[Any]] =
+    dfs.flatMap(_.select(cols.map(col): _*).collect().map(_.toSeq))
+      .sortBy(_.mkString("\u0000"))
 
   test("initialProcessKeyed == per-job initialProcess unioned (staging/issues/items/candidates/counters)") {
     val inputs = Map(1 -> job1, 2 -> job2, 3 -> job3)
     val perJob = inputs.toSeq.sortBy(_._1).map { case (id, in) =>
-      id -> Lifecycle.initialProcess(in, id, users(id),
-        emptyStaging, emptyIssues, emptyItems, contacts, checkNonEmpty = false)
+      id -> OneJob.initial(in, id, users(id),
+        emptyStaging, emptyIssues, emptyItems, contacts).result
     }
     val keyedInput = inputs.toSeq.sortBy(_._1)
       .map { case (id, in) => in.withColumn("job_id", lit(id)) }
@@ -66,34 +70,29 @@ class KeyedLifecycleSpec extends SparkSpec {
 
     val stagingCols = Seq("staging_id", "staging_job_id", "staging_email",
       "staging_status", "staging_row_hash")
-    assert(sortedSet(keyed.stagingPre, stagingCols) ===
-      perJob.map(_._2.stagingPre).map(sortedSet(_, stagingCols)).reduce(_ ++ _))
+    assert(multiset(Seq(keyed.stagingPre), stagingCols) ===
+      multiset(perJob.map(_._2.stagingPre), stagingCols))
 
     val issueCols = Seq("issues_job_id", "issue_type", "issue_key",
       "issue_description", "issue_resolved")
-    assert(sortedSet(keyed.issues, issueCols) ===
-      perJob.map(_._2.issues).map(sortedSet(_, issueCols)).reduce(_ ++ _))
+    assert(multiset(Seq(keyed.issues), issueCols) ===
+      multiset(perJob.map(_._2.issues), issueCols))
 
     val itemCols = Seq("issues_job_id", "issue_type", "issue_key", "item_staging_id")
-    assert(sortedSet(keyed.issueItems, itemCols) ===
-      perJob.map(_._2.issueItems).map(sortedSet(_, itemCols)).reduce(_ ++ _))
+    assert(multiset(Seq(keyed.issueItems), itemCols) ===
+      multiset(perJob.map(_._2.issueItems), itemCols))
 
-    // Candidates: keyed keeps staging_job_id; compare the canonical columns.
-    val candCols = Seq("staging_id", "contacts_user_id", "contact_email",
+    val candCols = Seq("staging_job_id", "staging_id", "contacts_user_id", "contact_email",
       "contact_first_name", "contact_last_name", "contact_company")
-    assert(sortedSet(keyed.contactCandidates, candCols) ===
-      perJob.map(_._2.contactCandidates).map(sortedSet(_, candCols)).reduce(_ ++ _))
+    assert(multiset(Seq(keyed.contactCandidates), candCols) ===
+      multiset(perJob.map(_._2.contactCandidates), candCols))
 
-    // Counters: keyed one-row-per-job == each per-job 1-row frame.
-    val cKeyed = keyed.counters.collect().map(r => r.getAs[Int]("job_id") -> r).toMap
-    perJob.foreach { case (id, r) =>
-      val exp = r.counters.collect().head
-      val got = cKeyed(id)
-      Seq("total_rows", "ready_rows", "issue_rows", "discard_rows",
-        "success_rows", "total_issues", "unresolved_issues").foreach { c =>
-        assert(got.getAs[Long](c) === exp.getAs[Long](c), s"job $id counter $c")
-      }
-    }
+    // Counters: the wave's one-row-per-job frame == the waves of one.
+    val counterCols = Seq("job_id", "total_rows", "ready_rows", "issue_rows", "discard_rows",
+      "success_rows", "total_issues", "unresolved_issues")
+    assert(multiset(Seq(keyed.counters), counterCols) ===
+      multiset(perJob.map(_._2.counters), counterCols))
+    assert(keyed.counters.count() === 3)
     // Job-scoped semantics spot-checks: x@b.co is NOT a dup in jobs 1/3
     // (single occurrence per job), IS a dup pair in job 2, and an
     // EXISTING_EMAIL only for tenant u3.
@@ -112,17 +111,17 @@ class KeyedLifecycleSpec extends SparkSpec {
       1 -> csvFrame(Seq(("a@b.co", "F", "L", "C"), ("", "m", "L", "C"))),
       2 -> csvFrame(Seq(("b@b.co", "F", "L", "C"), ("bad", "F", "L", "C"))))
     val seeded = seeds.map { case (id, in) =>
-      id -> Lifecycle.initialProcess(in, id, users(id),
-        emptyStaging, emptyIssues, emptyItems, contacts, checkNonEmpty = false)
+      id -> OneJob.initial(in, id, users(id),
+        emptyStaging, emptyIssues, emptyItems, contacts).result
     }
     def discarded(id: Int) = seeded(id).stagingPre.withColumn("staging_status",
       when(col("staging_status") === StagingStatus.Issue, StagingStatus.Discard)
         .otherwise(col("staging_status")))
 
     val perJob = seeds.keys.toSeq.sorted.map { id =>
-      id -> Lifecycle.reprocess(
+      id -> OneJob.reprocess(
         discarded(id), seeded(id).issues, seeded(id).issueItems,
-        contacts, id, users(id), checkNonEmpty = false)
+        contacts, id, users(id)).result
     }
     val jobUsers = users.toSeq.map { case (id, u) => (id, u) }.toDF("job_id", "job_user_id")
     val keyed = Lifecycle.reprocessKeyed(
@@ -132,18 +131,21 @@ class KeyedLifecycleSpec extends SparkSpec {
       contacts, jobUsers)
 
     val stagingCols = Seq("staging_id", "staging_job_id", "staging_email", "staging_status")
-    assert(sortedSet(keyed.stagingPre, stagingCols) ===
-      perJob.map(_._2.stagingPre).map(sortedSet(_, stagingCols)).reduce(_ ++ _))
+    assert(multiset(Seq(keyed.stagingPre), stagingCols) ===
+      multiset(perJob.map(_._2.stagingPre), stagingCols))
+    // Each job's reviewed bad row stays DISCARD.
+    assert(multiset(Seq(keyed.stagingPre), Seq("staging_job_id", "staging_status"))
+      .filter(_(1) == StagingStatus.Discard).map(_.head) === Seq(1, 2))
     val issueCols = Seq("issues_job_id", "issue_type", "issue_key", "issue_resolved")
-    assert(sortedSet(keyed.issues, issueCols) ===
-      perJob.map(_._2.issues).map(sortedSet(_, issueCols)).reduce(_ ++ _))
-    val cKeyed = keyed.counters.collect().map(r => r.getAs[Int]("job_id") -> r).toMap
-    perJob.foreach { case (id, r) =>
-      val exp = r.counters.collect().head
-      Seq("total_rows", "discard_rows", "unresolved_issues").foreach { c =>
-        assert(cKeyed(id).getAs[Long](c) === exp.getAs[Long](c), s"job $id counter $c")
-      }
-    }
+    assert(multiset(Seq(keyed.issues), issueCols) ===
+      multiset(perJob.map(_._2.issues), issueCols))
+    val itemCols = Seq("issues_job_id", "issue_type", "issue_key", "item_staging_id")
+    assert(multiset(Seq(keyed.issueItems), itemCols) ===
+      multiset(perJob.map(_._2.issueItems), itemCols))
+    val counterCols = Seq("job_id", "total_rows", "ready_rows", "issue_rows", "discard_rows",
+      "success_rows", "total_issues", "unresolved_issues")
+    assert(multiset(Seq(keyed.counters), counterCols) ===
+      multiset(perJob.map(_._2.counters), counterCols))
     keyed.unpersist(); perJob.foreach(_._2.unpersist()); seeded.foreach(_._2.unpersist())
   }
 }

@@ -36,7 +36,7 @@ class LifecycleSpec extends SparkSpec {
     (5L, "DUP@b.co", "Dee", "Gee", "D2"),
     (6L, "old@b.co", "Eve", "Hah", "E1"))          // existing contact
 
-  private def runInitial() = Lifecycle.initialProcess(
+  private def runInitial() = OneJob.initial(
     input, jobId = 9, userId = "u1",
     emptyStaging, emptyIssues, emptyItems, contacts0)
 
@@ -45,7 +45,7 @@ class LifecycleSpec extends SparkSpec {
     // normalize it (and fold READY -> SUCCESS) so the 1-row frame agrees
     // with the committed staging — not report ready_rows=N/success_rows=0
     // for rows the commit writes as SUCCESS.
-    val r = Lifecycle.initialProcess(
+    val r = OneJob.initial(
       csv((1L, "a@b.co", "A", "B", "C"), (2L, "b@b.co", "D", "E", "F")),
       jobId = 9, userId = "u1", emptyStaging, emptyIssues, emptyItems, contacts0)
     val c = r.counterRow
@@ -84,7 +84,7 @@ class LifecycleSpec extends SparkSpec {
 
   test("idempotent resume: rerunning initial over its own output is a fixed point") {
     val r1 = runInitial()
-    val r2 = Lifecycle.initialProcess(
+    val r2 = OneJob.initial(
       input, 9, "u1", r1.staging, r1.issues, r1.issueItems, contacts0)
     assert(r2.staging.count() === r1.staging.count())
     assert(r2.issues.count() === r1.issues.count())
@@ -104,7 +104,7 @@ class LifecycleSpec extends SparkSpec {
       .withColumn("staging_status",
         when(col("staging_email").isin("DUP@b.co", "old@b.co"), lit(StagingStatus.Discard))
           .otherwise(col("staging_status")))
-    val r2 = Lifecycle.reprocess(edited, r1.issues, r1.issueItems, contacts0, 9, "u1")
+    val r2 = OneJob.reprocess(edited, r1.issues, r1.issueItems, contacts0, 9, "u1")
 
     assert(r2.jobStatus === JobStatus.Completed)
     // Surviving dup copy became READY (its twin is DISCARD, excluded from
@@ -134,7 +134,7 @@ class LifecycleSpec extends SparkSpec {
       .withColumn("staging_status",
         when(col("staging_email") =!= "broken", lit(StagingStatus.Discard))
           .otherwise(col("staging_status")))
-    val r2 = Lifecycle.reprocess(edited, resolvedIssues, r1.issueItems, contacts0, 9, "u1")
+    val r2 = OneJob.reprocess(edited, resolvedIssues, r1.issueItems, contacts0, 9, "u1")
     assert(r2.jobStatus === JobStatus.NeedsReview)
     val newIssue = r2.issues.filter(col("issue_key") === "broken").head()
     assert(newIssue.getAs[String]("issue_type") === IssueType.InvalidEmail)
@@ -148,7 +148,7 @@ class LifecycleSpec extends SparkSpec {
     // merge, not row-unique).
     val edited = r1.staging.withColumn("staging_email",
       when(col("staging_email") === "not-an-email", lit("")).otherwise(col("staging_email")))
-    val r2 = Lifecycle.reprocess(edited, r1.issues, r1.issueItems, contacts0, 9, "u1")
+    val r2 = OneJob.reprocess(edited, r1.issues, r1.issueItems, contacts0, 9, "u1")
     val row3Id = Lifecycle.stagingId(lit(9), lit(3L))
     val linksOfRow3 = r2.issueItems
       .filter(col("item_staging_id") === row3Id)
@@ -161,7 +161,7 @@ class LifecycleSpec extends SparkSpec {
   test("reprocess: all rows DISCARD -> empty-READY consolidation still COMPLETED") {
     val r1 = runInitial()
     val allDiscard = r1.staging.withColumn("staging_status", lit(StagingStatus.Discard))
-    val r2 = Lifecycle.reprocess(allDiscard, r1.issues, r1.issueItems, contacts0, 9, "u1")
+    val r2 = OneJob.reprocess(allDiscard, r1.issues, r1.issueItems, contacts0, 9, "u1")
     assert(r2.jobStatus === JobStatus.Completed)
     assert(r2.newContacts.count() === 0)
   }
@@ -178,7 +178,7 @@ class LifecycleSpec extends SparkSpec {
       .withColumn("staging_status",
         when(col("staging_email").isin("DUP@b.co", "old@b.co"), lit(StagingStatus.Discard))
           .otherwise(col("staging_status")))
-    val r2 = Lifecycle.reprocess(edited, r1.issues, r1.issueItems, contacts0, 9, "u1")
+    val r2 = OneJob.reprocess(edited, r1.issues, r1.issueItems, contacts0, 9, "u1")
     val resolved = r2.issues.filter(col("issue_resolved"))
     assert(resolved.count() === 4)
     assert(resolved.filter(col("issue_resolved_at").isNull).count() === 0)
@@ -190,7 +190,7 @@ class LifecycleSpec extends SparkSpec {
     // A re-failing issue stays unresolved with a NULL audit trail:
     val broken = r1.staging.withColumn("staging_email",
       when(col("staging_email") === "ok@b.co", lit("broken")).otherwise(col("staging_email")))
-    val r3 = Lifecycle.reprocess(broken, r1.issues, r1.issueItems, contacts0, 9, "u1")
+    val r3 = OneJob.reprocess(broken, r1.issues, r1.issueItems, contacts0, 9, "u1")
     val open = r3.issues.filter(!col("issue_resolved"))
     assert(open.count() > 0)
     assert(open.filter(col("issue_resolved_at").isNotNull
@@ -208,11 +208,18 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("initial processing on empty input raises (CSV file is empty)") {
-    val e = intercept[IllegalArgumentException] {
-      Lifecycle.initialProcess(input.limit(0), 9, "u1",
-        emptyStaging, emptyIssues, emptyItems, contacts0)
-    }
-    assert(e.getMessage.contains("CSV file is empty"))
+    // A header-only CSV fails its job (processor.py:149-151): the outcome
+    // carries the error and the job lands in FAILED, redeliverable.
+    val root = java.nio.file.Files.createTempDirectory("graft_empty").toString
+    val store = new graft.io.ParquetTableStore(spark, s"$root/tables")
+    store.overwrite("jobs", Seq((9, "u1", JobStatus.Pending))
+      .toDF("job_id", "job_user_id", "job_status"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/empty.csv"),
+      "email,first_name,last_name,company\n")
+    val o = graft.stream.JobDispatch.processOne(spark, store, 9, "empty.csv", k => s"$root/$k")
+    assert(o.outcome === "FAILED")
+    assert(o.detail.contains("CSV file is empty"))
+    assert(store.load("jobs").head().getAs[String]("job_status") === JobStatus.Failed)
   }
 
   test("parquet TableStore: snapshot overwrite swap + partitioned append") {

@@ -10,7 +10,7 @@ import scala.util.Random
 /** Dirty-queue soak: every message category the dispatcher triages —
   * clean, issue-bearing, empty CSV, missing file, stale job, poison,
   * in-batch duplicates — mixed in one 120-message batch at a size that
-  * forces chunked waves (GRAFT_MAX_WAVE default 64), in a seeded-random
+  * forces chunked waves (64 jobs per wave), in a seeded-random
   * order. The per-category edge tests pin each behavior alone; this pins
   * their INTERACTIONS (failures inside multi-chunk waves, duplicates
   * straddling chunks, skip/poison interleaving) and the at-least-once

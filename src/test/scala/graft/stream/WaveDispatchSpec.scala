@@ -258,6 +258,37 @@ class WaveDispatchSpec extends SparkSpec {
     assert(statuses === Set("SUCCESS", "DISCARD"))
   }
 
+  test("lone message whose commit always fails: one replay, then FAILED with the error") {
+    // A one-member wave built from a batch replays its member ONCE as a
+    // wave of one, and that replay does not replay again: commitAll runs
+    // exactly twice, the outcome carries the thrown message, and the job
+    // is left FAILED (redeliverable).
+    val (root, store) = seed(1, _ => "u1")
+    Files.writeString(Paths.get(s"$root/uploads/a.csv"),
+      "email,first_name,last_name,company\na@b.co,F,L,C\n")
+    var commits = 0
+    val broken = new graft.io.TableStore {
+      def load(t: String) = store.load(t)
+      def exists(t: String) = store.exists(t)
+      def overwrite(t: String, df: org.apache.spark.sql.DataFrame) = store.overwrite(t, df)
+      def append(t: String, df: org.apache.spark.sql.DataFrame) = store.append(t, df)
+      override def commitAll(
+          appends: Seq[(String, org.apache.spark.sql.DataFrame)],
+          partitions: Seq[graft.io.PartitionCommit],
+          overwrites: Seq[(String, org.apache.spark.sql.DataFrame)]) = {
+        commits += 1
+        throw new RuntimeException("injected commit failure")
+      }
+    }
+    val out = JobDispatch.processBatch(spark, broken,
+      Seq(msg(1, "a.csv")).toDF("value"), k => s"$root/uploads/$k")
+    assert(out.length === 1)
+    assert(out(0).outcome === "FAILED")
+    assert(out(0).detail === "injected commit failure")
+    assert(store.load("jobs").head().getAs[String]("job_status") === JobStatus.Failed)
+    assert(commits === 2)
+  }
+
   test("keyed-plan build failure degrades to per-job isolation, batch survives") {
     // A contacts table missing contacts_user_id makes plan CONSTRUCTION
     // throw (analysis failure in the tenant-scope join) for the keyed wave
