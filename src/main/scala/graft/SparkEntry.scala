@@ -2539,7 +2539,7 @@ object SparkEntry {
 
     // Order-5 maintenance ORACLE-PINNED: build order 5 on two thirds of the
     // corpus, append the remaining third, score everything — the
-    // oracle RETRAINS from scratch on the full corpus (knPentaChainSql
+    // oracle RETRAINS from scratch on the full corpus (the order-5 knOracleSql
     // reads all documents), so a hash match proves append == rebuild on
     // the union through all seventeen tables AND the scoring joins
     // (the q_kn_append convention at order 5).
@@ -4111,1340 +4111,176 @@ object SparkEntry {
     s"WITH $vocab,\n$rounds"
   }
 
-  /** Kneser-Ney bigram score chain, shared by q_kn_bigram and
-    * q_ppl_buckets — mirrors [[graft.functions.TextAnalysis.knBigramLogProb]]
-    * term by term (absolute discount 0.75, continuation backoff, MLE
-    * unigram for document-initial tokens, 1e-6 fixed-point long per-token
-    * sums). `big` feeds four consumers and `pt`/`toks` two each →
-    * MATERIALIZED against plain-CTE re-inlining. Exports `knscore`
-    * (doc_id, n_tokens, logprob). */
-  private val knBigramScoreSql: String =
-    """toks AS MATERIALIZED (
-      |  SELECT doc_id,
-      |    unnest(string_split_regex(text, '\s+')) AS w,
-      |    unnest(generate_series(1, len(string_split_regex(text, '\s+')))) AS pos
-      |  FROM documents),
-      |pt AS MATERIALIZED (
-      |  SELECT doc_id, pos, w,
-      |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-      |  FROM toks),
-      |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w),
-      |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-      |big AS MATERIALIZED (
-      |  SELECT prev, w, CAST(count(*) AS BIGINT) AS c2
-      |  FROM pt WHERE prev IS NOT NULL GROUP BY 1, 2),
-      |ctx AS (
-      |  SELECT prev, CAST(sum(c2) AS BIGINT) AS cc,
-      |    CAST(count(*) AS BIGINT) AS n1f
-      |  FROM big GROUP BY prev),
-      |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-      |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM big),
-      |knsc AS (
-      |  SELECT pt.doc_id,
-      |    CAST(round(ln(CASE WHEN pt.prev IS NULL
-      |      THEN CAST(uni.c1 AS DOUBLE) / tot.total
-      |      ELSE greatest(CAST(big.c2 AS DOUBLE) - 0.75, 0.0) / CAST(ctx.cc AS DOUBLE)
-      |        + 0.75 * CAST(ctx.n1f AS DOUBLE) / CAST(ctx.cc AS DOUBLE)
-      |          * (CAST(cont.n1c AS DOUBLE) / btot.btypes) END) * 1000000, 0)
-      |      AS BIGINT) AS lp
-      |  FROM pt JOIN uni USING (w) CROSS JOIN tot
-      |  LEFT JOIN big ON pt.prev = big.prev AND pt.w = big.w
-      |  LEFT JOIN ctx ON pt.prev = ctx.prev
-      |  LEFT JOIN cont ON pt.w = cont.w
-      |  CROSS JOIN btot),
-      |knagg AS (
-      |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-      |  FROM knsc GROUP BY 1),
-      |knscore AS (
-      |  SELECT doc_id, n AS n_tokens,
-      |    round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-      |  FROM knagg)""".stripMargin
-
-  /** Frozen-model KN cross-scoring replay (train split → score split),
-    * mirroring [[graft.functions.LmIndex.scoreFrames]] with its OOV
-    * branches: unseen continuation/unigram take the reserved 0.5-type
-    * mass, a seen context covers seen and unseen pairs in one
-    * absolute-discount expression (c2 defaulting 0), an unseen context
-    * backs off fully to the continuation probability. Shared verbatim by
-    * q_kn_score_holdout and q_kn_persisted (the persisted serve must be
-    * row-identical to the inline cross-score). Exports `knx`. */
-  private def knCrossScoreSql(trainWhere: String, scoreWhere: String): String =
-    s"""ttoks AS MATERIALIZED (
-       |  SELECT doc_id,
+  /** Tokens of the documents matching `where` as (doc_id, w, pos) — the
+    * oracle twin of TextAnalysis.words + posexplode. */
+  private def oracleTokensSql(where: String): String =
+    s"""SELECT doc_id,
        |    unnest(string_split_regex(text, '\\s+')) AS w,
        |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |  FROM documents WHERE $trainWhere),
+       |  FROM documents WHERE $where""".stripMargin
+
+  /** The training-token CTE `ttoks` over the documents matching `where`. */
+  private def trainTokens(where: String): String =
+    s"ttoks AS MATERIALIZED (\n  ${oracleTokensSql(where)})"
+
+  /** The DuckDB oracle of the whole Kneser-Ney family: ONE plain-SQL
+    * chain for any `order` >= 2, interpolated KN (D = 0.75 at every level)
+    * or modified KN (`mkn`), mirroring [[graft.functions.LmIndex]]'s
+    * build and serve (Chen & Goodman 1998's recursion, KenLM's build
+    * order) without calling into the DataFrame code.
+    *
+    *  - `trainTokens` defines the training-token CTE `ttoks(doc_id, w,
+    *    pos)`; `scoreWhere` selects the SCORED documents, which the model
+    *    CTEs never see. In-corpus scoring is train = score = every
+    *    document; a probed serve filters the scored side only.
+    *  - Per key width k: `ng<k>f` counts the raw k-grams (2..order) and
+    *    `mc<k>f` the continuation counts (2..order-1: distinct left
+    *    extensions in `ng<k+1>f` — adjusted counts precede pruning,
+    *    KenLM's order). Each keeps the rows at or above its width's
+    *    `pruneMin` threshold (`ng<k>`, `mc<k>`; `Nil` keeps all) under a
+    *    context table `<t>x` whose `cc` is the FULL total, whose follower
+    *    tallies count survivors and whose `pm` is the pruned mass;
+    *    contexts with no survivor drop, so the serve backs off a whole
+    *    level there (λ = pm/cc = 1).
+    *  - Modified KN adds each table's count-of-counts `<t>n` (from the
+    *    FULL counts: calibration precedes pruning) and ONE discount CTE
+    *    `dd`: eq. 26's D1/D2/D3+ per table, or KenLM's default
+    *    --discount_fallback (0.5, 1.0, 1.5) where a table has no types at
+    *    count 1, 2 or 3 — [[graft.functions.TextAnalysis.mknLevelDiscounts]]
+    *    term by term.
+    *  - Scoring is the frozen-model OOV-safe form, which every case
+    *    reduces to: a seen context covers seen, unseen and pruned events
+    *    in one expression (count coalesced to 0, D(0) = 0, λ carrying the
+    *    pruned mass), an unseen context backs off a full level, and unseen
+    *    continuation/unigram events take the reserved 0.5-type mass.
+    *    Per-token log-probabilities sum as 1e-6 fixed-point longs.
+    *
+    * Exports `lm(doc_id, n_tokens, logprob)`. Large count tables are
+    * MATERIALIZED against DuckDB's plain-CTE re-inlining. */
+  private def knOracleCtes(order: Int, mkn: Boolean, trainTokens: String,
+      scoreWhere: String = "TRUE", pruneMin: Seq[Long] = Nil): String = {
+    require(order >= 2 && (pruneMin.isEmpty || pruneMin.length == order - 1),
+      s"order >= 2 with one threshold per key width 2..$order, got $order/$pruneMin")
+    val thr = if (pruneMin.isEmpty) Seq.fill(order - 1)(1L) else pruneMin
+    def prevs(n: Int): Seq[String] = (n to 1 by -1).map(i => s"prev$i")
+    def on(a: String, b: String, cols: Seq[String]): String =
+      cols.map(c => s"$a.$c = $b.$c").mkString(" AND ")
+    val lags = (1 until order).map(i =>
+      s"lag(w, $i) OVER (PARTITION BY doc_id ORDER BY pos) AS prev$i").mkString(",\n    ")
+    // (table, key width, full-count source): raw k-grams, then the
+    // continuation levels below the top width.
+    val raws = (2 to order).map(k => (s"ng$k", k,
+      s"tpt WHERE prev${k - 1} IS NOT NULL"))
+    val mids = (2 until order).map(k => (s"mc$k", k, s"ng${k + 1}f"))
+    val tables = (raws ++ mids).map { case (t, k, src) =>
+      val (keys, ctx, min) = (prevs(k - 1) :+ "w", prevs(k - 1).mkString(", "), thr(k - 2))
+      val tallies =
+        if (mkn) Seq(s"c >= $min AND c = 1" -> "f1", s"c >= $min AND c = 2" -> "f2",
+          s"c >= $min AND c >= 3" -> "f3p")
+        else Seq(s"c >= $min" -> "nf")
+      val coc = if (!mkn) "" else
+        s""",
+           |${t}n AS (SELECT
+           |  ${(1 to 4).map(i => s"CAST(coalesce(sum(CASE WHEN c = $i THEN 1 ELSE 0 END), 0) AS BIGINT) AS n$i").mkString(",\n  ")}
+           |  FROM ${t}f)""".stripMargin
+      s"""${t}f AS MATERIALIZED (
+         |  SELECT ${keys.mkString(", ")}, CAST(count(*) AS BIGINT) AS c
+         |  FROM $src GROUP BY ${keys.mkString(", ")}),
+         |$t AS (SELECT * FROM ${t}f WHERE c >= $min),
+         |${t}x AS (
+         |  SELECT $ctx, CAST(sum(c) AS BIGINT) AS cc,
+         |    ${tallies.map { case (p, n) => s"CAST(sum(CASE WHEN $p THEN 1 ELSE 0 END) AS BIGINT) AS $n" }.mkString(",\n    ")},
+         |    CAST(coalesce(sum(CASE WHEN c < $min THEN c END), 0) AS BIGINT) AS pm
+         |  FROM ${t}f GROUP BY $ctx
+         |  HAVING sum(CASE WHEN c >= $min THEN 1 ELSE 0 END) > 0)$coc""".stripMargin
+    }
+    val names = (raws ++ mids).map(_._1)
+    // Eq. 26 per table from its count-of-counts n1..n4, or the fallback
+    // triple where a count bucket is empty.
+    val dd = if (!mkn) "" else {
+      val cols = names.flatMap { t =>
+        def n(i: Int) = s"CAST(${t}n.n$i AS DOUBLE)"
+        val y = s"(${n(1)} / (${n(1)} + 2.0 * ${n(2)}))"
+        Seq(1 -> 0.5, 2 -> 1.0, 3 -> 1.5).map { case (j, fb) =>
+          s"""CASE WHEN ${t}n.n1 = 0 OR ${t}n.n2 = 0 OR ${t}n.n3 = 0 THEN $fb
+             |      ELSE $j.0 - ${j + 1}.0 * $y * ${n(j + 1)} / ${n(j)} END AS d${j}_$t""".stripMargin
+        }
+      }
+      s""",
+         |dd AS (SELECT
+         |    ${cols.mkString(",\n    ")}
+         |  FROM ${names.map(t => s"${t}n").mkString(" CROSS JOIN ")})""".stripMargin
+    }
+    // One level of the recursion: table `t`'s own (discounted) mass under
+    // its context plus λ times the `lower` level.
+    def level(t: String, lower: String): String = {
+      val (own, lam) =
+        if (mkn) (
+          s"""CASE WHEN $t.c IS NOT NULL THEN
+             |      (CAST($t.c AS DOUBLE) - CASE WHEN $t.c = 1 THEN dd.d1_$t
+             |        WHEN $t.c = 2 THEN dd.d2_$t ELSE dd.d3_$t END) / CAST(${t}x.cc AS DOUBLE)
+             |    ELSE 0.0 END""".stripMargin,
+          s"dd.d1_$t * CAST(${t}x.f1 AS DOUBLE) + dd.d2_$t * CAST(${t}x.f2 AS DOUBLE)" +
+            s" + dd.d3_$t * CAST(${t}x.f3p AS DOUBLE)")
+        else (
+          s"greatest(CAST(coalesce($t.c, 0) AS DOUBLE) - 0.75, 0.0) / CAST(${t}x.cc AS DOUBLE)",
+          s"0.75 * CAST(${t}x.nf AS DOUBLE)")
+      s"""CASE WHEN ${t}x.cc IS NOT NULL THEN
+         |    $own
+         |    + ($lam + CAST(${t}x.pm AS DOUBLE)) / CAST(${t}x.cc AS DOUBLE) * ($lower)
+         |  ELSE ($lower) END""".stripMargin
+    }
+    val pcont = "CASE WHEN cont.n1c IS NOT NULL THEN CAST(cont.n1c AS DOUBLE) / btot.btypes" +
+      " ELSE 0.5 / btot.btypes END"
+    // mid(j): the continuation chain under a width-(j+1) level.
+    val mid = (2 until order).scanLeft(pcont)((lower, k) => level(s"mc$k", lower))
+    def top(k: Int): String = level(s"ng$k", mid(k - 2))
+    val branches = (2 until order).map(k => s"WHEN spt.prev$k IS NULL THEN\n  ${top(k)}")
+    val joins = (raws ++ mids).map { case (t, k, _) =>
+      s"""LEFT JOIN $t ON ${on("spt", t, prevs(k - 1) :+ "w")}
+         |  LEFT JOIN ${t}x ON ${on("spt", s"${t}x", prevs(k - 1))}""".stripMargin
+    }
+    s"""$trainTokens,
        |tpt AS MATERIALIZED (
        |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
+       |    $lags
        |  FROM ttoks),
-       |uni AS MATERIALIZED (
-       |  SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM ttoks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |big AS MATERIALIZED (
-       |  SELECT prev, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM tpt WHERE prev IS NOT NULL GROUP BY 1, 2),
-       |ctx AS (
-       |  SELECT prev, CAST(sum(c2) AS BIGINT) AS cc,
-       |    CAST(count(*) AS BIGINT) AS n1f
-       |  FROM big GROUP BY prev),
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-       |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM big),
+       |uni AS MATERIALIZED (SELECT w, CAST(count(*) AS BIGINT) AS c FROM ttoks GROUP BY w),
+       |tot AS (SELECT CAST(sum(c) AS DOUBLE) AS total FROM uni),
+       |${tables.mkString(",\n")},
+       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM ng2f GROUP BY w),
+       |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM ng2f)$dd,
        |spt AS (
        |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-       |  FROM (
-       |    SELECT doc_id,
-       |      unnest(string_split_regex(text, '\\s+')) AS w,
-       |      unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |    FROM documents WHERE $scoreWhere)),
-       |knxsc AS (
-       |  SELECT spt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN spt.prev IS NULL THEN
-       |        CASE WHEN uni.c1 IS NOT NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |             ELSE 0.5 / tot.total END
-       |      WHEN ctx.cc IS NOT NULL THEN
-       |        greatest(CAST(coalesce(big.c2, 0) AS DOUBLE) - 0.75, 0.0)
-       |          / CAST(ctx.cc AS DOUBLE)
-       |        + 0.75 * CAST(ctx.n1f AS DOUBLE) / CAST(ctx.cc AS DOUBLE)
-       |          * (CASE WHEN cont.n1c IS NOT NULL
-       |               THEN CAST(cont.n1c AS DOUBLE) / btot.btypes
-       |               ELSE 0.5 / btot.btypes END)
-       |      ELSE
-       |        CASE WHEN cont.n1c IS NOT NULL
-       |          THEN CAST(cont.n1c AS DOUBLE) / btot.btypes
-       |          ELSE 0.5 / btot.btypes END
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  FROM spt
-       |  LEFT JOIN uni ON spt.w = uni.w
-       |  LEFT JOIN big ON spt.prev = big.prev AND spt.w = big.w
-       |  LEFT JOIN ctx ON spt.prev = ctx.prev
-       |  LEFT JOIN cont ON spt.w = cont.w
-       |  CROSS JOIN tot CROSS JOIN btot),
-       |knxagg AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM knxsc GROUP BY 1),
-       |knx AS (
-       |  SELECT doc_id, n AS n_tokens,
-       |    round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |  FROM knxagg)""".stripMargin
-
-  /** Order-3 interpolated-KN score chain — mirrors
-    * [[graft.functions.TextAnalysis.knTrigramLogProb]] term by term
-    * (trigram discounting over the continuation-BIGRAM middle level,
-    * count-based bigram at the second token, MLE unigram first).
-    * Shared verbatim by q_kn_trigram (inline) and q_kn3_persisted (the
-    * order-3 store serve, which must be row-identical in-corpus);
-    * `scoreWhere` filters the SCORED documents only — the model CTEs
-    * always read the full corpus — so q_kn3_probed replays the probed
-    * in-corpus batch against the same frozen model. */
-  private def knTrigramChainSql(scoreWhere: String = ""): String =
-    s"""WITH toks AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    unnest(string_split_regex(text, '\\s+')) AS w,
-       |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |  FROM documents),
-       |pt AS MATERIALIZED (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2
-       |  FROM toks),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |big AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM pt WHERE prev1 IS NOT NULL GROUP BY 1, 2),
-       |ctx AS (
-       |  SELECT prev1, CAST(sum(c2) AS BIGINT) AS cc,
-       |    CAST(count(*) AS BIGINT) AS n1f
-       |  FROM big GROUP BY prev1),
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-       |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM big),
-       |tri AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS c3
-       |  FROM pt WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3),
-       |ctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(c3) AS BIGINT) AS cc3,
-       |    CAST(count(*) AS BIGINT) AS n1f3
-       |  FROM tri GROUP BY prev2, prev1),
-       |m2 AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS mcount
-       |  FROM tri GROUP BY prev1, w),
-       |mctx AS (
-       |  SELECT prev1, CAST(sum(mcount) AS BIGINT) AS mcc,
-       |    CAST(count(*) AS BIGINT) AS n1f2c
-       |  FROM m2 GROUP BY prev1),
+       |    $lags
+       |  FROM (${oracleTokensSql(scoreWhere)})),
        |sc AS (
-       |  SELECT pt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN pt.prev1 IS NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |      WHEN pt.prev2 IS NULL THEN
-       |        greatest(CAST(big.c2 AS DOUBLE) - 0.75, 0.0) / CAST(ctx.cc AS DOUBLE)
-       |        + 0.75 * CAST(ctx.n1f AS DOUBLE) / CAST(ctx.cc AS DOUBLE)
-       |          * (CAST(cont.n1c AS DOUBLE) / btot.btypes)
-       |      ELSE
-       |        greatest(CAST(tri.c3 AS DOUBLE) - 0.75, 0.0) / CAST(ctx3.cc3 AS DOUBLE)
-       |        + 0.75 * CAST(ctx3.n1f3 AS DOUBLE) / CAST(ctx3.cc3 AS DOUBLE)
-       |          * (greatest(CAST(m2.mcount AS DOUBLE) - 0.75, 0.0) / CAST(mctx.mcc AS DOUBLE)
-       |             + 0.75 * CAST(mctx.n1f2c AS DOUBLE) / CAST(mctx.mcc AS DOUBLE)
-       |               * (CAST(cont.n1c AS DOUBLE) / btot.btypes))
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  FROM pt JOIN uni USING (w) CROSS JOIN tot
-       |  LEFT JOIN big ON pt.prev1 = big.prev1 AND pt.w = big.w
-       |  LEFT JOIN ctx ON pt.prev1 = ctx.prev1
-       |  LEFT JOIN cont ON pt.w = cont.w
-       |  LEFT JOIN tri ON pt.prev2 = tri.prev2 AND pt.prev1 = tri.prev1 AND pt.w = tri.w
-       |  LEFT JOIN ctx3 ON pt.prev2 = ctx3.prev2 AND pt.prev1 = ctx3.prev1
-       |  LEFT JOIN m2 ON pt.prev1 = m2.prev1 AND pt.w = m2.w
-       |  LEFT JOIN mctx ON pt.prev1 = mctx.prev1
-       |  CROSS JOIN btot),
-       |agg AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc GROUP BY 1)
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg $scoreWhere ORDER BY doc_id""".stripMargin
-
-  /** Frozen-model ORDER-3 cross-scoring replay (train split → score
-    * split) — [[knCrossScoreSql]]'s shape one recursion level up,
-    * mirroring the order-3 [[graft.functions.LmIndex.scoreFrames]]'s total OOV
-    * recipe branch for branch: reserved 0.5-type continuation/unigram
-    * mass; a seen 2-gram context covers seen and unseen triples in one
-    * absolute-discount expression (c3 defaulting 0); an unseen 2-gram
-    * context backs off to the continuation-bigram middle level, which
-    * itself backs off to P_cont when the middle context is unseen; the
-    * second token runs the bigram OOV recipe, the first MLE unigram.
-    * Oracle-pins the OOV semantics the LmSmoothingSpec hand fixture
-    * pins pointwise. Exports the final select directly. */
-  private def knTrigramCrossScoreSql(
-      trainWhere: String, scoreWhere: String): String = {
-    val pcont = """CASE WHEN cont.n1c IS NOT NULL
-      THEN CAST(cont.n1c AS DOUBLE) / btot.btypes
-      ELSE 0.5 / btot.btypes END"""
-    val midP = s"""CASE WHEN mctx.mcc IS NOT NULL THEN
-        greatest(CAST(coalesce(m2.mcount, 0) AS DOUBLE) - 0.75, 0.0)
-          / CAST(mctx.mcc AS DOUBLE)
-        + 0.75 * CAST(mctx.n1f2c AS DOUBLE) / CAST(mctx.mcc AS DOUBLE)
-          * ($pcont)
-      ELSE ($pcont) END"""
-    s"""WITH ttoks AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    unnest(string_split_regex(text, '\\s+')) AS w,
-       |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |  FROM documents WHERE $trainWhere),
-       |tpt AS MATERIALIZED (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2
-       |  FROM ttoks),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM ttoks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |big AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM tpt WHERE prev1 IS NOT NULL GROUP BY 1, 2),
-       |ctx AS (
-       |  SELECT prev1, CAST(sum(c2) AS BIGINT) AS cc,
-       |    CAST(count(*) AS BIGINT) AS n1f
-       |  FROM big GROUP BY prev1),
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-       |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM big),
-       |tri AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS c3
-       |  FROM tpt WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3),
-       |ctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(c3) AS BIGINT) AS cc3,
-       |    CAST(count(*) AS BIGINT) AS n1f3
-       |  FROM tri GROUP BY prev2, prev1),
-       |m2 AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS mcount
-       |  FROM tri GROUP BY prev1, w),
-       |mctx AS (
-       |  SELECT prev1, CAST(sum(mcount) AS BIGINT) AS mcc,
-       |    CAST(count(*) AS BIGINT) AS n1f2c
-       |  FROM m2 GROUP BY prev1),
-       |spt AS (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2
-       |  FROM (
-       |    SELECT doc_id,
-       |      unnest(string_split_regex(text, '\\s+')) AS w,
-       |      unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |    FROM documents WHERE $scoreWhere)),
-       |sc3 AS (
        |  SELECT spt.doc_id,
        |    CAST(round(ln(CASE
        |      WHEN spt.prev1 IS NULL THEN
-       |        CASE WHEN uni.c1 IS NOT NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |             ELSE 0.5 / tot.total END
-       |      WHEN spt.prev2 IS NULL THEN
-       |        CASE WHEN ctx.cc IS NOT NULL THEN
-       |          greatest(CAST(coalesce(big.c2, 0) AS DOUBLE) - 0.75, 0.0)
-       |            / CAST(ctx.cc AS DOUBLE)
-       |          + 0.75 * CAST(ctx.n1f AS DOUBLE) / CAST(ctx.cc AS DOUBLE)
-       |            * ($pcont)
-       |        ELSE ($pcont) END
-       |      ELSE
-       |        CASE WHEN ctx3.cc3 IS NOT NULL THEN
-       |          greatest(CAST(coalesce(tri.c3, 0) AS DOUBLE) - 0.75, 0.0)
-       |            / CAST(ctx3.cc3 AS DOUBLE)
-       |          + 0.75 * CAST(ctx3.n1f3 AS DOUBLE) / CAST(ctx3.cc3 AS DOUBLE)
-       |            * ($midP)
-       |        ELSE ($midP) END
+       |        CASE WHEN uni.c IS NOT NULL THEN CAST(uni.c AS DOUBLE) / tot.total
+       |          ELSE 0.5 / tot.total END
+       |      ${(branches :+ s"ELSE\n  ${top(order)}").mkString("\n      ")}
        |      END) * 1000000, 0) AS BIGINT) AS lp
        |  FROM spt
        |  LEFT JOIN uni ON spt.w = uni.w
        |  LEFT JOIN cont ON spt.w = cont.w
-       |  LEFT JOIN big ON spt.prev1 = big.prev1 AND spt.w = big.w
-       |  LEFT JOIN ctx ON spt.prev1 = ctx.prev1
-       |  LEFT JOIN tri ON spt.prev2 = tri.prev2 AND spt.prev1 = tri.prev1 AND spt.w = tri.w
-       |  LEFT JOIN ctx3 ON spt.prev2 = ctx3.prev2 AND spt.prev1 = ctx3.prev1
-       |  LEFT JOIN m2 ON spt.prev1 = m2.prev1 AND spt.w = m2.w
-       |  LEFT JOIN mctx ON spt.prev1 = mctx.prev1
-       |  CROSS JOIN tot CROSS JOIN btot),
-       |agg3 AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc3 GROUP BY 1)
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg3 ORDER BY doc_id""".stripMargin
-  }
-
-  /** Modified-KN bigram score chain — mirrors
-    * [[graft.functions.TextAnalysis.mknBigramLogProb]] (count-of-count
-    * estimated D1/D2/D3+, per-context bucket tallies, the 0.5/1.0/1.5
-    * fallback in the degenerate branch). Shared verbatim by q_mkn_bigram
-    * (inline) and q_mkn_persisted (the order-3 store serve with the
-    * tallies READ from the model tables — row-identical in-corpus);
-    * `scoreWhere` filters the SCORED documents only (per-doc scores are
-    * independent, so filtering the aggregate equals scoring the batch —
-    * the q_kn3_probed convention), letting q_mkn_probed replay the
-    * probed serve against the same frozen model. */
-  private def mknBigramChainSql(scoreWhere: String = ""): String =
-    s"""WITH toks AS MATERIALIZED (
-      |  SELECT doc_id,
-      |    unnest(string_split_regex(text, '\\s+')) AS w,
-      |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-      |  FROM documents),
-      |pt AS MATERIALIZED (
-      |  SELECT doc_id, pos, w,
-      |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev
-      |  FROM toks),
-      |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w),
-      |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-      |big AS MATERIALIZED (
-      |  SELECT prev, w, CAST(count(*) AS BIGINT) AS c2
-      |  FROM pt WHERE prev IS NOT NULL GROUP BY 1, 2),
-      |ctx AS (
-      |  SELECT prev, CAST(sum(c2) AS BIGINT) AS cc,
-      |    CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nf1,
-      |    CAST(sum(CASE WHEN c2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nf2,
-      |    CAST(sum(CASE WHEN c2 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS nf3p
-      |  FROM big GROUP BY prev),
-      |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-      |cnts AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS btypes,
-      |    CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-      |    CAST(sum(CASE WHEN c2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS n2,
-      |    CAST(sum(CASE WHEN c2 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS n3,
-      |    CAST(sum(CASE WHEN c2 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n4
-      |  FROM big),
-      |cy AS (
-      |  SELECT btypes, n1, n2, n3, n4,
-      |    (n1 = 0 OR n2 = 0 OR n3 = 0) AS degen,
-      |    CASE WHEN n1 = 0 OR n2 = 0 OR n3 = 0 THEN 0.0
-      |      ELSE CAST(n1 AS DOUBLE) / (CAST(n1 AS DOUBLE) + 2.0 * CAST(n2 AS DOUBLE)) END AS y
-      |  FROM cnts),
-      |d AS (
-      |  SELECT btypes,
-      |    CASE WHEN degen THEN 0.5
-      |      ELSE 1.0 - 2.0 * y * CAST(n2 AS DOUBLE) / CAST(n1 AS DOUBLE) END AS d1,
-      |    CASE WHEN degen THEN 1.0
-      |      ELSE 2.0 - 3.0 * y * CAST(n3 AS DOUBLE) / CAST(n2 AS DOUBLE) END AS d2,
-      |    CASE WHEN degen THEN 1.5
-      |      ELSE 3.0 - 4.0 * y * CAST(n4 AS DOUBLE) / CAST(n3 AS DOUBLE) END AS d3
-      |  FROM cy),
-      |sc AS (
-      |  SELECT pt.doc_id,
-      |    CAST(round(ln(CASE WHEN pt.prev IS NULL
-      |      THEN CAST(uni.c1 AS DOUBLE) / tot.total
-      |      ELSE
-      |        (CAST(big.c2 AS DOUBLE) - CASE WHEN big.c2 = 1 THEN d.d1
-      |           WHEN big.c2 = 2 THEN d.d2 ELSE d.d3 END)
-      |          / CAST(ctx.cc AS DOUBLE)
-      |        + (d.d1 * CAST(ctx.nf1 AS DOUBLE) + d.d2 * CAST(ctx.nf2 AS DOUBLE)
-      |           + d.d3 * CAST(ctx.nf3p AS DOUBLE)) / CAST(ctx.cc AS DOUBLE)
-      |          * (CAST(cont.n1c AS DOUBLE) / d.btypes)
-      |      END) * 1000000, 0) AS BIGINT) AS lp
-      |  FROM pt JOIN uni USING (w) CROSS JOIN tot
-      |  LEFT JOIN big ON pt.prev = big.prev AND pt.w = big.w
-      |  LEFT JOIN ctx ON pt.prev = ctx.prev
-      |  LEFT JOIN cont ON pt.w = cont.w
-      |  CROSS JOIN d),
-      |agg AS (
-      |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-      |  FROM sc GROUP BY 1)
-      |SELECT doc_id, n AS n_tokens,
-      |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-      |FROM agg $scoreWhere ORDER BY doc_id""".stripMargin
-
-  /** One level of modified-KN discount estimation in SQL: count-of-count
-    * columns `<p>1..<p>4` (already selected by the caller's counts CTE
-    * `cn$p`) → (d1$p, d2$p, d3$p) with the 0.5/1.0/1.5 fallback in the
-    * degenerate branch — mirrors
-    * [[graft.functions.TextAnalysis.mknLevelDiscounts]] term by term. */
-  private def mknLevelDiscountSql(p: String): String =
-    s"""cy$p AS (SELECT *,
-       |    (${p}1 = 0 OR ${p}2 = 0 OR ${p}3 = 0) AS degen$p,
-       |    CASE WHEN ${p}1 = 0 OR ${p}2 = 0 OR ${p}3 = 0 THEN 0.0
-       |      ELSE CAST(${p}1 AS DOUBLE) / (CAST(${p}1 AS DOUBLE) + 2.0 * CAST(${p}2 AS DOUBLE)) END AS y$p
-       |  FROM cn$p),
-       |dl$p AS (SELECT
-       |    CASE WHEN degen$p THEN 0.5
-       |      ELSE 1.0 - 2.0 * y$p * CAST(${p}2 AS DOUBLE) / CAST(${p}1 AS DOUBLE) END AS d1$p,
-       |    CASE WHEN degen$p THEN 1.0
-       |      ELSE 2.0 - 3.0 * y$p * CAST(${p}3 AS DOUBLE) / CAST(${p}2 AS DOUBLE) END AS d2$p,
-       |    CASE WHEN degen$p THEN 1.5
-       |      ELSE 3.0 - 4.0 * y$p * CAST(${p}4 AS DOUBLE) / CAST(${p}3 AS DOUBLE) END AS d3$p
-       |  FROM cy$p)""".stripMargin
-
-  /** Modified-KN ORDER-3 score chain — mirrors
-    * [[graft.functions.TextAnalysis.mknTrigramLogProb]]: the order-3
-    * recursion with per-LEVEL estimated discounts (trigram level from
-    * t1..t4, continuation-bigram level from m1..m4, the second-token
-    * bigram fallback from b1..b4), per-context bucket tallies at every
-    * level, 0.5/1.0/1.5 fallback per degenerate level. Shared verbatim
-    * by q_mkn_trigram (inline) and q_mkn3_persisted (the order-3 store
-    * serve reading the same tallies from its widened tables);
-    * `scoreWhere` filters the SCORED documents only (q_mkn3_probed). */
-  private def mknTrigramChainSql(scoreWhere: String = ""): String = {
-    val pcont = "(CAST(cont.n1c AS DOUBLE) / dd.btypes)"
-    val midP =
-      s"""(CAST(m2.mcount AS DOUBLE) - CASE WHEN m2.mcount = 1 THEN dd.d1m
-         |            WHEN m2.mcount = 2 THEN dd.d2m ELSE dd.d3m END)
-         |          / CAST(mctx.mcc AS DOUBLE)
-         |        + (dd.d1m * CAST(mctx.mf1 AS DOUBLE) + dd.d2m * CAST(mctx.mf2 AS DOUBLE)
-         |           + dd.d3m * CAST(mctx.mf3p AS DOUBLE)) / CAST(mctx.mcc AS DOUBLE)
-         |          * $pcont""".stripMargin
-    s"""WITH toks AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    unnest(string_split_regex(text, '\\s+')) AS w,
-       |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |  FROM documents),
-       |pt AS MATERIALIZED (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2
-       |  FROM toks),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |big AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM pt WHERE prev1 IS NOT NULL GROUP BY 1, 2),
-       |ctx AS (
-       |  SELECT prev1, CAST(sum(c2) AS BIGINT) AS cc,
-       |    CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nf1,
-       |    CAST(sum(CASE WHEN c2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nf2,
-       |    CAST(sum(CASE WHEN c2 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS nf3p
-       |  FROM big GROUP BY prev1),
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-       |tri AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS c3
-       |  FROM pt WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3),
-       |ctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(c3) AS BIGINT) AS cc3,
-       |    CAST(sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tf1,
-       |    CAST(sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS tf2,
-       |    CAST(sum(CASE WHEN c3 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS tf3p
-       |  FROM tri GROUP BY prev2, prev1),
-       |m2 AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS mcount
-       |  FROM tri GROUP BY prev1, w),
-       |mctx AS (
-       |  SELECT prev1, CAST(sum(mcount) AS BIGINT) AS mcc,
-       |    CAST(sum(CASE WHEN mcount = 1 THEN 1 ELSE 0 END) AS BIGINT) AS mf1,
-       |    CAST(sum(CASE WHEN mcount = 2 THEN 1 ELSE 0 END) AS BIGINT) AS mf2,
-       |    CAST(sum(CASE WHEN mcount >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS mf3p
-       |  FROM m2 GROUP BY prev1),
-       |cnb AS (SELECT CAST(count(*) AS DOUBLE) AS btypes,
-       |  CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS b1,
-       |  CAST(sum(CASE WHEN c2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS b2,
-       |  CAST(sum(CASE WHEN c2 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS b3,
-       |  CAST(sum(CASE WHEN c2 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS b4
-       |  FROM big),
-       |cnt AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t1,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t2,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t3,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t4
-       |  FROM tri),
-       |cnm AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN mcount = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m1,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m2,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m3,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m4
-       |  FROM m2),
-       |${mknLevelDiscountSql("b")},
-       |${mknLevelDiscountSql("t")},
-       |${mknLevelDiscountSql("m")},
-       |dd AS (SELECT cnb.btypes, dlb.*, dlt.*, dlm.*
-       |  FROM cnb CROSS JOIN dlb CROSS JOIN dlt CROSS JOIN dlm),
-       |sc AS (
-       |  SELECT pt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN pt.prev1 IS NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |      WHEN pt.prev2 IS NULL THEN
-       |        (CAST(big.c2 AS DOUBLE) - CASE WHEN big.c2 = 1 THEN dd.d1b
-       |           WHEN big.c2 = 2 THEN dd.d2b ELSE dd.d3b END)
-       |          / CAST(ctx.cc AS DOUBLE)
-       |        + (dd.d1b * CAST(ctx.nf1 AS DOUBLE) + dd.d2b * CAST(ctx.nf2 AS DOUBLE)
-       |           + dd.d3b * CAST(ctx.nf3p AS DOUBLE)) / CAST(ctx.cc AS DOUBLE)
-       |          * $pcont
-       |      ELSE
-       |        (CAST(tri.c3 AS DOUBLE) - CASE WHEN tri.c3 = 1 THEN dd.d1t
-       |           WHEN tri.c3 = 2 THEN dd.d2t ELSE dd.d3t END)
-       |          / CAST(ctx3.cc3 AS DOUBLE)
-       |        + (dd.d1t * CAST(ctx3.tf1 AS DOUBLE) + dd.d2t * CAST(ctx3.tf2 AS DOUBLE)
-       |           + dd.d3t * CAST(ctx3.tf3p AS DOUBLE)) / CAST(ctx3.cc3 AS DOUBLE)
-       |          * ($midP)
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  FROM pt JOIN uni USING (w) CROSS JOIN tot
-       |  LEFT JOIN big ON pt.prev1 = big.prev1 AND pt.w = big.w
-       |  LEFT JOIN ctx ON pt.prev1 = ctx.prev1
-       |  LEFT JOIN cont ON pt.w = cont.w
-       |  LEFT JOIN tri ON pt.prev2 = tri.prev2 AND pt.prev1 = tri.prev1 AND pt.w = tri.w
-       |  LEFT JOIN ctx3 ON pt.prev2 = ctx3.prev2 AND pt.prev1 = ctx3.prev1
-       |  LEFT JOIN m2 ON pt.prev1 = m2.prev1 AND pt.w = m2.w
-       |  LEFT JOIN mctx ON pt.prev1 = mctx.prev1
-       |  CROSS JOIN dd),
+       |  ${joins.mkString("\n  ")}
+       |  CROSS JOIN tot CROSS JOIN btot${if (mkn) " CROSS JOIN dd" else ""}),
        |agg AS (
        |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc GROUP BY 1)
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg $scoreWhere ORDER BY doc_id""".stripMargin
-  }
-
-  /** Order-5 interpolated-KN score chain — mirrors
-    * the order-5 [[graft.functions.LmIndex.scoreFrames]] term by term: raw counts
-    * at the top of each position-k chain, continuation counts below
-    * (m2 = N1+ over trigram types, m3 over 4-gram types, m4 over 5-gram
-    * types), D = 0.75 at every level. Shared verbatim by
-    * q_kn5_persisted (the order-5 store serve — row-identical in-corpus)
-    * and q_kn5_probed (`scoreWhere` filters the SCORED documents only;
-    * the model CTEs always read the full corpus). */
-  private def knPentaChainSql(scoreWhere: String = ""): String = {
-    val pcont = "(CAST(cont.n1c AS DOUBLE) / btot.btypes)"
-    def lvl(cnt: String, cc: String, nf: String, lower: String): String =
-      s"""greatest(CAST($cnt AS DOUBLE) - 0.75, 0.0) / CAST($cc AS DOUBLE)
-         |        + 0.75 * CAST($nf AS DOUBLE) / CAST($cc AS DOUBLE) * ($lower)""".stripMargin
-    val midP = lvl("m2.mcount", "mctx.mcc", "mctx.n1f2c", pcont)
-    val mid3P = lvl("m3.m3c", "mctx3.m3cc", "mctx3.n1f3c", midP)
-    val mid4P = lvl("m4.m4c", "mctx4.m4cc", "mctx4.n1f4c", mid3P)
-    s"""WITH toks AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    unnest(string_split_regex(text, '\\s+')) AS w,
-       |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |  FROM documents),
-       |pt AS MATERIALIZED (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2,
-       |    lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS prev3,
-       |    lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS prev4
-       |  FROM toks),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |big AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM pt WHERE prev1 IS NOT NULL GROUP BY 1, 2),
-       |ctx AS (
-       |  SELECT prev1, CAST(sum(c2) AS BIGINT) AS cc,
-       |    CAST(count(*) AS BIGINT) AS n1f
-       |  FROM big GROUP BY prev1),
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-       |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM big),
-       |tri AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS c3
-       |  FROM pt WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3),
-       |ctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(c3) AS BIGINT) AS cc3,
-       |    CAST(count(*) AS BIGINT) AS n1f3
-       |  FROM tri GROUP BY prev2, prev1),
-       |m2 AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS mcount
-       |  FROM tri GROUP BY prev1, w),
-       |mctx AS (
-       |  SELECT prev1, CAST(sum(mcount) AS BIGINT) AS mcc,
-       |    CAST(count(*) AS BIGINT) AS n1f2c
-       |  FROM m2 GROUP BY prev1),
-       |four AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c4
-       |  FROM pt WHERE prev3 IS NOT NULL GROUP BY 1, 2, 3, 4),
-       |ctx4 AS (
-       |  SELECT prev3, prev2, prev1, CAST(sum(c4) AS BIGINT) AS cc4,
-       |    CAST(count(*) AS BIGINT) AS n1f4
-       |  FROM four GROUP BY prev3, prev2, prev1),
-       |m3 AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS m3c
-       |  FROM four GROUP BY prev2, prev1, w),
-       |mctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(m3c) AS BIGINT) AS m3cc,
-       |    CAST(count(*) AS BIGINT) AS n1f3c
-       |  FROM m3 GROUP BY prev2, prev1),
-       |five AS MATERIALIZED (
-       |  SELECT prev4, prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c5
-       |  FROM pt WHERE prev4 IS NOT NULL GROUP BY 1, 2, 3, 4, 5),
-       |ctx5 AS (
-       |  SELECT prev4, prev3, prev2, prev1, CAST(sum(c5) AS BIGINT) AS cc5,
-       |    CAST(count(*) AS BIGINT) AS n1f5
-       |  FROM five GROUP BY prev4, prev3, prev2, prev1),
-       |m4 AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS m4c
-       |  FROM five GROUP BY prev3, prev2, prev1, w),
-       |mctx4 AS (
-       |  SELECT prev3, prev2, prev1, CAST(sum(m4c) AS BIGINT) AS m4cc,
-       |    CAST(count(*) AS BIGINT) AS n1f4c
-       |  FROM m4 GROUP BY prev3, prev2, prev1),
-       |sc AS (
-       |  SELECT pt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN pt.prev1 IS NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |      WHEN pt.prev2 IS NULL THEN
-       |        ${lvl("big.c2", "ctx.cc", "ctx.n1f", pcont)}
-       |      WHEN pt.prev3 IS NULL THEN
-       |        ${lvl("tri.c3", "ctx3.cc3", "ctx3.n1f3", midP)}
-       |      WHEN pt.prev4 IS NULL THEN
-       |        ${lvl("four.c4", "ctx4.cc4", "ctx4.n1f4", mid3P)}
-       |      ELSE
-       |        ${lvl("five.c5", "ctx5.cc5", "ctx5.n1f5", mid4P)}
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  FROM pt JOIN uni USING (w) CROSS JOIN tot
-       |  LEFT JOIN big ON pt.prev1 = big.prev1 AND pt.w = big.w
-       |  LEFT JOIN ctx ON pt.prev1 = ctx.prev1
-       |  LEFT JOIN cont ON pt.w = cont.w
-       |  LEFT JOIN tri ON pt.prev2 = tri.prev2 AND pt.prev1 = tri.prev1 AND pt.w = tri.w
-       |  LEFT JOIN ctx3 ON pt.prev2 = ctx3.prev2 AND pt.prev1 = ctx3.prev1
-       |  LEFT JOIN m2 ON pt.prev1 = m2.prev1 AND pt.w = m2.w
-       |  LEFT JOIN mctx ON pt.prev1 = mctx.prev1
-       |  LEFT JOIN four ON pt.prev3 = four.prev3 AND pt.prev2 = four.prev2
-       |    AND pt.prev1 = four.prev1 AND pt.w = four.w
-       |  LEFT JOIN ctx4 ON pt.prev3 = ctx4.prev3 AND pt.prev2 = ctx4.prev2
-       |    AND pt.prev1 = ctx4.prev1
-       |  LEFT JOIN m3 ON pt.prev2 = m3.prev2 AND pt.prev1 = m3.prev1 AND pt.w = m3.w
-       |  LEFT JOIN mctx3 ON pt.prev2 = mctx3.prev2 AND pt.prev1 = mctx3.prev1
-       |  LEFT JOIN five ON pt.prev4 = five.prev4 AND pt.prev3 = five.prev3
-       |    AND pt.prev2 = five.prev2 AND pt.prev1 = five.prev1 AND pt.w = five.w
-       |  LEFT JOIN ctx5 ON pt.prev4 = ctx5.prev4 AND pt.prev3 = ctx5.prev3
-       |    AND pt.prev2 = ctx5.prev2 AND pt.prev1 = ctx5.prev1
-       |  LEFT JOIN m4 ON pt.prev3 = m4.prev3 AND pt.prev2 = m4.prev2
-       |    AND pt.prev1 = m4.prev1 AND pt.w = m4.w
-       |  LEFT JOIN mctx4 ON pt.prev3 = mctx4.prev3 AND pt.prev2 = mctx4.prev2
-       |    AND pt.prev1 = mctx4.prev1
-       |  CROSS JOIN btot),
-       |agg AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc GROUP BY 1)
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg $scoreWhere ORDER BY doc_id""".stripMargin
-  }
-
-  /** Frozen-model ORDER-5 cross-scoring replay (train split → score
-    * split) — [[knTrigramCrossScoreSql]] two recursion levels up,
-    * mirroring the order-5 [[graft.functions.LmIndex.scoreFrames]]'s total OOV
-    * recipe branch for branch: every level covers its seen and unseen
-    * events in one absolute-discount expression (count coalesced to 0);
-    * an unseen context backs off a full level; reserved 0.5-type
-    * continuation/unigram mass. Shared verbatim by q_kn5_holdout
-    * (inline cross-score) and q_kn5_persisted_holdout (the order-5 store
-    * serve). */
-  private def knPentaCrossScoreSql(
-      trainWhere: String, scoreWhere: String): String =
-    knPentaOovChainSql(
-      s"""ttoks AS MATERIALIZED (
-         |  SELECT doc_id,
-         |    unnest(string_split_regex(text, '\\s+')) AS w,
-         |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-         |  FROM documents WHERE $trainWhere)""".stripMargin,
-      s"""SELECT doc_id,
-         |      unnest(string_split_regex(text, '\\s+')) AS w,
-         |      unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-         |    FROM documents WHERE $scoreWhere""".stripMargin)
-
-  /** VOCABULARY-CAPPED order-5 chain — mirrors
-    * the order-5 [[graft.functions.LmIndex.build]] with `maxVocab`: the model
-    * trains on tokens whose below-top-K words (by frequency, ties by
-    * word ascending — both engines' ORDER BY cnt DESC, w) are mapped to
-    * the reserved `<unk>`, then the RAW corpus scores against it — a
-    * capped-out word at serve time is a genuine OOV and routes through
-    * the reserved-mass recipe. The oracle of q_kn5_vocab. */
-  private def knPentaVocabChainSql(maxVocab: Long): String =
-    knPentaOovChainSql(
-      s"""rtoks AS MATERIALIZED (
-         |  SELECT doc_id,
-         |    unnest(string_split_regex(text, '\\s+')) AS w,
-         |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-         |  FROM documents),
-         |vtop AS (
-         |  SELECT w FROM (SELECT w, count(*) AS cnt FROM rtoks GROUP BY w)
-         |  ORDER BY cnt DESC, w LIMIT $maxVocab),
-         |ttoks AS MATERIALIZED (
-         |  SELECT r.doc_id, r.pos,
-         |    CASE WHEN v.w IS NOT NULL THEN r.w ELSE '<unk>' END AS w
-         |  FROM rtoks r LEFT JOIN vtop v ON r.w = v.w)""".stripMargin,
-      "SELECT doc_id, w, pos FROM rtoks")
-
-  /** The shared frozen-model order-5 OOV scoring chain: `ttoksCtes`
-    * defines the TRAINING token frame (CTE `ttoks`), `sptInner` the
-    * scored documents' raw token SELECT; every level covers its seen
-    * and unseen events with full backoff and the reserved 0.5-type
-    * mass (the order-5 [[graft.functions.LmIndex.scoreFrames]] branch for
-    * branch). */
-  private def knPentaOovChainSql(
-      ttoksCtes: String, sptInner: String): String = {
-    val pcont = """CASE WHEN cont.n1c IS NOT NULL
-      THEN CAST(cont.n1c AS DOUBLE) / btot.btypes
-      ELSE 0.5 / btot.btypes END"""
-    def lvl(cnt: String, cc: String, nf: String, lower: String): String =
-      s"""CASE WHEN $cc IS NOT NULL THEN
-         |        greatest(CAST(coalesce($cnt, 0) AS DOUBLE) - 0.75, 0.0)
-         |          / CAST($cc AS DOUBLE)
-         |        + 0.75 * CAST($nf AS DOUBLE) / CAST($cc AS DOUBLE)
-         |          * ($lower)
-         |      ELSE ($lower) END""".stripMargin
-    val midP = lvl("m2.mcount", "mctx.mcc", "mctx.n1f2c", pcont)
-    val mid3P = lvl("m3.m3c", "mctx3.m3cc", "mctx3.n1f3c", midP)
-    val mid4P = lvl("m4.m4c", "mctx4.m4cc", "mctx4.n1f4c", mid3P)
-    s"""WITH $ttoksCtes,
-       |tpt AS MATERIALIZED (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2,
-       |    lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS prev3,
-       |    lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS prev4
-       |  FROM ttoks),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM ttoks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |big AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM tpt WHERE prev1 IS NOT NULL GROUP BY 1, 2),
-       |ctx AS (
-       |  SELECT prev1, CAST(sum(c2) AS BIGINT) AS cc,
-       |    CAST(count(*) AS BIGINT) AS n1f
-       |  FROM big GROUP BY prev1),
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-       |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM big),
-       |tri AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS c3
-       |  FROM tpt WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3),
-       |ctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(c3) AS BIGINT) AS cc3,
-       |    CAST(count(*) AS BIGINT) AS n1f3
-       |  FROM tri GROUP BY prev2, prev1),
-       |m2 AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS mcount
-       |  FROM tri GROUP BY prev1, w),
-       |mctx AS (
-       |  SELECT prev1, CAST(sum(mcount) AS BIGINT) AS mcc,
-       |    CAST(count(*) AS BIGINT) AS n1f2c
-       |  FROM m2 GROUP BY prev1),
-       |four AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c4
-       |  FROM tpt WHERE prev3 IS NOT NULL GROUP BY 1, 2, 3, 4),
-       |ctx4 AS (
-       |  SELECT prev3, prev2, prev1, CAST(sum(c4) AS BIGINT) AS cc4,
-       |    CAST(count(*) AS BIGINT) AS n1f4
-       |  FROM four GROUP BY prev3, prev2, prev1),
-       |m3 AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS m3c
-       |  FROM four GROUP BY prev2, prev1, w),
-       |mctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(m3c) AS BIGINT) AS m3cc,
-       |    CAST(count(*) AS BIGINT) AS n1f3c
-       |  FROM m3 GROUP BY prev2, prev1),
-       |five AS MATERIALIZED (
-       |  SELECT prev4, prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c5
-       |  FROM tpt WHERE prev4 IS NOT NULL GROUP BY 1, 2, 3, 4, 5),
-       |ctx5 AS (
-       |  SELECT prev4, prev3, prev2, prev1, CAST(sum(c5) AS BIGINT) AS cc5,
-       |    CAST(count(*) AS BIGINT) AS n1f5
-       |  FROM five GROUP BY prev4, prev3, prev2, prev1),
-       |m4 AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS m4c
-       |  FROM five GROUP BY prev3, prev2, prev1, w),
-       |mctx4 AS (
-       |  SELECT prev3, prev2, prev1, CAST(sum(m4c) AS BIGINT) AS m4cc,
-       |    CAST(count(*) AS BIGINT) AS n1f4c
-       |  FROM m4 GROUP BY prev3, prev2, prev1),
-       |spt AS (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2,
-       |    lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS prev3,
-       |    lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS prev4
-       |  FROM (
-       |    $sptInner)),
-       |sc5 AS (
-       |  SELECT spt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN spt.prev1 IS NULL THEN
-       |        CASE WHEN uni.c1 IS NOT NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |             ELSE 0.5 / tot.total END
-       |      WHEN spt.prev2 IS NULL THEN
-       |        ${lvl("big.c2", "ctx.cc", "ctx.n1f", pcont)}
-       |      WHEN spt.prev3 IS NULL THEN
-       |        ${lvl("tri.c3", "ctx3.cc3", "ctx3.n1f3", midP)}
-       |      WHEN spt.prev4 IS NULL THEN
-       |        ${lvl("four.c4", "ctx4.cc4", "ctx4.n1f4", mid3P)}
-       |      ELSE
-       |        ${lvl("five.c5", "ctx5.cc5", "ctx5.n1f5", mid4P)}
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  FROM spt
-       |  LEFT JOIN uni ON spt.w = uni.w
-       |  LEFT JOIN cont ON spt.w = cont.w
-       |  LEFT JOIN big ON spt.prev1 = big.prev1 AND spt.w = big.w
-       |  LEFT JOIN ctx ON spt.prev1 = ctx.prev1
-       |  LEFT JOIN tri ON spt.prev2 = tri.prev2 AND spt.prev1 = tri.prev1 AND spt.w = tri.w
-       |  LEFT JOIN ctx3 ON spt.prev2 = ctx3.prev2 AND spt.prev1 = ctx3.prev1
-       |  LEFT JOIN m2 ON spt.prev1 = m2.prev1 AND spt.w = m2.w
-       |  LEFT JOIN mctx ON spt.prev1 = mctx.prev1
-       |  LEFT JOIN four ON spt.prev3 = four.prev3 AND spt.prev2 = four.prev2
-       |    AND spt.prev1 = four.prev1 AND spt.w = four.w
-       |  LEFT JOIN ctx4 ON spt.prev3 = ctx4.prev3 AND spt.prev2 = ctx4.prev2
-       |    AND spt.prev1 = ctx4.prev1
-       |  LEFT JOIN m3 ON spt.prev2 = m3.prev2 AND spt.prev1 = m3.prev1 AND spt.w = m3.w
-       |  LEFT JOIN mctx3 ON spt.prev2 = mctx3.prev2 AND spt.prev1 = mctx3.prev1
-       |  LEFT JOIN five ON spt.prev4 = five.prev4 AND spt.prev3 = five.prev3
-       |    AND spt.prev2 = five.prev2 AND spt.prev1 = five.prev1 AND spt.w = five.w
-       |  LEFT JOIN ctx5 ON spt.prev4 = ctx5.prev4 AND spt.prev3 = ctx5.prev3
-       |    AND spt.prev2 = ctx5.prev2 AND spt.prev1 = ctx5.prev1
-       |  LEFT JOIN m4 ON spt.prev3 = m4.prev3 AND spt.prev2 = m4.prev2
-       |    AND spt.prev1 = m4.prev1 AND spt.w = m4.w
-       |  LEFT JOIN mctx4 ON spt.prev3 = mctx4.prev3 AND spt.prev2 = mctx4.prev2
-       |    AND spt.prev1 = mctx4.prev1
-       |  CROSS JOIN tot CROSS JOIN btot),
-       |agg5 AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc5 GROUP BY 1)
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg5 ORDER BY doc_id""".stripMargin
-  }
-
-  /** Modified-KN ORDER-5 score chain — mirrors
-    * the order-5 modified-KN [[graft.functions.LmIndex.scoreFrames]]: the order-5 recursion
-    * with per-LEVEL estimated D1/D2/D3+ across all SEVEN levels (raw
-    * 5/4/3/2-gram plus the three continuation levels), per-context
-    * bucket tallies at every level, 0.5/1.0/1.5 fallback per degenerate
-    * level. The oracle of q_mkn5_persisted (the order-5 store serve
-    * reading the same tallies from its widened tables). */
-  private def mknPentaChainSql(scoreWhere: String = ""): String =
-    s"""WITH $mknPentaCtes
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg $scoreWhere ORDER BY doc_id""".stripMargin
-
-  /** The CTE chain of [[mknPentaChainSql]] up through the per-document
-    * fixed-point aggregate `agg(doc_id, s, n)` — exposed so composed
-    * chains (q_ccnet_gate) can extend it. */
-  private def mknPentaCtes: String = {
-    val pcont = "(CAST(cont.n1c AS DOUBLE) / dd.btypes)"
-    def mlvl(cnt: String, cc: String, f1: String, f2: String, f3p: String,
-        p: String, lower: String): String =
-      s"""(CAST($cnt AS DOUBLE) - CASE WHEN $cnt = 1 THEN dd.d1$p
-         |            WHEN $cnt = 2 THEN dd.d2$p ELSE dd.d3$p END)
-         |          / CAST($cc AS DOUBLE)
-         |        + (dd.d1$p * CAST($f1 AS DOUBLE) + dd.d2$p * CAST($f2 AS DOUBLE)
-         |           + dd.d3$p * CAST($f3p AS DOUBLE)) / CAST($cc AS DOUBLE)
-         |          * ($lower)""".stripMargin
-    val midP = mlvl("m2.mcount", "mctx.mcc", "mctx.mf1", "mctx.mf2",
-      "mctx.mf3p", "m", pcont)
-    val mid3P = mlvl("m3.m3c", "mctx3.m3cc", "mctx3.pf1", "mctx3.pf2",
-      "mctx3.pf3p", "p", midP)
-    val mid4P = mlvl("m4.m4c", "mctx4.m4cc", "mctx4.qf1", "mctx4.qf2",
-      "mctx4.qf3p", "q", mid3P)
-    s"""toks AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    unnest(string_split_regex(text, '\\s+')) AS w,
-       |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |  FROM documents),
-       |pt AS MATERIALIZED (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2,
-       |    lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS prev3,
-       |    lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS prev4
-       |  FROM toks),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |big AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM pt WHERE prev1 IS NOT NULL GROUP BY 1, 2),
-       |ctx AS (
-       |  SELECT prev1, CAST(sum(c2) AS BIGINT) AS cc,
-       |    CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS nf1,
-       |    CAST(sum(CASE WHEN c2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS nf2,
-       |    CAST(sum(CASE WHEN c2 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS nf3p
-       |  FROM big GROUP BY prev1),
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM big GROUP BY w),
-       |tri AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS c3
-       |  FROM pt WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3),
-       |ctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(c3) AS BIGINT) AS cc3,
-       |    CAST(sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tf1,
-       |    CAST(sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS tf2,
-       |    CAST(sum(CASE WHEN c3 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS tf3p
-       |  FROM tri GROUP BY prev2, prev1),
-       |m2 AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS mcount
-       |  FROM tri GROUP BY prev1, w),
-       |mctx AS (
-       |  SELECT prev1, CAST(sum(mcount) AS BIGINT) AS mcc,
-       |    CAST(sum(CASE WHEN mcount = 1 THEN 1 ELSE 0 END) AS BIGINT) AS mf1,
-       |    CAST(sum(CASE WHEN mcount = 2 THEN 1 ELSE 0 END) AS BIGINT) AS mf2,
-       |    CAST(sum(CASE WHEN mcount >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS mf3p
-       |  FROM m2 GROUP BY prev1),
-       |four AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c4
-       |  FROM pt WHERE prev3 IS NOT NULL GROUP BY 1, 2, 3, 4),
-       |ctx4 AS (
-       |  SELECT prev3, prev2, prev1, CAST(sum(c4) AS BIGINT) AS cc4,
-       |    CAST(sum(CASE WHEN c4 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS ff1,
-       |    CAST(sum(CASE WHEN c4 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS ff2,
-       |    CAST(sum(CASE WHEN c4 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS ff3p
-       |  FROM four GROUP BY prev3, prev2, prev1),
-       |m3 AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS m3c
-       |  FROM four GROUP BY prev2, prev1, w),
-       |mctx3 AS (
-       |  SELECT prev2, prev1, CAST(sum(m3c) AS BIGINT) AS m3cc,
-       |    CAST(sum(CASE WHEN m3c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS pf1,
-       |    CAST(sum(CASE WHEN m3c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS pf2,
-       |    CAST(sum(CASE WHEN m3c >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS pf3p
-       |  FROM m3 GROUP BY prev2, prev1),
-       |five AS MATERIALIZED (
-       |  SELECT prev4, prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c5
-       |  FROM pt WHERE prev4 IS NOT NULL GROUP BY 1, 2, 3, 4, 5),
-       |ctx5 AS (
-       |  SELECT prev4, prev3, prev2, prev1, CAST(sum(c5) AS BIGINT) AS cc5,
-       |    CAST(sum(CASE WHEN c5 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS vf1,
-       |    CAST(sum(CASE WHEN c5 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS vf2,
-       |    CAST(sum(CASE WHEN c5 >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS vf3p
-       |  FROM five GROUP BY prev4, prev3, prev2, prev1),
-       |m4 AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS m4c
-       |  FROM five GROUP BY prev3, prev2, prev1, w),
-       |mctx4 AS (
-       |  SELECT prev3, prev2, prev1, CAST(sum(m4c) AS BIGINT) AS m4cc,
-       |    CAST(sum(CASE WHEN m4c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS qf1,
-       |    CAST(sum(CASE WHEN m4c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS qf2,
-       |    CAST(sum(CASE WHEN m4c >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS qf3p
-       |  FROM m4 GROUP BY prev3, prev2, prev1),
-       |cnb AS (SELECT CAST(count(*) AS DOUBLE) AS btypes,
-       |  CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS b1,
-       |  CAST(sum(CASE WHEN c2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS b2,
-       |  CAST(sum(CASE WHEN c2 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS b3,
-       |  CAST(sum(CASE WHEN c2 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS b4
-       |  FROM big),
-       |cnt AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t1,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t2,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t3,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t4
-       |  FROM tri),
-       |cnm AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN mcount = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m1,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m2,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m3,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m4
-       |  FROM m2),
-       |cnf AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN c4 = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f1,
-       |  CAST(coalesce(sum(CASE WHEN c4 = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f2,
-       |  CAST(coalesce(sum(CASE WHEN c4 = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f3,
-       |  CAST(coalesce(sum(CASE WHEN c4 = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f4
-       |  FROM four),
-       |cnp AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN m3c = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p1,
-       |  CAST(coalesce(sum(CASE WHEN m3c = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p2,
-       |  CAST(coalesce(sum(CASE WHEN m3c = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p3,
-       |  CAST(coalesce(sum(CASE WHEN m3c = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p4
-       |  FROM m3),
-       |cnv AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN c5 = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v1,
-       |  CAST(coalesce(sum(CASE WHEN c5 = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v2,
-       |  CAST(coalesce(sum(CASE WHEN c5 = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v3,
-       |  CAST(coalesce(sum(CASE WHEN c5 = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v4
-       |  FROM five),
-       |cnq AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN m4c = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q1,
-       |  CAST(coalesce(sum(CASE WHEN m4c = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q2,
-       |  CAST(coalesce(sum(CASE WHEN m4c = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q3,
-       |  CAST(coalesce(sum(CASE WHEN m4c = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q4
-       |  FROM m4),
-       |${mknLevelDiscountSql("b")},
-       |${mknLevelDiscountSql("t")},
-       |${mknLevelDiscountSql("m")},
-       |${mknLevelDiscountSql("f")},
-       |${mknLevelDiscountSql("p")},
-       |${mknLevelDiscountSql("v")},
-       |${mknLevelDiscountSql("q")},
-       |dd AS (SELECT cnb.btypes, dlb.*, dlt.*, dlm.*, dlf.*, dlp.*, dlv.*, dlq.*
-       |  FROM cnb CROSS JOIN dlb CROSS JOIN dlt CROSS JOIN dlm
-       |  CROSS JOIN dlf CROSS JOIN dlp CROSS JOIN dlv CROSS JOIN dlq),
-       |sc AS (
-       |  SELECT pt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN pt.prev1 IS NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |      WHEN pt.prev2 IS NULL THEN
-       |        ${mlvl("big.c2", "ctx.cc", "ctx.nf1", "ctx.nf2", "ctx.nf3p",
-                 "b", pcont)}
-       |      WHEN pt.prev3 IS NULL THEN
-       |        ${mlvl("tri.c3", "ctx3.cc3", "ctx3.tf1", "ctx3.tf2",
-                 "ctx3.tf3p", "t", midP)}
-       |      WHEN pt.prev4 IS NULL THEN
-       |        ${mlvl("four.c4", "ctx4.cc4", "ctx4.ff1", "ctx4.ff2",
-                 "ctx4.ff3p", "f", mid3P)}
-       |      ELSE
-       |        ${mlvl("five.c5", "ctx5.cc5", "ctx5.vf1", "ctx5.vf2",
-                 "ctx5.vf3p", "v", mid4P)}
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  FROM pt JOIN uni USING (w) CROSS JOIN tot
-       |  LEFT JOIN big ON pt.prev1 = big.prev1 AND pt.w = big.w
-       |  LEFT JOIN ctx ON pt.prev1 = ctx.prev1
-       |  LEFT JOIN cont ON pt.w = cont.w
-       |  LEFT JOIN tri ON pt.prev2 = tri.prev2 AND pt.prev1 = tri.prev1 AND pt.w = tri.w
-       |  LEFT JOIN ctx3 ON pt.prev2 = ctx3.prev2 AND pt.prev1 = ctx3.prev1
-       |  LEFT JOIN m2 ON pt.prev1 = m2.prev1 AND pt.w = m2.w
-       |  LEFT JOIN mctx ON pt.prev1 = mctx.prev1
-       |  LEFT JOIN four ON pt.prev3 = four.prev3 AND pt.prev2 = four.prev2
-       |    AND pt.prev1 = four.prev1 AND pt.w = four.w
-       |  LEFT JOIN ctx4 ON pt.prev3 = ctx4.prev3 AND pt.prev2 = ctx4.prev2
-       |    AND pt.prev1 = ctx4.prev1
-       |  LEFT JOIN m3 ON pt.prev2 = m3.prev2 AND pt.prev1 = m3.prev1 AND pt.w = m3.w
-       |  LEFT JOIN mctx3 ON pt.prev2 = mctx3.prev2 AND pt.prev1 = mctx3.prev1
-       |  LEFT JOIN five ON pt.prev4 = five.prev4 AND pt.prev3 = five.prev3
-       |    AND pt.prev2 = five.prev2 AND pt.prev1 = five.prev1 AND pt.w = five.w
-       |  LEFT JOIN ctx5 ON pt.prev4 = ctx5.prev4 AND pt.prev3 = ctx5.prev3
-       |    AND pt.prev2 = ctx5.prev2 AND pt.prev1 = ctx5.prev1
-       |  LEFT JOIN m4 ON pt.prev3 = m4.prev3 AND pt.prev2 = m4.prev2
-       |    AND pt.prev1 = m4.prev1 AND pt.w = m4.w
-       |  LEFT JOIN mctx4 ON pt.prev3 = mctx4.prev3 AND pt.prev2 = mctx4.prev2
-       |    AND pt.prev1 = mctx4.prev1
-       |  CROSS JOIN dd),
-       |agg AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc GROUP BY 1)""".stripMargin
-  }
-
-  /** The composed CCNet gate chain — language-ID (the q_lang_mismatch
-    * stopword-voting CASE), the persisted order-5 modified-KN score
-    * ([[mknPentaCtes]] verbatim), per-DETECTED-language terciles
-    * (ntile over (logprob DESC, doc_id) — the q_ppl_buckets tiling),
-    * keep head+middle. The oracle of q_ccnet_gate (Wenzek et al. 2020
-    * §4.3 composed end to end). */
-  private def ccnetGateChainSql(tiles: Int): String =
-    s"""WITH $mknPentaCtes,
-       |mk AS (
+       |  FROM sc GROUP BY 1),
+       |lm AS (
        |  SELECT doc_id, n AS n_tokens,
        |    round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |  FROM agg),
-       |lsc AS (
-       |  SELECT doc_id,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('the','a','of','and','to'))) AS BIGINT) AS hits_en,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('der','die','das','und','ist'))) AS BIGINT) AS hits_de,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('el','los','las','una','y'))) AS BIGINT) AS hits_es,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('le','les','et','est','dans'))) AS BIGINT) AS hits_fr,
-       |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('的','是','了','和','在'))) AS BIGINT) AS hits_zh
-       |  FROM documents),
-       |lp AS (
-       |  SELECT doc_id,
-       |    CASE
-       |      WHEN hits_en >= hits_de AND hits_en >= hits_es AND hits_en >= hits_fr AND hits_en >= hits_zh THEN 'en'
-       |      WHEN hits_de >= hits_en AND hits_de >= hits_es AND hits_de >= hits_fr AND hits_de >= hits_zh THEN 'de'
-       |      WHEN hits_es >= hits_en AND hits_es >= hits_de AND hits_es >= hits_fr AND hits_es >= hits_zh THEN 'es'
-       |      WHEN hits_fr >= hits_en AND hits_fr >= hits_de AND hits_fr >= hits_es AND hits_fr >= hits_zh THEN 'fr'
-       |      ELSE 'zh' END AS predicted_lang
-       |  FROM lsc),
-       |ld AS (
-       |  SELECT lp.doc_id, lp.predicted_lang, mk.n_tokens, mk.logprob
-       |  FROM lp JOIN mk USING (doc_id)),
-       |rk AS (
-       |  SELECT doc_id, predicted_lang, n_tokens, logprob,
-       |    CAST(ntile($tiles) OVER (PARTITION BY predicted_lang
-       |      ORDER BY logprob DESC, doc_id) AS BIGINT) AS tile
-       |  FROM ld)
-       |SELECT doc_id, predicted_lang, n_tokens, logprob, tile,
-       |  CASE WHEN tile = 1 THEN 'head' WHEN tile = $tiles THEN 'tail'
-       |    ELSE 'middle' END AS bucket,
-       |  tile < $tiles AS kept
-       |FROM rk ORDER BY doc_id""".stripMargin
-
-  /** Shared CTE block for the COUNT-PRUNED order-5 chains — the KenLM
-    * `--prune` analog's bookkeeping ([[graft.functions.LmIndex.build]]
-    * with pruneMin): full count tables (`bigf trif m2f fourf m3f fivef
-    * m4f`) feed PRUNED event tables (`big tri m2 four m3 five m4`,
-    * rows with count >= the key width's threshold) and context tables
-    * whose `cc` stays the FULL total, whose follower/bucket tallies
-    * count SURVIVORS, and whose `pm*` column carries the pruned mass;
-    * contexts with zero survivors drop (HAVING) — the serve backs off a
-    * full level there, which is λ = pm/cc = 1 exactly. Continuation
-    * counts (m2f/m3f/m4f, cont) derive from the FULL higher-order
-    * tables — adjusted counts precede pruning, KenLM's order. */
-  private def prunedPentaModelCtes(
-      t2: Long, t3: Long, t4: Long, t5: Long): String = {
-    def ctxCte(name: String, src: String, keys: String, c: String, t: Long,
-        cc: String, nf: String, b: String, pm: String): String =
-      s"""$name AS (
-         |  SELECT $keys, CAST(sum($c) AS BIGINT) AS $cc,
-         |    CAST(sum(CASE WHEN $c >= $t THEN 1 ELSE 0 END) AS BIGINT) AS $nf,
-         |    CAST(sum(CASE WHEN $c >= $t AND $c = 1 THEN 1 ELSE 0 END) AS BIGINT) AS ${b}1,
-         |    CAST(sum(CASE WHEN $c >= $t AND $c = 2 THEN 1 ELSE 0 END) AS BIGINT) AS ${b}2,
-         |    CAST(sum(CASE WHEN $c >= $t AND $c >= 3 THEN 1 ELSE 0 END) AS BIGINT) AS ${b}3p,
-         |    CAST(coalesce(sum(CASE WHEN $c < $t THEN $c END), 0) AS BIGINT) AS $pm
-         |  FROM $src GROUP BY $keys
-         |  HAVING sum(CASE WHEN $c >= $t THEN 1 ELSE 0 END) > 0)""".stripMargin
-    s"""toks AS MATERIALIZED (
-       |  SELECT doc_id,
-       |    unnest(string_split_regex(text, '\\s+')) AS w,
-       |    unnest(generate_series(1, len(string_split_regex(text, '\\s+')))) AS pos
-       |  FROM documents),
-       |pt AS MATERIALIZED (
-       |  SELECT doc_id, pos, w,
-       |    lag(w, 1) OVER (PARTITION BY doc_id ORDER BY pos) AS prev1,
-       |    lag(w, 2) OVER (PARTITION BY doc_id ORDER BY pos) AS prev2,
-       |    lag(w, 3) OVER (PARTITION BY doc_id ORDER BY pos) AS prev3,
-       |    lag(w, 4) OVER (PARTITION BY doc_id ORDER BY pos) AS prev4
-       |  FROM toks),
-       |uni AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY w),
-       |tot AS (SELECT CAST(sum(c1) AS DOUBLE) AS total FROM uni),
-       |bigf AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS c2
-       |  FROM pt WHERE prev1 IS NOT NULL GROUP BY 1, 2),
-       |big AS (SELECT * FROM bigf WHERE c2 >= $t2),
-       |${ctxCte("ctx", "bigf", "prev1", "c2", t2, "cc", "n1f", "nf", "pmb")},
-       |cont AS (SELECT w, CAST(count(*) AS BIGINT) AS n1c FROM bigf GROUP BY w),
-       |btot AS (SELECT CAST(count(*) AS DOUBLE) AS btypes FROM bigf),
-       |trif AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS c3
-       |  FROM pt WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3),
-       |tri AS (SELECT * FROM trif WHERE c3 >= $t3),
-       |${ctxCte("ctx3", "trif", "prev2, prev1", "c3", t3, "cc3", "n1f3",
-          "tf", "pmt")},
-       |m2f AS MATERIALIZED (
-       |  SELECT prev1, w, CAST(count(*) AS BIGINT) AS mcount
-       |  FROM trif GROUP BY prev1, w),
-       |m2 AS (SELECT * FROM m2f WHERE mcount >= $t2),
-       |${ctxCte("mctx", "m2f", "prev1", "mcount", t2, "mcc", "n1f2c",
-          "mf", "pmm")},
-       |fourf AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c4
-       |  FROM pt WHERE prev3 IS NOT NULL GROUP BY 1, 2, 3, 4),
-       |four AS (SELECT * FROM fourf WHERE c4 >= $t4),
-       |${ctxCte("ctx4", "fourf", "prev3, prev2, prev1", "c4", t4, "cc4",
-          "n1f4", "ff", "pmf")},
-       |m3f AS MATERIALIZED (
-       |  SELECT prev2, prev1, w, CAST(count(*) AS BIGINT) AS m3c
-       |  FROM fourf GROUP BY prev2, prev1, w),
-       |m3 AS (SELECT * FROM m3f WHERE m3c >= $t3),
-       |${ctxCte("mctx3", "m3f", "prev2, prev1", "m3c", t3, "m3cc", "n1f3c",
-          "pf", "pmp")},
-       |fivef AS MATERIALIZED (
-       |  SELECT prev4, prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS c5
-       |  FROM pt WHERE prev4 IS NOT NULL GROUP BY 1, 2, 3, 4, 5),
-       |five AS (SELECT * FROM fivef WHERE c5 >= $t5),
-       |${ctxCte("ctx5", "fivef", "prev4, prev3, prev2, prev1", "c5", t5,
-          "cc5", "n1f5", "vf", "pmv")},
-       |m4f AS MATERIALIZED (
-       |  SELECT prev3, prev2, prev1, w, CAST(count(*) AS BIGINT) AS m4c
-       |  FROM fivef GROUP BY prev3, prev2, prev1, w),
-       |m4 AS (SELECT * FROM m4f WHERE m4c >= $t4),
-       |${ctxCte("mctx4", "m4f", "prev3, prev2, prev1", "m4c", t4, "m4cc",
-          "n1f4c", "qf", "pmq")}""".stripMargin
+       |  FROM agg)""".stripMargin
   }
 
-  /** The shared scoring-join block of the pruned order-5 chains: the
-    * token frame against the PRUNED event tables and the full-cc
-    * context tables. */
-  private val prunedPentaJoinsSql: String =
-    """FROM pt JOIN uni USING (w) CROSS JOIN tot
-      |  LEFT JOIN big ON pt.prev1 = big.prev1 AND pt.w = big.w
-      |  LEFT JOIN ctx ON pt.prev1 = ctx.prev1
-      |  LEFT JOIN cont ON pt.w = cont.w
-      |  LEFT JOIN tri ON pt.prev2 = tri.prev2 AND pt.prev1 = tri.prev1 AND pt.w = tri.w
-      |  LEFT JOIN ctx3 ON pt.prev2 = ctx3.prev2 AND pt.prev1 = ctx3.prev1
-      |  LEFT JOIN m2 ON pt.prev1 = m2.prev1 AND pt.w = m2.w
-      |  LEFT JOIN mctx ON pt.prev1 = mctx.prev1
-      |  LEFT JOIN four ON pt.prev3 = four.prev3 AND pt.prev2 = four.prev2
-      |    AND pt.prev1 = four.prev1 AND pt.w = four.w
-      |  LEFT JOIN ctx4 ON pt.prev3 = ctx4.prev3 AND pt.prev2 = ctx4.prev2
-      |    AND pt.prev1 = ctx4.prev1
-      |  LEFT JOIN m3 ON pt.prev2 = m3.prev2 AND pt.prev1 = m3.prev1 AND pt.w = m3.w
-      |  LEFT JOIN mctx3 ON pt.prev2 = mctx3.prev2 AND pt.prev1 = mctx3.prev1
-      |  LEFT JOIN five ON pt.prev4 = five.prev4 AND pt.prev3 = five.prev3
-      |    AND pt.prev2 = five.prev2 AND pt.prev1 = five.prev1 AND pt.w = five.w
-      |  LEFT JOIN ctx5 ON pt.prev4 = ctx5.prev4 AND pt.prev3 = ctx5.prev3
-      |    AND pt.prev2 = ctx5.prev2 AND pt.prev1 = ctx5.prev1
-      |  LEFT JOIN m4 ON pt.prev3 = m4.prev3 AND pt.prev2 = m4.prev2
-      |    AND pt.prev1 = m4.prev1 AND pt.w = m4.w
-      |  LEFT JOIN mctx4 ON pt.prev3 = mctx4.prev3 AND pt.prev2 = mctx4.prev2
-      |    AND pt.prev1 = mctx4.prev1""".stripMargin
-
-  /** COUNT-PRUNED order-5 KN chain — mirrors
-    * the order-5 [[graft.functions.LmIndex.scoreFrames]] over a
-    * `build(5, pruneMin)` model: pruned rows coalesce to 0 under their
-    * (still-present, full-cc) contexts, every λ carries the pruned
-    * mass, and a fully-pruned context backs off a whole level. The
-    * oracle of q_kn5_pruned (in-corpus scoring of the pruned model, so
-    * pruned branches actually fire — unlike the unpruned chains, a
-    * miss here is a PRUNED event, which is the point). */
-  private def knPentaPrunedChainSql(
-      t2: Long, t3: Long, t4: Long, t5: Long): String = {
-    val pcont = "(CAST(cont.n1c AS DOUBLE) / btot.btypes)"
-    def plvl(cnt: String, cc: String, nf: String, pm: String,
-        lower: String): String =
-      s"""CASE WHEN $cc IS NOT NULL THEN
-         |        greatest(CAST(coalesce($cnt, 0) AS DOUBLE) - 0.75, 0.0)
-         |          / CAST($cc AS DOUBLE)
-         |        + (0.75 * CAST($nf AS DOUBLE) + CAST($pm AS DOUBLE))
-         |          / CAST($cc AS DOUBLE) * ($lower)
-         |      ELSE ($lower) END""".stripMargin
-    val midP = plvl("m2.mcount", "mctx.mcc", "mctx.n1f2c", "mctx.pmm", pcont)
-    val mid3P = plvl("m3.m3c", "mctx3.m3cc", "mctx3.n1f3c", "mctx3.pmp", midP)
-    val mid4P = plvl("m4.m4c", "mctx4.m4cc", "mctx4.n1f4c", "mctx4.pmq", mid3P)
-    s"""WITH ${prunedPentaModelCtes(t2, t3, t4, t5)},
-       |sc AS (
-       |  SELECT pt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN pt.prev1 IS NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |      WHEN pt.prev2 IS NULL THEN
-       |        ${plvl("big.c2", "ctx.cc", "ctx.n1f", "ctx.pmb", pcont)}
-       |      WHEN pt.prev3 IS NULL THEN
-       |        ${plvl("tri.c3", "ctx3.cc3", "ctx3.n1f3", "ctx3.pmt", midP)}
-       |      WHEN pt.prev4 IS NULL THEN
-       |        ${plvl("four.c4", "ctx4.cc4", "ctx4.n1f4", "ctx4.pmf", mid3P)}
-       |      ELSE
-       |        ${plvl("five.c5", "ctx5.cc5", "ctx5.n1f5", "ctx5.pmv", mid4P)}
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  $prunedPentaJoinsSql
-       |  CROSS JOIN btot),
-       |agg AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc GROUP BY 1)
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg ORDER BY doc_id""".stripMargin
-  }
-
-  /** COUNT-PRUNED order-5 modified-KN chain — mirrors
-    * the order-5 modified-KN [[graft.functions.LmIndex.scoreFrames]] over a pruned model:
-    * all seven levels' discounts estimate from the FULL count-of-count
-    * tallies (calibration precedes pruning — KenLM's order), bucket
-    * tallies count survivors, λ carries the pruned mass, D(0) = 0 for
-    * pruned/unseen events. The oracle of q_mkn5_pruned. */
-  private def mknPentaPrunedChainSql(
-      t2: Long, t3: Long, t4: Long, t5: Long): String = {
-    val pcont = "(CAST(cont.n1c AS DOUBLE) / dd.btypes)"
-    def pmlvl(cnt: String, cc: String, f1: String, f2: String, f3p: String,
-        pm: String, p: String, lower: String): String =
-      s"""CASE WHEN $cc IS NOT NULL THEN
-         |        CASE WHEN $cnt IS NOT NULL THEN
-         |          (CAST($cnt AS DOUBLE) - CASE WHEN $cnt = 1 THEN dd.d1$p
-         |              WHEN $cnt = 2 THEN dd.d2$p ELSE dd.d3$p END)
-         |            / CAST($cc AS DOUBLE)
-         |        ELSE 0.0 END
-         |        + (dd.d1$p * CAST($f1 AS DOUBLE) + dd.d2$p * CAST($f2 AS DOUBLE)
-         |           + dd.d3$p * CAST($f3p AS DOUBLE) + CAST($pm AS DOUBLE))
-         |          / CAST($cc AS DOUBLE) * ($lower)
-         |      ELSE ($lower) END""".stripMargin
-    val midP = pmlvl("m2.mcount", "mctx.mcc", "mctx.mf1", "mctx.mf2",
-      "mctx.mf3p", "mctx.pmm", "m", pcont)
-    val mid3P = pmlvl("m3.m3c", "mctx3.m3cc", "mctx3.pf1", "mctx3.pf2",
-      "mctx3.pf3p", "mctx3.pmp", "p", midP)
-    val mid4P = pmlvl("m4.m4c", "mctx4.m4cc", "mctx4.qf1", "mctx4.qf2",
-      "mctx4.qf3p", "mctx4.pmq", "q", mid3P)
-    s"""WITH ${prunedPentaModelCtes(t2, t3, t4, t5)},
-       |cnb AS (SELECT CAST(count(*) AS DOUBLE) AS btypes,
-       |  CAST(sum(CASE WHEN c2 = 1 THEN 1 ELSE 0 END) AS BIGINT) AS b1,
-       |  CAST(sum(CASE WHEN c2 = 2 THEN 1 ELSE 0 END) AS BIGINT) AS b2,
-       |  CAST(sum(CASE WHEN c2 = 3 THEN 1 ELSE 0 END) AS BIGINT) AS b3,
-       |  CAST(sum(CASE WHEN c2 = 4 THEN 1 ELSE 0 END) AS BIGINT) AS b4
-       |  FROM bigf),
-       |cnt AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN c3 = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t1,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t2,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t3,
-       |  CAST(coalesce(sum(CASE WHEN c3 = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS t4
-       |  FROM trif),
-       |cnm AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN mcount = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m1,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m2,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m3,
-       |  CAST(coalesce(sum(CASE WHEN mcount = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS m4
-       |  FROM m2f),
-       |cnf AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN c4 = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f1,
-       |  CAST(coalesce(sum(CASE WHEN c4 = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f2,
-       |  CAST(coalesce(sum(CASE WHEN c4 = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f3,
-       |  CAST(coalesce(sum(CASE WHEN c4 = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS f4
-       |  FROM fourf),
-       |cnp AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN m3c = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p1,
-       |  CAST(coalesce(sum(CASE WHEN m3c = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p2,
-       |  CAST(coalesce(sum(CASE WHEN m3c = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p3,
-       |  CAST(coalesce(sum(CASE WHEN m3c = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS p4
-       |  FROM m3f),
-       |cnv AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN c5 = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v1,
-       |  CAST(coalesce(sum(CASE WHEN c5 = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v2,
-       |  CAST(coalesce(sum(CASE WHEN c5 = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v3,
-       |  CAST(coalesce(sum(CASE WHEN c5 = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS v4
-       |  FROM fivef),
-       |cnq AS (SELECT
-       |  CAST(coalesce(sum(CASE WHEN m4c = 1 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q1,
-       |  CAST(coalesce(sum(CASE WHEN m4c = 2 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q2,
-       |  CAST(coalesce(sum(CASE WHEN m4c = 3 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q3,
-       |  CAST(coalesce(sum(CASE WHEN m4c = 4 THEN 1 ELSE 0 END), 0) AS BIGINT) AS q4
-       |  FROM m4f),
-       |${mknLevelDiscountSql("b")},
-       |${mknLevelDiscountSql("t")},
-       |${mknLevelDiscountSql("m")},
-       |${mknLevelDiscountSql("f")},
-       |${mknLevelDiscountSql("p")},
-       |${mknLevelDiscountSql("v")},
-       |${mknLevelDiscountSql("q")},
-       |dd AS (SELECT cnb.btypes, dlb.*, dlt.*, dlm.*, dlf.*, dlp.*, dlv.*, dlq.*
-       |  FROM cnb CROSS JOIN dlb CROSS JOIN dlt CROSS JOIN dlm
-       |  CROSS JOIN dlf CROSS JOIN dlp CROSS JOIN dlv CROSS JOIN dlq),
-       |sc AS (
-       |  SELECT pt.doc_id,
-       |    CAST(round(ln(CASE
-       |      WHEN pt.prev1 IS NULL THEN CAST(uni.c1 AS DOUBLE) / tot.total
-       |      WHEN pt.prev2 IS NULL THEN
-       |        ${pmlvl("big.c2", "ctx.cc", "ctx.nf1", "ctx.nf2", "ctx.nf3p",
-                 "ctx.pmb", "b", pcont)}
-       |      WHEN pt.prev3 IS NULL THEN
-       |        ${pmlvl("tri.c3", "ctx3.cc3", "ctx3.tf1", "ctx3.tf2",
-                 "ctx3.tf3p", "ctx3.pmt", "t", midP)}
-       |      WHEN pt.prev4 IS NULL THEN
-       |        ${pmlvl("four.c4", "ctx4.cc4", "ctx4.ff1", "ctx4.ff2",
-                 "ctx4.ff3p", "ctx4.pmf", "f", mid3P)}
-       |      ELSE
-       |        ${pmlvl("five.c5", "ctx5.cc5", "ctx5.vf1", "ctx5.vf2",
-                 "ctx5.vf3p", "ctx5.pmv", "v", mid4P)}
-       |      END) * 1000000, 0) AS BIGINT) AS lp
-       |  $prunedPentaJoinsSql
-       |  CROSS JOIN dd),
-       |agg AS (
-       |  SELECT doc_id, CAST(sum(lp) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n
-       |  FROM sc GROUP BY 1)
-       |SELECT doc_id, n AS n_tokens,
-       |  round(CAST(s AS DOUBLE) / CAST(n AS DOUBLE) / 1000000.0, 6) AS logprob
-       |FROM agg ORDER BY doc_id""".stripMargin
-  }
+  /** A Kneser-Ney family row: [[knOracleCtes]]'s per-document scores. */
+  private def knOracleSql(order: Int, mkn: Boolean, trainTokens: String,
+      scoreWhere: String = "TRUE", pruneMin: Seq[Long] = Nil): String =
+    s"""WITH ${knOracleCtes(order, mkn, trainTokens, scoreWhere, pruneMin)}
+       |SELECT doc_id, n_tokens, logprob FROM lm ORDER BY doc_id""".stripMargin
 
   /** WordPiece-objective merge-loop replay — [[bpeChainSql]]'s structure
     * with the likelihood argmax: per round, symbol counts from the
@@ -7622,9 +6458,7 @@ object SparkEntry {
          |ON d.doc_id = t.doc_id
          |ORDER BY d.doc_id""".stripMargin,
 
-    "q_kn_bigram" ->
-      s"""WITH $knBigramScoreSql
-         |SELECT doc_id, n_tokens, logprob FROM knscore ORDER BY doc_id""".stripMargin,
+    "q_kn_bigram" -> knOracleSql(2, mkn = false, trainTokens("TRUE")),
 
     "q_bpe_vocab" ->
       s"""${bpeChainSql(8)},
@@ -7654,57 +6488,112 @@ object SparkEntry {
          |FROM wsyms GROUP BY symbol
          |ORDER BY sym_count DESC, symbol""".stripMargin,
 
-    "q_kn3_persisted" -> knTrigramChainSql(),
+    "q_kn3_persisted" -> knOracleSql(3, mkn = false, trainTokens("TRUE")),
 
-    "q_kn3_positional" -> knTrigramChainSql(),
+    "q_kn3_positional" -> knOracleSql(3, mkn = false, trainTokens("TRUE")),
 
-    "q_kn3_probed" -> knTrigramChainSql("WHERE doc_id % 25 = 0"),
+    "q_kn3_probed" ->
+      knOracleSql(3, mkn = false, trainTokens("TRUE"), "doc_id % 25 = 0"),
 
-    "q_mkn_trigram" -> mknTrigramChainSql(),
+    "q_mkn_trigram" -> knOracleSql(3, mkn = true, trainTokens("TRUE")),
 
-    "q_mkn3_persisted" -> mknTrigramChainSql(),
+    "q_mkn3_persisted" -> knOracleSql(3, mkn = true, trainTokens("TRUE")),
 
-    "q_mkn_probed" -> mknBigramChainSql("WHERE doc_id % 25 = 0"),
+    "q_mkn_probed" ->
+      knOracleSql(2, mkn = true, trainTokens("TRUE"), "doc_id % 25 = 0"),
 
-    "q_mkn3_probed" -> mknTrigramChainSql("WHERE doc_id % 25 = 0"),
+    "q_mkn3_probed" ->
+      knOracleSql(3, mkn = true, trainTokens("TRUE"), "doc_id % 25 = 0"),
 
-    "q_kn5_persisted" -> knPentaChainSql(),
-    "q_kn5_pruned" -> knPentaPrunedChainSql(2L, 2L, 2L, 2L),
-    "q_mkn5_pruned" -> mknPentaPrunedChainSql(2L, 2L, 2L, 2L),
-    "q_kn5_vocab" -> knPentaVocabChainSql(20L),
-    "q_ccnet_gate" -> ccnetGateChainSql(3),
+    "q_kn5_persisted" -> knOracleSql(5, mkn = false, trainTokens("TRUE")),
+    "q_kn5_pruned" -> knOracleSql(5, mkn = false, trainTokens("TRUE"),
+      pruneMin = Seq(2L, 2L, 2L, 2L)),
+    "q_mkn5_pruned" -> knOracleSql(5, mkn = true, trainTokens("TRUE"),
+      pruneMin = Seq(2L, 2L, 2L, 2L)),
+    // The vocabulary-capped order-5 build (maxVocab = 20): the model
+    // trains on tokens whose below-top-20 words (by frequency, ties by
+    // word ascending) map to `<unk>`; the RAW corpus scores against it,
+    // so a capped-out word is a genuine OOV at serve time.
+    "q_kn5_vocab" -> knOracleSql(5, mkn = false,
+      s"""rtoks AS MATERIALIZED (
+         |  ${oracleTokensSql("TRUE")}),
+         |vtop AS (
+         |  SELECT w FROM (SELECT w, count(*) AS cnt FROM rtoks GROUP BY w)
+         |  ORDER BY cnt DESC, w LIMIT 20),
+         |ttoks AS MATERIALIZED (
+         |  SELECT r.doc_id, r.pos,
+         |    CASE WHEN v.w IS NOT NULL THEN r.w ELSE '<unk>' END AS w
+         |  FROM rtoks r LEFT JOIN vtop v ON r.w = v.w)""".stripMargin),
+    // The composed CCNet gate (Wenzek et al. 2020 §4.3): language-ID (the
+    // q_lang_mismatch stopword-voting CASE), the order-5 modified-KN
+    // score, per-DETECTED-language terciles (ntile over (logprob DESC,
+    // doc_id) — the q_ppl_buckets tiling), keep head+middle.
+    "q_ccnet_gate" ->
+      s"""WITH ${knOracleCtes(5, mkn = true, trainTokens("TRUE"))},
+         |lsc AS (
+         |  SELECT doc_id,
+         |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('the','a','of','and','to'))) AS BIGINT) AS hits_en,
+         |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('der','die','das','und','ist'))) AS BIGINT) AS hits_de,
+         |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('el','los','las','una','y'))) AS BIGINT) AS hits_es,
+         |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('le','les','et','est','dans'))) AS BIGINT) AS hits_fr,
+         |    CAST(len(list_filter(string_split_regex(text, '\\s+'), x -> x IN ('的','是','了','和','在'))) AS BIGINT) AS hits_zh
+         |  FROM documents),
+         |lp AS (
+         |  SELECT doc_id,
+         |    CASE
+         |      WHEN hits_en >= hits_de AND hits_en >= hits_es AND hits_en >= hits_fr AND hits_en >= hits_zh THEN 'en'
+         |      WHEN hits_de >= hits_en AND hits_de >= hits_es AND hits_de >= hits_fr AND hits_de >= hits_zh THEN 'de'
+         |      WHEN hits_es >= hits_en AND hits_es >= hits_de AND hits_es >= hits_fr AND hits_es >= hits_zh THEN 'es'
+         |      WHEN hits_fr >= hits_en AND hits_fr >= hits_de AND hits_fr >= hits_es AND hits_fr >= hits_zh THEN 'fr'
+         |      ELSE 'zh' END AS predicted_lang
+         |  FROM lsc),
+         |ld AS (
+         |  SELECT lp.doc_id, lp.predicted_lang, lm.n_tokens, lm.logprob
+         |  FROM lp JOIN lm USING (doc_id)),
+         |rk AS (
+         |  SELECT doc_id, predicted_lang, n_tokens, logprob,
+         |    CAST(ntile(3) OVER (PARTITION BY predicted_lang
+         |      ORDER BY logprob DESC, doc_id) AS BIGINT) AS tile
+         |  FROM ld)
+         |SELECT doc_id, predicted_lang, n_tokens, logprob, tile,
+         |  CASE WHEN tile = 1 THEN 'head' WHEN tile = 3 THEN 'tail'
+         |    ELSE 'middle' END AS bucket,
+         |  tile < 3 AS kept
+         |FROM rk ORDER BY doc_id""".stripMargin,
 
-    "q_kn5_probed" -> knPentaChainSql("WHERE doc_id % 25 = 0"),
+    "q_kn5_probed" ->
+      knOracleSql(5, mkn = false, trainTokens("TRUE"), "doc_id % 25 = 0"),
 
     "q_kn5_holdout" ->
-      knPentaCrossScoreSql("doc_id % 5 <> 0", "doc_id % 5 = 0"),
+      knOracleSql(5, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 5 = 0"),
 
     "q_kn5_persisted_holdout" ->
-      knPentaCrossScoreSql("doc_id % 5 <> 0", "doc_id % 5 = 0"),
+      knOracleSql(5, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 5 = 0"),
 
-    "q_mkn5_persisted" -> mknPentaChainSql(),
+    "q_mkn5_persisted" -> knOracleSql(5, mkn = true, trainTokens("TRUE")),
 
-    "q_mkn5_probed" -> mknPentaChainSql("WHERE doc_id % 25 = 0"),
+    "q_mkn5_probed" ->
+      knOracleSql(5, mkn = true, trainTokens("TRUE"), "doc_id % 25 = 0"),
 
-    "q_kn5_append" -> knPentaChainSql(),
+    "q_kn5_append" -> knOracleSql(5, mkn = false, trainTokens("TRUE")),
 
     "q_kn3_holdout" ->
-      knTrigramCrossScoreSql("doc_id % 5 <> 0", "doc_id % 5 = 0"),
+      knOracleSql(3, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 5 = 0"),
 
     "q_kn3_persisted_holdout" ->
-      knTrigramCrossScoreSql("doc_id % 5 <> 0", "doc_id % 5 = 0"),
+      knOracleSql(3, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 5 = 0"),
 
-    "q_mkn_persisted" -> mknBigramChainSql(),
+    "q_mkn_persisted" -> knOracleSql(2, mkn = true, trainTokens("TRUE")),
 
-    "q_kn_trigram" -> knTrigramChainSql(),
+    "q_kn_trigram" -> knOracleSql(3, mkn = false, trainTokens("TRUE")),
 
-    "q_mkn_bigram" -> mknBigramChainSql(),
+    "q_mkn_bigram" -> knOracleSql(2, mkn = true, trainTokens("TRUE")),
 
     "q_ppl_buckets" ->
-      s"""WITH $knBigramScoreSql,
+      s"""WITH ${knOracleCtes(2, mkn = false, trainTokens("TRUE"))},
          |ld AS (
          |  SELECT d.doc_id, d.lang, k.n_tokens, k.logprob
-         |  FROM documents d JOIN knscore k USING (doc_id)),
+         |  FROM documents d JOIN lm k USING (doc_id)),
          |rk AS (
          |  SELECT doc_id, lang, n_tokens, logprob,
          |    CAST(ntile(3) OVER (PARTITION BY lang ORDER BY logprob DESC, doc_id)
@@ -7731,10 +6620,10 @@ object SparkEntry {
         |FROM r ORDER BY doc_id""".stripMargin,
 
     "q_curriculum_order" ->
-      s"""WITH $knBigramScoreSql,
+      s"""WITH ${knOracleCtes(2, mkn = false, trainTokens("TRUE"))},
          |ld AS (
          |  SELECT d.doc_id, d.lang, k.logprob
-         |  FROM documents d JOIN knscore k USING (doc_id)),
+         |  FROM documents d JOIN lm k USING (doc_id)),
          |st AS (
          |  SELECT doc_id,
          |    CAST(ntile(3) OVER (PARTITION BY lang ORDER BY logprob DESC, doc_id)
@@ -7754,20 +6643,18 @@ object SparkEntry {
          |FROM r ORDER BY doc_id""".stripMargin,
 
     "q_kn_score_holdout" ->
-      s"""WITH ${knCrossScoreSql("doc_id % 5 <> 0", "doc_id % 5 = 0")}
-         |SELECT doc_id, n_tokens, logprob FROM knx ORDER BY doc_id""".stripMargin,
+      knOracleSql(2, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 5 = 0"),
 
     "q_kn_persisted" ->
-      s"""WITH ${knCrossScoreSql("doc_id % 5 <> 0", "doc_id % 5 = 0")}
-         |SELECT doc_id, n_tokens, logprob FROM knx ORDER BY doc_id""".stripMargin,
+      knOracleSql(2, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 5 = 0"),
 
     "q_ppl_by_source" ->
-      s"""WITH $knBigramScoreSql,
+      s"""WITH ${knOracleCtes(2, mkn = false, trainTokens("TRUE"))},
          |j AS (
          |  SELECT d.source,
          |    CAST(round(k.logprob * 1000000, 0) AS BIGINT) AS lp_fp,
          |    k.n_tokens
-         |  FROM documents d JOIN knscore k USING (doc_id))
+         |  FROM documents d JOIN lm k USING (doc_id))
          |SELECT source,
          |  CAST(count(*) AS BIGINT) AS n_docs,
          |  CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
@@ -7776,16 +6663,13 @@ object SparkEntry {
          |FROM j GROUP BY source ORDER BY source""".stripMargin,
 
     "q_kn_probed" ->
-      s"""WITH ${knCrossScoreSql("doc_id % 5 <> 0", "doc_id % 25 = 0")}
-         |SELECT doc_id, n_tokens, logprob FROM knx ORDER BY doc_id""".stripMargin,
+      knOracleSql(2, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 25 = 0"),
 
     "q_kn_append" ->
-      s"""WITH ${knCrossScoreSql("doc_id % 5 <> 0", "doc_id % 5 = 0")}
-         |SELECT doc_id, n_tokens, logprob FROM knx ORDER BY doc_id""".stripMargin,
+      knOracleSql(2, mkn = false, trainTokens("doc_id % 5 <> 0"), "doc_id % 5 = 0"),
 
     "q_kn_delete" ->
-      s"""WITH ${knCrossScoreSql("doc_id % 5 IN (1, 2)", "doc_id % 5 = 0")}
-         |SELECT doc_id, n_tokens, logprob FROM knx ORDER BY doc_id""".stripMargin,
+      knOracleSql(2, mkn = false, trainTokens("doc_id % 5 IN (1, 2)"), "doc_id % 5 = 0"),
 
     "q_wordpiece_train" ->
       s"""${wordpieceChainSql(8, 2L)}

@@ -98,6 +98,25 @@ class TestdataContractSpec extends SparkSpec {
       s"queries without oracle SQL: ${qs -- os -- rowsOnly}")
   }
 
+  test("oracle contract: LM twins share one oracle text") {
+    // A persisted/appended/positional twin proves store-serve == inline
+    // only because its oracle is the SAME SQL as the inline row's: a hash
+    // match of both against one text makes the two Spark paths equal.
+    val twins = Seq(
+      Seq("q_kn_trigram", "q_kn3_persisted", "q_kn3_positional"),
+      Seq("q_mkn_trigram", "q_mkn3_persisted"),
+      Seq("q_mkn_bigram", "q_mkn_persisted"),
+      Seq("q_kn5_persisted", "q_kn5_append"),
+      Seq("q_kn5_holdout", "q_kn5_persisted_holdout"),
+      Seq("q_kn3_holdout", "q_kn3_persisted_holdout"),
+      Seq("q_kn_score_holdout", "q_kn_persisted", "q_kn_append"))
+    val os = SparkEntry.oracleSql
+    for (group <- twins) {
+      val texts = group.map(os)
+      assert(texts.distinct.size == 1, s"oracle texts differ within $group")
+    }
+  }
+
   test("testdata contract: StandIn.events yields a usable timestamp") {
     val df = StandIn.events(spark, dir)
     assert(df.schema("ts").dataType == TimestampType ||
