@@ -76,7 +76,7 @@ object Bench {
     }
     val errsJson = failures.mkString("{", ",", "}")
     val total = cacheTimes.map(_._2).sum + results.map(_._2).sum
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errsJson,"error_count":${failures.size},"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"errors":$errsJson,"error_count":${failures.size},"cpus":$cpus,"sf":"$sfDir"}""")
     if (failures.nonEmpty)
       System.err.println(s"[bench] ${failures.size} queries FAILED")
     spark.stop()

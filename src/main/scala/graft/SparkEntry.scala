@@ -4146,8 +4146,8 @@ object SparkEntry {
     *    FULL counts: calibration precedes pruning) and ONE discount CTE
     *    `dd`: eq. 26's D1/D2/D3+ per table, or KenLM's default
     *    --discount_fallback (0.5, 1.0, 1.5) where a table has no types at
-    *    count 1, 2 or 3 — [[graft.functions.TextAnalysis.mknLevelDiscounts]]
-    *    term by term.
+    *    count 1, 2 or 3 or an estimate D_j falls outside [0, j] —
+    *    [[graft.functions.TextAnalysis.mknLevelDiscounts]] term by term.
     *  - Scoring is the frozen-model OOV-safe form, which every case
     *    reduces to: a seen context covers seen, unseen and pruned events
     *    in one expression (count coalesced to 0, D(0) = 0, λ carrying the
@@ -4196,14 +4196,19 @@ object SparkEntry {
     }
     val names = (raws ++ mids).map(_._1)
     // Eq. 26 per table from its count-of-counts n1..n4, or the fallback
-    // triple where a count bucket is empty.
+    // triple where a count bucket is empty or an estimate leaves [0, j]
+    // (the range test only runs once every bucket is non-empty).
     val dd = if (!mkn) "" else {
       val cols = names.flatMap { t =>
         def n(i: Int) = s"CAST(${t}n.n$i AS DOUBLE)"
         val y = s"(${n(1)} / (${n(1)} + 2.0 * ${n(2)}))"
+        def est(j: Int) = s"$j.0 - ${j + 1}.0 * $y * ${n(j + 1)} / ${n(j)}"
+        val inRange = (1 to 3).map(j => s"(${est(j)}) BETWEEN 0.0 AND $j.0")
+          .mkString("\n        AND ")
         Seq(1 -> 0.5, 2 -> 1.0, 3 -> 1.5).map { case (j, fb) =>
           s"""CASE WHEN ${t}n.n1 = 0 OR ${t}n.n2 = 0 OR ${t}n.n3 = 0 THEN $fb
-             |      ELSE $j.0 - ${j + 1}.0 * $y * ${n(j + 1)} / ${n(j)} END AS d${j}_$t""".stripMargin
+             |      WHEN $inRange
+             |      THEN ${est(j)} ELSE $fb END AS d${j}_$t""".stripMargin
         }
       }
       s""",

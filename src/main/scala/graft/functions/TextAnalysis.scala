@@ -600,8 +600,9 @@ object TextAnalysis {
     *   P(w|prev) = (c(prev,w) − D(c)) / c(prev) + λ(prev)·P_cont(w)
     *
     * where n_k = #bigram types with count k and N_k(prev) = #followers
-    * of `prev` with count k. Like KenLM, a corpus whose n1/n2/n3 is zero
-    * cannot calibrate the discounts: `fallbackDiscounts` is KenLM's
+    * of `prev` with count k. Like KenLM, a corpus whose n1/n2/n3 is zero,
+    * or whose estimate puts some D_j outside [0, j], cannot calibrate the
+    * discounts ([[mknLevelDiscounts]]): `fallbackDiscounts` is KenLM's
     * `--discount_fallback` — a fixed (D1, D2, D3+) substituted when
     * calibration is impossible (KenLM's own default is 0.5/1.0/1.5;
     * small dense corpora whose every bigram repeats are exactly the
@@ -623,11 +624,12 @@ object TextAnalysis {
       case Some((f1, f2, f3)) =>
         lit(k match { case 1 => f1; case 2 => f2; case _ => f3 })
       case None =>
-        raise_error(lit("mknBigramLogProb: could not calibrate modified " +
-          "Kneser-Ney discounts — the corpus has no bigram types at " +
-          "count 1, 2, or 3 (KenLM fails identically without " +
-          "--discount_fallback); pass fallbackDiscounts, e.g. KenLM's " +
-          "default (0.5, 1.0, 1.5)")).cast("double")
+        raise_error(lit("could not calibrate modified Kneser-Ney " +
+          "discounts — an n-gram level has no types at count 1, 2, or 3, " +
+          "or its estimated D1/D2/D3+ fall outside KenLM's range [0, j] " +
+          "(KenLM fails identically without --discount_fallback); pass " +
+          "fallbackDiscounts, e.g. KenLM's default (0.5, 1.0, 1.5)"))
+          .cast("double")
     }
 
   def mknBigramLogProb(
@@ -647,35 +649,17 @@ object TextAnalysis {
       sum(when(col("c2") >= 3L, 1L).otherwise(0L)).cast("long").as("nf3p"))
     val cont = big.groupBy("w").agg(count(lit(1)).cast("long").as("n1c"))
     // Count-of-counts + total types in ONE pass over the bigram table;
-    // the Y/D1/D2/D3 arithmetic mirrors the oracle term by term.
+    // the discounts (or the fallback/curated error) come from the one
+    // eq.-26 edit point, mknLevelDiscounts.
     val disc = big.agg(
         count(lit(1)).cast("double").as("btypes"),
         sum(when(col("c2") === 1L, 1L).otherwise(0L)).cast("long").as("n1"),
         sum(when(col("c2") === 2L, 1L).otherwise(0L)).cast("long").as("n2"),
         sum(when(col("c2") === 3L, 1L).otherwise(0L)).cast("long").as("n3"),
         sum(when(col("c2") === 4L, 1L).otherwise(0L)).cast("long").as("n4"))
-      // A corpus with an empty n1/n2/n3 bucket cannot calibrate the
-      // discounts. KenLM's answer is --discount_fallback: substitute a
-      // fixed discount triple (its default 0.5/1.0/1.5); without it,
-      // KenLM refuses the corpus — and so does this operator, with a
-      // curated error. Every estimate lives in the non-degenerate branch
-      // of a CaseWhen (branches evaluate lazily), so ANSI mode's
-      // double-division-by-zero can never preempt the curated path.
-      .withColumn("__degen",
-        col("n1") === 0L || col("n2") === 0L || col("n3") === 0L)
-      .withColumn("y", when(col("__degen"), lit(0.0))
-        .otherwise(col("n1").cast("double")
-          / (col("n1").cast("double") + lit(2.0) * col("n2").cast("double"))))
-      .withColumn("d1", when(col("__degen"), degenDiscount(fallbackDiscounts, 1))
-        .otherwise(lit(1.0) - lit(2.0) * col("y")
-          * col("n2").cast("double") / col("n1").cast("double")))
-      .withColumn("d2", when(col("__degen"), degenDiscount(fallbackDiscounts, 2))
-        .otherwise(lit(2.0) - lit(3.0) * col("y")
-          * col("n3").cast("double") / col("n2").cast("double")))
-      .withColumn("d3", when(col("__degen"), degenDiscount(fallbackDiscounts, 3))
-        .otherwise(lit(3.0) - lit(4.0) * col("y")
-          * col("n4").cast("double") / col("n3").cast("double")))
-      .select("btypes", "d1", "d2", "d3")
+      .select(col("btypes") +: mknLevelDiscounts("n", fallbackDiscounts): _*)
+      .select(col("btypes"), col("d1n").as("d1"), col("d2n").as("d2"),
+        col("d3n").as("d3"))
     val uniP = col("c1").cast("double") / col("total")
     val dOfC = when(col("c2") === 1L, col("d1"))
       .when(col("c2") === 2L, col("d2")).otherwise(col("d3"))
@@ -812,29 +796,30 @@ object TextAnalysis {
           .as("logprob"))
   }
 
-  /** One level's (D1, D2, D3+) estimate columns from count-of-count
-    * columns `<p>1..<p>4` — eq. 26 with the degenerate branch routed to
-    * the caller's fallback or the curated error, lazily (the
-    * [[mknBigramLogProb]] ANSI discipline). Shared by the inline
-    * order-3 scorer and the persisted serve. */
+  /** One level's (D1, D2, D3+) columns `d<j><p>` from count-of-count
+    * columns `<p>1..<p>4` — eq. 26, D_j = j − (j+1)·Y·n_{j+1}/n_j with
+    * Y = n1/(n1 + 2·n2). KenLM's rule decides when a level cannot be
+    * calibrated: an empty n1/n2/n3 bucket, or an estimate outside
+    * [0, j] for some j (a skewed level's D2 can go negative, which
+    * makes λ negative and token probabilities fall below 0). Such a
+    * level takes the caller's fallback triple, or the curated error
+    * when none was given. The range test sits in the CaseWhen branch
+    * reached only when every bucket is non-empty (branches evaluate
+    * lazily), so ANSI mode's double-division-by-zero can never preempt
+    * the curated path. The ONE eq.-26 edit point of the inline scorers
+    * and the persisted serve. */
   private[graft] def mknLevelDiscounts(
       p: String, fallback: Option[(Double, Double, Double)]): Seq[Column] = {
+    def n(i: Int): Column = col(s"$p$i").cast("double")
     val degen = col(s"${p}1") === 0L || col(s"${p}2") === 0L || col(s"${p}3") === 0L
-    val y = when(degen, lit(0.0)).otherwise(col(s"${p}1").cast("double")
-      / (col(s"${p}1").cast("double") + lit(2.0) * col(s"${p}2").cast("double")))
-    Seq(
-      when(degen, degenDiscount(fallback, 1))
-        .otherwise(lit(1.0) - lit(2.0) * y
-          * col(s"${p}2").cast("double") / col(s"${p}1").cast("double"))
-        .as(s"d1$p"),
-      when(degen, degenDiscount(fallback, 2))
-        .otherwise(lit(2.0) - lit(3.0) * y
-          * col(s"${p}3").cast("double") / col(s"${p}2").cast("double"))
-        .as(s"d2$p"),
-      when(degen, degenDiscount(fallback, 3))
-        .otherwise(lit(3.0) - lit(4.0) * y
-          * col(s"${p}4").cast("double") / col(s"${p}3").cast("double"))
-        .as(s"d3$p"))
+    val y = n(1) / (n(1) + lit(2.0) * n(2))
+    val est = (1 to 3).map(j => lit(j.toDouble) - lit(j + 1.0) * y * n(j + 1) / n(j))
+    val inRange = (1 to 3).map(j => est(j - 1).between(0.0, j.toDouble)).reduce(_ && _)
+    (1 to 3).map(j =>
+      when(degen, degenDiscount(fallback, j))
+        .when(inRange, est(j - 1))
+        .otherwise(degenDiscount(fallback, j))
+        .as(s"d$j$p"))
   }
 
   /** CCNet-style perplexity bucketing (Wenzek et al. 2020 §4.3): score

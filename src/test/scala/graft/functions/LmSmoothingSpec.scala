@@ -101,27 +101,51 @@ class LmSmoothingSpec extends SparkSpec {
     assert(got === Array((1L, 6L, exp1), (2L, 2L, exp2)))
   }
 
+  // Two corpora KenLM cannot calibrate. Degenerate: only count-1
+  // bigrams, so n2 = 0. Out of range: one two-token document per bigram
+  // occurrence, with bigram counts 1, 2 and five at 3 — n1 = 1, n2 = 1,
+  // n3 = 5, n4 = 0, so Y = 1/3 and D2 = 2 - 3·(1/3)·5/1 = -3, outside
+  // [0, 2] (a negative D2 makes λ negative and probabilities leave
+  // [0, 1]). Each document is "x y" whose bigram occurs c times.
+  private val uncalibrated: Seq[(String, Seq[(String, Int)])] = Seq(
+    "degenerate" -> Seq("a b" -> 1, "c d" -> 1),
+    "out of range" -> (Seq("a b" -> 1, "c d" -> 2) ++
+      Seq("e f", "g h", "i j", "k l", "m n").map(_ -> 3)))
+  private def docsOf(bigrams: Seq[(String, Int)]) =
+    bigrams.flatMap { case (t, c) => Seq.fill(c)(t) }.zipWithIndex
+      .map { case (t, i) => (i + 1L, t) }.toDF("doc_id", "text")
+
   test("mknBigramLogProb fails loudly on a discount-degenerate corpus") {
-    // Only count-1 bigrams: n2 = 0 — KenLM cannot calibrate D2 either.
-    val df = Seq((1L, "a b"), (2L, "c d")).toDF("doc_id", "text")
-    val e = intercept[Exception] {
-      TextAnalysis.mknBigramLogProb(df, "doc_id", "text").collect()
+    // KenLM cannot calibrate either corpus without --discount_fallback.
+    for ((name, bigrams) <- uncalibrated) {
+      val e = intercept[Exception] {
+        TextAnalysis.mknBigramLogProb(docsOf(bigrams), "doc_id", "text").collect()
+      }
+      assert(e.getMessage.contains("Kneser-Ney discounts") &&
+        e.getMessage.contains("discount_fallback"), s"$name: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("Kneser-Ney discounts") &&
-      e.getMessage.contains("discount_fallback"), e.getMessage)
   }
 
   test("mknBigramLogProb degenerate corpus + fallback == KenLM --discount_fallback") {
-    // Same degenerate corpus; with the fallback triple every bigram has
-    // count 1 -> D = f1 = 0.5, lambda(a) = 0.5*1/1, Pcont = 1/2.
-    val df = Seq((1L, "a b"), (2L, "c d")).toDF("doc_id", "text")
+    // With the fallback triple a bigram of count c has D = (0.5, 1.0,
+    // 1.5)(c); its context x has that one follower, so lambda(x) = D/c,
+    // and every continuation is 1 of the corpus's bigram types. The first
+    // token scores MLE c/tokens (each word occurs once per document).
     def fp(p: Double): Long = math.round(math.log(p) * 1e6)
-    val exp = BigDecimal((fp(0.25) + fp(0.75)) / 2.0 / 1e6)
-      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-    val got = TextAnalysis.mknBigramLogProb(
-      df, "doc_id", "text", fallbackDiscounts = Some((0.5, 1.0, 1.5)))
-      .orderBy("doc_id").as[(Long, Long, Double)].collect()
-    assert(got === Array((1L, 2L, exp), (2L, 2L, exp)))
+    for ((name, bigrams) <- uncalibrated) {
+      val tokens = 2.0 * bigrams.map(_._2).sum
+      val types = bigrams.size.toDouble
+      val exp = bigrams.flatMap { case (_, c) =>
+        val d = Seq(0.5, 1.0, 1.5)(c - 1)
+        val p = (c - d) / c + d / c * (1.0 / types)
+        Seq.fill(c)(BigDecimal((fp(c / tokens) + fp(p)) / 2.0 / 1e6)
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }.zipWithIndex.map { case (lp, i) => (i + 1L, 2L, lp) }
+      val got = TextAnalysis.mknBigramLogProb(
+        docsOf(bigrams), "doc_id", "text", fallbackDiscounts = Some((0.5, 1.0, 1.5)))
+        .orderBy("doc_id").as[(Long, Long, Double)].collect()
+      assert(got.toSeq === exp, name)
+    }
   }
 
   // ---- LmIndex: frozen-model scoring with OOV -----------------------------
