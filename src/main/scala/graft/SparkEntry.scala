@@ -4172,7 +4172,8 @@ object SparkEntry {
     val raws = (2 to order).map(k => (s"ng$k", k,
       s"tpt WHERE prev${k - 1} IS NOT NULL"))
     val mids = (2 until order).map(k => (s"mc$k", k, s"ng${k + 1}f"))
-    val tables = (raws ++ mids).map { case (t, k, src) =>
+    val levels = raws ++ mids
+    val tables = levels.map { case (t, k, src) =>
       val (keys, ctx, min) = (prevs(k - 1) :+ "w", prevs(k - 1).mkString(", "), thr(k - 2))
       val tallies =
         if (mkn) Seq(s"c >= $min AND c = 1" -> "f1", s"c >= $min AND c = 2" -> "f2",
@@ -4194,12 +4195,11 @@ object SparkEntry {
          |  FROM ${t}f GROUP BY $ctx
          |  HAVING sum(CASE WHEN c >= $min THEN 1 ELSE 0 END) > 0)$coc""".stripMargin
     }
-    val names = (raws ++ mids).map(_._1)
     // Eq. 26 per table from its count-of-counts n1..n4, or the fallback
     // triple where a count bucket is empty or an estimate leaves [0, j]
     // (the range test only runs once every bucket is non-empty).
     val dd = if (!mkn) "" else {
-      val cols = names.flatMap { t =>
+      val cols = levels.map(_._1).flatMap { t =>
         def n(i: Int) = s"CAST(${t}n.n$i AS DOUBLE)"
         val y = s"(${n(1)} / (${n(1)} + 2.0 * ${n(2)}))"
         def est(j: Int) = s"$j.0 - ${j + 1}.0 * $y * ${n(j + 1)} / ${n(j)}"
@@ -4214,7 +4214,7 @@ object SparkEntry {
       s""",
          |dd AS (SELECT
          |    ${cols.mkString(",\n    ")}
-         |  FROM ${names.map(t => s"${t}n").mkString(" CROSS JOIN ")})""".stripMargin
+         |  FROM ${levels.map(l => s"${l._1}n").mkString(" CROSS JOIN ")})""".stripMargin
     }
     // One level of the recursion: table `t`'s own (discounted) mass under
     // its context plus λ times the `lower` level.
@@ -4241,7 +4241,7 @@ object SparkEntry {
     val mid = (2 until order).scanLeft(pcont)((lower, k) => level(s"mc$k", lower))
     def top(k: Int): String = level(s"ng$k", mid(k - 2))
     val branches = (2 until order).map(k => s"WHEN spt.prev$k IS NULL THEN\n  ${top(k)}")
-    val joins = (raws ++ mids).map { case (t, k, _) =>
+    val joins = levels.map { case (t, k, _) =>
       s"""LEFT JOIN $t ON ${on("spt", t, prevs(k - 1) :+ "w")}
          |  LEFT JOIN ${t}x ON ${on("spt", s"${t}x", prevs(k - 1))}""".stripMargin
     }

@@ -616,8 +616,9 @@ object TextAnalysis {
     * aggregates (count-of-counts, per-context count buckets) derive
     * from the bigram table — no extra corpus pass; the discounts frame
     * is ONE broadcast row. */
-  /** The k-th degenerate-corpus discount: the caller's fallback value,
-    * or the curated calibration error when none was given. */
+  /** The k-th discount of a level that cannot be calibrated
+    * ([[mknLevelDiscounts]]): the caller's fallback value, or the curated
+    * calibration error when none was given. */
   private[graft] def degenDiscount(
       fallback: Option[(Double, Double, Double)], k: Int): Column =
     fallback match {
