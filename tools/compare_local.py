@@ -26,13 +26,16 @@ import sys
 import duckdb
 import pandas as pd
 
+SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
+OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
+ART = sys.argv[3] if len(sys.argv) > 3 else None
 TABLES = ("region nation customer supplier part orders lineitem "
           "events documents embeddings").split()
 
 
 def canon(df):
-    """Driver-style canonical form: columns sorted by name, every cell
-    stringified, rows sorted by all columns."""
+    """Canonical form for the cell compare: columns sorted by name, every
+    cell stringified, rows sorted by all columns."""
     df = df[sorted(df.columns)].copy()
     s = df.astype(str)
     return s.sort_values(by=list(s.columns), kind="mergesort").reset_index(drop=True)
@@ -49,10 +52,6 @@ def connect(sf):
 
 
 def main():
-    SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    OUT = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_out"
-    ART = sys.argv[3] if len(sys.argv) > 3 else None
-
     con = connect(SF)
 
     oracle = json.load(open(os.path.join(OUT, "oracle_sql.json")))

@@ -2,15 +2,15 @@
 """Result equivalence of two oracle SQL dumps, key by key, in DuckDB.
 
 Usage:
-    python3 tools/oracle_equiv.py OLD NEW [sfDir ...]
+    python3 tools/oracle_equiv.py OLD NEW SFDIR [SFDIR ...]
 
 OLD and NEW are `oracle_sql.json` files (or Verify output dirs holding
 one); Verify writes the full file even for a GRAFT_VERIFY_QUERIES subset,
-so a one-query Verify run of each tree is enough. Every key whose SQL
-text differs between the two dumps runs under both versions on each sf
-(default /root/testdata/sf0.01), and the results are compared after
-compare_local's canonicalization (`canon`) plus an exact column-order
-check. One line per key and sf:
+so a one-query Verify run of each tree is enough. SFDIR holds the parquet
+tables Verify reads. Every key whose SQL text differs between the two
+dumps runs under both versions on each SFDIR, and the results are
+compared after compare_local's canonicalization (`canon`) plus an exact
+column-order check. One line per key and sf:
 
     identical   both ran, same columns and cells
     differ      both ran, results differ
@@ -70,10 +70,10 @@ def verdict(old, new):
 
 
 def main():
-    if len(sys.argv) < 3:
+    if len(sys.argv) < 4:
         sys.exit(__doc__)
     old, new = load(sys.argv[1]), load(sys.argv[2])
-    sfs = sys.argv[3:] or ["/root/testdata/sf0.01"]
+    sfs = sys.argv[3:]
     bad = []
     for k in sorted(set(old) - set(new)):
         print(f"removed     {k}")
