@@ -210,12 +210,6 @@ class PostgresCopyTableStore(
     true
   }
 
-  override def overwriteAll(tables: Seq[(String, DataFrame)]): Unit =
-    commitAll(Nil, Nil, tables)
-
-  override def overwritePartitionsAll(commits: Seq[PartitionCommit]): Unit =
-    commitAll(Nil, commits, Nil)
-
   /** Full two-phase commit (the [[TableStore.commitAll]] contract): every
     * plan — appends included — is staged into a temp table while all
     * pre-commit table state is intact; only then do the mutations run, each

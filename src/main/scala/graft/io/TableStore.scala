@@ -3,16 +3,6 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.hadoop.fs.Path
 
-/** Storage abstraction for the five engine tables (jobs, staging, issues,
-  * issue_items, contacts).
-  *
-  * The reference mutates rows in place in Postgres; our dataflow recomputes
-  * derived state per run and persists snapshots/appends (SURVEY.md §7.5 —
-  * removes the read-modify-write races the reference avoids only by being
-  * single-threaded). Two impls: parquet (testdata/oracle harness, local
-  * runs) and JDBC (production parity — see [[JdbcUpsert]] for the
-  * UPDATE-shaped writes Spark's JDBC writer lacks).
-  */
 /** One commit unit of a per-job write: replace only the rows of `table`
   * whose `partCol` equals `value` (or any of `moreValues` — the batched
   * micro-batch commit shape, several jobs' partitions swapped in one write)
@@ -23,6 +13,17 @@ case class PartitionCommit(
   def values: Seq[Any] = value +: moreValues
 }
 
+/** Storage abstraction for the five engine tables (jobs, staging, issues,
+  * issue_items, contacts).
+  *
+  * The reference mutates rows in place in Postgres; our dataflow recomputes
+  * derived state per run and persists snapshots/appends (SURVEY.md §7.5 —
+  * removes the read-modify-write races the reference avoids only by being
+  * single-threaded). Three impls: parquet (testdata/oracle harness, local
+  * runs), JDBC (production parity — see [[JdbcUpsert]] for the
+  * UPDATE-shaped writes Spark's JDBC writer lacks) and
+  * [[PostgresCopyTableStore]] (live Postgres over `psql \copy`).
+  */
 trait TableStore {
   def load(table: String): DataFrame
   def exists(table: String): Boolean
@@ -31,51 +32,29 @@ trait TableStore {
   /** Append rows (insert-only path, e.g. contacts batch insert W6). */
   def append(table: String, df: DataFrame): Unit
   /** Replace several tables whose plans may READ each other's current
-    * content: all plans must be materialized before any target is replaced.
-    * Default is sequential (safe only for independent plans); snapshot
-    * stores override with a two-phase write-then-swap. */
-  def overwriteAll(tables: Seq[(String, DataFrame)]): Unit =
-    tables.foreach { case (t, df) => overwrite(t, df) }
+    * content: a [[commitAll]] of snapshot overwrites only. */
+  def overwriteAll(tables: Seq[(String, DataFrame)]): Unit = commitAll(Nil, Nil, tables)
 
   /** Per-job commit: replace ONLY each table's touched partition, leaving
-    * every other job's data physically untouched — at scale a job commit must
-    * not rewrite the whole corpus. Plans may read the pre-commit snapshots,
-    * so implementations materialize every df before replacing anything.
-    * Default (for stores without physical partitioning) falls back to a
-    * merge + full snapshot replace — correct, not scale-safe. */
-  def overwritePartitionsAll(commits: Seq[PartitionCommit]): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    overwriteAll(commits.map { c =>
-      val merged =
-        if (exists(c.table))
-          load(c.table)
-            .filter(!c.values.map(v => col(c.partCol) <=> lit(v)).reduce(_ || _))
-            .unionByName(c.df, allowMissingColumns = true)
-        else c.df
-      c.table -> merged
-    })
-  }
+    * every other job's data untouched — at scale a job commit must not
+    * rewrite the whole corpus. A [[commitAll]] of partition commits only. */
+  def overwritePartitionsAll(commits: Seq[PartitionCommit]): Unit = commitAll(Nil, commits, Nil)
 
-  /** One job/wave commit as a unit: EVERY plan — appends, partition
-    * replacements, snapshot overwrites — is materialized to staging storage
-    * while all pre-commit snapshots are intact, and only then are targets
-    * mutated (appends first, then partition swaps, then snapshot swaps —
-    * the reference's consolidation order). This is the only safe shape when
-    * one output's plan reads a table the same commit mutates: the classify
-    * subtree reads `contacts` and the commit appends `contacts`, so an
-    * append-then-write sequence re-evaluates the staging plan against
-    * post-append contacts (Spark invalidates and re-caches cached plans on
-    * any write to a path they read) and flips the job's own READY rows to
-    * EXISTING_EMAIL. Default is the sequential legacy order — snapshot and
-    * SQL stores override with full two-phase staging. */
+  /** One job/wave commit as a unit — the store's one multi-table write:
+    * EVERY plan (appends, partition replacements, snapshot overwrites) is
+    * materialized to staging storage while all pre-commit snapshots are
+    * intact, and only then are targets mutated (appends first, then
+    * partition swaps, then snapshot swaps — the reference's consolidation
+    * order). This is the only safe shape when one output's plan reads a
+    * table the same commit mutates: the classify subtree reads `contacts`
+    * and the commit appends `contacts`, so an append-then-write sequence
+    * re-evaluates the staging plan against post-append contacts (Spark
+    * invalidates and re-caches cached plans on any write to a path they
+    * read) and flips the job's own READY rows to EXISTING_EMAIL. */
   def commitAll(
       appends: Seq[(String, DataFrame)],
       partitions: Seq[PartitionCommit] = Nil,
-      overwrites: Seq[(String, DataFrame)] = Nil): Unit = {
-    appends.foreach { case (t, df) => append(t, df) }
-    if (partitions.nonEmpty) overwritePartitionsAll(partitions)
-    if (overwrites.nonEmpty) overwriteAll(overwrites)
-  }
+      overwrites: Seq[(String, DataFrame)] = Nil): Unit
 
   /** Create `table` with `df`'s rows ONLY if it does not already exist;
     * returns true iff THIS call created it — the mutual-exclusion
@@ -297,40 +276,18 @@ class ParquetTableStore(
     ()
   }
 
-  /** Two-phase: materialize EVERY plan into its tmp dir while all source
-    * files still exist, then swap. A wave's staging/issues/contacts plans
-    * ([[graft.pipeline.Lifecycle.KeyedFlowResult]]) all read the pre-run
-    * snapshots — replacing one table before the others are written would
-    * yield FileNotFound stage failures.
-    *
-    * The staging phase runs its independent write JOBS concurrently
-    * (guide §2.6 — overlap independent jobs so the next job's tasks
-    * back-fill the tail of the current one): each plan only READS
-    * pre-commit snapshots and writes its own private tmp dir, so the
-    * writes commute; the swap phase stays sequential and ordered.
-    * `graft.store.writeParallelism` (session conf, default 4) bounds the
-    * in-flight jobs — enough to fill stage tails of a 17-table model
-    * build without the jobs fighting for executors; 1 restores the
-    * sequential staging. Scale-independent: this is JOB-level overlap,
-    * not a data-size constant, and on a cluster FIFO scheduling gives
-    * exactly the back-fill behaviour wanted. */
-  override def overwriteAll(tables: Seq[(String, DataFrame)]): Unit = {
-    val tmps = stageConcurrently(
-      tables.map { case (t, df) => () => (t, writeTmp(t, df)): Any })
-      .map(_.asInstanceOf[(String, Path)])
-    tmps.foreach { case (t, tmp) => swap(t, tmp) }
-  }
-
   /** Run independent STAGING writes (each to its own private tmp dir,
     * reading only pre-commit snapshots — commuting by construction) on a
     * bounded pool; results keep input order. `graft.store.
     * writeParallelism` (session conf, default 4; 1 = sequential) bounds
-    * the in-flight Spark jobs — job-level overlap (§2.6), not a
-    * data-size constant; a cluster's FIFO scheduler back-fills stage
-    * tails exactly as wanted. On failure queued siblings are cancelled
-    * and the first error rethrown — nothing has been moved, so the
-    * store is untouched (finished siblings' tmp dirs are orphaned
-    * exactly as a sequential form's earlier writes were). */
+    * the in-flight Spark jobs — enough to fill the stage tails of a
+    * 17-table model build without the jobs fighting for executors. This is
+    * job-level overlap (§2.6), not a data-size constant; a cluster's FIFO
+    * scheduler back-fills stage tails exactly as wanted. On failure
+    * queued siblings are cancelled and the first error rethrown — nothing
+    * has been moved, so the store is untouched (finished siblings' tmp
+    * dirs are orphaned exactly as a sequential form's earlier writes
+    * were). */
   private def stageConcurrently(thunks: Seq[() => Any]): Seq[Any] = {
     val par0 = spark.conf.getOption("graft.store.writeParallelism")
       .map(_.trim.toInt).getOrElse(4)
@@ -357,17 +314,6 @@ class ParquetTableStore(
     }
   }
 
-  /** Per-job commit, physically: each df is written (hive-partitioned by its
-    * partCol) to a tmp dir FIRST — while every pre-commit snapshot the plans
-    * read still exists — then only the touched partition directory is swapped
-    * into the table. A 10-job staging table sees exactly one partition dir
-    * replaced per message; the other jobs' files are never rewritten (nor
-    * their plans re-run). The committed value's partition is removed even
-    * when df is empty, so a job that now derives zero issues doesn't leave
-    * last run's rows behind. */
-  override def overwritePartitionsAll(commits: Seq[PartitionCommit]): Unit =
-    commitAll(Nil, commits, Nil)
-
   override def append(table: String, df: DataFrame): Unit =
     commitAll(Seq(table -> df), Nil, Nil)
 
@@ -376,16 +322,24 @@ class ParquetTableStore(
     * pre-commit snapshots are intact — no plan can observe another output
     * of the same commit, with or without caching; phase 2 is pure file
     * moves (appended files renamed in, partition dirs swapped, snapshots
-    * swapped) in the reference's consolidation order. */
+    * swapped) in the reference's consolidation order.
+    *
+    * A partition commit, physically: its df is written (hive-partitioned by
+    * its partCol) to a tmp dir, then only the touched partition
+    * directories are swapped into the table. A 10-job staging table sees
+    * exactly one partition dir replaced per job; the other jobs' files are
+    * never rewritten (nor their plans re-run). A committed value's
+    * partition is removed even when df is empty, so a job that now derives
+    * zero issues doesn't leave last run's rows behind. */
   override def commitAll(
       appends: Seq[(String, DataFrame)],
       partitions: Seq[PartitionCommit] = Nil,
       overwrites: Seq[(String, DataFrame)] = Nil): Unit = {
     // Phase 1 stages every plan into its own private tmp dir while ALL
     // pre-commit snapshots are intact — the writes only read pre-commit
-    // state, so they commute and run concurrently like overwriteAll's
-    // staging phase (guide §2.6; same writeParallelism bound, same
-    // failure semantics: nothing moved, queued siblings cancelled).
+    // state, so they commute and run concurrently (stageConcurrently:
+    // writeParallelism bound; on failure nothing moved, queued siblings
+    // cancelled).
     def stagePart(c: PartitionCommit): (PartitionCommit, Path) = {
       val tmp = new Path(dir(c.table) + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
       // Multi-job (wave) commits cluster rows by the partition value first:
@@ -603,16 +557,6 @@ class JdbcTableStore(
           if (tableExists(table)) false else throw e
       }
 
-  /** Replace several tables whose plans may read EACH OTHER: every plan is
-    * staged (materialized) before any target is touched, then all swaps run
-    * in one transaction. */
-  override def overwriteAll(tables: Seq[(String, DataFrame)]): Unit = {
-    val (create, swap) = tables.partition { case (t, _) => !tableExists(t) }
-    val staged = swap.map { case (t, df) => t -> stage(t, df) }
-    create.foreach { case (t, df) => write(df).jdbc(url, t, props) }
-    swapAll(staged)
-  }
-
   private def tableExists(table: String): Boolean = {
     val conn = java.sql.DriverManager.getConnection(url, props)
     // Spark's JDBC writer creates the table name as an unquoted identifier,
@@ -633,6 +577,7 @@ class JdbcTableStore(
     (tmp, df.columns.toSeq)
   }
 
+  /** Snapshot swaps of staged overwrites, all in ONE transaction. */
   private def swapAll(staged: Seq[(String, (String, Seq[String]))]): Unit = {
     if (staged.isEmpty) return
     val conn = java.sql.DriverManager.getConnection(url, props)
@@ -703,19 +648,10 @@ class JdbcTableStore(
       } finally conn.close()
     }
 
-  /** Per-job commit, SQL-side: materialize each result into a temp table
-    * (so plans that read the target finish BEFORE it is mutated), then
-    * DELETE the job's rows + INSERT ... SELECT server-side — no driver-side
-    * row materialization, and other jobs' rows are never rewritten.
-    *
-    * Each commit's DELETE+INSERT runs in ONE transaction: a crash between
-    * them can never lose a partition (the DELETE rolls back), and a failed
-    * INSERT leaves the target exactly as it was. Temp table names carry a
-    * unique suffix so two commits against the SAME table in one call don't
-    * clobber each other's staged rows. */
-  override def overwritePartitionsAll(commits: Seq[PartitionCommit]): Unit =
-    applyPartitionCommits(stagePartitionCommits(commits))
-
+  /** Per-job commit, SQL-side, phase 1: materialize each result into a
+    * temp table, so plans that read the target finish BEFORE it is
+    * mutated. Temp table names carry a unique suffix so two commits against
+    * the SAME table in one call don't clobber each other's staged rows. */
   private def stagePartitionCommits(
       commits: Seq[PartitionCommit]): Seq[(PartitionCommit, String, Seq[String])] =
     commits.map { c =>
@@ -724,6 +660,12 @@ class JdbcTableStore(
       (c, tmp, c.df.columns.toSeq)
     }
 
+  /** Per-job commit, SQL-side, phase 2: DELETE the job's rows + INSERT ...
+    * SELECT server-side — no driver-side row materialization, and other
+    * jobs' rows are never rewritten. Each commit's DELETE+INSERT runs in ONE
+    * transaction: a crash between them can never lose a partition (the
+    * DELETE rolls back), and a failed INSERT leaves the target exactly as
+    * it was. */
   private def applyPartitionCommits(
       staged: Seq[(PartitionCommit, String, Seq[String])]): Unit = {
     if (staged.isEmpty) return

@@ -32,8 +32,8 @@ object Lifecycle {
       issues: DataFrame,      // full post-run issue set (with issue_resolved)
       issueItems: DataFrame,  // full post-run link set
       contactCandidates: DataFrame, // rows that become contacts IF their job consolidates
-      counters: DataFrame,    // per-job counters (A4-A8), post-decision statuses
-      cachedFrames: Seq[DataFrame] = Nil) { // caches to release after commit
+      counters: DataFrame,    // per-job counters (A4-A8), post-decision statuses, input_rows
+      cachedFrames: Seq[DataFrame]) { // caches to release after commit
 
     /** Release this flow's cached intermediates. Call AFTER the last
       * materialization (commit + counters) — a long-running dispatch
@@ -79,8 +79,10 @@ object Lifecycle {
     * ids, counters), so N jobs compile ONE classify/issues/consolidate
     * subtree instead of N (the round-7 streaming throughput floor was plan
     * compilation at ~0.5 s/job, not data volume). KeyedLifecycleSpec pins
-    * that a wave of N jobs equals the union of N waves of one. The caller
-    * has already rejected empty inputs (processor.py:149-151). */
+    * that a wave of N jobs equals the union of N waves of one. An empty
+    * input is not rejected here: `counters` reports each job's
+    * `input_rows`, and the caller fails a job that read none
+    * (processor.py:149-151). */
   def initialProcessKeyed(
       input: DataFrame,
       jobUsers: DataFrame,
@@ -131,8 +133,7 @@ object Lifecycle {
       derivedItems.join(existingItems, itemPairKey, "left_anti"),
       allowMissingColumns = true)
 
-    finalizeFlowKeyed(stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
-      .copy(cachedFrames = Seq(classified))
+    finalizeFlowKeyed(classified, stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
   }
 
   /** REPROCESSING (§3.2, processor.py:390-672) over MANY jobs as ONE plan:
@@ -186,8 +187,7 @@ object Lifecycle {
       derivedItems.join(issueItems, itemPairKey, "left_anti"),
       allowMissingColumns = true)
 
-    finalizeFlowKeyed(stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
-      .copy(cachedFrames = Seq(classified))
+    finalizeFlowKeyed(classified, stagingAfter, issuesAfter, itemsAfter, contacts, jobUsers)
   }
 
   /** Shared finalization (§3.3): recompute resolution, gate on unresolved
@@ -198,8 +198,12 @@ object Lifecycle {
     * unresolved count AND already reflects the post-decision statuses (a
     * clean job's READY rows count as SUCCESS — a row-wise column rewrite
     * inside the frame, no extra subplan). The caller reads the rows and
-    * picks the decided staging/contacts plans. */
+    * picks the decided staging/contacts plans. `classified` is the flow's
+    * cached classified frame: the rows it read, counted per job as
+    * `input_rows` (CSV rows on the initial route, non-DISCARD staging rows
+    * on reprocess), and released by [[KeyedFlowResult.unpersist]]. */
   private def finalizeFlowKeyed(
+      classified: DataFrame,
       stagingAfter: DataFrame,
       issuesAfter: DataFrame,
       itemsAfter: DataFrame,
@@ -236,12 +240,18 @@ object Lifecycle {
           .otherwise(col("success_rows")))
       .withColumn("ready_rows",
         when(col("unresolved_issues") === 0, lit(0L)).otherwise(col("ready_rows")))
+      // Rows read per job: a job with prior staging but an empty input
+      // reports 0 (one with neither has no counters row at all).
+      .join(classified.groupBy("job_id").agg(count(lit(1)).as("input_rows")),
+        Seq("job_id"), "left")
+      .withColumn("input_rows", coalesce(col("input_rows"), lit(0L)))
 
     KeyedFlowResult(
       stagingPre = stagingAfter,
       issues = resolvedIssues,
       issueItems = itemsAfter,
       contactCandidates = dedupedContacts,
-      counters = counters)
+      counters = counters,
+      cachedFrames = Seq(classified))
   }
 }

@@ -80,10 +80,19 @@ object JobDispatch {
   private def debug(e: Exception): Unit =
     if (sys.env.contains("GRAFT_DISPATCH_DEBUG")) e.printStackTrace()
 
-  /** Jobs metadata (status, tenant) and staging presence of `ids`: one jobs
-    * lookup + one staging-presence aggregate, however many ids. */
-  private def lookup(
-      store: TableStore, ids: Seq[Int]): (Map[Int, (String, String)], Set[Int]) = {
+  /** The prior-state tables a wave reads, with their job-id column. */
+  private val priorState = Map(
+    "staging" -> "staging_job_id",
+    "issues" -> "issues_job_id",
+    "issue_items" -> "issues_job_id")
+
+  /** Jobs metadata (status, tenant) of `ids`, and which of them have rows in
+    * each prior-state table: one jobs lookup + ONE presence action (a union
+    * over the prior-state tables that exist), however many ids. Routing
+    * reads the staging part; the wave reads all three to skip the scans of
+    * jobs without prior state. */
+  private def lookup(store: TableStore, ids: Seq[Int])
+      : (Map[Int, (String, String)], Map[String, Set[Int]]) = {
     val jobsMeta: Map[Int, (String, String)] =
       if (store.exists("jobs"))
         store.load("jobs").filter(col("job_id").isin(ids: _*))
@@ -91,13 +100,15 @@ object JobDispatch {
           .map(r => r.getAs[Int]("job_id") ->
             (r.getAs[String]("job_status"), r.getAs[String]("job_user_id"))).toMap
       else Map.empty
-    val stagingJobs: Set[Int] =
-      if (jobsMeta.nonEmpty && store.exists("staging"))
-        store.load("staging").filter(col("staging_job_id").isin(ids: _*))
-          .select("staging_job_id").distinct().collect()
-          .map(_.getAs[Int]("staging_job_id")).toSet
-      else Set.empty
-    (jobsMeta, stagingJobs)
+    val probes = if (jobsMeta.isEmpty) Nil else priorState.toSeq.collect {
+      case (t, jobCol) if store.exists(t) =>
+        store.load(t).filter(col(jobCol).isin(ids: _*)).select(lit(t), col(jobCol))
+    }
+    val present: Map[String, Set[Int]] =
+      if (probes.isEmpty) Map.empty
+      else probes.reduce(_.union(_)).distinct().collect().toSeq
+        .groupMap(_.getString(0))(_.getInt(1)).map { case (t, js) => t -> js.toSet }
+    (jobsMeta, present.withDefaultValue(Set.empty))
   }
 
   /** The outcome of a skip route (stale message, completed job); None for a
@@ -118,7 +129,7 @@ object JobDispatch {
     * distributed inside the Lifecycle plans.
     *
     * Store round trips are BATCHED across the micro-batch: one jobs
-    * lookup + one staging-presence aggregate route every message, and all
+    * lookup + one prior-state presence action route every message, and all
     * runnable jobs with distinct job/user ids process as one wave — one
     * PROCESSING update, one counters action, one contacts append, one
     * 3-table partition commit, one final jobs update — instead of ~10
@@ -153,7 +164,7 @@ object JobDispatch {
     // computed from the PRE-wave state.
     val waveRoutes = scala.collection.mutable.Map.empty[Int, Router.Route]
     if (valid.nonEmpty) try {
-      val (jobsMeta, stagingJobs) = lookup(store, valid.map(_._2).distinct.toSeq)
+      val (jobsMeta, present) = lookup(store, valid.map(_._2).distinct.toSeq)
 
       val wave = scala.collection.mutable.ArrayBuffer.empty[WaveItem]
       val tail = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, String, String)]
@@ -161,7 +172,7 @@ object JobDispatch {
       val seenUsers = scala.collection.mutable.Set.empty[String]
       valid.foreach { case (i, jobId, s3Key, body) =>
         val meta = jobsMeta.get(jobId)
-        val route = Router.route(meta.map(_._1), stagingJobs(jobId))
+        val route = Router.route(meta.map(_._1), present("staging")(jobId))
         skipOutcome(jobId, s3Key, route) match {
           case Some(o) => outcomes(i) = o
           case None =>
@@ -174,8 +185,10 @@ object JobDispatch {
         }
       }
 
+      // One presence result serves every chunk: chunks hold distinct jobs,
+      // and a wave writes only the jobs table before its own commit.
       wave.grouped(MaxWave).foreach { chunk =>
-        processWave(spark, store, chunk.toSeq, resolveCsv, replay = true)
+        processWave(spark, store, chunk.toSeq, present, resolveCsv, replay = true)
           .foreach { case (i, o) => outcomes(i) = o }
       }
       // Tail: repeated job/tenant messages re-route against the post-wave
@@ -212,12 +225,12 @@ object JobDispatch {
       resolveCsv: String => String,
       forcedRoute: Option[Router.Route]): MessageOutcome =
     try {
-      val (jobsMeta, stagingJobs) = lookup(store, Seq(jobId))
-      val liveRoute = Router.route(jobsMeta.get(jobId).map(_._1), stagingJobs(jobId))
+      val (jobsMeta, present) = lookup(store, Seq(jobId))
+      val liveRoute = Router.route(jobsMeta.get(jobId).map(_._1), present("staging")(jobId))
       skipOutcome(jobId, s3Key, liveRoute).getOrElse {
         val w = WaveItem(0, jobId, s3Key, body, jobsMeta(jobId)._2,
           forcedRoute.getOrElse(liveRoute))
-        processWave(spark, store, Seq(w), resolveCsv, replay = false).head._2
+        processWave(spark, store, Seq(w), present, resolveCsv, replay = false).head._2
       }
     } catch {
       case e: Exception =>
@@ -235,21 +248,28 @@ object JobDispatch {
     * ([[Lifecycle.initialProcessKeyed]]/[[Lifecycle.reprocessKeyed]]) —
     * every reference join/agg carries the job id, so one plan serves N
     * jobs at constant compile cost (the round-7 floor was ~0.5 s of plan
-    * compilation per job, not data volume). Store round trips stay
-    * batched: one PROCESSING update, one counters action, one contacts
-    * append, one 3-table partition commit, one jobs update per wave.
+    * compilation per job, not data volume). `present` is the routing
+    * lookup's prior-state presence of the members. Store round trips stay
+    * batched, one each per wave:
+    *   - the PROCESSING status update;
+    *   - the counters action, which also yields each job's input-row count;
+    *   - the two-phase commit (contacts append + 3-table partition swap);
+    *   - the final jobs update.
     *
-    * Per-message CSV failures isolate (that job goes FAILED, the rest
-    * continue). A shared failure (keyed-plan build, counters, commit) of a
-    * wave built from a batch (`replay`) replays each affected member ONCE
-    * as a wave of one WITH its pre-wave route, so one bad job can't sink its
-    * wave-mates; a wave of one that is itself a replay, a tail message or
-    * a direct call fails its member with the error instead. Returns one
-    * outcome per member, keyed by original message index. */
+    * A job whose sniff fails, or whose CSV yields no rows, goes FAILED
+    * alone and commits nothing. Every other failure (a keyed-plan build, a
+    * CSV that throws when scanned, the counters, the commit) takes one
+    * path: in a wave built from a batch (`replay`) each affected member
+    * replays ONCE as a wave of one WITH its pre-wave route, so one bad job
+    * can't sink its wave-mates; a wave of one that is itself a replay, a
+    * tail message or a direct call fails its member with the error
+    * instead. Returns one outcome per member, keyed by original message
+    * index. */
   private def processWave(
       spark: SparkSession,
       store: TableStore,
       wave: Seq[WaveItem],
+      present: Map[String, Set[Int]],
       resolveCsv: String => String,
       replay: Boolean): Seq[(Int, MessageOutcome)] = {
     import graft.pipeline.Lifecycle.KeyedFlowResult
@@ -265,23 +285,22 @@ object JobDispatch {
     }
     // Safe because the pipeline is idempotent (J1 anti-join +
     // staging_id-unique contacts insert): a partially committed wave
-    // replays as a no-op for the already-landed rows.
+    // replays as a no-op for the already-landed rows. A replayed success
+    // names the wave failure it recovered from.
     def onFailure(ws: Seq[WaveItem], e: Exception): Seq[(Int, MessageOutcome)] = {
       debug(e)
+      val replayed = s"ok (replayed alone after wave failure: ${e.getClass.getName}: ${e.getMessage})"
       ws.map { w =>
-        if (replay)
-          w.idx -> runAlone(spark, store, w.jobId, w.s3Key, w.body, resolveCsv, Some(w.route))
-        else fail(w, String.valueOf(e.getMessage))
+        if (!replay) fail(w, String.valueOf(e.getMessage))
+        else {
+          val o = runAlone(spark, store, w.jobId, w.s3Key, w.body, resolveCsv, Some(w.route))
+          w.idx -> (if (o.detail == "ok") o.copy(detail = replayed) else o)
+        }
       }
     }
     val built = scala.collection.mutable.ArrayBuffer.empty[(Seq[WaveItem], KeyedFlowResult)]
 
     try {
-      def tbl(name: String, shape: StructType): DataFrame =
-        if (store.exists(name)) store.load(name) else emptyLike(spark, shape)
-      val staging = tbl("staging", stagingShape)
-      val issues = tbl("issues", issuesShape)
-      val items = tbl("issue_items", itemsShape)
       // The contacts table only matters through this wave's OWN tenants: the
       // existing-email check is tenant-scoped by the reference (ADR-005) and
       // a contact row carrying one of this wave's staging_ids can only have
@@ -292,28 +311,21 @@ object JobDispatch {
       // tenant-partitioned) — at 100 TB that is the difference between a
       // bounded read and a full-table scan per commit.
       val waveTenants = wave.map(_.userId).distinct
-      val contacts = tbl("contacts", contactsShape)
-        .filter(col("contacts_user_id").isin(waveTenants: _*))
+      val contacts =
+        (if (store.exists("contacts")) store.load("contacts") else emptyLike(spark, contactsShape))
+          .filter(col("contacts_user_id").isin(waveTenants: _*))
 
-      // Which wave jobs actually HAVE prior state, probed once per table for
-      // the whole wave. A wave of first-pass jobs (the steady-stream common
-      // case) then feeds the keyed plan a known-empty LOCAL relation:
-      // Catalyst's empty-relation propagation collapses the J1 anti-join and
-      // the issue/link merge branches; otherwise ONE filtered scan serves
-      // every job in the keyed plan.
-      val waveIds = wave.map(_.jobId)
-      def presentIn(name: String, partCol: String): Set[Int] =
-        if (!store.exists(name)) Set.empty
-        else store.load(name).filter(col(partCol).isin(waveIds: _*))
-          .select(partCol).distinct().collect().map(_.getAs[Int](partCol)).toSet
-      val hasStaging = presentIn("staging", "staging_job_id")
-      val hasIssues = presentIn("issues", "issues_job_id")
-      val hasItems = presentIn("issue_items", "issues_job_id")
-      def slice(base: DataFrame, shape: StructType, partCol: String,
-          present: Set[Int], ids: Seq[Int]): DataFrame = {
-        val have = ids.filter(present)
-        if (have.isEmpty) emptyLike(spark, shape)
-        else base.filter(col(partCol).isin(have: _*))
+      // The prior state of those `ids` that have any. A wave of first-pass
+      // jobs (the steady-stream common case) then feeds the keyed plan a
+      // known-empty LOCAL relation: Catalyst's empty-relation propagation
+      // collapses the J1 anti-join and the issue/link merge branches;
+      // otherwise ONE filtered scan per table serves every job of the wave.
+      val loaded = scala.collection.mutable.Map.empty[String, DataFrame]
+      def prior(table: String, ids: Seq[Int]): DataFrame = {
+        val have = ids.filter(present(table))
+        if (have.isEmpty) emptyLike(spark, tableShapes(table))
+        else loaded.getOrElseUpdate(table, store.load(table))
+          .filter(col(priorState(table)).isin(have: _*))
       }
 
       // Sniff every initial-route CSV (per-job isolation for bad paths /
@@ -336,33 +348,7 @@ object JobDispatch {
             done += fail(w, String.valueOf(e.getMessage)); None
         }
       }
-      val keyedInput: Option[DataFrame] =
-        if (sniffed.isEmpty) None
-        else Some(CsvSource.readWaveKeyed(spark, sniffed.map(_._2)))
-      // Empty-CSV detection (processor.py:149-151 parity): the job ids with
-      // at least one row, in ONE action over the shared scan. On a runtime
-      // read failure, degrade to per-file probes (binary-splitting around
-      // the poison) — a job whose read still throws counts as non-empty so
-      // its REAL error surfaces at commit, attributed to the right message.
-      val presentJobs: Set[Int] = keyedInput match {
-        case None => Set.empty
-        case Some(df) =>
-          try df.select("job_id").distinct().collect().map(_.getInt(0)).toSet
-          catch {
-            case e: Exception =>
-              debug(e)
-              val perFile = sniffed.map { case (w, f) =>
-                w.idx -> CsvSource.toContract(CsvSource.readWith(spark, f.path, f.sniff))
-              }
-              val emptyIdx = probeEmptyIdx(perFile)
-              sniffed.collect { case (w, _) if !emptyIdx(w.idx) => w.jobId }.toSet
-          }
-      }
-      val initialRunnable = sniffed.map(_._1).filter { w =>
-        val ok = presentJobs(w.jobId)
-        if (!ok) done += fail(w, "requirement failed: CSV file is empty")
-        ok
-      }
+      val initial = sniffed.map(_._1)
 
       // ONE keyed plan per route present in the wave (at most two plan
       // compiles per wave, independent of wave size). A keyed-plan BUILD
@@ -377,19 +363,14 @@ object JobDispatch {
           try built += ws -> flow(ws.map(_.jobId))
           catch { case e: Exception => done ++= onFailure(ws, e) }
         }
-      build(initialRunnable) { ids =>
+      build(initial) { ids =>
         Lifecycle.initialProcessKeyed(
-          keyedInput.get, usersDf(initialRunnable),
-          slice(staging, stagingShape, "staging_job_id", hasStaging, ids),
-          slice(issues, issuesShape, "issues_job_id", hasIssues, ids),
-          slice(items, itemsShape, "issues_job_id", hasItems, ids),
-          contacts)
+          CsvSource.readWaveKeyed(spark, sniffed.map(_._2)), usersDf(initial),
+          prior("staging", ids), prior("issues", ids), prior("issue_items", ids), contacts)
       }
       build(reproAll) { ids =>
         Lifecycle.reprocessKeyed(
-          slice(staging, stagingShape, "staging_job_id", hasStaging, ids),
-          slice(issues, issuesShape, "issues_job_id", hasIssues, ids),
-          slice(items, itemsShape, "issues_job_id", hasItems, ids),
+          prior("staging", ids), prior("issues", ids), prior("issue_items", ids),
           contacts, usersDf(reproAll))
       }
       if (built.isEmpty) return done.toSeq
@@ -402,25 +383,40 @@ object JobDispatch {
       }
       // Counters materialize BEFORE the commits (their plans read the
       // pre-commit snapshots, which the commit replaces) — ONE action for
-      // the whole wave, which fixes every job's ADR-002 decision and warms
-      // the keyed classify cache for the commit materializations below.
+      // the whole wave, which fixes every job's ADR-002 decision, counts
+      // its input rows, and warms the keyed classify cache for the commit
+      // materializations below.
       val counterRows = built.map(_._2.counters)
         .reduce(_.unionByName(_)).collect()
         .map(r => r.getAs[Int]("job_id") -> r).toMap
       lap("counters")
-      val cleanIds = counterRows.collect {
-        case (id, r) if r.getAs[Long]("unresolved_issues") == 0L => id
-      }.toSeq
+      // Empty-CSV rule (processor.py:149-151): an initial-route job that
+      // read no rows fails whatever its prior state, and none of its
+      // partitions, contacts or counters commit.
+      val (emptyCsv, members) = built.toSeq.flatMap(_._1).partition(w =>
+        w.route == Router.Initial &&
+          counterRows.get(w.jobId).forall(_.getAs[Long]("input_rows") == 0L))
+      emptyCsv.foreach(w => done += fail(w, "requirement failed: CSV file is empty"))
+      if (members.isEmpty) return done.toSeq
+      val jobIds = members.map(_.jobId)
+      val cleanIds = jobIds.filter(id => counterRows(id).getAs[Long]("unresolved_issues") == 0L)
       def unionOf(f: KeyedFlowResult => DataFrame, shape: StructType): DataFrame =
         built.map { case (_, k) => normTo(f(k), shape) }.reduce(_.unionByName(_))
+      // Only the committed jobs' partitions are replaced: other jobs' files
+      // are never rewritten, and an empty-CSV job's prior rows stay as
+      // they were.
+      def partition(table: String, f: KeyedFlowResult => DataFrame): graft.io.PartitionCommit = {
+        val jobCol = priorState(table)
+        graft.io.PartitionCommit(table,
+          unionOf(f, tableShapes(table)).filter(col(jobCol).isin(jobIds: _*)),
+          jobCol, jobIds.head, jobIds.tail)
+      }
       // ONE two-phase commit for the whole wave: contacts append + 3-table
       // partition swap. commitAll stages every plan against the pre-commit
       // snapshots before mutating anything — the classify subtree reads
       // contacts, so an append-then-write sequence would re-evaluate the
       // staging plan against the wave's own appended contacts (flipping its
-      // READY rows to EXISTING_EMAIL). Only the wave's own partitions are
-      // replaced: other jobs' files are never rewritten.
-      val jobIds = built.toSeq.flatMap(_._1).map(_.jobId)
+      // READY rows to EXISTING_EMAIL).
       // Cluster the multi-tenant contacts append by its partition key for
       // the same reason the store clusters multi-job partition commits:
       // without it every write task emits one file per tenant it holds.
@@ -429,25 +425,22 @@ object JobDispatch {
       store.commitAll(
         Seq("contacts" -> contactsAppend),
         Seq(
-          graft.io.PartitionCommit("staging", unionOf(_.stagingDecided(cleanIds), stagingShape),
-            "staging_job_id", jobIds.head, jobIds.tail),
-          graft.io.PartitionCommit("issues", unionOf(_.issues, issuesShape),
-            "issues_job_id", jobIds.head, jobIds.tail),
-          graft.io.PartitionCommit("issue_items", unionOf(_.issueItems, itemsShape),
-            "issues_job_id", jobIds.head, jobIds.tail)))
+          partition("staging", _.stagingDecided(cleanIds)),
+          partition("issues", _.issues),
+          partition("issue_items", _.issueItems)))
       lap("commit")
       // W7/W8 last (crash-repairable): all statuses + counters in one update.
       def statusOf(jobId: Int): String =
         graft.ops.Consolidate.decideJobStatus(
           counterRows(jobId).getAs[Long]("unresolved_issues"))
-      updateJobs(store, built.toSeq.flatMap(_._1).map { w =>
+      updateJobs(store, members.map { w =>
         val c = counterRows(w.jobId)
         JobUpdate(w.jobId, statusOf(w.jobId),
           totalRows = c.getAs[Long]("total_rows"),
           processedRows = c.getAs[Long]("total_rows"), // all rows seen (processor.py:313-330)
           issueCount = c.getAs[Long]("unresolved_issues"))
       })
-      done ++= built.toSeq.flatMap(_._1).map { w =>
+      done ++= members.map { w =>
         w.idx -> MessageOutcome(Some(w.jobId), w.s3Key, statusOf(w.jobId), "ok")
       }
     } catch {
@@ -463,38 +456,6 @@ object JobDispatch {
       built.foreach { case (_, k) => k.unpersist() }
     }
     done.toSeq
-  }
-
-  /** Probe a set of (idx, plan) inputs for emptiness in as few actions as
-    * possible: ONE union-of-limit(1) action for the whole set on the happy
-    * path; on a runtime failure the group BINARY-SPLITS, so one poisoned
-    * input costs O(log n) extra probes for the healthy rest instead of a
-    * sequential per-input scan. A singleton that still throws counts as
-    * NON-empty so its real error — not "empty CSV" — surfaces at
-    * build/commit, where per-job isolation attributes it to the right
-    * message. Returns the idx set of EMPTY inputs. `onProbe` (tests)
-    * observes each probe action with its group size. */
-  private[stream] def probeEmptyIdx(
-      inputs: Seq[(Int, DataFrame)],
-      onProbe: Int => Unit = _ => ()): Set[Int] = {
-    def probe(group: Seq[(Int, DataFrame)]): Set[Int] = {
-      onProbe(group.length)
-      val present = group.map { case (i, df) => df.limit(1).select(lit(i).as("idx")) }
-        .reduce(_.unionByName(_)).collect().map(_.getInt(0)).toSet
-      group.map(_._1).toSet -- present
-    }
-    def go(group: Seq[(Int, DataFrame)]): Set[Int] =
-      try probe(group)
-      catch {
-        case e: Exception =>
-          debug(e)
-          if (group.length <= 1) Set.empty
-          else {
-            val (l, r) = group.splitAt(group.length / 2)
-            go(l) ++ go(r)
-          }
-      }
-    if (inputs.isEmpty) Set.empty else go(inputs)
   }
 
   private def emptyLike(spark: SparkSession, schema: StructType): DataFrame =
@@ -584,6 +545,10 @@ object JobDispatch {
       .drop("u_job_id", "u_status", "u_total", "u_processed", "u_issues"))
   }
 
+  /** Tables the dispatch pipeline appends/commits into — the maintenance
+    * (compaction) set for a long-running stream. */
+  private val maintainedTables = Seq("contacts", "staging", "issues", "issue_items")
+
   /** Start the dispatch stream over a message QUEUE directory (one file per
     * message) via the native [[graft.stream.queue.QueueSourceProvider]]
     * source — full reference delivery protocol: messages are DELETED only
@@ -591,10 +556,6 @@ object JobDispatch {
     * failed/interrupted epoch leaves them visible for redelivery on restart
     * (the visibility-timeout analog, consumer.py:171-177). Use [[start]] for
     * the simpler exactly-once JSON-lines file bridge. */
-  /** Tables the dispatch pipeline appends/commits into — the maintenance
-    * (compaction) set for a long-running stream. */
-  private val maintainedTables = Seq("contacts", "staging", "issues", "issue_items")
-
   def startQueue(
       spark: SparkSession,
       store: TableStore,

@@ -144,6 +144,11 @@ class VersionedIndexSpec extends SparkSpec {
       def exists(t: String) = inner.exists(t)
       def overwrite(t: String, df: org.apache.spark.sql.DataFrame) = inner.overwrite(t, df)
       def append(t: String, df: org.apache.spark.sql.DataFrame) = inner.append(t, df)
+      def commitAll(
+          appends: Seq[(String, org.apache.spark.sql.DataFrame)],
+          partitions: Seq[graft.io.PartitionCommit],
+          overwrites: Seq[(String, org.apache.spark.sql.DataFrame)]) =
+        inner.commitAll(appends, partitions, overwrites)
     }
     val p1 = LexIndex.rebuildVersioned(noDrop, "lex", corpusA, "doc_id", "text")
     assert(p1 === "lex_g1")
@@ -171,6 +176,11 @@ class VersionedIndexSpec extends SparkSpec {
       def exists(t: String) = { probed += t; store.exists(t) }
       def overwrite(t: String, df: org.apache.spark.sql.DataFrame) = store.overwrite(t, df)
       def append(t: String, df: org.apache.spark.sql.DataFrame) = store.append(t, df)
+      def commitAll(
+          appends: Seq[(String, org.apache.spark.sql.DataFrame)],
+          partitions: Seq[graft.io.PartitionCommit],
+          overwrites: Seq[(String, org.apache.spark.sql.DataFrame)]) =
+        store.commitAll(appends, partitions, overwrites)
     }
     VersionedIndex.prune(counting, "lex", LexIndex.TableSuffixes, keepPrevious = 1)
     assert(probed.exists(_.startsWith("lex_g2_")), probed.mkString(","))

@@ -208,18 +208,34 @@ class LifecycleSpec extends SparkSpec {
   }
 
   test("initial processing on empty input raises (CSV file is empty)") {
-    // A header-only CSV fails its job (processor.py:149-151): the outcome
-    // carries the error and the job lands in FAILED, redeliverable.
+    // A header-only CSV fails its job (processor.py:149-151) whatever its
+    // prior state: the outcome carries the error and the job lands in
+    // FAILED, redeliverable. Job 9 is a first pass; job 10 is a resumed
+    // PROCESSING job whose earlier pass left staging rows, which must stay
+    // exactly as they were.
     val root = java.nio.file.Files.createTempDirectory("graft_empty").toString
     val store = new graft.io.ParquetTableStore(spark, s"$root/tables")
-    store.overwrite("jobs", Seq((9, "u1", JobStatus.Pending))
+    store.overwrite("jobs", Seq((9, "u1", JobStatus.Pending), (10, "u2", JobStatus.Processing))
       .toDF("job_id", "job_user_id", "job_status"))
+    store.overwrite("staging", Seq(
+      ((10L << 40) + 1, 10, "a@b.co", "A", "B", "C", StagingStatus.Ready, "h1"),
+      ((10L << 40) + 2, 10, "", "D", "E", "F", StagingStatus.Issue, "h2"))
+      .toDF("staging_id", "staging_job_id", "staging_email", "staging_first_name",
+        "staging_last_name", "staging_company", "staging_status", "staging_row_hash"))
+    def staging10() = store.load("staging").filter(col("staging_job_id") === 10)
+      .select("staging_id", "staging_email", "staging_status", "staging_row_hash")
+      .as[(Long, String, String, String)].collect().toSet
+    val before = staging10()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(s"$root/empty.csv"),
       "email,first_name,last_name,company\n")
-    val o = graft.stream.JobDispatch.processOne(spark, store, 9, "empty.csv", k => s"$root/$k")
-    assert(o.outcome === "FAILED")
-    assert(o.detail.contains("CSV file is empty"))
-    assert(store.load("jobs").head().getAs[String]("job_status") === JobStatus.Failed)
+    Seq(9, 10).foreach { jobId =>
+      val o = graft.stream.JobDispatch.processOne(spark, store, jobId, "empty.csv", k => s"$root/$k")
+      assert(o.outcome === "FAILED", s"job $jobId")
+      assert(o.detail.contains("CSV file is empty"), s"job $jobId: ${o.detail}")
+    }
+    assert(store.load("jobs").select("job_status").as[String].collect().toSet === Set(JobStatus.Failed))
+    assert(staging10() === before)
+    assert(!store.exists("contacts"))
   }
 
   test("parquet TableStore: snapshot overwrite swap + partitioned append") {

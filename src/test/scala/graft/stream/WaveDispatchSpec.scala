@@ -40,8 +40,8 @@ class WaveDispatchSpec extends SparkSpec {
 
     val batch = Seq(
       msg(1, "good1.csv"),          // wave, completes
-      msg(2, "empty.csv"),          // wave build, fails the empty probe
-      msg(3, "missing.csv"),        // wave build, fails at the CSV read
+      msg(2, "empty.csv"),          // wave, fails on its zero input rows
+      msg(3, "missing.csv"),        // wave, fails at the CSV sniff
       msg(4, "good2.csv"),          // wave, completes
       msg(99, "good1.csv"),         // stale (no jobs row)
       msg(5, "good1.csv"),          // already COMPLETED
@@ -174,35 +174,6 @@ class WaveDispatchSpec extends SparkSpec {
     assert(contacts === Set("ok@b.co", "new@b.co"))
   }
 
-  test("empty-probe degradation: one poisoned input costs O(log n) probes, not n sequential scans") {
-    val n = 64
-    // Poison lives in a FILTER (not a projection Catalyst could prune): the
-    // scan evaluates it at runtime, like a vanished/unreadable CSV would.
-    val boom = udf((x: Long) =>
-      if (x >= 0) throw new RuntimeException("poisoned input") else x)
-    val inputs: Seq[(Int, org.apache.spark.sql.DataFrame)] = (0 until n).map { i =>
-      i -> (i match {
-        case 13 => spark.range(1).toDF().filter(boom(col("id")) === 0L) // runtime failure
-        case 7 => spark.range(0).select(col("id").as("v")) // genuinely empty
-        case _ => spark.range(2).select(col("id").as("v"))
-      })
-    }
-    var probes = 0
-    val empty = JobDispatch.probeEmptyIdx(inputs, _ => probes += 1)
-    // The poisoned input is NOT reported empty (its real error must surface
-    // downstream); the genuinely empty one is.
-    assert(empty === Set(7))
-    // Binary split: 1 failed root probe + at most 2 probes per level of the
-    // halving path to the poison (log2(64) = 6 levels).
-    val bound = 1 + 2 * (math.log(n) / math.log(2)).ceil.toInt
-    assert(probes <= bound, s"$probes probes for one poisoned input of $n (bound $bound)")
-    // Sanity: the happy path is exactly ONE probe.
-    probes = 0
-    val allGood = (0 until n).map(i => i -> spark.range(1).select(col("id").as("v")))
-    assert(JobDispatch.probeEmptyIdx(allGood, _ => probes += 1) === Set.empty[Int])
-    assert(probes === 1)
-  }
-
   test("shared-commit failure on a mixed-route wave: replay keeps each job's pre-wave route") {
     // Seed job 1 into NEEDS_REVIEW with staging, discard its bad row (so a
     // reprocess run completes it), and queue job 2 as initial. Then break
@@ -249,6 +220,8 @@ class WaveDispatchSpec extends SparkSpec {
     // re-imported fix.csv over the reviewed staging set instead.
     assert(out(0).outcome === JobStatus.Completed)
     assert(out(1).outcome === JobStatus.Completed)
+    // A replayed success names the wave failure it recovered from.
+    assert(out.forall(_.detail.contains("injected wave-commit failure")), out.mkString("; "))
     val contacts = store.load("contacts")
       .select("contact_email").as[String].collect().toSet
     assert(contacts === Set("ok@b.co", "new@b.co"))
@@ -334,5 +307,70 @@ class WaveDispatchSpec extends SparkSpec {
     val s2 = store.load("staging").filter(col("staging_job_id") === 2)
       .select("staging_status").as[String].collect().toSet
     assert(s2 === Set("READY", "ISSUE"))
+  }
+
+  test("CSV that passes the sniff but throws at the scan: that job FAILS, wave-mates replay and complete") {
+    val (root, store) = seed(3, i => s"u$i")
+    Files.writeString(Paths.get(s"$root/uploads/good1.csv"),
+      "email,first_name,last_name,company\na1@b.co,F,L,C\n")
+    Files.writeString(Paths.get(s"$root/uploads/good2.csv"),
+      "email,first_name,last_name,company\na2@b.co,F,L,C\n")
+    // Plain text under a .gz name: the sniffer reads raw bytes and accepts
+    // the header, but Spark's gzip codec fails when the file is scanned.
+    val bad = s"$root/uploads/bad.csv.gz"
+    Files.writeString(Paths.get(bad), "email,first_name,last_name,company\na3@b.co,F,L,C\n")
+    val sniff = graft.ingest.CsvSniffer.sniff(bad, spark.sparkContext.hadoopConfiguration)
+    assert(sniff.rawHeader === Seq("email", "first_name", "last_name", "company"))
+    val scanError = intercept[Exception](spark.read.text(bad).collect())
+    assert(scanError.getMessage.contains("bad.csv.gz"))
+
+    val out = JobDispatch.processBatch(spark, store,
+      Seq(msg(1, "good1.csv"), msg(2, "bad.csv.gz"), msg(3, "good2.csv")).toDF("value"),
+      k => s"$root/uploads/$k")
+    assert(out(0).outcome === JobStatus.Completed)
+    assert(out(2).outcome === JobStatus.Completed)
+    // The wave's scan failed, so every member replayed alone: the bad job
+    // fails with its own read error, the others name the wave failure.
+    assert(out(1).outcome === "FAILED")
+    assert(out(1).detail.contains("bad.csv.gz"), out(1).detail)
+    assert(Seq(out(0), out(2)).forall(_.detail.startsWith("ok (replayed alone after wave failure")),
+      out.mkString("; "))
+    val statuses = store.load("jobs").select("job_id", "job_status")
+      .as[(Int, String)].collect().toMap
+    assert(statuses === Map(1 -> JobStatus.Completed, 2 -> JobStatus.Failed, 3 -> JobStatus.Completed))
+    assert(store.load("staging").select("staging_job_id").as[Int].collect().sorted.toSeq === Seq(1, 3))
+  }
+
+  test("two-job wave on a populated store: each prior-state table is loaded once for presence, once for the plan") {
+    val (root, store) = seed(2, i => s"u$i")
+    Files.writeString(Paths.get(s"$root/uploads/issue.csv"),
+      "email,first_name,last_name,company\nok@b.co,F,L,C\n,missing,Cee,Biz\n")
+    JobDispatch.processBatch(spark, store,
+      Seq(msg(1, "issue.csv"), msg(2, "issue.csv")).toDF("value"), k => s"$root/uploads/$k")
+    // Job 1 stays NEEDS_REVIEW (reprocess route); job 2 is a resumed
+    // PROCESSING job (initial route over its prior state). Both routes read
+    // staging, issues and issue_items.
+    store.overwrite("jobs", store.load("jobs").withColumn("job_status",
+      when(col("job_id") === 2, JobStatus.Processing).otherwise(col("job_status"))))
+    val loads = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    val counting = new graft.io.TableStore {
+      def load(t: String) = { loads(t) += 1; store.load(t) }
+      def exists(t: String) = store.exists(t)
+      def overwrite(t: String, df: org.apache.spark.sql.DataFrame) = store.overwrite(t, df)
+      def append(t: String, df: org.apache.spark.sql.DataFrame) = store.append(t, df)
+      def commitAll(
+          appends: Seq[(String, org.apache.spark.sql.DataFrame)],
+          partitions: Seq[graft.io.PartitionCommit],
+          overwrites: Seq[(String, org.apache.spark.sql.DataFrame)]) =
+        store.commitAll(appends, partitions, overwrites)
+    }
+    val out = JobDispatch.processBatch(spark, counting,
+      Seq(msg(1, "issue.csv"), msg(2, "issue.csv")).toDF("value"), k => s"$root/uploads/$k")
+    assert(out.map(_.outcome) === Seq(JobStatus.NeedsReview, JobStatus.NeedsReview),
+      out.mkString("; "))
+    assert(out.forall(_.detail === "ok"), out.mkString("; "))
+    Seq("staging", "issues", "issue_items").foreach { t =>
+      assert(loads(t) >= 1 && loads(t) <= 2, s"$t loaded ${loads(t)} times")
+    }
   }
 }
