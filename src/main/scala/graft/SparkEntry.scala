@@ -433,18 +433,64 @@ object SparkEntry {
        |sigs AS (SELECT d.doc_id, $fallbacks FROM documents d LEFT JOIN m ON d.doc_id = m.doc_id)""".stripMargin
   }
 
-  // SHARED-CACHE INVARIANTS (all TrieMap caches below; r17 advice,
-  // documented): (1) entries assume an IMMUTABLE corpus per (session,
-  // dir) — the parquet under `dir` is never regenerated mid-session in
-  // any driver surface (Bench/Verify/RunOne build one session over one
-  // frozen testdata dir); (2) first access is SINGLE-THREADED —
-  // Bench.warmSharedCaches materializes every cache up front before the
-  // sequential query loop, and Verify/RunOne run queries sequentially,
-  // so getOrElseUpdate's evaluate-twice-under-race window is never
-  // exercised (a drill's intra-query concurrently() jobs run AFTER its
-  // closure resolved the caches); (3) entries live for the session —
-  // no eviction, sized for the bench surface (checkpoints of
-  // vocabulary-bounded or corpus-row-bounded frames).
+  /** One shared artifact — a cached frame, a checkpointed frame or a
+    * frozen store that several queries reuse — named by its `cache_*`
+    * Bench line. Built lazily on first use (its dependencies first, each
+    * through its own entry) and memoised per (session, dir, name); a
+    * build that throws memoises nothing. [[warm]] materializes it: a
+    * `.cache()` frame counts, every other entry is eager, so building it
+    * is the materialization. */
+  final class Shared[T <: AnyRef] private[SparkEntry] (
+      val name: String, build: (SparkSession, String) => T, warmUp: T => Unit) {
+    sharedRegistry += this
+    def apply(s: SparkSession, dir: String): T =
+      sharedMemo.getOrElseUpdate((s, dir, name), build(s, dir)).asInstanceOf[T]
+    def warm(s: SparkSession, dir: String): Unit = warmUp(apply(s, dir))
+  }
+
+  private val sharedMemo = scala.collection.concurrent.TrieMap
+    .empty[(SparkSession, String, String), AnyRef]
+  private val sharedRegistry = scala.collection.mutable.ArrayBuffer.empty[Shared[_ <: AnyRef]]
+
+  /** The shared-artifact registry: every entry, in declaration order —
+    * Bench warms and times them up front as its `cache_*` lines, so a
+    * build lands on its own line instead of on whichever consumer runs
+    * first. Invariants: (1) entries assume an IMMUTABLE corpus per
+    * (session, dir) — the parquet under `dir` is never regenerated
+    * mid-session in any driver surface (Bench/Verify/RunOne build one
+    * session over one frozen testdata dir); (2) first access is
+    * SINGLE-THREADED — Bench warms every entry before its sequential
+    * query loop, and Verify/RunOne run queries sequentially, so
+    * getOrElseUpdate's evaluate-twice-under-race window is never
+    * exercised (a drill's intra-query concurrently() jobs run AFTER its
+    * closure resolved the entries); (3) entries live for the session —
+    * no eviction, sized for the bench surface (checkpoints of
+    * vocabulary-bounded or corpus-row-bounded frames). */
+  def sharedArtifacts: Seq[Shared[_ <: AnyRef]] = sharedRegistry.toSeq
+
+  private def shared[T <: AnyRef](name: String)(
+      build: (SparkSession, String) => T): Shared[T] =
+    new Shared[T](name, build, _ => ())
+  private def sharedCached(name: String)(
+      build: (SparkSession, String) => DataFrame): Shared[DataFrame] =
+    new Shared[DataFrame](name, build, _.count())
+
+  /** A fresh [[graft.io.ParquetTableStore]] under a
+    * `graft_${variant}_shared_` temp root, filled by `build`. */
+  private def newSharedStore(
+      s: SparkSession, variant: String,
+      partitionByCols: Option[Map[String, Seq[String]]] = None)(
+      build: graft.io.TableStore => Unit): graft.io.ParquetTableStore = {
+    val root = java.nio.file.Files
+      .createTempDirectory(s"graft_${variant}_shared_").toString
+    val store = partitionByCols match {
+      case Some(p) => new graft.io.ParquetTableStore(s, root,
+        partitionByCols = p)
+      case None => new graft.io.ParquetTableStore(s, root)
+    }
+    build(store)
+    store
+  }
 
   /** The classified input frame — the shared subplan of the whole pipeline
     * family (q_classify, q_consolidate, q_status_counts, q_job_counters,
@@ -453,20 +499,10 @@ object SparkEntry {
     * JobDispatch's in-pipeline cache — recomputing the classify joins per
     * downstream consumer would multiply the dominant subtree by the number
     * of consumers (at any scale). */
-  private val classifiedCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def classified(s: SparkSession, dir: String): DataFrame =
-    classifiedCache.getOrElseUpdate((s, dir),
-      Validate.classifyKeyed(csvInput(s, dir), contactsStandIn(s, dir), jobUsersStandIn(s)).cache())
+  private val classified = sharedCached("cache_classify") { (s, dir) =>
+    Validate.classifyKeyed(csvInput(s, dir), contactsStandIn(s, dir), jobUsersStandIn(s)).cache()
+  }
 
-  /** Production near-duplicate pairs over `documents` — LSH band-collision
-    * candidates + exact content-hash floor, exact-jaccard-verified on the
-    * candidate sliver only (Dedup.nearDupPairsLsh): pair generation is
-    * linear-ish in corpus size instead of the inverted-index join's
-    * cross-section. Shared by q_corpus_prep, q_dedup_clusters and
-    * q_minhash_accuracy exactly like a nightly pipeline computes pairs ONCE
-    * (q_dedup_jaccard stays the uncached, exact inverted-index witness).
-    * Cached per (session, dir). */
   /** Band-bucket stop cap for every production banding path (guardedPairs,
     * q_dedup_lsh_pairs_capped): buckets above this are boilerplate-keyed
     * crowds whose pair expansion is quadratic (the hot-band ×100 corpus put
@@ -476,14 +512,34 @@ object SparkEntry {
     * stay as exactness witnesses. */
   private val ProductionLshBucketCap = 2048
 
-  private val guardedPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def guardedPairs(s: SparkSession, dir: String): DataFrame =
-    guardedPairsCache.getOrElseUpdate((s, dir), {
-      val docs = pq(s, dir, "documents")
-      graft.functions.Dedup.nearDupPairsLsh(docs, "doc_id", "text",
-        n = 4, threshold = 0.8, bucketCap = ProductionLshBucketCap).cache()
-    })
+  /** Production near-duplicate pairs over `documents` — LSH band-collision
+    * candidates + exact content-hash floor, exact-jaccard-verified on the
+    * candidate sliver only (Dedup.nearDupPairsLsh): pair generation is
+    * linear-ish in corpus size instead of the inverted-index join's
+    * cross-section. Shared by q_corpus_prep, q_dedup_clusters and
+    * q_minhash_accuracy exactly like a nightly pipeline computes pairs ONCE
+    * (q_dedup_jaccard stays the uncached, exact inverted-index witness).
+    * Cached per (session, dir). */
+  private val guardedPairs = sharedCached("cache_guardedPairs") { (s, dir) =>
+    val docs = pq(s, dir, "documents")
+    graft.functions.Dedup.nearDupPairsLsh(docs, "doc_id", "text",
+      n = 4, threshold = 0.8, bucketCap = ProductionLshBucketCap).cache()
+  }
+
+  /** Shared checkpointed [[graft.functions.LmIndex.baseCounts]] frames —
+    * the ONE-corpus-pass discipline applied ACROSS queries: every
+    * consumer of the same (split, order) training corpus derives its
+    * model from one checkpointed base instead of paying its own corpus
+    * pass. The full-corpus order-5 base feeds the plain AND count-pruned
+    * AND vocabulary-capped shared builds (three corpus passes → one); the
+    * 80%-split bases feed each order's inline holdout cross-score AND its
+    * persisted-holdout build (two passes → one per order). Registered
+    * ahead of the stores so the store builds downstream of them measure
+    * as re-aggregations. */
+  private val lm5SharedBase = shared("cache_lm5_base") { (s, dir) =>
+    graft.functions.LmIndex.baseOf(5, pq(s, dir, "documents"), "doc_id", "text")
+      .localCheckpoint()
+  }
 
   /** The shared FROZEN full-corpus LM model stores (order 3 / order 5)
     * — the guardedPairs discipline applied to the persisted-model
@@ -492,124 +548,24 @@ object SparkEntry {
     * so the six order-3 and five order-5 full-corpus serve queries
     * read one shared store each instead of each rebuilding the
     * identical 9/17 tables inside its own closure. Bench attributes
-    * the one-time builds as explicit `cache_lm3`/`cache_lm5` lines
-    * (warmSharedCaches), so per-query numbers are honest SERVE costs
-    * and the build is still computed from the parquet inputs on every
-    * invocation — once, like production. Queries that build a
-    * DIFFERENT model (holdout splits, append/delete maintenance,
-    * count-pruned, vocabulary-capped, the positional-mode twin) keep
-    * their own per-closure stores. */
-  private val sharedStoreCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), graft.io.ParquetTableStore]
-  private def sharedStore(
-      s: SparkSession, dir: String, variant: String,
-      partitionByCols: Option[Map[String, Seq[String]]] = None)(
-      build: graft.io.TableStore => Unit): graft.io.ParquetTableStore =
-    sharedStoreCache.getOrElseUpdate((s, dir, variant), {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_${variant}_shared_").toString
-      val store = partitionByCols match {
-        case Some(p) => new graft.io.ParquetTableStore(s, root,
-          partitionByCols = p)
-        case None => new graft.io.ParquetTableStore(s, root)
-      }
-      build(store)
-      store
-    })
-
-  /** Shared checkpointed [[graft.functions.LmIndex.baseCounts]] frames —
-    * the ONE-corpus-pass discipline applied ACROSS queries: every
-    * consumer of the same (split, order) training corpus derives its
-    * model from one checkpointed base instead of paying its own corpus
-    * pass. `b5full` feeds the plain AND count-pruned AND
-    * vocabulary-capped shared builds (three corpus passes → one);
-    * `b5h80`/`b3h80` feed each order's inline holdout cross-score AND
-    * its persisted-holdout build (two passes → one per order). Bench
-    * attributes the materializations as cache_lm*_base lines. */
-  private val lmBaseCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, String), DataFrame]
-  private def lmSharedBase(
-      s: SparkSession, dir: String, variant: String): DataFrame =
-    lmBaseCache.getOrElseUpdate((s, dir, variant), {
-      val d = pq(s, dir, "documents")
-      val train80 = d.filter(col("doc_id") % 5 =!= 0)
-      (variant match {
-        case "b5full" => graft.functions.LmIndex.baseOf(5, d, "doc_id", "text")
-        case "b5h80" =>
-          graft.functions.LmIndex.baseOf(5, train80, "doc_id", "text")
-        case "b3h80" =>
-          graft.functions.LmIndex.baseOf(3, train80, "doc_id", "text")
-      }).localCheckpoint()
-    })
-
-  private def lmSharedStore(
-      s: SparkSession, dir: String, order: Int): graft.io.TableStore =
-    sharedStore(s, dir, s"lm$order") { store =>
-      if (order == 3)
-        graft.functions.LmIndex.build(3, store, "lm3",
-          pq(s, dir, "documents"), "doc_id", "text")
-      else
-        graft.functions.LmIndex.buildFromBase(5, store, "lm5",
-          lmSharedBase(s, dir, "b5full"))
+    * the one-time builds to these entries' lines, so per-query numbers
+    * are honest SERVE costs and the build is still computed from the
+    * parquet inputs on every invocation — once, like production.
+    * Queries that build a DIFFERENT model (holdout splits,
+    * append/delete maintenance, count-pruned, vocabulary-capped, the
+    * positional-mode twin) keep their own per-closure stores. */
+  private val lm3SharedStore = shared("cache_lm3") { (s, dir) =>
+    newSharedStore(s, "lm3") { store =>
+      graft.functions.LmIndex.build(3, store, "lm3",
+        pq(s, dir, "documents"), "doc_id", "text")
     }
-
-  /** The 80%-split order-2 model (train on doc_id % 5 != 0) — the
-    * persisted and probed holdout serves read it; the delete drill
-    * clones it ([[graft.io.ParquetTableStore.cloneTo]]) and mutates its
-    * private copy. */
-  private def lm2hSharedStore(
-      s: SparkSession, dir: String): graft.io.ParquetTableStore =
-    sharedStore(s, dir, "lm2h") { store =>
-      graft.functions.LmIndex.build(2, store, "lm",
-        pq(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
-        "doc_id", "text")
+  }
+  private val lm5SharedStore = shared("cache_lm5") { (s, dir) =>
+    newSharedStore(s, "lm5") { store =>
+      graft.functions.LmIndex.buildFromBase(5, store, "lm5",
+        lm5SharedBase(s, dir))
     }
-  /** The trained logistic quality models — the same build-once
-    * discipline for the eager GD trainer: q_lr_train / q_lr_filter /
-    * q_lr_calibration fit the identical full-corpus model (same
-    * features, label, steps, lr) and q_lr_holdout /
-    * q_pipeline_manifest_v2 the identical 80%-split model; training ran
-    * 20 GD aggregation jobs per closure. One shared 1-row model frame
-    * per variant (logisticTrain localCheckpoints it), attributed as
-    * cache_lr / cache_lr80 bench lines. */
-  private val lrModelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Boolean), DataFrame]
-  private def lrModel(
-      s: SparkSession, dir: String, full: Boolean): DataFrame =
-    lrModelCache.getOrElseUpdate((s, dir, full), {
-      import graft.functions.QualityModel
-      val d = pq(s, dir, "documents")
-      val train = if (full) d else d.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      QualityModel.logisticTrain(train,
-        QualityModel.docFeatures(col("text"), col("n_chars")),
-        (col("n_chars") >= 300).cast("double"), steps = 20, lr = 1.0)
-    })
-
-  /** The shared trained k-means centroids (embeddings, k=16, iters=2)
-    * — q_knn_ivf_trained and q_knn_recall_trained ran the identical
-    * eager Lloyd's training twice; kmeansTrain localCheckpoints its
-    * output, so memoizing the 16-row frame is free. cache_kmeans line. */
-  private val kmeansCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def kmeansCents16(s: SparkSession, dir: String): DataFrame =
-    kmeansCache.getOrElseUpdate((s, dir),
-      graft.functions.Similarity.kmeansTrain(
-        pq(s, dir, "embeddings"), "vec_id", "embedding", k = 16, iters = 2))
-
-  /** The shared DSIR weights frame (docs vs the English-slice target,
-    * 4096 buckets) — q_dsir_weights / q_dsir_sample / q_dsir_sample_strat
-    * all computed it identically in-closure (two fit histogram passes +
-    * one scoring pass each); the selection tails differ, the weights do
-    * not. Cached like classify/guardedPairs, attributed as cache_dsir. */
-  private val dsirWeightsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def dsirWeightsShared(s: SparkSession, dir: String): DataFrame =
-    dsirWeightsCache.getOrElseUpdate((s, dir), {
-      val docs = pq(s, dir, "documents")
-      graft.functions.Sampling.dsirWeights(
-        docs, "doc_id", "text", docs.filter(col("lang") === "en"), "text")
-        .cache()
-    })
+  }
 
   /** The count-pruned frozen gate model (pruneMin 2,2,2,2) — built once,
     * served by both pruned-model queries. Round 18: derives from the
@@ -618,93 +574,181 @@ object SparkEntry {
     * to the base-derived frames, spec-pinned), so the pruned build is
     * filter+aggregate writes over vocabulary-bounded stored tables: no
     * base re-aggregation, no m-table re-derivation (previously 5 + 3
-    * such jobs inside cache_lm5_pruned). */
-  private def lm5PrunedSharedStore(
-      s: SparkSession, dir: String): graft.io.TableStore =
-    sharedStore(s, dir, "lm5p") { store =>
+    * such jobs inside this build). */
+  private val lm5PrunedSharedStore = shared("cache_lm5_pruned") { (s, dir) =>
+    newSharedStore(s, "lm5p") { store =>
       graft.functions.LmIndex.buildPrunedFromStore(
-        5, lmSharedStore(s, dir, 5), "lm5", store, "lm5",
+        5, lm5SharedStore(s, dir), "lm5", store, "lm5",
         pruneMin = Seq(2L, 2L, 2L, 2L))
     }
+  }
+
+  /** The 80%-split order-2 model (train on doc_id % 5 != 0) — the
+    * persisted and probed holdout serves read it; the delete drill
+    * clones it ([[graft.io.ParquetTableStore.cloneTo]]) and mutates its
+    * private copy. */
+  private val lm2hSharedStore = shared("cache_lm2h") { (s, dir) =>
+    newSharedStore(s, "lm2h") { store =>
+      graft.functions.LmIndex.build(2, store, "lm",
+        pq(s, dir, "documents").filter(col("doc_id") % 5 =!= 0),
+        "doc_id", "text")
+    }
+  }
+
+  private val lm3hSharedBase = shared("cache_lm3h_base") { (s, dir) =>
+    graft.functions.LmIndex.baseOf(3,
+      pq(s, dir, "documents").filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
+      .localCheckpoint()
+  }
+  private val lm5hSharedBase = shared("cache_lm5h_base") { (s, dir) =>
+    graft.functions.LmIndex.baseOf(5,
+      pq(s, dir, "documents").filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
+      .localCheckpoint()
+  }
+
+  /** The holdout cross-score frames (orders 2, 3 and 5): the held-out
+    * 20% scored inline against the 80%-split model — what
+    * q_kn_score_holdout / q_kn3_holdout / q_kn5_holdout report. One
+    * checkpointed frame per order. The persisted twins (q_kn_persisted,
+    * q_kn{3,5}_persisted_holdout) share each order's oracle SQL verbatim
+    * but serve from their own stores, so the hash compare pins
+    * store-serve == inline cross-score under OOV (as LmHoldoutShareSpec
+    * does). Orders 3 and 5 derive their frames from the shared 80%-split
+    * base (its checkpoint also feeds their persisted twins' builds);
+    * order 2 has no twin build from a base, so it counts inline. */
+  private def holdoutScores(
+      d: DataFrame, model: graft.functions.LmIndex.KnModel): DataFrame =
+    graft.functions.LmIndex.scoreFrames(model, d.filter(col("doc_id") % 5 === 0),
+      "doc_id", "text", graft.functions.LmIndex.Kn()).localCheckpoint()
+  private val lm2hScoresShared = shared("cache_lm2h_scores") { (s, dir) =>
+    val d = pq(s, dir, "documents")
+    holdoutScores(d, graft.functions.LmIndex.modelFrames(
+      2, d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text"))
+  }
+  private val lm3hScoresShared = shared("cache_lm3h_scores") { (s, dir) =>
+    holdoutScores(pq(s, dir, "documents"),
+      graft.functions.LmIndex.framesFromBase(3, lm3hSharedBase(s, dir)))
+  }
+  private val lm5hScoresShared = shared("cache_lm5h_scores") { (s, dir) =>
+    holdoutScores(pq(s, dir, "documents"),
+      graft.functions.LmIndex.framesFromBase(5, lm5hSharedBase(s, dir)))
+  }
+
+  /** The full-corpus BM25 index — built once, read by the persisted,
+    * pinned, and hybrid serves (the delete query mutates its index and
+    * keeps its own store). */
+  private val lexSharedStore = shared("cache_lex") { (s, dir) =>
+    newSharedStore(s, "lex") { store =>
+      graft.functions.LexIndex.build(store, "lex", pq(s, dir, "documents"),
+        "doc_id", "text")
+    }
+  }
+
+  /** The trained logistic quality models — the same build-once
+    * discipline for the eager GD trainer: q_lr_train / q_lr_filter /
+    * q_lr_calibration fit the identical full-corpus model (same
+    * features, label, steps, lr) and q_lr_holdout /
+    * q_pipeline_manifest_v2 the identical 80%-split model; training ran
+    * 20 GD aggregation jobs per closure. One shared 1-row model frame
+    * per split (logisticTrain localCheckpoints it). */
+  private def lrTrain(train: DataFrame): DataFrame = {
+    import graft.functions.QualityModel
+    QualityModel.logisticTrain(train,
+      QualityModel.docFeatures(col("text"), col("n_chars")),
+      (col("n_chars") >= 300).cast("double"), steps = 20, lr = 1.0)
+  }
+  private val lrModel = shared("cache_lr") { (s, dir) =>
+    lrTrain(pq(s, dir, "documents"))
+  }
+  private val lr80Model = shared("cache_lr80") { (s, dir) =>
+    lrTrain(pq(s, dir, "documents").filter(pmod(col("doc_id"), lit(5)) =!= 0))
+  }
+
+  /** The shared DSIR weights frame (docs vs the English-slice target,
+    * 4096 buckets) — q_dsir_weights / q_dsir_sample / q_dsir_sample_strat
+    * all computed it identically in-closure (two fit histogram passes +
+    * one scoring pass each); the selection tails differ, the weights do
+    * not. Cached like classify/guardedPairs. */
+  private val dsirWeightsShared = sharedCached("cache_dsir") { (s, dir) =>
+    val docs = pq(s, dir, "documents")
+    graft.functions.Sampling.dsirWeights(
+      docs, "doc_id", "text", docs.filter(col("lang") === "en"), "text")
+      .cache()
+  }
+
+  /** The shared trained k-means centroids (embeddings, k=16, iters=2)
+    * — q_knn_ivf_trained and q_knn_recall_trained ran the identical
+    * eager Lloyd's training twice; kmeansTrain localCheckpoints its
+    * output, so memoizing the 16-row frame is free. */
+  private val kmeansCents16 = shared("cache_kmeans") { (s, dir) =>
+    graft.functions.Similarity.kmeansTrain(
+      pq(s, dir, "embeddings"), "vec_id", "embedding", k = 16, iters = 2)
+  }
 
   /** The shared UNTRAINED full-corpus IVF index (nlist 16, lowest-id
     * stand-in centroids) — the persisted and pinned serves read it; the
     * delete drill clones + mutates. */
-  private def ivfSharedStore(
-      s: SparkSession, dir: String): graft.io.ParquetTableStore =
+  private val ivfSharedStore = shared("cache_ivf") { (s, dir) =>
     // Variant "ann_ivf" so the store root keeps the graft_ann_ prefix
     // PlanQualitySpec's index-table scan gate keys on.
-    sharedStore(s, dir, "ann_ivf",
+    newSharedStore(s, "ann_ivf",
       Some(graft.functions.AnnIndex.partitionSpec("ivf"))) { store =>
       graft.functions.AnnIndex.buildIvf(store, "ivf",
         pq(s, dir, "embeddings"), "vec_id", "embedding", nlist = 16)
     }
+  }
 
   /** The TRAINED IVF inverted lists over the shared k-means centroids —
     * the assignment pass ran identically in q_knn_ivf_trained,
     * q_knn_recall_trained and q_hybrid_ivf's build. One checkpointed
-    * frame (corpus-assignment-sized), attributed as cache_ivf_lists. */
-  private val ivfListsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def ivfListsTrained(s: SparkSession, dir: String): DataFrame =
-    ivfListsCache.getOrElseUpdate((s, dir),
-      graft.functions.Similarity.ivfInvertedLists(
-        pq(s, dir, "embeddings"), kmeansCents16(s, dir),
-        "vec_id", "embedding").localCheckpoint())
+    * frame (corpus-assignment-sized). */
+  private val ivfListsTrained = shared("cache_ivf_lists") { (s, dir) =>
+    graft.functions.Similarity.ivfInvertedLists(
+      pq(s, dir, "embeddings"), kmeansCents16(s, dir),
+      "vec_id", "embedding").localCheckpoint()
+  }
+
+  /** The shared repeated-8-gram set (minDocs 2) — the corpus-frequency
+    * half both the repetition profile (q_repeated_ngrams) and the span
+    * excision (q_span_trim_text) consume; each previously re-ran the
+    * distinct+group-by over every shingle position. */
+  private val rep8Shared = shared("cache_rep8") { (s, dir) =>
+    graft.functions.Dedup.repeatedShingles(
+      pq(s, dir, "documents"), "doc_id", "text", n = 8, minDocs = 2)
+      .localCheckpoint()
+  }
+
+  /** The shared CCNet perplexity-tercile frame (order-2 KN score →
+    * per-language tiles) — q_ppl_buckets reports it and
+    * q_curriculum_order sorts by it; each previously ran the whole KN
+    * chain. */
+  private val pplStagesShared = shared("cache_ppl") { (s, dir) =>
+    graft.functions.TextAnalysis.pplBuckets(
+      pq(s, dir, "documents"), "doc_id", "text", "lang", tiles = 3)
+      .localCheckpoint()
+  }
 
   /** The shared full-corpus order-5 modified-KN score frame (the
     * persisted gate model's serve output) — q_mkn5_persisted reports it
     * and q_ccnet_gate composes langid + per-language terciles over it;
     * each previously ran the identical nine-exchange scoring chain.
-    * One corpus-row-sized checkpoint, attributed as cache_mkn5. */
-  private val mkn5ScoresCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def mkn5ScoresShared(s: SparkSession, dir: String): DataFrame =
-    mkn5ScoresCache.getOrElseUpdate((s, dir),
-      graft.functions.LmIndex.score(
-        5, lmSharedStore(s, dir, 5), "lm5", pq(s, dir, "documents"),
-        "doc_id", "text", graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
-        .localCheckpoint())
-
-  /** The holdout cross-score frames (orders 2, 3 and 5): the held-out
-    * 20% scored inline against the 80%-split model — what
-    * q_kn_score_holdout / q_kn3_holdout / q_kn5_holdout report. One
-    * checkpointed frame per order (cache_lm2h/lm3h/lm5h_scores bench
-    * lines). The persisted twins (q_kn_persisted,
-    * q_kn{3,5}_persisted_holdout) share each order's oracle SQL verbatim
-    * but serve from their own stores, so the hash compare pins
-    * store-serve == inline cross-score under OOV (as LmHoldoutShareSpec
-    * does). */
-  private val lmhScoresCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String, Int), DataFrame]
-  private def lmhScoresShared(
-      s: SparkSession, dir: String, order: Int): DataFrame =
-    lmhScoresCache.getOrElseUpdate((s, dir, order), {
-      val d = pq(s, dir, "documents")
-      val held = d.filter(col("doc_id") % 5 === 0)
-      // Orders 3 and 5 derive their frames from the shared 80%-split
-      // base (its checkpoint also feeds their persisted twins' builds);
-      // order 2 has no twin build from a base, so it counts inline.
-      val model =
-        if (order == 2) graft.functions.LmIndex.modelFrames(
-          2, d.filter(col("doc_id") % 5 =!= 0), "doc_id", "text")
-        else graft.functions.LmIndex.framesFromBase(
-          order, lmSharedBase(s, dir, s"b${order}h80"))
-      graft.functions.LmIndex.scoreFrames(model, held, "doc_id", "text",
-        graft.functions.LmIndex.Kn()).localCheckpoint()
-    })
+    * One corpus-row-sized checkpoint. */
+  private val mkn5ScoresShared = shared("cache_mkn5") { (s, dir) =>
+    graft.functions.LmIndex.score(
+      5, lm5SharedStore(s, dir), "lm5", pq(s, dir, "documents"),
+      "doc_id", "text", graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
+      .localCheckpoint()
+  }
 
   /** The shared pass-1 blocked pair-distance frame (brand blocks,
     * threshold 3) — the quadratic banded-levenshtein DP is the whole
     * cost of BOTH fuzzy-linkage operators; the NN aggregate and the
-    * <=2 screen are cheap tails over it. cache_fuzzy line. */
-  private val fuzzyPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def fuzzyBandedShared(s: SparkSession, dir: String): DataFrame =
-    fuzzyPairsCache.getOrElseUpdate((s, dir),
-      graft.operators.Linkage.bandedPairDistances(
-        pq(s, dir, "part"), "p_partkey", "p_name", Seq("p_brand"),
-        threshold = 3).localCheckpoint())
+    * <=2 screen are cheap tails over it. */
+  private val fuzzyBandedShared = shared("cache_fuzzy") { (s, dir) =>
+    graft.operators.Linkage.bandedPairDistances(
+      pq(s, dir, "part"), "p_partkey", "p_name", Seq("p_brand"),
+      threshold = 3).localCheckpoint()
+  }
 
   /** The shared per-doc SimHash fingerprints, BOTH widths from one
     * corpus pass (Dedup.simhashBoth — the 64-bit votes subsume the
@@ -713,91 +757,10 @@ object SparkEntry {
     * 32-bit column, the 32-bit pair screen bands it, the 64-bit pair
     * screen bands `simhash64` (previously its own full corpus pass), and
     * the ensemble's width-adaptive switch reads whichever width fires.
-    * Still attributed as the cache_sim32 bench line (key kept —
-    * additions-only contract). */
-  private val sim32Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def sim32Shared(s: SparkSession, dir: String): DataFrame =
-    sim32Cache.getOrElseUpdate((s, dir),
-      graft.functions.Dedup.simhashBoth(
-        pq(s, dir, "documents"), "doc_id", "text").localCheckpoint())
-
-  /** The shared repeated-8-gram set (minDocs 2) — the corpus-frequency
-    * half both the repetition profile (q_repeated_ngrams) and the span
-    * excision (q_span_trim_text) consume; each previously re-ran the
-    * distinct+group-by over every shingle position. cache_rep8 line. */
-  private val rep8Cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def rep8Shared(s: SparkSession, dir: String): DataFrame =
-    rep8Cache.getOrElseUpdate((s, dir),
-      graft.functions.Dedup.repeatedShingles(
-        pq(s, dir, "documents"), "doc_id", "text", n = 8, minDocs = 2)
-        .localCheckpoint())
-
-  /** The shared CCNet perplexity-tercile frame (order-2 KN score →
-    * per-language tiles) — q_ppl_buckets reports it and
-    * q_curriculum_order sorts by it; each previously ran the whole KN
-    * chain. cache_ppl line. */
-  private val pplStagesCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private def pplStagesShared(s: SparkSession, dir: String): DataFrame =
-    pplStagesCache.getOrElseUpdate((s, dir),
-      graft.functions.TextAnalysis.pplBuckets(
-        pq(s, dir, "documents"), "doc_id", "text", "lang", tiles = 3)
-        .localCheckpoint())
-  /** The full-corpus BM25 index — built once, read by the persisted,
-    * pinned, and hybrid serves (the delete query mutates its index and
-    * keeps its own store). */
-  private def lexSharedStore(
-      s: SparkSession, dir: String): graft.io.ParquetTableStore =
-    sharedStore(s, dir, "lex") { store =>
-      graft.functions.LexIndex.build(store, "lex", pq(s, dir, "documents"),
-        "doc_id", "text")
-    }
-
-  /** Materialize the two cross-query shared caches, timing each — bench
-    * attribution. Without this, whichever consumer happens to run first
-    * absorbs the materialization cost (q_cluster_sizes absorbed ~4 s of
-    * guardedPairs, q_classify ~2 s of the classify cache, every round) and
-    * per-query floors read dishonestly. Bench calls it up front and emits
-    * the timings as explicit `cache_*` lines; consumers then measure warm.
-    * Returns (name, seconds). */
-  def warmSharedCaches(s: SparkSession, dir: String): Seq[(String, Double)] = {
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    Seq(
-      "cache_classify" -> time(classified(s, dir).count()),
-      "cache_guardedPairs" -> time(guardedPairs(s, dir).count()),
-      // The shared frozen-model builds (lmSharedStore): orders 5 and 3
-      // run eagerly (store writes), so constructing the store IS the
-      // materialization — no count() needed. The shared base-counts
-      // frames (localCheckpoint = eager) get their own lines so the
-      // store builds downstream of them measure as re-aggregations.
-      "cache_lm5_base" -> time(lmSharedBase(s, dir, "b5full")),
-      "cache_lm3" -> time(lmSharedStore(s, dir, 3)),
-      "cache_lm5" -> time(lmSharedStore(s, dir, 5)),
-      "cache_lm5_pruned" -> time(lm5PrunedSharedStore(s, dir)),
-      "cache_lm2h" -> time(lm2hSharedStore(s, dir)),
-      "cache_lm3h_base" -> time(lmSharedBase(s, dir, "b3h80")),
-      "cache_lm5h_base" -> time(lmSharedBase(s, dir, "b5h80")),
-      // The shared holdout cross-score frames (localCheckpoint = eager);
-      // each order's inline holdout query and persisted twin serve one.
-      "cache_lm2h_scores" -> time(lmhScoresShared(s, dir, 2)),
-      "cache_lm3h_scores" -> time(lmhScoresShared(s, dir, 3)),
-      "cache_lm5h_scores" -> time(lmhScoresShared(s, dir, 5)),
-      "cache_lex" -> time(lexSharedStore(s, dir)),
-      "cache_lr" -> time(lrModel(s, dir, full = true)),
-      "cache_lr80" -> time(lrModel(s, dir, full = false)),
-      "cache_dsir" -> time(dsirWeightsShared(s, dir).count()),
-      "cache_kmeans" -> time(kmeansCents16(s, dir)),
-      "cache_ivf" -> time(ivfSharedStore(s, dir)),
-      "cache_ivf_lists" -> time(ivfListsTrained(s, dir)),
-      "cache_rep8" -> time(rep8Shared(s, dir)),
-      "cache_ppl" -> time(pplStagesShared(s, dir)),
-      "cache_mkn5" -> time(mkn5ScoresShared(s, dir)),
-      "cache_fuzzy" -> time(fuzzyBandedShared(s, dir)),
-      "cache_sim32" -> time(sim32Shared(s, dir)))
+    * The Bench key keeps its 32-bit name (additions-only contract). */
+  private val sim32Shared = shared("cache_sim32") { (s, dir) =>
+    graft.functions.Dedup.simhashBoth(
+      pq(s, dir, "documents"), "doc_id", "text").localCheckpoint()
   }
 
   /** Cross-source near-dup pair counts per unordered source pair (s1 < s2,
@@ -919,7 +882,7 @@ object SparkEntry {
       // The classified frame feeds staging0, issues0, and items0; without
       // caching, each reference re-expands the whole classify subtree (56
       // scans / 107 exchanges at plan level) — a non-starter at scale.
-      // (classified() itself is cached — see classifiedCache.)
+      // (classified itself is a cached shared artifact.)
       val c = classified(s, dir)
       val staging0 = c.select(
         col("row_number").as("staging_id"),
@@ -2190,16 +2153,16 @@ object SparkEntry {
     // contexts route through the documented continuation-backoff OOV
     // branches)
     "q_kn_score_holdout" -> ((s, dir) =>
-      // The holdout score frame (cache_lm2h_scores) — this inline
+      // The holdout score frame (lm2hScoresShared) — this inline
       // cross-score and the persisted serve share one oracle SQL
       // verbatim; score==crossScore is spec-pinned.
-      lmhScoresShared(s, dir, 2).orderBy("doc_id")),
+      lm2hScoresShared(s, dir).orderBy("doc_id")),
 
     // The PERSISTED twin: build the model tables once, score the same
     // held-out split from the store — shares q_kn_score_holdout's oracle
     // SQL verbatim (score reads ONLY the vocabulary-bounded model
     // tables; the training corpus is never rescanned at serve time).
-    // The store build is the timed cache_lm2h line; the serve runs here,
+    // The store build is lm2hSharedStore's timed line; the serve runs here,
     // from the store, so the oracle hash pins score(store)==crossScore.
     "q_kn_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
@@ -2286,7 +2249,7 @@ object SparkEntry {
     // persisted serve must be row-identical to the inline recursion.
     "q_kn3_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 3)
+      val store = lm3SharedStore(s, dir)
       graft.functions.LmIndex.score(3, store, "lm3", d, "doc_id", "text")
         .orderBy("doc_id")
     }),
@@ -2298,7 +2261,7 @@ object SparkEntry {
     // with the batch predicate on the SCORED side only.
     "q_kn3_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 3)
+      val store = lm3SharedStore(s, dir)
       graft.functions.LmIndex.scoreBatch(
         3, store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text")
         .orderBy("doc_id")
@@ -2322,7 +2285,7 @@ object SparkEntry {
     // oracle SQL verbatim (in-corpus row-identity).
     "q_mkn3_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 3)
+      val store = lm3SharedStore(s, dir)
       graft.functions.LmIndex.score(3, store, "lm3", d, "doc_id", "text",
         graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
@@ -2334,11 +2297,11 @@ object SparkEntry {
     // documented backoff recipe at every level). Oracle-pins what the
     // spec's hand fixture pins pointwise.
     "q_kn3_holdout" -> ((s, dir) =>
-      // The holdout score frame (cache_lm3h_scores): same computation
+      // The holdout score frame (lm3hScoresShared): same computation
       // as crossScore(3, train80, heldout) — frames derive from the
       // shared 80%-split base (bit-identical, spec-pinned) whose
       // checkpoint also feeds the persisted twin's build.
-      lmhScoresShared(s, dir, 3).orderBy("doc_id")),
+      lm3hScoresShared(s, dir).orderBy("doc_id")),
 
     // The persisted twin under OOV: build the order-3 model on the split
     // from the shared base (the physical nine-table store work stays
@@ -2350,7 +2313,7 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft_lm3_").toString
       val store = new graft.io.ParquetTableStore(s, root)
       graft.functions.LmIndex.buildFromBase(
-        3, store, "lm3", lmSharedBase(s, dir, "b3h80"))
+        3, store, "lm3", lm3hSharedBase(s, dir))
       graft.functions.LmIndex.score(3, store, "lm3",
         pq(s, dir, "documents").filter(col("doc_id") % 5 === 0),
         "doc_id", "text")
@@ -2365,7 +2328,7 @@ object SparkEntry {
     // --discount_fallback on this templated corpus.
     "q_mkn_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 3)
+      val store = lm3SharedStore(s, dir)
       graft.functions.LmIndex.score(2, store, "lm3", d, "doc_id", "text",
         graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
         .orderBy("doc_id")
@@ -2381,7 +2344,7 @@ object SparkEntry {
     // predicate on the SCORED side only (the q_kn3_probed pattern).
     "q_mkn_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 3)
+      val store = lm3SharedStore(s, dir)
       graft.functions.LmIndex.scoreBatch(
         2, store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
         graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
@@ -2390,7 +2353,7 @@ object SparkEntry {
 
     "q_mkn3_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 3)
+      val store = lm3SharedStore(s, dir)
       graft.functions.LmIndex.scoreBatch(
         3, store, "lm3", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
         graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
@@ -2404,7 +2367,7 @@ object SparkEntry {
     // so the serve must be row-identical to the order-5 chain oracle.
     "q_kn5_persisted" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 5)
+      val store = lm5SharedStore(s, dir)
       graft.functions.LmIndex.score(5, store, "lm5", d, "doc_id", "text")
         .orderBy("doc_id")
     }),
@@ -2413,7 +2376,7 @@ object SparkEntry {
     // sixteen keyed table reads prune to the 4% batch's vocabulary.
     "q_kn5_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 5)
+      val store = lm5SharedStore(s, dir)
       graft.functions.LmIndex.scoreBatch(
         5, store, "lm5", d.filter(col("doc_id") % 25 === 0), "doc_id", "text")
         .orderBy("doc_id")
@@ -2423,10 +2386,10 @@ object SparkEntry {
     // split, score the held-out 20% — unseen words/pairs/.../5-grams
     // route through the documented backoff recipe at every level.
     "q_kn5_holdout" -> ((s, dir) =>
-      // The holdout score frame (cache_lm5h_scores): crossScore(5,
+      // The holdout score frame (lm5hScoresShared): crossScore(5,
       // train80, heldout) over the shared 80%-split base, whose
       // checkpoint also feeds the persisted twin's build.
-      lmhScoresShared(s, dir, 5).orderBy("doc_id")),
+      lm5hScoresShared(s, dir).orderBy("doc_id")),
 
     // The persisted twin under OOV — shares q_kn5_holdout's oracle SQL
     // verbatim (the seventeen-table store roundtrip must not perturb a
@@ -2437,7 +2400,7 @@ object SparkEntry {
       val root = java.nio.file.Files.createTempDirectory("graft_lm5_").toString
       val store = new graft.io.ParquetTableStore(s, root)
       graft.functions.LmIndex.buildFromBase(
-        5, store, "lm5", lmSharedBase(s, dir, "b5h80"))
+        5, store, "lm5", lm5hSharedBase(s, dir))
       graft.functions.LmIndex.score(5, store, "lm5",
         pq(s, dir, "documents").filter(col("doc_id") % 5 === 0),
         "doc_id", "text")
@@ -2458,7 +2421,7 @@ object SparkEntry {
     // the batch predicate on the SCORED side only.
     "q_mkn5_probed" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val store = lmSharedStore(s, dir, 5)
+      val store = lm5SharedStore(s, dir)
       graft.functions.LmIndex.scoreBatch(
         5, store, "lm5", d.filter(col("doc_id") % 25 === 0), "doc_id", "text",
         graft.functions.LmIndex.Mkn(Some((0.5, 1.0, 1.5))))
@@ -2984,7 +2947,7 @@ object SparkEntry {
       import org.apache.spark.sql.expressions.Window
       val docs = pq(s, dir, "documents")
       val fs = QualityModel.docFeatures(col("text"), col("n_chars"))
-      val model = lrModel(s, dir, full = false)
+      val model = lr80Model(s, dir)
       val dupLosers = guardedPairs(s, dir)
         .select(col("id_b").as("doc_id")).distinct()
       val survivors = QualityModel.scoreWith(docs, model, fs)
@@ -3200,7 +3163,7 @@ object SparkEntry {
     // 0.194 vs the zero-model's ln 2). Every step is one aggregation over
     // the cached standardized frame; scaler stats and weights re-round to
     // 1e-6 per step so the DuckDB oracle replays all 20 steps bit-exactly.
-    "q_lr_train" -> ((s, dir) => lrModel(s, dir, full = true)),
+    "q_lr_train" -> ((s, dir) => lrModel(s, dir)),
 
     // Train-then-filter composition: fit the classifier (same 20 GD steps
     // as q_lr_train), score every document with the trained model (weights
@@ -3212,7 +3175,7 @@ object SparkEntry {
       import graft.functions.QualityModel
       val d = pq(s, dir, "documents")
       val fs = QualityModel.docFeatures(col("text"), col("n_chars"))
-      QualityModel.scoreWith(d, lrModel(s, dir, full = true), fs)
+      QualityModel.scoreWith(d, lrModel(s, dir), fs)
         .filter(col("score") >= 0.5)
         .select(col("doc_id"), col("score"))
         .orderBy("doc_id")
@@ -3228,7 +3191,7 @@ object SparkEntry {
       val d = pq(s, dir, "documents")
       val fs = QualityModel.docFeatures(col("text"), col("n_chars"))
       val heldOut = d.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val w = lrModel(s, dir, full = false)
+      val w = lr80Model(s, dir)
       val scored = QualityModel.scoreWith(heldOut, w, fs).select(
         when(col("n_chars") >= 300, 1L).otherwise(0L).as("y"),
         when(col("score") >= 0.5, 1L).otherwise(0L).as("pred"))
@@ -3265,7 +3228,7 @@ object SparkEntry {
       import QualityModel.{r6, fp6}
       val d = pq(s, dir, "documents")
       val fs = QualityModel.docFeatures(col("text"), col("n_chars"))
-      QualityModel.scoreWith(d, lrModel(s, dir, full = true), fs)
+      QualityModel.scoreWith(d, lrModel(s, dir), fs)
         .select(
           least(floor(col("score") * 10).cast("long"), lit(9L)).as("bucket"),
           when(col("n_chars") >= 300, 1L).otherwise(0L).as("y"),
