@@ -815,10 +815,17 @@ object SparkEntry {
         .orderBy("norm_email")),
 
     // J2/P4 — existing-contact semi-join (tenant-scoped)
-    "q_existing_emails" -> ((s, dir) =>
-      Validate.existingEmailsKeyed(csvInput(s, dir), contactsStandIn(s, dir), jobUsersStandIn(s))
+    "q_existing_emails" -> ((s, dir) => {
+      val batch = csvInput(s, dir)
+        .select(col("job_id"), normEmail(col("email")).as("norm_email"))
+        .filter(col("norm_email") =!= "")
+      Validate.existingEmailsKeyed(contactsStandIn(s, dir), jobUsersStandIn(s))
+        .join(batch,
+          col("e_job_id") === col("job_id") && col("existing_email") === col("norm_email"),
+          "left_semi")
         .select(col("existing_email").as("contact_email"))
-        .orderBy("contact_email")),
+        .orderBy("contact_email")
+    }),
 
     // V1-V4 — the full first-failure-wins classification (flagship)
     "q_classify" -> ((s, dir) =>

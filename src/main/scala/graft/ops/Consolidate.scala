@@ -45,18 +45,26 @@ object Consolidate {
     * (`job_id`): total rows, per-status counts, and the gating
     * unresolved-issue count (ADR-002 — drives NEEDS_REVIEW vs consolidate,
     * processor.py:345-379). A job with zero issues has no issues-side row
-    * (left join): the caller's coalesce treats that as 0. */
-  def jobCountersKeyed(staging: DataFrame, issues: DataFrame): DataFrame = {
-    val s = staging.groupBy(col("staging_job_id").as("job_id")).agg(
-      count(lit(1)).as("total_rows"),
-      sum(when(col("staging_status") === StagingStatus.Ready, 1).otherwise(0))
-        .cast("long").as("ready_rows"),
-      sum(when(col("staging_status") === StagingStatus.Issue, 1).otherwise(0))
-        .cast("long").as("issue_rows"),
-      sum(when(col("staging_status") === StagingStatus.Discard, 1).otherwise(0))
-        .cast("long").as("discard_rows"),
-      sum(when(col("staging_status") === StagingStatus.Success, 1).otherwise(0))
-        .cast("long").as("success_rows"))
+    * (left join): the caller's coalesce treats that as 0. With `input` (the
+    * rows a flow read, keyed by `job_id`) the same aggregate also counts
+    * them as `input_rows`: a job with staging rows but an empty input
+    * reports 0. */
+  def jobCountersKeyed(
+      staging: DataFrame, issues: DataFrame, input: Option[DataFrame] = None): DataFrame = {
+    val rows = staging.select(
+      col("staging_job_id").as("job_id"), col("staging_status"), lit(true).as("is_staging"))
+    val tagged = input.fold(rows)(in => rows.unionByName(in.select(
+      col("job_id"), lit(null).cast("string").as("staging_status"), lit(false).as("is_staging"))))
+    def rowsWith(status: String) =
+      sum(when(col("staging_status") === status, 1).otherwise(0)).cast("long")
+    val s = tagged.groupBy("job_id").agg(
+      count(when(col("is_staging"), 1)).as("total_rows"),
+      (Seq(
+        rowsWith(StagingStatus.Ready).as("ready_rows"),
+        rowsWith(StagingStatus.Issue).as("issue_rows"),
+        rowsWith(StagingStatus.Discard).as("discard_rows"),
+        rowsWith(StagingStatus.Success).as("success_rows")) ++
+        input.map(_ => count(when(!col("is_staging"), 1)).as("input_rows"))): _*)
     val i = issues.groupBy(col("issues_job_id").as("job_id")).agg(
       count(lit(1)).as("total_issues"),
       sum(when(!col("issue_resolved"), 1).otherwise(0))

@@ -28,14 +28,10 @@ object Normalize {
   /** JSON string escaping for the canonical hash payload, matching Python's
     * `json.dumps` for the characters that can occur in CSV field values
     * (backslash, quote, and the common control chars). */
-  def jsonEscape(c: Column): Column = {
-    // Order matters: escape backslashes first.
-    val e1 = regexp_replace(c, "\\\\", "\\\\\\\\") // \ -> \\
-    val e2 = regexp_replace(e1, "\"", "\\\\\"")    // " -> \"
-    val e3 = regexp_replace(e2, "\n", "\\\\n")
-    val e4 = regexp_replace(e3, "\r", "\\\\r")
-    regexp_replace(e4, "\t", "\\\\t")
-  }
+  def jsonEscape(c: Column): Column =
+    // Literal (not regex) replaces; order matters: backslashes first.
+    Seq("\\" -> "\\\\", "\"" -> "\\\"", "\n" -> "\\n", "\r" -> "\\r", "\t" -> "\\t")
+      .foldLeft(c) { case (e, (from, to)) => replace(e, lit(from), lit(to)) }
 
   /** Deterministic row hash (idempotency key) — reference
     * staging_repository.py:19-44: sha256 of

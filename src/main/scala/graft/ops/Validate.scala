@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.model.Schemas.{IssueType, StagingStatus}
 
@@ -10,10 +11,10 @@ import graft.model.Schemas.{IssueType, StagingStatus}
   * (row_validator.py:47-107, processor.py:153-163, processor.py:674-726) as
   * set-oriented dataflow:
   *
-  *   - the Python `duplicate_emails` set     -> aggregate + join-back (AQE
-  *     broadcasts the (usually tiny) duplicate-key set)
+  *   - the Python `duplicate_emails` set     -> a window count per
+  *     (job, normalized email), so the input is read once
   *   - the Python `existing_emails` set      -> left join against the user's
-  *     contacts slice (flag, not elimination)
+  *     distinct contacts (flag, not elimination)
   *   - the ordered if/elif validator         -> one chained `when()` column
   *     (first-failure-wins preserved by when-ordering)
   *
@@ -39,28 +40,20 @@ object Validate {
     * plan compilation, not data volume). Produces `norm_email`,
     * `issue_type`, `issue_message`, `staging_status`. */
   def classifyKeyed(input: DataFrame, contacts: DataFrame, jobUsers: DataFrame): DataFrame = {
-    // Normalized emails occurring >1x per job among rows with non-empty
+    // A normalized email occurring >1x per job among rows with non-empty
     // email — reference _identify_duplicate_emails (processor.py:674-726).
-    // The set is built from ALL rows with a non-empty email, including rows
-    // that will fail earlier validation rules; first-failure-wins only
-    // affects which issue a row is FLAGGED with, not set membership. Both
-    // copies of a duplicate are flagged (no keep-first).
-    val dups = input
-      .select(col("job_id"), normEmail(col("email")).as("norm_email"))
-      .filter(col("norm_email") =!= "")
-      .groupBy("job_id", "norm_email")
-      .count()
-      .filter(col("count") > 1)
-      .select("job_id", "norm_email")
-      .withColumn("is_dup", lit(true))
-
+    // The count spans ALL rows with a non-empty email, including rows that
+    // will fail earlier validation rules; first-failure-wins only affects
+    // which issue a row is FLAGGED with, not set membership. Both copies of
+    // a duplicate are flagged (no keep-first). A window count, so the plan
+    // reads `input` once.
+    val perEmail = Window.partitionBy("job_id", "norm_email")
     val withFlags = input
       .withColumn("norm_email", normEmail(col("email")))
-      .join(dups, Seq("job_id", "norm_email"), "left")
-      .join(existingEmailsKeyed(input, contacts, jobUsers),
+      .withColumn("is_dup", col("norm_email") =!= "" && count(lit(1)).over(perEmail) > 1)
+      .join(existingEmailsKeyed(contacts, jobUsers),
         col("job_id") === col("e_job_id") && col("norm_email") === col("existing_email"),
         "left")
-      .withColumn("is_dup", coalesce(col("is_dup"), lit(false)))
       .withColumn("is_existing", col("existing_email").isNotNull)
       .drop("existing_email", "e_job_id")
 
@@ -69,27 +62,19 @@ object Validate {
 
   /** Existing-contact emails per job (`e_job_id`, `existing_email`): each
     * contact row is tagged with the job(s) of its tenant via the broadcast
-    * `jobUsers` map, then semi-joined against the batch's own distinct
-    * (job, normalized non-empty email) set (A9, processor.py:162) — the
-    * set-based analogue of the reference's `WHERE contact_email IN (:emails)
-    * AND contacts_user_id = :uid` (contact_repository.py:34-39). The
-    * semi-join replaces the IN-list so the probe side scales past driver
-    * memory. NB the reference compares the NORMALIZED csv email against the
-    * RAW stored contact_email (no lower() on the contacts side) — reproduced
-    * exactly here. */
-  def existingEmailsKeyed(input: DataFrame, contacts: DataFrame, jobUsers: DataFrame): DataFrame = {
-    val batchEmails = input
-      .select(col("job_id").as("b_job_id"), normEmail(col("email")).as("b_norm_email"))
-      .filter(col("b_norm_email") =!= "")
-      .distinct()
+    * `jobUsers` map and made distinct, so a left join on (job, normalized
+    * email) flags a row without multiplying it — the set-based analogue of
+    * the reference's `WHERE contact_email IN (:emails) AND contacts_user_id
+    * = :uid` (A9, processor.py:162; contact_repository.py:34-39). No probe
+    * against the batch's own emails: that would read the input a second
+    * time. NB the reference compares the NORMALIZED csv email against the
+    * RAW stored contact_email (no lower() on the contacts side) —
+    * reproduced exactly here. */
+  def existingEmailsKeyed(contacts: DataFrame, jobUsers: DataFrame): DataFrame =
     contacts
       .join(broadcast(jobUsers), col("contacts_user_id") === col("job_user_id"))
       .select(col("job_id").as("e_job_id"), col("contact_email").as("existing_email"))
-      .join(batchEmails,
-        col("e_job_id") === col("b_job_id") && col("existing_email") === col("b_norm_email"),
-        "left_semi")
       .distinct()
-  }
 
   /** The ordered V1-V4 validator (first-failure-wins when-chain) applied to a
     * flagged frame (`is_dup`, `is_existing` present). */

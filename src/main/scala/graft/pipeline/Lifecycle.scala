@@ -94,15 +94,18 @@ object Lifecycle {
     // Validation sets (duplicates, existing-contacts) are built from ALL CSV
     // rows — including rows later skipped by the idempotency check
     // (processor.py:153-163 runs before the row loop).
-    // Cached: the classified frame is referenced by the staging snapshot,
-    // the issue derivation, AND the link derivation — uncached, every
-    // commit materialization would re-run the whole classify subtree.
-    val classified = Validate.classifyKeyed(input, contacts, jobUsers)
+    // The row hash and staging id are row-local, so they are added to
+    // `input` itself: they run in the file-parallel scan stage, not after
+    // classify's shuffle. Cached: the classified frame is referenced by the
+    // staging snapshot, the issue derivation, AND the link derivation —
+    // uncached, every commit materialization would re-run the whole
+    // classify subtree.
+    val hashed = input
       .withColumn("staging_row_hash",
         rowHash(col("job_id"), col("row_number"), col("email"),
           col("first_name"), col("last_name"), col("company")))
       .withColumn("staging_id", stagingId(col("job_id"), col("row_number")))
-      .cache()
+    val classified = Validate.classifyKeyed(hashed, contacts, jobUsers).cache()
 
     // J1: skip rows whose (job, hash) already landed (resume idempotency).
     val newRows = classified.join(
@@ -200,8 +203,9 @@ object Lifecycle {
     * inside the frame, no extra subplan). The caller reads the rows and
     * picks the decided staging/contacts plans. `classified` is the flow's
     * cached classified frame: the rows it read, counted per job as
-    * `input_rows` (CSV rows on the initial route, non-DISCARD staging rows
-    * on reprocess), and released by [[KeyedFlowResult.unpersist]]. */
+    * `input_rows` inside the counters' staging aggregate (CSV rows on the
+    * initial route, non-DISCARD staging rows on reprocess), and released by
+    * [[KeyedFlowResult.unpersist]]. */
   private def finalizeFlowKeyed(
       classified: DataFrame,
       stagingAfter: DataFrame,
@@ -228,7 +232,7 @@ object Lifecycle {
     // with no issues (a fully clean CSV — the common case) has no
     // issues-side row, so the counts normalize to 0 FIRST; the fold and
     // every downstream getAs[Long] read then see real zeros.
-    val counters = Consolidate.jobCountersKeyed(stagingAfter, resolvedIssues)
+    val counters = Consolidate.jobCountersKeyed(stagingAfter, resolvedIssues, Some(classified))
       .withColumn("total_issues", coalesce(col("total_issues"), lit(0L)))
       .withColumn("unresolved_issues", coalesce(col("unresolved_issues"), lit(0L)))
       .withColumn("ready_rows", coalesce(col("ready_rows"), lit(0L)))
@@ -240,11 +244,6 @@ object Lifecycle {
           .otherwise(col("success_rows")))
       .withColumn("ready_rows",
         when(col("unresolved_issues") === 0, lit(0L)).otherwise(col("ready_rows")))
-      // Rows read per job: a job with prior staging but an empty input
-      // reports 0 (one with neither has no counters row at all).
-      .join(classified.groupBy("job_id").agg(count(lit(1)).as("input_rows")),
-        Seq("job_id"), "left")
-      .withColumn("input_rows", coalesce(col("input_rows"), lit(0L)))
 
     KeyedFlowResult(
       stagingPre = stagingAfter,

@@ -458,8 +458,10 @@ object JobDispatch {
     done.toSeq
   }
 
+  /** An empty LOCAL relation (not an empty RDD): Catalyst's empty-relation
+    * propagation prunes the plan branches it feeds. */
   private def emptyLike(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    spark.createDataFrame(java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
 
   /** Route + run one job message end-to-end (the reference's
     * Processor.process_job, §2.11 flow router) as a wave of one that does

@@ -30,6 +30,15 @@ class NormalizeSpec extends SparkSpec {
       "e39b51b0faf19665876457e51135e696f921d72fbfbfc5fa09204b060616846e")
   }
 
+  test("rowHash escapes \\n, \\r, \\t, backslash and quote like Python json.dumps") {
+    // Expected: hashlib.sha256(json.dumps({"job_id": 9, "row_number": 12,
+    // "email": "line\nbreak@ex.co", "first_name": "Tab\tbed",
+    // "last_name": "CR\r\nLF", "company": "Q \"uoted\" \\ Slash"},
+    // sort_keys=True).encode()).hexdigest()
+    assert(hashOf(9, 12, " Line\nBreak@Ex.CO ", " Tab\tbed ", "CR\r\nLF", " Q \"uoted\" \\ Slash ") ===
+      "7485b7dc011896ba6f53372d898768ceeb1199d558ecb607a2adc038fe58cc17")
+  }
+
   test("rowHash is sensitive to row_number and job_id (idempotency key)") {
     val base = hashOf(1, 1, "a@b.co", "A", "B", "C")
     assert(base !== hashOf(1, 2, "a@b.co", "A", "B", "C"))

@@ -77,6 +77,25 @@ class ValidateSpec extends SparkSpec {
     assert(t(2L) === IssueType.DuplicateEmail)
   }
 
+  test("duplicate count is per job: one occurrence in each of two jobs flags neither") {
+    val twoJobs = input((1L, "p@b.co", "Ann", "Bee", "Acme"))
+      .unionByName(input((1L, " P@B.co", "Bob", "Cee", "Biz")).withColumn("job_id", lit(2)))
+    val jobUsers = Seq((1, "u1"), (2, "u2")).toDF("job_id", "job_user_id")
+    val got = Validate.classifyKeyed(twoJobs, noContacts, jobUsers)
+      .select("job_id", "issue_type").as[(Int, String)].collect().toMap
+    assert(got === Map(1 -> null, 2 -> null))
+  }
+
+  test("repeated blank or whitespace emails are never DUPLICATE_EMAIL") {
+    val t = typesOf(Validate.classifyKeyed(input(
+      (1L, "", "Ann", "Bee", "Acme"),
+      (2L, "   ", "Bob", "Cee", "Biz"),
+      (3L, null, "Cat", "Dee", "Co"),
+      (4L, "", "Dan", "Eff", "Co")
+    ), noContacts, jobOfU1))
+    assert(t.values.toSet === Set(IssueType.MissingRequiredField))
+  }
+
   test("existing-contact check is tenant-scoped (ADR-005)") {
     val cs = contacts(("u1", "e@b.co"), ("u2", "other@b.co"))
     val t = typesOf(Validate.classifyKeyed(input(

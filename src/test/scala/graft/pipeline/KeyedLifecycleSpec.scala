@@ -1,9 +1,14 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.ingest.{CsvSniffer, CsvSource}
 import graft.model.Schemas.StagingStatus
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import java.nio.file.Files
 
 /** A wave of N jobs must be ROW-FOR-ROW equal to the union of N waves of
   * one — the job-isolation property the dispatcher rides on (one Catalyst
@@ -147,5 +152,46 @@ class KeyedLifecycleSpec extends SparkSpec {
     assert(multiset(Seq(keyed.counters), counterCols) ===
       multiset(perJob.map(_._2.counters), counterCols))
     keyed.unpersist(); perJob.foreach(_._2.unpersist()); seeded.foreach(_._2.unpersist())
+  }
+
+  /** `Scan ExistingRDD` leaves (the wave's grouped CSV scan) in the plan
+    * that materializes a cached frame. */
+  private def inputScans(cached: DataFrame): Int = {
+    def scans(p: SparkPlan): Int = p match {
+      case a: AdaptiveSparkPlanExec => scans(a.executedPlan)
+      case q: QueryStageExec => scans(q.plan)
+      case m: InMemoryTableScanExec => scans(m.relation.cachedPlan)
+      case _: RDDScanExec => 1
+      case o => o.children.map(scans).sum
+    }
+    scans(cached.queryExecution.executedPlan)
+  }
+
+  test("plan shape: a two-job initial wave's classified frame scans its CSVs once") {
+    val dir = Files.createTempDirectory("graft_scan_once")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val files = Seq(1 -> "x@b.co,F,L,C\nX@b.co,G,M,D\n", 2 -> "x@b.co,F,L,C\n").map {
+      case (id, rows) =>
+        val p = dir.resolve(s"job$id.csv")
+        Files.writeString(p, "email,first_name,last_name,company\n" + rows)
+        CsvSource.WaveFile(id, p.toString, CsvSniffer.sniff(p.toString, hconf), Files.size(p))
+    }
+    val jobUsers = Seq((1, "u1"), (2, "u3")).toDF("job_id", "job_user_id")
+    contacts.write.parquet(dir.resolve("contacts").toString)
+    val noContacts = spark.createDataFrame(java.util.Collections.emptyList[Row](), contacts.schema)
+    val stored = spark.read.parquet(dir.resolve("contacts").toString)
+    Seq("no contacts table" -> noContacts, "populated contacts" -> stored).foreach {
+      case (name, cs) =>
+        val keyed = Lifecycle.initialProcessKeyed(CsvSource.readWaveKeyed(spark, files),
+          jobUsers, emptyStaging, emptyIssues, emptyItems, cs)
+        val classified = keyed.cachedFrames.head
+        assert(inputScans(classified) === 1, name)
+        // Job 1's pair is a duplicate; job 2's x@b.co exists for u3 only
+        // when the contacts table holds it.
+        val types = classified.select("job_id", "issue_type").as[(Int, String)].collect()
+        assert(types.count(_ == (1 -> "DUPLICATE_EMAIL")) === 2, name)
+        assert(types.contains(2 -> (if (cs eq stored) "EXISTING_EMAIL" else null)), name)
+        keyed.unpersist()
+    }
   }
 }

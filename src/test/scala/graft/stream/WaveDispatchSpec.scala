@@ -3,7 +3,13 @@ package graft.stream
 import graft.SparkSpec
 import graft.io.ParquetTableStore
 import graft.model.Schemas.JobStatus
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import java.nio.file.{Files, Paths}
 
 /** Batched-wave dispatch semantics (JobDispatch.processBatch): the fast
@@ -372,5 +378,40 @@ class WaveDispatchSpec extends SparkSpec {
     Seq("staging", "issues", "issue_items").foreach { t =>
       assert(loads(t) >= 1 && loads(t) <= 2, s"$t loaded ${loads(t)} times")
     }
+  }
+
+  test("first-pass wave on a populated store: the counters plan scans no prior-state table") {
+    val (root, store) = seed(3, i => s"u$i")
+    Files.writeString(Paths.get(s"$root/uploads/issue.csv"),
+      "email,first_name,last_name,company\nok@b.co,F,L,C\n,missing,Cee,Biz\n")
+    Files.writeString(Paths.get(s"$root/uploads/clean.csv"),
+      "email,first_name,last_name,company\na@b.co,F,L,C\n")
+    // Job 1 writes staging, issues and issue_items; jobs 2 and 3 have no
+    // rows in them, so their wave's prior state is known-empty.
+    JobDispatch.processOne(spark, store, 1, "issue.csv", k => s"$root/uploads/$k")
+    Seq("staging", "issues", "issue_items").foreach(t => assert(store.exists(t), t))
+    val counters = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.output.exists(_.name == "input_rows")) counters.add(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = JobDispatch.processBatch(spark, store,
+        Seq(msg(2, "clean.csv"), msg(3, "issue.csv")).toDF("value"), k => s"$root/uploads/$k")
+      assert(out.map(_.outcome) === Seq(JobStatus.Completed, JobStatus.NeedsReview),
+        out.mkString("; "))
+      eventually(timeout(Span(30, Seconds))) { assert(!counters.isEmpty) }
+    } finally spark.listenerManager.unregister(listener)
+    // Empty local relations fold away: what is left reads the wave's cached
+    // classified frame and its small job -> tenant map, nothing else.
+    val leaves = counters.peek().collectLeaves()
+    assert(leaves.exists(_.isInstanceOf[InMemoryRelation]), leaves.mkString("\n"))
+    assert(leaves.forall {
+      case _: InMemoryRelation => true
+      case l: LocalRelation => l.data.nonEmpty
+      case _ => false
+    }, leaves.mkString("\n"))
   }
 }
