@@ -475,14 +475,29 @@ object SparkEntry {
       build: (SparkSession, String) => DataFrame): Shared[DataFrame] =
     new Shared[DataFrame](name, build, _.count())
 
+  /** A fresh `prefix`-named store root under `java.io.tmpdir`. It is
+    * deleted, with everything in it, when the JVM exits (after Spark's own
+    * shutdown hook) and never earlier: a shared store outlives the query
+    * that built it. */
+  private def tempRoot(prefix: String): String = {
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    tempRoots.add(root.toFile)
+    root.toString
+  }
+  private lazy val tempRoots = {
+    val roots = new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+    org.apache.hadoop.util.ShutdownHookManager.get().addShutdownHook(
+      () => roots.forEach(r => org.apache.commons.io.FileUtils.deleteQuietly(r)), 20)
+    roots
+  }
+
   /** A fresh [[graft.io.ParquetTableStore]] under a
     * `graft_${variant}_shared_` temp root, filled by `build`. */
   private def newSharedStore(
       s: SparkSession, variant: String,
       partitionByCols: Option[Map[String, Seq[String]]] = None)(
       build: graft.io.TableStore => Unit): graft.io.ParquetTableStore = {
-    val root = java.nio.file.Files
-      .createTempDirectory(s"graft_${variant}_shared_").toString
+    val root = tempRoot(s"graft_${variant}_shared_")
     val store = partitionByCols match {
       case Some(p) => new graft.io.ParquetTableStore(s, root,
         partitionByCols = p)
@@ -1244,7 +1259,7 @@ object SparkEntry {
       import graft.functions.{AnnIndex, LexIndex}
       val docs = pq(s, dir, "documents")
       val emb = pq(s, dir, "embeddings")
-      val root = java.nio.file.Files.createTempDirectory("graft_hyb_").toString
+      val root = tempRoot("graft_hyb_")
       val lexStore = lexSharedStore(s, dir)
       val annStore = new graft.io.ParquetTableStore(s, root + "/ann",
         partitionByCols = AnnIndex.partitionSpec("ivf"))
@@ -1324,7 +1339,7 @@ object SparkEntry {
     "q_bm25_append" -> ((s, dir) => {
       import graft.functions.LexIndex
       val docs = pq(s, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_lexa_").toString
+      val root = tempRoot("graft_lexa_")
       val store = new graft.io.ParquetTableStore(s, root)
       // §2.6 overlap drill: the batch's postings pass runs with the
       // build's staged writes, and the serve — over the pre-commit
@@ -1349,7 +1364,7 @@ object SparkEntry {
       // tombstone the PRIVATE copy — the contract under test is the
       // deletion (tombstoned ids vanish from results AND stats), not
       // the build.
-      val root = java.nio.file.Files.createTempDirectory("graft_lexd_").toString
+      val root = tempRoot("graft_lexd_")
       val store = lexSharedStore(s, dir).cloneTo(root)
       LexIndex.deleteDocs(store, "lex",
         Seq(3L, 4L, 5L, 6L, 7L).toDF("doc_id"), "doc_id")
@@ -1828,7 +1843,7 @@ object SparkEntry {
       // Clone the shared index (file copy; partition layout preserved)
       // and tombstone the private copy — the deletion contract is what
       // the oracle pins, not the rebuild.
-      val root = java.nio.file.Files.createTempDirectory("graft_ann_del_").toString
+      val root = tempRoot("graft_ann_del_")
       val store = ivfSharedStore(s, dir).cloneTo(root)
       AnnIndex.deleteVectors(store, "ivf",
         emb.filter((col("vec_id") >= 16) && (col("vec_id") % 7 === 3)), "vec_id")
@@ -1849,7 +1864,7 @@ object SparkEntry {
       import graft.functions.AnnIndex
       val emb = pq(s, dir, "embeddings")
       val cut = emb.agg(max(col("vec_id"))).head().getAs[Number](0).longValue() * 4 / 5
-      val root = java.nio.file.Files.createTempDirectory("graft_ann_inc_").toString
+      val root = tempRoot("graft_ann_inc_")
       val store = new graft.io.ParquetTableStore(s, root,
         partitionByCols = AnnIndex.partitionSpec("ivf"))
       // §2.6 overlap drill (the q_kn5_append pattern): batch assignment
@@ -1870,7 +1885,7 @@ object SparkEntry {
     "q_pq_adc_persisted" -> ((s, dir) => {
       import graft.functions.AnnIndex
       val emb = pq(s, dir, "embeddings")
-      val root = java.nio.file.Files.createTempDirectory("graft_ann_pq_").toString
+      val root = tempRoot("graft_ann_pq_")
       val store = new graft.io.ParquetTableStore(s, root)
       AnnIndex.buildPq(store, "pq", emb, "vec_id", "embedding",
         dims = 64, m = 8, ksub = 16)
@@ -2217,7 +2232,7 @@ object SparkEntry {
     // q_kn_score_holdout's oracle SQL verbatim
     "q_kn_append" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_lm_").toString
+      val root = tempRoot("graft_lm_")
       val store = new graft.io.ParquetTableStore(s, root)
       // §2.6 overlap drill (the q_kn5_append shape at order 2): delta
       // base ∥ build writes, score ∥ merge writes; physical append and
@@ -2237,7 +2252,7 @@ object SparkEntry {
       // Clone the shared 80%-split model (file copy, no rebuild), then
       // mutate the PRIVATE copy — the deletion contract under test is
       // the count subtraction, not the build.
-      val root = java.nio.file.Files.createTempDirectory("graft_lm_").toString
+      val root = tempRoot("graft_lm_")
       val store = lm2hSharedStore(s, dir).cloneTo(root)
       // §2.6: the held-out score reads only the checkpointed merged
       // counts (row-identical to the swapped tables), so it overlaps
@@ -2317,7 +2332,7 @@ object SparkEntry {
     // roundtrip must not perturb a single count; also pinned under OOV
     // by LmHoldoutShareSpec).
     "q_kn3_persisted_holdout" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_lm3_").toString
+      val root = tempRoot("graft_lm3_")
       val store = new graft.io.ParquetTableStore(s, root)
       graft.functions.LmIndex.buildFromBase(
         3, store, "lm3", lm3hSharedBase(s, dir))
@@ -2404,7 +2419,7 @@ object SparkEntry {
     // serve from that store both stay inside this timed closure, and
     // LmHoldoutShareSpec pins store serve == base-frame score under OOV).
     "q_kn5_persisted_holdout" -> ((s, dir) => {
-      val root = java.nio.file.Files.createTempDirectory("graft_lm5_").toString
+      val root = tempRoot("graft_lm5_")
       val store = new graft.io.ParquetTableStore(s, root)
       graft.functions.LmIndex.buildFromBase(
         5, store, "lm5", lm5hSharedBase(s, dir))
@@ -2489,7 +2504,7 @@ object SparkEntry {
     // chain replays the top-K selection, the mapping, and the build.
     "q_kn5_vocab" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_lm5_").toString
+      val root = tempRoot("graft_lm5_")
       val store = new graft.io.ParquetTableStore(s, root)
       // Deliberately NOT derived from the shared full-corpus base: a
       // capBase5 variant (map the base's five key columns through the
@@ -2515,7 +2530,7 @@ object SparkEntry {
     // (the q_kn_append convention at order 5).
     "q_kn5_append" -> ((s, dir) => {
       val d = pq(s, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_lm5_").toString
+      val root = tempRoot("graft_lm5_")
       val store = new graft.io.ParquetTableStore(s, root)
       // The drill helper overlaps the two independent-job pairs the
       // sequential build/append/score chain left idle (guide §2.6):
@@ -2548,7 +2563,7 @@ object SparkEntry {
       val ps = s.newSession()
       ps.conf.set("graft.lm.positionalJoin", "true")
       val d = pq(ps, dir, "documents")
-      val root = java.nio.file.Files.createTempDirectory("graft_lm3_").toString
+      val root = tempRoot("graft_lm3_")
       val store = new graft.io.ParquetTableStore(ps, root)
       // §2.6: the score (positional-mode lag frame, like the build's)
       // reads the base-derived frames — bit-identical to the written

@@ -19,9 +19,11 @@ case class PartitionCommit(
   * The reference mutates rows in place in Postgres; our dataflow recomputes
   * derived state per run and persists snapshots/appends (SURVEY.md §7.5 —
   * removes the read-modify-write races the reference avoids only by being
-  * single-threaded). Three impls: parquet (testdata/oracle harness, local
-  * runs), JDBC (production parity — see [[JdbcUpsert]] for the
-  * UPDATE-shaped writes Spark's JDBC writer lacks) and
+  * single-threaded). Every multi-table write is one [[commitAll]]; the
+  * reference's UPDATE-shaped writes (staging status, issue resolve, job
+  * counters) are recomputed partitions or snapshots inside it, never row
+  * updates. Three impls: parquet (testdata/oracle harness, local runs),
+  * JDBC (production parity, staged temp tables swapped in by SQL) and
   * [[PostgresCopyTableStore]] (live Postgres over `psql \copy`).
   */
 trait TableStore {
@@ -278,8 +280,7 @@ class ParquetTableStore(
 
   /** Run independent STAGING writes (each to its own private tmp dir,
     * reading only pre-commit snapshots — commuting by construction) on a
-    * bounded pool; results keep input order. `graft.store.
-    * writeParallelism` (session conf, default 4; 1 = sequential) bounds
+    * bounded pool; results keep input order. `WriteParallelism` bounds
     * the in-flight Spark jobs — enough to fill the stage tails of a
     * 17-table model build without the jobs fighting for executors. This is
     * job-level overlap (§2.6), not a data-size constant; a cluster's FIFO
@@ -289,11 +290,7 @@ class ParquetTableStore(
     * dirs are orphaned exactly as a sequential form's earlier writes
     * were). */
   private def stageConcurrently(thunks: Seq[() => Any]): Seq[Any] = {
-    val par0 = spark.conf.getOption("graft.store.writeParallelism")
-      .map(_.trim.toInt).getOrElse(4)
-    require(par0 >= 1,
-      s"graft.store.writeParallelism must be >= 1, got $par0")
-    val par = math.min(par0, thunks.size)
+    val par = math.min(ParquetTableStore.WriteParallelism, thunks.size)
     if (par <= 1) thunks.map(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(par)
@@ -338,7 +335,7 @@ class ParquetTableStore(
     // Phase 1 stages every plan into its own private tmp dir while ALL
     // pre-commit snapshots are intact — the writes only read pre-commit
     // state, so they commute and run concurrently (stageConcurrently:
-    // writeParallelism bound; on failure nothing moved, queued siblings
+    // WriteParallelism bound; on failure nothing moved, queued siblings
     // cancelled).
     def stagePart(c: PartitionCommit): (PartitionCommit, Path) = {
       val tmp = new Path(dir(c.table) + ".tmp-" + java.util.UUID.randomUUID().toString.take(8))
@@ -471,6 +468,9 @@ class ParquetTableStore(
 }
 
 object ParquetTableStore {
+  /** Staging writes in flight at once in one commit (`stageConcurrently`). */
+  private val WriteParallelism = 4
+
   /** Filesystem schemes whose rename is a copy-and-delete (or otherwise
     * not atomic-exclusive): the s3 connectors emulate rename client-side
     * over PUT/DELETE, and the other object-store connectors listed do the
@@ -497,9 +497,9 @@ object ParquetTableStore {
         "remain fine")
 }
 
-/** JDBC-backed store (Postgres parity). Reads push the table/user predicate
-  * down via the `query` option; appends use the stock JDBC writer; UPDATE-
-  * shaped writes go through [[JdbcUpsert]]. */
+/** JDBC-backed store (Postgres parity). Plain appends use the stock JDBC
+  * writer; [[commitAll]] and snapshot overwrites stage every plan into temp
+  * tables first, then swap them in with DELETE + INSERT ... SELECT. */
 class JdbcTableStore(
     spark: SparkSession,
     url: String,

@@ -2,13 +2,17 @@ package graft.model
 
 import org.apache.spark.sql.types._
 
-/** Table schemas for the five persistent tables of the ingestion engine.
+/** The table model of the ingestion engine: the five persistent tables
+  * (jobs, staging, issues, issue_items, contacts) and their enums.
   *
-  * Mirrors the reference data model (see SURVEY.md §1.2; reference models at
+  * Follows the reference data model (see SURVEY.md §1.2; reference models at
   * src/models/job.py:20-38, staging.py:20-40, issue.py:20-40,
-  * issue_item.py:10-24, contact.py:11-29) re-expressed as Spark StructTypes +
-  * case classes. Enums are plain strings (validated by the enum sets below) —
-  * string columns survive serialization boundaries and codegen cleanly.
+  * issue_item.py:10-24, contact.py:11-29) with the columns the engine
+  * actually writes: issues and issue links are keyed by (job, type, key)
+  * rather than by surrogate ids, and the four committed tables carry no
+  * created_at stamp. Enums are plain strings (validated by the enum sets
+  * below) — string columns survive serialization boundaries and codegen
+  * cleanly.
   */
 object Schemas {
 
@@ -39,49 +43,10 @@ object Schemas {
       Set(DuplicateEmail, InvalidEmail, ExistingEmail, MissingRequiredField)
   }
 
-  // ---- case classes (typed Dataset paths) ---------------------------------
-  case class Job(
-      job_id: Int,
-      job_user_id: String,
-      job_original_filename: Option[String],
-      job_s3_object_key: Option[String],
-      job_status: String,
-      job_total_rows: Int,
-      job_processed_rows: Int,
-      job_issue_count: Int,
-      job_process_start: Option[java.sql.Timestamp],
-      job_process_end: Option[java.sql.Timestamp])
-
-  case class StagingRow(
-      staging_id: Long,
-      staging_job_id: Int,
-      staging_email: Option[String],
-      staging_first_name: Option[String],
-      staging_last_name: Option[String],
-      staging_company: Option[String],
-      staging_status: Option[String],
-      staging_row_hash: String)
-
-  case class Issue(
-      issue_id: Long,
-      issues_job_id: Int,
-      issue_type: String,
-      issue_key: String,
-      issue_resolved: Boolean,
-      issue_description: Option[String])
-
-  case class IssueItem(item_issue_id: Long, item_staging_id: Long)
-
-  case class Contact(
-      contact_id: Long,
-      staging_id: Long,
-      contacts_user_id: String,
-      contact_email: String,
-      contact_first_name: String,
-      contact_last_name: String,
-      contact_company: String)
-
-  // ---- StructTypes (dynamic-schema paths, JDBC/parquet DDL) --------------
+  // ---- StructTypes ---------------------------------------------------------
+  /** Full jobs DDL: the seed schema of a DDL-managed (SQL) store. The engine
+    * itself tolerates a minimal jobs table and adds its metadata columns on
+    * first use. */
   val jobs: StructType = StructType(Seq(
     StructField("job_id", IntegerType, nullable = false),
     StructField("job_created_at", TimestampType),
@@ -95,43 +60,42 @@ object Schemas {
     StructField("job_process_start", TimestampType),
     StructField("job_process_end", TimestampType)))
 
-  val staging: StructType = StructType(Seq(
-    StructField("staging_id", LongType, nullable = false),
-    StructField("staging_job_id", IntegerType, nullable = false),
-    StructField("staging_email", StringType),
-    StructField("staging_first_name", StringType),
-    StructField("staging_last_name", StringType),
-    StructField("staging_company", StringType),
-    StructField("staging_created_at", TimestampType),
-    StructField("staging_status", StringType),
-    StructField("staging_row_hash", StringType, nullable = false)))
-
-  val issues: StructType = StructType(Seq(
-    StructField("issue_id", LongType, nullable = false),
-    StructField("issues_job_id", IntegerType, nullable = false),
-    StructField("issue_type", StringType),
-    StructField("issue_key", StringType, nullable = false),
-    StructField("issue_resolved", BooleanType),
-    StructField("issue_description", StringType),
-    StructField("issue_resolved_at", TimestampType),
-    StructField("issue_resolved_by", StringType),
-    StructField("issue_resolution_comment", StringType),
-    StructField("issue_created_at", TimestampType)))
-
-  val issueItems: StructType = StructType(Seq(
-    StructField("issue_item_id", LongType, nullable = false),
-    StructField("item_issue_id", LongType, nullable = false),
-    StructField("item_staging_id", LongType, nullable = false)))
-
-  val contacts: StructType = StructType(Seq(
-    StructField("contact_id", LongType, nullable = false),
-    StructField("staging_id", LongType, nullable = false),
-    StructField("contacts_user_id", StringType, nullable = false),
-    StructField("contact_email", StringType, nullable = false),
-    StructField("contact_first_name", StringType, nullable = false),
-    StructField("contact_last_name", StringType, nullable = false),
-    StructField("contact_company", StringType, nullable = false),
-    StructField("contact_created_at", TimestampType)))
+  /** The four tables the ingest worker commits, in the shape it writes
+    * them: JobDispatch projects every route's output onto these (absent
+    * columns become typed nulls), uses them as the empty stand-in for a
+    * table that does not exist yet, and a DDL-managed store creates its
+    * tables from exactly these. */
+  val tableShapes: Map[String, StructType] = Map(
+    "staging" -> StructType(Seq(
+      StructField("staging_id", LongType),
+      StructField("staging_job_id", IntegerType),
+      StructField("staging_email", StringType),
+      StructField("staging_first_name", StringType),
+      StructField("staging_last_name", StringType),
+      StructField("staging_company", StringType),
+      StructField("staging_status", StringType),
+      StructField("staging_row_hash", StringType))),
+    "issues" -> StructType(Seq(
+      StructField("issues_job_id", IntegerType),
+      StructField("issue_type", StringType),
+      StructField("issue_key", StringType),
+      StructField("issue_description", StringType),
+      StructField("issue_resolved", BooleanType),
+      StructField("issue_resolved_at", TimestampType),
+      StructField("issue_resolved_by", StringType),
+      StructField("issue_resolution_comment", StringType))),
+    "issue_items" -> StructType(Seq(
+      StructField("issues_job_id", IntegerType),
+      StructField("issue_type", StringType),
+      StructField("issue_key", StringType),
+      StructField("item_staging_id", LongType))),
+    "contacts" -> StructType(Seq(
+      StructField("staging_id", LongType),
+      StructField("contacts_user_id", StringType),
+      StructField("contact_email", StringType),
+      StructField("contact_first_name", StringType),
+      StructField("contact_last_name", StringType),
+      StructField("contact_company", StringType))))
 
   /** The four CSV fields the engine reads (extra columns tolerated/ignored;
     * reference row_validator.py:30, processor.py:241-244). */

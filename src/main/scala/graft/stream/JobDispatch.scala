@@ -6,21 +6,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import graft.io.TableStore
 import graft.ingest.CsvSource
-import graft.model.Schemas.JobStatus
+import graft.model.Schemas.{JobStatus, tableShapes}
 import graft.pipeline.{Lifecycle, Router}
 
 /** Structured Streaming dispatch shell (SURVEY.md §2.10, §3.1 step 1).
   *
   * The reference long-polls SQS one message at a time (consumer.py:55-111).
-  * Spark has no built-in SQS source, so the sanctioned bridge (SURVEY.md
-  * §7.4) is a message FILE stream: an SQS drainer (or any producer) appends
-  * JSON-lines job messages to a directory; `readStream.text` tails it with
-  * exactly-once file tracking via the checkpoint. PRODUCER CONTRACT: files
-  * must APPEAR atomically (write to a temp name, then rename into the
-  * directory) — Spark's file source lists a file once and can observe a
-  * partial write otherwise. Everything downstream of a
-  * message is the bounded batch pipeline, dispatched per micro-batch through
-  * `foreachBatch`.
+  * Here the queue is a directory of message files, one JSON message per
+  * file, read by the native `graft-queue` source
+  * ([[graft.stream.queue.QueueSourceProvider]]) that [[startQueue]] starts.
+  * It is replayable and deletes a message only when its epoch commits. Each
+  * micro-batch runs through `foreachBatch` into [[processBatch]], which
+  * routes the messages and runs them as job_id-keyed waves that end in ONE
+  * `TableStore.commitAll` per wave. A replayable source plus an idempotent
+  * commit is the whole exactly-once story.
   *
   * Delivery contract kept from the reference (README ADR-001):
   *   - at-least-once + idempotent pipeline => replay is a no-op
@@ -312,7 +311,8 @@ object JobDispatch {
       // bounded read and a full-table scan per commit.
       val waveTenants = wave.map(_.userId).distinct
       val contacts =
-        (if (store.exists("contacts")) store.load("contacts") else emptyLike(spark, contactsShape))
+        (if (store.exists("contacts")) store.load("contacts")
+         else emptyLike(spark, tableShapes("contacts")))
           .filter(col("contacts_user_id").isin(waveTenants: _*))
 
       // The prior state of those `ids` that have any. A wave of first-pass
@@ -420,7 +420,7 @@ object JobDispatch {
       // Cluster the multi-tenant contacts append by its partition key for
       // the same reason the store clusters multi-job partition commits:
       // without it every write task emits one file per tenant it holds.
-      val contactsAppend = unionOf(_.newContactsDecided(cleanIds), contactsShape)
+      val contactsAppend = unionOf(_.newContactsDecided(cleanIds), tableShapes("contacts"))
         .repartition(col("contacts_user_id"))
       store.commitAll(
         Seq("contacts" -> contactsAppend),
@@ -556,8 +556,8 @@ object JobDispatch {
     * source — full reference delivery protocol: messages are DELETED only
     * when the epoch commits (ack-on-success, consumer.py:152-156), and a
     * failed/interrupted epoch leaves them visible for redelivery on restart
-    * (the visibility-timeout analog, consumer.py:171-177). Use [[start]] for
-    * the simpler exactly-once JSON-lines file bridge. */
+    * (the visibility-timeout analog, consumer.py:171-177). `maintainEvery`
+    * > 0 compacts the append-heavy tables after every Nth micro-batch. */
   def startQueue(
       spark: SparkSession,
       store: TableStore,
@@ -565,8 +565,7 @@ object JobDispatch {
       checkpointDir: String,
       resolveCsv: String => String,
       trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
-      maintainEvery: Int =
-        sys.env.get("GRAFT_COMPACT_EVERY").flatMap(_.toIntOption).getOrElse(0),
+      maintainEvery: Int = 0,
       queueOptions: Map[String, String] = Map.empty): StreamingQuery = {
     // queueOptions passes source options through (deadLetterDir +
     // maxReceives for the SQS redrive-policy analog, maxFilesPerTrigger
@@ -592,67 +591,4 @@ object JobDispatch {
       }
       .start()
   }
-
-  /** Start the dispatch stream over a JSON-lines message directory. */
-  def start(
-      spark: SparkSession,
-      store: TableStore,
-      messagesDir: String,
-      checkpointDir: String,
-      resolveCsv: String => String,
-      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): StreamingQuery = {
-    spark.readStream
-      .text(messagesDir)
-      .writeStream
-      .trigger(trigger)
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val outcomes = processBatch(spark, store, batch, resolveCsv)
-        outcomes.foreach(o => println(s"[dispatch] $o"))
-      }
-      .start()
-  }
-
-  // Canonical runtime table shapes: used for absent tables (first message
-  // ever) and as the DDL contract for SQL-backed stores — a JdbcTableStore
-  // deployment creates its tables from exactly these (see
-  // [[tableShapes]] and JdbcLifecycleSpec).
-  private val stagingShape = StructType(Seq(
-    StructField("staging_id", org.apache.spark.sql.types.LongType),
-    StructField("staging_job_id", IntegerType),
-    StructField("staging_email", StringType),
-    StructField("staging_first_name", StringType),
-    StructField("staging_last_name", StringType),
-    StructField("staging_company", StringType),
-    StructField("staging_status", StringType),
-    StructField("staging_row_hash", StringType)))
-  private val issuesShape = StructType(Seq(
-    StructField("issues_job_id", IntegerType),
-    StructField("issue_type", StringType),
-    StructField("issue_key", StringType),
-    StructField("issue_description", StringType),
-    StructField("issue_resolved", org.apache.spark.sql.types.BooleanType),
-    StructField("issue_resolved_at", org.apache.spark.sql.types.TimestampType),
-    StructField("issue_resolved_by", StringType),
-    StructField("issue_resolution_comment", StringType)))
-  private val itemsShape = StructType(Seq(
-    StructField("issues_job_id", IntegerType),
-    StructField("issue_type", StringType),
-    StructField("issue_key", StringType),
-    StructField("item_staging_id", org.apache.spark.sql.types.LongType)))
-  private val contactsShape = StructType(Seq(
-    StructField("staging_id", org.apache.spark.sql.types.LongType),
-    StructField("contacts_user_id", StringType),
-    StructField("contact_email", StringType),
-    StructField("contact_first_name", StringType),
-    StructField("contact_last_name", StringType),
-    StructField("contact_company", StringType)))
-
-  /** The canonical store-table shapes the dispatch pipeline reads/commits —
-    * the DDL contract for a SQL-backed (DDL-managed) TableStore. */
-  val tableShapes: Map[String, StructType] = Map(
-    "staging" -> stagingShape,
-    "issues" -> issuesShape,
-    "issue_items" -> itemsShape,
-    "contacts" -> contactsShape)
 }

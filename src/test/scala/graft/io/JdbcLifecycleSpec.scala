@@ -10,11 +10,10 @@ import java.nio.file.{Files, Paths}
 
 /** Full job lifecycle driven through the SQL-backed store — the closest
   * this container gets to the reference's Postgres deployment (Derby is the
-  * only database available offline; the Postgres `ON CONFLICT` dialect is
-  * pinned at the statement level in JdbcStoreSpec, and `JdbcTableStore` +
-  * `JdbcUpsert` speak the same TableStore/MERGE contract end-to-end here):
-  * initial → NEEDS_REVIEW → user edits via the JDBC upsert layer →
-  * reprocess → consolidate → COMPLETED (processor.py:728-788 semantics).
+  * only database available offline; the live-Postgres twin is
+  * PostgresCopyLifecycleSpec): initial → NEEDS_REVIEW → the reviewer's
+  * edit as a plain SQL UPDATE → reprocess → consolidate → COMPLETED
+  * (processor.py:728-788 semantics).
   *
   * The store is DDL-managed (like a migration-managed Postgres schema), so
   * every table is created with its FULL schema up front — including the job
@@ -32,7 +31,7 @@ class JdbcLifecycleSpec extends SparkSpec {
     // DDL: full schemas up front (DDL-managed store).
     def emptyOf(shape: org.apache.spark.sql.types.StructType) =
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], shape)
-    JobDispatch.tableShapes
+    Schemas.tableShapes
       .foreach { case (t, shape) => store.overwrite(t, emptyOf(shape)) }
     store.overwrite("jobs", emptyOf(Schemas.jobs))
     store.append("jobs", Seq((1, "u1", JobStatus.Pending))
@@ -60,13 +59,16 @@ class JdbcLifecycleSpec extends SparkSpec {
     assert(store.load("issue_items").count() === 1)
     assert(store.load("contacts").count() === 0, "no consolidation before review")
 
-    // User review: fix the bad row's email THROUGH the JDBC upsert layer
-    // (the W2 update path — batched MERGE against the live store).
-    val fix = store.load("staging").filter(col("staging_id") === badId)
-      .withColumn("staging_email", lit("fixed@b.co"))
-      .localCheckpoint() // materialize BEFORE the upsert mutates its source
-    JdbcUpsert.upsert(fix.coalesce(1), url, "staging", Seq("staging_id"),
-      props, dialect = "merge")
+    // User review: fix the bad row's email with the UPDATE the reference's
+    // review app issues, straight against the database. Spark's JDBC
+    // writer creates delimited identifiers, so the columns are quoted.
+    val conn = java.sql.DriverManager.getConnection(url, props)
+    try {
+      val st = conn.prepareStatement(
+        """UPDATE staging SET "staging_email" = ? WHERE "staging_id" = ?""")
+      st.setString(1, "fixed@b.co"); st.setLong(2, badId)
+      assert(st.executeUpdate() === 1)
+    } finally conn.close()
     assert(store.load("staging").filter(col("staging_email") === "fixed@b.co").count() === 1)
 
     // Reprocess route (NEEDS_REVIEW + staging present): re-validate, resolve

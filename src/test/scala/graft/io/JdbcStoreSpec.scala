@@ -3,11 +3,10 @@ package graft.io
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** JDBC write-path coverage against embedded Derby (the only database in the
-  * container — Derby ships with Spark). The Postgres `ON CONFLICT` dialect is
-  * asserted at the statement-generation level; the ANSI `MERGE` dialect and
-  * the per-partition commit are driven end-to-end: real connections, real
-  * batching, executor-side upserts.
+/** JdbcTableStore coverage against embedded Derby (the only database in
+  * the container — Derby ships with Spark): catalog probes, the staged
+  * per-partition commit and its rollback, and createIfAbsent, over real
+  * connections.
   */
 class JdbcStoreSpec extends SparkSpec {
   import spark.implicits._
@@ -22,51 +21,6 @@ class JdbcStoreSpec extends SparkSpec {
   private def exec(sql: String): Unit = {
     val conn = java.sql.DriverManager.getConnection(url)
     try conn.createStatement().executeUpdate(sql) finally conn.close()
-  }
-
-  test("upsertSql: postgres ON CONFLICT shape and bind order") {
-    val (sql, order) = JdbcUpsert.upsertSql("t", Seq("k1", "k2", "a", "b"), Seq("k1", "k2"))
-    // Identifiers are QUOTED: Spark's JDBC writer creates delimited
-    // (case-exact) columns, which case-folded unquoted references miss.
-    assert(sql.contains("""INSERT INTO t ("k1", "k2", "a", "b")"""))
-    assert(sql.contains("""ON CONFLICT ("k1", "k2")"""))
-    assert(sql.contains("""DO UPDATE SET "a" = EXCLUDED."a", "b" = EXCLUDED."b""""))
-    assert(order === Seq("k1", "k2", "a", "b"))
-  }
-
-  test("upsertSql: ANSI MERGE shape and bind order") {
-    val (sql, order) = JdbcUpsert.upsertSql("t", Seq("k", "a", "b"), Seq("k"), "merge")
-    assert(sql.contains("MERGE INTO t t"))
-    assert(sql.contains("""ON t."k" = ?"""))
-    assert(sql.contains("""UPDATE SET "a" = ?, "b" = ?"""))
-    assert(sql.contains("""INSERT ("k", "a", "b")"""))
-    assert(order === Seq("k", "a", "b", "k", "a", "b"))
-  }
-
-  test("merge-dialect upsert against Derby: inserts, updates, multi-batch") {
-    exec("""CREATE TABLE ups ("k" INT NOT NULL PRIMARY KEY, "v" VARCHAR(32), "n" BIGINT)""")
-    // 2500 rows with batchSize 1000 exercises the executeBatch + commit loop
-    // mid-stream (twice) AND the final flush. coalesce(1): embedded Derby's
-    // MERGE is not safe under concurrent writers (internal NPE) — Postgres,
-    // the production target, takes the partition-parallel path.
-    val df1 = (1 to 2500).map(i => (i, s"v$i", i.toLong)).toDF("k", "v", "n").coalesce(1)
-    JdbcUpsert.upsert(df1, url, "ups", Seq("k"), props, batchSize = 1000, dialect = "merge")
-    assert(spark.read.jdbc(url, "ups", props).count() === 2500)
-
-    // Re-upserting a slice must UPDATE in place, not duplicate.
-    // coalesce(1) here too: 10 rows over local[32] otherwise land in
-    // multiple partitions = concurrent Derby MERGE writers = the same
-    // internal NPE the first upsert's coalesce guards against (flaked
-    // under ambient load in the round-12 full run).
-    val df2 = (1 to 10).map(i => (i, s"w$i", i * 2L)).toDF("k", "v", "n").coalesce(1)
-    JdbcUpsert.upsert(df2, url, "ups", Seq("k"), props, batchSize = 1000, dialect = "merge")
-    val after = spark.read.jdbc(url, "ups", props)
-    assert(after.count() === 2500)
-    // (delimited lowercase DDL matches the Spark-writer convention the
-    // quoted upsert SQL targets)
-    assert(after.filter(col("k") === 1).select(col("v"), col("n"))
-      .as[(String, Long)].head() === ("w1", 2L))
-    assert(after.filter(col("k") === 11).select(col("v")).as[String].head() === "v11")
   }
 
   test("JdbcTableStore.exists reflects the catalog — absent tables are absent") {

@@ -1,7 +1,7 @@
 package graft.io
 
 import graft.model.Schemas
-import graft.model.Schemas.{JobStatus, StagingStatus}
+import graft.model.Schemas.JobStatus
 import graft.stream.JobDispatch
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -12,9 +12,9 @@ import java.nio.file.{Files, Paths}
   * Spark -> Postgres (COPY FROM) and Postgres -> Spark (COPY TO) through
   * [[PostgresCopyTableStore]], no JDBC jar involved. Runs the reference's
   * processor.py:124-788 semantics end-to-end: initial -> NEEDS_REVIEW ->
-  * user edit in the DATABASE -> reprocess -> consolidate -> COMPLETED,
-  * with the ON CONFLICT upsert exercised against live rows. Cancels when
-  * the server binaries are unavailable. */
+  * user edit in the DATABASE (a plain SQL UPDATE) -> reprocess ->
+  * consolidate -> COMPLETED. Cancels when the server binaries are
+  * unavailable. */
 class PostgresCopyLifecycleSpec extends PostgresCluster {
 
   private lazy val spark: SparkSession = graft.SparkSpec.session
@@ -83,7 +83,7 @@ class PostgresCopyLifecycleSpec extends PostgresCluster {
     val store = new PostgresCopyTableStore(spark, psqlRunner, s"$pgRoot/scratch")
     def emptyOf(shape: StructType) =
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], shape)
-    JobDispatch.tableShapes
+    Schemas.tableShapes
       .foreach { case (t, shape) => store.overwrite(t, emptyOf(shape)) }
     store.overwrite("jobs", emptyOf(Schemas.jobs))
     store.append("jobs", Seq((1, "u1", JobStatus.Pending))
@@ -107,25 +107,9 @@ class PostgresCopyLifecycleSpec extends PostgresCluster {
     assert(psql("SELECT count(*) FROM contacts") === "0")
     val badId = psql("""SELECT "staging_id" FROM staging WHERE "staging_status" = 'ISSUE'""")
 
-    // User review: fix the bad row's email with the engine's emitted
-    // ON CONFLICT upsert, executed against the live server with the row's
-    // REAL column values (the W2 update path).
-    val cols = Seq("staging_id", "staging_status", "staging_email")
-    val (sqlText, bindOrder) = JdbcUpsert.upsertSql("staging", cols, Seq("staging_id"))
-    // Postgres needs the conflict target to be constrained for ON CONFLICT.
-    psql(s"""ALTER TABLE staging ADD PRIMARY KEY ("staging_id")""")
-    val binds = Map[String, Any]("staging_id" -> badId.toLong,
-      "staging_status" -> StagingStatus.Issue, "staging_email" -> "fixed@b.co")
-    val filled = {
-      val parts = sqlText.split("\\?", -1)
-      parts.head + bindOrder.map {
-        case k => binds(k) match {
-          case s0: String => "'" + s0 + "'"
-          case v => String.valueOf(v)
-        }
-      }.zip(parts.tail).map { case (l, p) => l + p }.mkString
-    }
-    psql(filled)
+    // User review: fix the bad row's email with the UPDATE the reference's
+    // review app issues, executed against the live server.
+    psql(s"""UPDATE staging SET "staging_email" = 'fixed@b.co' WHERE "staging_id" = $badId""")
     assert(psql("""SELECT "staging_email" FROM staging WHERE "staging_id" = """ + badId)
       === "fixed@b.co")
 

@@ -13,72 +13,15 @@ import scala.sys.process._
   * The sandbox ships Postgres server binaries but no JDBC driver jar (zero
   * egress), so a full Spark-JDBC round trip can't run here; what CAN run —
   * and never had before round 7 — is the exact SQL text the engine emits:
-  * [[JdbcUpsert.upsertSql]]'s `ON CONFLICT` statement (Postgres-only
-  * syntax, untestable on embedded Derby) and [[JdbcTableStore]]'s
-  * partition-commit `DELETE ... WHERE col IN (...)` + `INSERT ... SELECT`
-  * pair, with the same delimited-identifier quoting Spark's JDBC writer
-  * produces. Statements are executed via psql over a private unix-socket
-  * cluster (initdb'd per suite, run as `nobody` since Postgres refuses
-  * root), with `?` placeholders substituted by literals — the text around
-  * them stays byte-identical to what the JDBC path prepares.
+  * [[JdbcTableStore]]'s partition-commit `DELETE ... WHERE col IN (...)` +
+  * `INSERT ... SELECT` pair and its snapshot swap, with the same
+  * delimited-identifier quoting Spark's JDBC writer produces. Statements
+  * are executed via psql over a private unix-socket cluster (initdb'd per
+  * suite, run as `nobody` since Postgres refuses root).
   *
   * Cancels (not fails) when the server binaries are unavailable.
   */
 class PostgresDialectSpec extends PostgresCluster {
-
-  /** Substitute `?` placeholders with SQL literals, in order — the psql
-    * stand-in for PreparedStatement binds. Splits on the placeholders
-    * FIRST so a '?' inside an earlier-bound literal can never be consumed
-    * as the next placeholder. */
-  private def fill(sql: String, args: Seq[Any]): String = {
-    val parts = sql.split("\\?", -1)
-    assert(parts.length == args.length + 1,
-      s"${parts.length - 1} placeholders for ${args.length} args in:\n$sql")
-    val lits = args.map {
-      case null => "NULL"
-      case s0: String => "'" + s0.replace("'", "''") + "'"
-      case b: Boolean => if (b) "TRUE" else "FALSE"
-      case v => String.valueOf(v)
-    }
-    parts.head + lits.zip(parts.tail).map { case (l, p) => l + p }.mkString
-  }
-
-  test("ON CONFLICT upsert (staging status W2): insert then conflicting update") {
-    psql("""CREATE TABLE staging ("staging_id" BIGINT PRIMARY KEY,
-           |  "staging_status" VARCHAR(32), "staging_email" VARCHAR(256))""".stripMargin)
-    val cols = Seq("staging_id", "staging_status", "staging_email")
-    val (sql, bindOrder) = JdbcUpsert.upsertSql("staging", cols, Seq("staging_id"))
-    assert(bindOrder == cols)
-    def row(vals: Map[String, Any]) = fill(sql, bindOrder.map(vals))
-    psql(row(Map("staging_id" -> 1L, "staging_status" -> "READY",
-      "staging_email" -> "a@b.co")))
-    psql(row(Map("staging_id" -> 2L, "staging_status" -> "ISSUE",
-      "staging_email" -> "x@b.co")))
-    // Conflicting re-insert of key 1 must UPDATE, not error or duplicate.
-    psql(row(Map("staging_id" -> 1L, "staging_status" -> "SUCCESS",
-      "staging_email" -> "a2@b.co")))
-    assert(psql("""SELECT "staging_id" || ':' || "staging_status" || ':' || "staging_email"
-                  |FROM staging ORDER BY "staging_id"""".stripMargin)
-      == "1:SUCCESS:a2@b.co\n2:ISSUE:x@b.co")
-  }
-
-  test("ON CONFLICT upsert (jobs W7/W8): composite update columns converge on replay") {
-    psql("""CREATE TABLE jobs ("job_id" INTEGER PRIMARY KEY,
-           |  "job_status" VARCHAR(32), "job_total_rows" BIGINT,
-           |  "job_issue_count" BIGINT)""".stripMargin)
-    val cols = Seq("job_id", "job_status", "job_total_rows", "job_issue_count")
-    val (sql, bindOrder) = JdbcUpsert.upsertSql("jobs", cols, Seq("job_id"))
-    val done = fill(sql, bindOrder.map(
-      Map("job_id" -> 7, "job_status" -> "COMPLETED",
-        "job_total_rows" -> 120L, "job_issue_count" -> 0L)))
-    psql(fill(sql, bindOrder.map(
-      Map("job_id" -> 7, "job_status" -> "PROCESSING",
-        "job_total_rows" -> 0L, "job_issue_count" -> 0L))))
-    psql(done)
-    psql(done) // at-least-once replay: idempotent by construction
-    assert(psql("""SELECT "job_status" || ':' || "job_total_rows" FROM jobs""")
-      == "COMPLETED:120")
-  }
 
   test("partition commit: DELETE IN + INSERT..SELECT swaps only the named jobs' rows") {
     psql("""CREATE TABLE pstaging ("staging_job_id" INTEGER, "staging_email" VARCHAR(64));

@@ -29,8 +29,20 @@ class JobDispatchSpec extends SparkSpec {
   test("end-to-end dispatch stream: run, skip, poison, replay") {
     val root = Files.createTempDirectory("graft_stream").toString
     val store = new ParquetTableStore(spark, root + "/tables")
-    Files.createDirectories(Paths.get(root + "/messages"))
+    Files.createDirectories(Paths.get(root + "/queue"))
     Files.createDirectories(Paths.get(root + "/uploads"))
+    // One message per queue file; producer contract: atomic appearance
+    // (write a hidden temp name, then rename it in).
+    def enqueue(name: String, body: String): Unit = {
+      val tmp = Files.writeString(Paths.get(s"$root/queue/.$name.tmp"), body)
+      Files.move(tmp, Paths.get(s"$root/queue/$name"))
+    }
+    def drain(): Unit = {
+      val q = JobDispatch.startQueue(
+        spark, store, root + "/queue", root + "/checkpoint",
+        key => s"$root/uploads/$key", Trigger.AvailableNow())
+      q.awaitTermination(120000); q.stop()
+    }
 
     // Seed: job 1 ready to process, job 7 already done.
     store.overwrite("jobs", Seq(
@@ -40,17 +52,13 @@ class JobDispatchSpec extends SparkSpec {
     Files.writeString(Paths.get(root + "/uploads/file1.csv"),
       "email,first_name,last_name,company\nok@b.co,Ann,Bee,Acme\ntwo@b.co,Bob,Cee,Biz\n")
 
-    Files.writeString(Paths.get(root + "/messages/batch1.jsonl"),
-      Seq(
-        """{"job_id": 1, "s3_key": "file1.csv"}""",
-        """this is not json""",
-        """{"job_id": 99, "s3_key": "ghost.csv"}""",
-        """{"job_id": 7, "s3_key": "file1.csv"}""").mkString("\n"))
-
-    val q = JobDispatch.start(
-      spark, store, root + "/messages", root + "/checkpoint",
-      key => s"$root/uploads/$key", Trigger.AvailableNow())
-    q.awaitTermination(120000)
+    Seq(
+      """{"job_id": 1, "s3_key": "file1.csv"}""",
+      """this is not json""",
+      """{"job_id": 99, "s3_key": "ghost.csv"}""",
+      """{"job_id": 7, "s3_key": "file1.csv"}""").zipWithIndex
+      .foreach { case (body, i) => enqueue(f"m$i%03d", body) }
+    drain()
 
     // Job 1: all rows valid -> consolidated straight through to COMPLETED.
     val jobs = store.load("jobs").select("job_id", "job_status")
@@ -68,14 +76,8 @@ class JobDispatchSpec extends SparkSpec {
 
     // Replay the same message (new file, same content): COMPLETED
     // short-circuit makes it a no-op — at-least-once is safe.
-    // Producer contract: atomic appearance (temp + move).
-    val tmp = Files.writeString(Paths.get(root + "/batch2.jsonl.tmp"),
-      """{"job_id": 1, "s3_key": "file1.csv"}""")
-    Files.move(tmp, Paths.get(root + "/messages/batch2.jsonl"))
-    val q2 = JobDispatch.start(
-      spark, store, root + "/messages", root + "/checkpoint",
-      key => s"$root/uploads/$key", Trigger.AvailableNow())
-    q2.awaitTermination(120000)
+    enqueue("m004", """{"job_id": 1, "s3_key": "file1.csv"}""")
+    drain()
     assert(store.load("contacts").count() === 2)
     assert(store.load("staging").count() === 2)
   }

@@ -2,6 +2,7 @@ package graft.stream
 
 import graft.SparkSpec
 import graft.io.ParquetTableStore
+import graft.model.Schemas
 import graft.model.Schemas.JobStatus
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.QueryExecution
@@ -287,6 +288,35 @@ class WaveDispatchSpec extends SparkSpec {
     assert(out.forall(o => o.detail != null && o.detail.nonEmpty))
     val statuses = store.load("jobs").select("job_status").as[String].collect().toSet
     assert(statuses === Set(JobStatus.Failed))
+  }
+
+  test("committed tables match Schemas.tableShapes after a first-pass and a reprocess wave") {
+    val (root, store) = seed(2, i => s"u$i")
+    Files.writeString(Paths.get(s"$root/uploads/clean.csv"),
+      "email,first_name,last_name,company\nok@b.co,F,L,C\n")
+    Files.writeString(Paths.get(s"$root/uploads/issue.csv"),
+      "email,first_name,last_name,company\nok2@b.co,F,L,C\n,missing,Cee,Biz\n")
+    // A hive-partitioned parquet table reads its partition column last;
+    // every other column keeps the written (shape) order.
+    val partCol = Map("staging" -> "staging_job_id", "issues" -> "issues_job_id",
+      "issue_items" -> "issues_job_id", "contacts" -> "contacts_user_id")
+    def assertShapes(): Unit = Schemas.tableShapes.foreach { case (t, shape) =>
+      val (rest, part) = shape.fields.toSeq.partition(_.name != partCol(t))
+      val expected = (rest ++ part).map(f => f.name -> f.dataType)
+      assert(store.load(t).schema.fields.toSeq.map(f => f.name -> f.dataType) === expected, t)
+    }
+    val first = JobDispatch.processBatch(spark, store,
+      Seq(msg(1, "clean.csv"), msg(2, "issue.csv")).toDF("value"), k => s"$root/uploads/$k")
+    assert(first.map(_.outcome) === Seq(JobStatus.Completed, JobStatus.NeedsReview))
+    assertShapes()
+    // The reviewer fixes job 2's missing email; its next message reprocesses.
+    store.overwrite("staging", store.load("staging").withColumn("staging_email",
+      when(col("staging_email").isNull, "fixed@b.co").otherwise(col("staging_email"))))
+    val second = JobDispatch.processBatch(spark, store,
+      Seq(msg(2, "issue.csv")).toDF("value"), k => s"$root/uploads/$k")
+    assert(second.map(_.outcome) === Seq(JobStatus.Completed))
+    assert(store.load("issues").filter(col("issue_resolved")).count() === 1)
+    assertShapes()
   }
 
   test("wave with an issue job: NEEDS_REVIEW and COMPLETED commit together, counters per job") {
